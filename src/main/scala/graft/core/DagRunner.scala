@@ -3,6 +3,8 @@ package graft.core
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
+import java.util.concurrent.LinkedBlockingQueue
+import java.util.concurrent.atomic.AtomicBoolean
 import scala.collection.mutable
 
 /** Result of one model run (→ `meta.model_runs`,
@@ -40,9 +42,21 @@ final case class StreamStateMetric(
   * - `run` materializes each model: views register temp views (logical,
   *   inlined by Catalyst), tables land as parquet under the warehouse dir
   *   and re-register as file-backed views, incremental models delegate to
-  *   [[graft.incremental.IntervalRunner]].
+  *   [[graft.incremental.IntervalRunner]]. A materialized model's view is
+  *   its output read back once, with the schema it was written with; its
+  *   row count comes from parquet footers, never from a re-scan.
+  * - Models run concurrently: each starts as soon as every upstream model
+  *   of this run has finished (whatever its status), on a fixed pool of
+  *   `min(models, defaultParallelism)` threads. The reference gets its
+  *   parallelism inside each model (DuckDB threads); a small daily window
+  *   cannot fill the cores that way, independent models can. So a model
+  *   must touch only its own table dir, export path and temp view, and
+  *   read other models only through their views.
   * - Audits run post-materialization; a violation fails the model.
-  * - Per-model metrics append to the [[MetaStore]].
+  * - Results come back in `plan` order, and one [[MetaStore.record]]
+  *   appends them. With `failFast`, the first model that does not succeed
+  *   stops the run: models already running finish, models not yet started
+  *   are `skipped`.
   */
 final class DagRunner(spark: SparkSession, cfg: EngineConfig,
     models: Seq[Model], meta: Option[MetaStore] = None) {
@@ -78,24 +92,61 @@ final class DagRunner(spark: SparkSession, cfg: EngineConfig,
     order.toSeq
   }
 
-  /** Run the (selected) DAG; returns per-model results in execution order. */
+  /** Run the (selected) DAG; returns per-model results in `plan` order. The
+    * pool's threads have exited when this returns. */
   def run(selection: Option[Seq[String]] = None,
       failFast: Boolean = false): Seq[RunResult] = {
-    val ordered = plan(selection)
-    val results = mutable.ListBuffer[RunResult]()
-    var aborted = false
-    ordered.foreach { m =>
-      if (aborted) {
-        results += RunResult(m.name, m.layer, "skipped",
-          System.currentTimeMillis(), 0.0, 0L, None)
-      } else {
-        val res = runOne(m)
-        results += res
-        if (failFast && res.status != "success") aborted = true
-      }
+    val ordered = plan(selection).toIndexedSeq
+    val names = ordered.map(_.name).toSet
+    // upstreams outside this run (not selected, not in the catalog) are
+    // taken as already built
+    val waiting = ordered.map(_.dependsOn.distinct.count(names)).toArray
+    val downstream = ordered.map(m =>
+      ordered.indices.filter(i => ordered(i).dependsOn.contains(m.name)))
+    def skipped(m: Model) = RunResult(m.name, m.layer, "skipped",
+      System.currentTimeMillis(), 0.0, 0L, None)
+
+    val ready = new LinkedBlockingQueue[Int]() // model index; -1 stops a worker
+    val done = new LinkedBlockingQueue[(Int, RunResult)]()
+    val aborted = new AtomicBoolean(false)
+    val workers = Seq.tabulate(math.min(ordered.size,
+        spark.sparkContext.defaultParallelism)) { k =>
+      val t = new Thread(() => {
+        var i = ready.take()
+        while (i >= 0) {
+          val m = ordered(i)
+          done.put(i -> (if (aborted.get) skipped(m) else runOne(m)))
+          i = ready.take()
+        }
+      }, s"graft-dag-$k")
+      t.setDaemon(true)
+      t.start()
+      t
     }
-    meta.foreach(_.record(results.toSeq, models))
-    results.toSeq
+    val results = new Array[RunResult](ordered.size)
+    try {
+      var inFlight = 0
+      def start(i: Int): Unit = { ready.put(i); inFlight += 1 }
+      ordered.indices.filter(waiting(_) == 0).foreach(start)
+      while (inFlight > 0) {
+        val (i, res) = done.take()
+        inFlight -= 1
+        results(i) = res
+        if (failFast && res.status != "success") aborted.set(true)
+        downstream(i).foreach { d =>
+          waiting(d) -= 1
+          if (waiting(d) == 0 && !aborted.get) start(d)
+        }
+      }
+    } finally {
+      aborted.set(true) // on an interrupted wait, queued models only skip
+      workers.foreach(_ => ready.put(-1))
+      workers.foreach(_.join())
+    }
+    val out = ordered.indices.map(i =>
+      Option(results(i)).getOrElse(skipped(ordered(i))))
+    meta.foreach(_.record(out, models))
+    out
   }
 
   private def tablePath(m: Model) = s"${cfg.warehouseDir}/${m.layer}/${m.name}"
@@ -111,15 +162,14 @@ final class DagRunner(spark: SparkSession, cfg: EngineConfig,
         case Materialization.Table =>
           val df = m.derive(spark, cfg)
           df.write.mode("overwrite").parquet(tablePath(m))
-          val out = spark.read.parquet(tablePath(m))
-          out.createOrReplaceTempView(m.name)
-          // rows_affected from the written footers — NOT out.count(), which
-          // would re-scan the table it just materialized
-          graft.sources.ParquetFooterMeta.rowCount(spark, tablePath(m))
+          spark.read.schema(df.schema).parquet(tablePath(m))
+            .createOrReplaceTempView(m.name)
+          // rows_affected from the written footers — NOT a count() of the
+          // view, which would re-scan the table it just materialized
+          graft.sources.ParquetFooterMeta.rowCount(spark, s"${tablePath(m)}/*.parquet")
         case inc: Materialization.IncrementalByTimeRange =>
-          val n = graft.incremental.IntervalRunner
+          val (n, out) = graft.incremental.IntervalRunner
             .refresh(spark, cfg, m, inc)
-          val out = spark.read.parquet(tablePath(m))
           out.createOrReplaceTempView(m.name)
           n
       }
@@ -160,18 +210,27 @@ final class DagRunner(spark: SparkSession, cfg: EngineConfig,
 final class MetaStore(spark: SparkSession, dir: String) {
   import spark.implicits._
 
+  /** Appends `results` to `model_runs` and rewrites `model_lineage` and
+    * `model_docs`: three independent writes, run concurrently. */
   def record(results: Seq[RunResult], models: Seq[Model]): Unit = {
-    results.toDF().write.mode("append").parquet(s"$dir/meta/model_runs")
-    models.flatMap(m => m.dependsOn.map(d => (m.name, d)))
-      .toDF("model", "depends_on")
-      .write.mode("overwrite").parquet(s"$dir/meta/model_lineage")
-    // model_docs: descriptions + grain + kind alongside runs/lineage
-    // (WAREHOUSE.md:268-274 "descriptions, column documentation, tags")
-    models.map(m => (m.name, m.layer, m.description,
-        m.grain.mkString(","), m.materialization.toString,
-        m.export.map(_.relPath).getOrElse("")))
-      .toDF("model", "layer", "description", "grain", "kind", "export_path")
-      .write.mode("overwrite").parquet(s"$dir/meta/model_docs")
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val writes = Seq[() => Unit](
+      () => results.toDF().write.mode("append").parquet(s"$dir/meta/model_runs"),
+      () => models.flatMap(m => m.dependsOn.map(d => (m.name, d)))
+        .toDF("model", "depends_on")
+        .write.mode("overwrite").parquet(s"$dir/meta/model_lineage"),
+      // model_docs: descriptions + grain + kind alongside runs/lineage
+      // (WAREHOUSE.md:268-274 "descriptions, column documentation, tags")
+      () => models.map(m => (m.name, m.layer, m.description,
+          m.grain.mkString(","), m.materialization.toString,
+          m.export.map(_.relPath).getOrElse("")))
+        .toDF("model", "layer", "description", "grain", "kind", "export_path")
+        .write.mode("overwrite").parquet(s"$dir/meta/model_docs"))
+    val threads = writes.map(w => new Thread(() =>
+      try w() catch { case e: Throwable => errors.add(e) }))
+    threads.foreach(_.start())
+    threads.foreach(_.join())
+    Option(errors.peek).foreach(e => throw e)
   }
 
   def runs: DataFrame = spark.read.parquet(s"$dir/meta/model_runs")

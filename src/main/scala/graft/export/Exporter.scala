@@ -154,8 +154,10 @@ object Exporter {
     * + a summary row — `catalog.parquet` + `catalog.json`
     * (`catalog.py:43-89,109-116`). */
   def catalog(spark: SparkSession, exportDir: String): DataFrame = {
-    val meta = ParquetFooterMeta(spark, s"$exportDir/*/*.parquet")
-      .filter(!col("file_name").like("%catalog.parquet%"))
+    // catalog.parquet is the catalog's own output, not an export: its
+    // footers are never opened (a rewrite deletes the files they'd name)
+    val meta = ParquetFooterMeta(spark, s"$exportDir/*/*.parquet",
+      _.getParent.getName != "catalog.parquet")
       // group part files under their dataset dir (catalog.py:132 pattern)
       .withColumn("file_name",
         when(col("file_name").rlike(".*/part-[^/]+$"),
@@ -170,14 +172,17 @@ object Exporter {
 
   /** catalog.json + catalog.parquet: version + per-file listing + totals
     * (`DEPLOYMENT.md:449-470`; the parquet twin is `catalog.py:78-81`'s
-    * `COPY file_catalog TO ... (FORMAT PARQUET, COMPRESSION ZSTD)`). */
+    * `COPY file_catalog TO ... (FORMAT PARQUET, COMPRESSION ZSTD)`). The
+    * footers are scanned once, before anything is overwritten; both files
+    * are written from the collected rows. */
   def writeCatalogJson(spark: SparkSession, exportDir: String,
       version: String): Unit = {
     val cat = catalog(spark, exportDir)
-    cat.coalesce(1).write.mode("overwrite")
+    val rows = cat.collect()
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), cat.schema)
+      .coalesce(1).write.mode("overwrite")
       .option("compression", "zstd")
       .parquet(s"$exportDir/catalog.parquet")
-    val rows = cat.collect()
     val files = rows.map { r =>
       s"""{"file_name": "${r.getString(0)}", "num_rows": ${r.getLong(1)},
          | "compressed_bytes": ${r.getLong(2)},

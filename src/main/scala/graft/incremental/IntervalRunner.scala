@@ -1,9 +1,11 @@
 package graft.incremental
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DateType, StructField, StructType}
 import graft.core.{EngineConfig, Materialization, Model}
+import graft.sources.ParquetFooterMeta
 
 import java.time.LocalDate
 import java.time.temporal.ChronoUnit
@@ -93,13 +95,19 @@ object IntervalRunner {
         case (acc, d) => (d, d) :: acc
       }.reverse
 
-  /** Refresh the model's window into its partitioned table; returns rows
-    * written. Default mode recomputes only [[missingIntervals]] of
-    * [start_ds, end_ds] (backfill); `refresh_mode=full` restates the whole
-    * window. Re-running is idempotent: dynamic partition overwrite replaces
-    * — never duplicates — the touched partitions. */
+  /** Refresh the model's window into its partitioned table; returns the
+    * rows the table holds in [start_ds, end_ds] and the whole table read
+    * back. Default mode recomputes only [[missingIntervals]] of the window
+    * (backfill); `refresh_mode=full` restates the whole window. Re-running
+    * is idempotent: dynamic partition overwrite replaces — never
+    * duplicates — the touched partitions.
+    *
+    * Nothing written is scanned again: the row count comes from the
+    * footers of the window's `_ds=` partitions, and the read-back carries
+    * the schema the model writes (its columns, then `_ds` as a date — what
+    * inference would find, minus the inference job). */
   def refresh(spark: SparkSession, cfg: EngineConfig, m: Model,
-      inc: Materialization.IncrementalByTimeRange): Long = {
+      inc: Materialization.IncrementalByTimeRange): (Long, DataFrame) = {
     val path = s"${cfg.warehouseDir}/${m.layer}/${m.name}"
     val start = LocalDate.parse(cfg.startDs)
     val end = LocalDate.parse(cfg.endDs)
@@ -110,8 +118,9 @@ object IntervalRunner {
       if (full || !tracked) Seq((start, end))
       else toRanges(missingIntervals(spark, path, start, end))
 
+    // derived even when nothing is missing: its schema is the read-back's
+    val df = m.derive(spark, cfg)
     if (ranges.nonEmpty) {
-      val df = m.derive(spark, cfg)
       val ds = col(inc.timeColumn).cast("date")
       val windowed = df
         .filter(ranges.map { case (s, e) =>
@@ -128,9 +137,16 @@ object IntervalRunner {
         Iterator.iterate(s)(_.plusDays(1)).takeWhile(!_.isAfter(e)).toSeq
       })
     }
-    spark.read.parquet(path)
-      .filter(col("_ds").between(lit(cfg.startDs), lit(cfg.endDs)))
-      .count()
+    // ISO dates order as strings; a null time column's partition
+    // (__HIVE_DEFAULT_PARTITION__) sorts after every date, as a date
+    // filter drops it
+    val rows = ParquetFooterMeta.rowCount(spark, s"$path/_ds=*/*.parquet", { f =>
+      val d = f.getParent.getName.stripPrefix("_ds=")
+      d >= cfg.startDs && d <= cfg.endDs
+    })
+    val schema = StructType(df.schema.filter(_.name != "_ds") :+
+      StructField("_ds", DateType))
+    (rows, spark.read.schema(schema).parquet(path))
   }
 
   /** High-watermark incremental (I2, `WAREHOUSE.md:441-449`): rows of

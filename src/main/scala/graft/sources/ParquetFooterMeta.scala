@@ -4,6 +4,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import scala.jdk.CollectionConverters._
@@ -28,28 +29,50 @@ object ParquetFooterMeta {
       num_columns: Int,
       created_by: String)
 
-  def apply(spark: SparkSession, glob: String): DataFrame = {
+  /** Row groups of the parquet files `glob` names. `keep` filters the
+    * glob's matches before any footer is opened. */
+  def apply(spark: SparkSession, glob: String,
+      keep: Path => Boolean = _ => true): DataFrame = {
     import spark.implicits._
-    val hconf = spark.sparkContext.hadoopConfiguration
+    footers(spark, files(spark, glob, keep)).toDF()
+  }
+
+  /** Total row count of the parquet files `glob` names (filtered by
+    * `keep`), from footers alone — the post-write row count a
+    * materialization reports without re-scanning the data it just wrote
+    * (footers are a few KB per file vs a full second read of the table).
+    * One job, no shuffle; none when nothing matches. */
+  def rowCount(spark: SparkSession, glob: String,
+      keep: Path => Boolean = _ => true): Long = {
+    val matched = files(spark, glob, keep)
+    if (matched.isEmpty) 0L
+    else footers(spark, matched).map(_.num_rows).fold(0L)(_ + _)
+  }
+
+  private def files(spark: SparkSession, glob: String,
+      keep: Path => Boolean): Seq[String] = {
     val p = new Path(glob)
-    val fs = p.getFileSystem(hconf)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // a glob match that is a directory (Spark's dir-as-dataset layout,
     // e.g. region.parquet/part-*.parquet) expands to its part files
-    val files = fs.globStatus(p) match {
-      case null => Array.empty[String]
-      case st => st.flatMap {
-        case f if f.isFile => Array(f.getPath.toString)
+    fs.globStatus(p, keep(_)) match {
+      case null => Nil
+      case st => st.toSeq.flatMap {
+        case f if f.isFile => Seq(f.getPath.toString)
         case d =>
           fs.listStatus(d.getPath)
             .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-            .map(_.getPath.toString)
+            .map(_.getPath.toString).toSeq
       }
     }
-    val serializableConfItems =
-      hconf.iterator().asScala.map(e => e.getKey -> e.getValue).toList
+  }
+
+  private def footers(spark: SparkSession, files: Seq[String]): RDD[RowGroupMeta] = {
+    val serializableConfItems = spark.sparkContext.hadoopConfiguration
+      .iterator().asScala.map(e => e.getKey -> e.getValue).toList
     val n = math.max(1, math.min(files.length, 64))
     spark.sparkContext
-      .parallelize(files.toSeq, n)
+      .parallelize(files, n)
       .mapPartitions { paths =>
         val conf = new Configuration(false)
         serializableConfItems.foreach { case (k, v) => conf.set(k, v) }
@@ -66,16 +89,5 @@ object ParquetFooterMeta {
           } finally reader.close()
         }
       }
-      .toDF()
-  }
-
-  /** Total row count of a parquet directory from footers alone — the
-    * post-write row count a materialization reports without re-scanning the
-    * data it just wrote (footers are a few KB per file vs a full second
-    * read of the table). */
-  def rowCount(spark: SparkSession, dir: String): Long = {
-    val rows = apply(spark, s"$dir/*.parquet")
-      .agg(org.apache.spark.sql.functions.sum("num_rows")).collect()
-    if (rows.isEmpty || rows(0).isNullAt(0)) 0L else rows(0).getLong(0)
   }
 }

@@ -28,8 +28,10 @@ object WarehouseDemo {
       ("SRX002", "exp two", "SRP001", "ILLUMINA"),
       ("SRX003", "exp three", "SRP001", "OXFORD_NANOPORE"))
       .toDF("accession", "title", "study_accession", "platform")
-    val studies = Seq(("SRP001", "study one", "WGS", "abs"))
-      .toDF("accession", "title", "study_type", "abstract")
+    // BioProject is the study's own column (DomainSchemas.sraStudy); the
+    // mart selects it as study_bioproject
+    val studies = Seq(("SRP001", "study one", "WGS", "abs", "PRJ1"))
+      .toDF("accession", "title", "study_type", "abstract", "BioProject")
 
     val sources = Map(
       "src_sra_accessions" -> ((_: SparkSession, _: EngineConfig) => accessions),

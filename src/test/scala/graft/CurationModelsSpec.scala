@@ -71,7 +71,9 @@ class CurationModelsSpec extends AnyFunSuite {
     val wh = Files.createTempDirectory("graft_curation_bad").toString
     val cfg = EngineConfig("/root/testdata/sf0.001", wh, s"$wh/exports")
     // sabotage: a keeper model that drops clusters — the coverage audit
-    // must fail the model, not silently export a partial mart
+    // must fail the model, not silently export a partial mart. The splits
+    // mart is wired downstream of the keepers so failFast has a model it
+    // must never start (siblings run concurrently and may finish first).
     val broken = CurationModels.catalog.map {
       case m if m.name == "corpus_keepers" =>
         m.copy(build = Some((s, _) =>
@@ -79,6 +81,8 @@ class CurationModelsSpec extends AnyFunSuite {
             .filter(col("doc_id") < 10)
             .select(col("cluster_id"), col("doc_id").as("keeper_doc_id"),
               lit(1.0).as("keeper_quality"))))
+      case m if m.name == "corpus_splits" =>
+        m.copy(dependsOn = m.dependsOn :+ "corpus_keepers")
       case m => m
     }
     val results = new DagRunner(spark, cfg, broken).run(failFast = true)

@@ -32,6 +32,23 @@ class EngineSpec extends AnyFunSuite {
     assert(sql.contains("CREATE OR REPLACE TEMP VIEW region"))
   }
 
+  test("catalog rewrites in place; total_rows follows a re-export") {
+    val dir = Files.createTempDirectory("graft_cat").toString
+    def total() = "\"total_rows\": (\\d+)".r.findFirstMatchIn(Files.readString(
+      java.nio.file.Paths.get(s"$dir/catalog.json"))).map(_.group(1).toLong)
+    Exporter.parquet(spark.range(5).toDF(), s"$dir/marts/items.parquet")
+    Exporter.writeCatalogJson(spark, dir, "v1")
+    // the second call overwrites the catalog.parquet the first one wrote
+    Exporter.writeCatalogJson(spark, dir, "v2")
+    assert(total() === Some(5L))
+    Exporter.parquet(spark.range(8).toDF(), s"$dir/marts/items.parquet")
+    Exporter.writeCatalogJson(spark, dir, "v3")
+    assert(total() === Some(8L))
+    val cat = spark.read.parquet(s"$dir/catalog.parquet")
+      .select("file_name", "num_rows").collect().map(r => r.getString(0) -> r.getLong(1))
+    assert(cat.toSeq === Seq("items.parquet" -> 8L))
+  }
+
   test("parquet export honors row-group row-count limit (footer-verified)") {
     val dir = Files.createTempDirectory("graft_rg").toString
     val df = Tables(spark, "/root/testdata/sf0.01", "lineitem").coalesce(1)

@@ -243,6 +243,9 @@ class WarehouseSpec extends AnyFunSuite {
       val res = new DagRunner(spark, cfg, Seq(m)).run()
       assert(res.head.status === "success")
       assert(res.head.rows === 1000L)
+      // the view is the table read back with the schema it was written with
+      assert(spark.table("mart_items").schema ===
+        spark.read.parquet(s"${cfg.warehouseDir}/mart/mart_items").schema)
       // listener bus is async — poll until the counter stabilizes
       var last = -1L
       var spins = 0
@@ -255,6 +258,63 @@ class WarehouseSpec extends AnyFunSuite {
       assert(read.get() < 2000L, s"expected one input scan, read=${read.get()}")
       assert(read.get() >= 1000L)
     } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("incremental refresh counts rows from footers and reads back the written schema") {
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.types.DateType
+    // 05-30 has no source rows: its marker is written, its partition never
+    val lake = Files.createTempDirectory("graft_inc_lake").toString
+    Seq((1, "2005-05-28"), (2, "2005-05-28"), (3, "2005-05-29"), (4, "2005-05-29"),
+      (5, "2005-05-29"), (6, "2005-05-31"))
+      .toDF("id", "day").selectExpr("id", "CAST(day AS DATE) AS day", "'x' AS v")
+      .coalesce(1).write.parquet(s"$lake/items.parquet")
+    val sourceRows = 6L
+    val wh = Files.createTempDirectory("graft_inc_wh").toString
+    val table = s"$wh/bronze/stg_items"
+    val models = Seq(
+      Model("src_items", "raw", build = Some((s: SparkSession, c: EngineConfig) =>
+        s.read.parquet(s"${c.dataRoot}/items.parquet").select("id", "day", "v"))),
+      Model("stg_items", "bronze", dependsOn = Seq("src_items"),
+        materialization = Materialization.IncrementalByTimeRange("day"),
+        sql = Some("""SELECT id, day, v FROM src_items
+                      WHERE day BETWEEN DATE '@start_ds' AND DATE '@end_ds'""")))
+    def partitionFiles() = new java.io.File(table).listFiles()
+      .filter(_.getName.startsWith("_ds=")).flatMap(_.listFiles())
+      .map(f => f.getPath -> f.lastModified()).toMap
+    def refresh(from: String, to: String, vars: Map[String, String] = Map.empty) = {
+      val cfg = EngineConfig(lake, wh, "/none",
+        Map("start_ds" -> from, "end_ds" -> to) ++ vars)
+      val read = new java.util.concurrent.atomic.AtomicLong(0L)
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+          if (e.taskMetrics != null) read.addAndGet(e.taskMetrics.inputMetrics.recordsRead)
+      }
+      spark.sparkContext.addSparkListener(listener)
+      val res = try new DagRunner(spark, cfg, models).run().last finally {
+        var last = -1L // listener bus is async: wait for the counter to settle
+        while (read.get() != last) { last = read.get(); Thread.sleep(200) }
+        spark.sparkContext.removeSparkListener(listener)
+      }
+      assert(res.status === "success", res)
+      val inferred = spark.read.parquet(table)
+      assert(res.rows === inferred.filter(col("_ds").between(from, to)).count())
+      assert(spark.table("stg_items").schema === inferred.schema)
+      assert(inferred.schema("_ds").dataType === DateType)
+      // the source is scanned at most once; the table just written, never
+      assert(read.get() <= sourceRows, s"read ${read.get()} records")
+      (res.rows, read.get())
+    }
+
+    assert(refresh("2005-05-28", "2005-05-30")._1 === 5L) // fresh window
+    assert(new java.io.File(s"$table/_intervals/_ds=2005-05-30").exists())
+    assert(!new java.io.File(s"$table/_ds=2005-05-30").exists())
+    val written = partitionFiles()
+    assert(refresh("2005-05-28", "2005-05-30") === (5L, 0L)) // covered: nothing read
+    assert(partitionFiles() === written)
+    assert(refresh("2005-05-28", "2005-05-31")._1 === 6L) // backfills 05-31 only
+    assert(partitionFiles().filter(f => written.contains(f._1)) === written)
+    assert(refresh("2005-05-29", "2005-05-31", Map("refresh_mode" -> "full"))._1 === 4L)
   }
 
   test("failing audit fails the model") {
