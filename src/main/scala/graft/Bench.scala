@@ -44,87 +44,24 @@ object Bench {
           false
       }
 
-    // q86 is excluded from TIMING on BOTH sides (tools/duck_bench.py skips
-    // it symmetrically, same as q40): its builder runs a full STREAMING
-    // INGEST LIFECYCLE — 3 AvailableNow micro-batches with checkpoint +
-    // state-table parquet writes to fresh temp dirs (~7 s/exec at sf0.1,
-    // dispatch- and IO-floor-bound) — while its oracle is a one-shot
-    // SELECT. Timing stream-checkpoint machinery against a SQL query
-    // measures neither engine's query execution. The CORRECTNESS gate
-    // (Verify) still runs it every round.
-    // lifecycle gates whose builder runs an ingest lifecycle over temp-dir
-    // state while the oracle is a one-shot SELECT: neither side measures
-    // query execution, so both Bench and duck_bench skip them (q40/q86
-    // precedent, PERF.md). q89 stays TIMED — its builder is a plain
-    // (if two-CC-run) query plan over the lake.
-    val nonQueryEntries = Set("q86_ingest_endstate",
-      "q90_image_ingest_endstate", "q91_audio_ingest_endstate",
-      "q92_video_ingest_endstate", "q95_stream_sessionize_endstate",
-      "q96_stream_window_endstate", "q98_stream_join_endstate",
-      "q100_stream_dedup_endstate", "q104_stream_timer_sessionize_endstate",
-      "q121_index_ingest_endstate",
-      // q125: writes + re-reads the sharded postings store in a temp dir
-      // (the q121 lifecycle recipe) while its oracle is a one-shot SELECT —
-      // the same asymmetry that excludes the other ingest lifecycles; the
-      // store's at-scale cost curves are measured by ScaleStress's
-      // indexStoreStage instead
-      "q125_bm25_sharded_store",
-      // q144: a full STREAMING INGEST LIFECYCLE (3 AvailableNow
-      // micro-batches + checkpoint + store writes to fresh temp dirs)
-      // while its oracle is a one-shot SELECT — the q86 asymmetry
-      "q144_vector_store_ingest_endstate",
-      // q150: the q144 lifecycle PLUS a drift-triggered retrain +
-      // re-encode epoch — same streaming-vs-one-shot asymmetry
-      "q150_drift_retrain_endstate",
-      // q156: the q150 lifecycle on the tokenizer side (streaming ingest
-      // + vocab retrain + re-encode epoch) — same asymmetry
-      "q156_tokenizer_retrain_endstate",
-      // the four PARTITIONED-STORE gates (r15 verdict item 1): each
-      // builds + writes + re-reads a partitioned temp-dir store every
-      // timed pass (caches are cleared per pass) while its oracle is a
-      // one-shot SELECT — the q125 asymmetry, ×4 in the r15 timed set
-      // and the dominant driver of the band widening to 1.71×. Store
-      // build/ingest/serve cost at scale is measured where it belongs:
-      // ScaleStress's indexStoreStage (q137 full path), --flat mode
-      // (q141 graph store), and the q151-153 suite curves; correctness
-      // stays gated every round via Verify.
-      "q137_ann_sharded_store", "q141_graph_sharded_store",
-      "q152_ann_sq8_store", "q153_ann_filtered_store",
-      // q158: q141's store build per pass, serve wave 1024 probes —
-      // same build-vs-one-shot-SELECT asymmetry; q165 is the same store
-      // build with the single-entry descent
-      "q158_graph_batch_serve", "q165_graph_entry_serve")
     // SPARK_GRAFT_ONLY=q44,q31 runs a comma-separated subset (local triage)
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
     val names = SparkEntry.queries.keys.toSeq.sorted
-      .filterNot(nonQueryEntries)
+      .filterNot(SparkEntry.untimed)
       .filter(n => only.forall(f => f.exists(n.startsWith)))
-    System.err.println(s"[bench] excluded non-query entries: ${nonQueryEntries.mkString(", ")}")
+    System.err.println(s"[bench] excluded non-query entries: ${SparkEntry.untimed.mkString(", ")}")
     // warm-up (untimed): compiles codegen, warms JIT + parquet footers cache
-    graft.queries.CurationOps.clearCache()
-    graft.queries.DedupOps.clearCache()
-    graft.queries.SimilarityOps.clearCache()
-    graft.queries.IndexOps.clearCache()
-    graft.queries.TextOps.clearCache()
+    graft.queries.ArtifactCache.clearAll()
     names.foreach(exec)
     // settle the JVM between warm-up and the timed passes so GC debt from
     // warm-up isn't billed to the first timed queries
     System.gc()
     // three timed passes, per-query min: the host shows intermittent
     // multi-second stalls; min-of-k isolates engine time from host noise
-    // each pass drops the shared-cluster cache: q47 pays the full pipeline
-    // every pass (honest min-of-k), while q51/q52 time their incremental
-    // work over the pass's materialized clusters — the real pipeline shape
-    // each pass also drops the shared shingle/signature stage cache: the
-    // first consumer (q31 in sorted order) pays the materialization per
-    // pass, later consumers time their own work over the shared artifact —
-    // the shape a real pipeline ships (signatures are persisted once)
+    // each pass starts with no artifacts: the first consumer of each (q31
+    // for the shingles, q47 for the clusters) pays its build every pass
     def timedPass(): Map[String, Double] = {
-      graft.queries.CurationOps.clearCache()
-      graft.queries.DedupOps.clearCache()
-      graft.queries.SimilarityOps.clearCache()
-    graft.queries.IndexOps.clearCache()
-    graft.queries.TextOps.clearCache()
+      graft.queries.ArtifactCache.clearAll()
       names.map { name =>
         val t0 = System.nanoTime()
         exec(name)

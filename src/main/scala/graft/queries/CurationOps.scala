@@ -21,33 +21,20 @@ object CurationOps {
     * the connected-components loop). Computed ONCE per (session, dir) and
     * lazily localCheckpoint'ed: the first action materializes the clusters
     * into cached blocks, every later consumer reads blocks instead of
-    * re-running the pipeline (3× before). `computeIfAbsent` is safe under
-    * the parallel Verify pool. [[clearCache]] drops entries so the bench
-    * can keep per-pass timings honest. */
-  private val clusterCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+    * re-running the pipeline (3× before). */
+  private val Clusters = new ArtifactCache.Kind[DataFrame]("dedupClusters")
 
-  def clearCache(): Unit = {
-    clusterCache.values().forEach(StageCacheSupport.unpersistCheckpoint)
-    clusterCache.clear()
-  }
-
-  private def dedupClusters(s: SparkSession, dir: String): DataFrame = {
-    // bounded like the other shared-stage caches (see DedupOps.cachedStage):
-    // overflow drops references only — unpersisting here could strand a
-    // concurrent holder of a truncated-lineage checkpoint
-    if (clusterCache.size > 64) clusterCache.clear()
-    clusterCache.computeIfAbsent((s, dir), { case (sess, d) =>
-      val pairs = DedupOps.queries("q33_minhash_lsh_pairs")(sess, d)
+  private def dedupClusters(s: SparkSession, dir: String): DataFrame =
+    ArtifactCache(s, dir, Clusters) {
+      val pairs = DedupOps.queries("q33_minhash_lsh_pairs")(s, dir)
         .filter(col("est_jaccard") >= 0.5)
-      val docs = Tables(sess, d, "documents").select(col("doc_id"))
+      val docs = Tables(s, dir, "documents").select(col("doc_id"))
       ConnectedComponents.hashMin(
           pairs.select(col("doc_a"), col("doc_b")), docs)
         .select(col("id").as("doc_id"), col("component").as("cluster_id"),
           (col("id") === col("component")).as("is_keeper"))
         .localCheckpoint(eager = false)
-    })
-  }
+    }
 
   /** Dedup clustering over the TUNED pair generator
     * ([[DedupOps.lshPairsTuned]]) — the full chain (signatures → banded

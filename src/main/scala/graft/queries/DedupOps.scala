@@ -22,9 +22,8 @@ import graft.functions.TextFunctions._
   *    (session, dir) and shared by every consumer (q31/q32/q33/q58/q60 and
   *    q47's pair generation) — in a real dedup pipeline the shingle sets and
   *    signatures are persisted artifacts computed in one pass, not
-  *    recomputed per downstream query. Same shape as CurationOps' cluster
-  *    cache: lazily localCheckpoint'ed, dropped via [[clearCache]] so the
-  *    bench pays the materialization exactly once per pass.
+  *    recomputed per downstream query (lazily localCheckpoint'ed
+  *    [[ArtifactCache]] entries).
   */
 object DedupOps {
 
@@ -202,35 +201,14 @@ object DedupOps {
           .cast("binary")).as("kept_md5"))
   }
 
-  /** Shared-stage cache keyed by (session, dir, stage). `computeIfAbsent`
-    * is safe under the parallel Verify pool; the build lambda only
-    * constructs a lazy plan (the checkpoint materializes on first action).
-    * Stages are resolved OUTSIDE any enclosing computeIfAbsent (a mapping
-    * function must not touch the same map — see [[signaturesCached]]). */
-  private val stageCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), DataFrame]()
-
-  /** Drop cache entries AND their materialized checkpoint blocks — without
-    * the unpersist, each bench pass would leak the prior pass's blocks
-    * until GC/ContextCleaner gets to them. */
-  def clearCache(): Unit = {
-    stageCache.values().forEach(StageCacheSupport.unpersistCheckpoint)
-    stageCache.clear()
-  }
+  /** Shared stages, one artifact per (session, dir, stage name); the
+    * build only constructs a lazy plan (the checkpoint materializes on
+    * first action). */
+  private val Stage = new ArtifactCache.Kind[DataFrame]("dedupStage")
 
   private def cachedStage(s: SparkSession, dir: String, stage: String)
-      (build: => DataFrame): DataFrame = {
-    // bounded like SimilarityOps' centroid cache — but the overflow path
-    // drops MAP REFERENCES ONLY (no unpersist): a concurrent caller may
-    // hold a materialized checkpoint whose lineage is truncated, and
-    // unpersisting under it would make its next action unrecoverable.
-    // Unreferenced blocks are reclaimed by the ContextCleaner; the
-    // explicit clearCache() (bench/tests, no concurrent holders) still
-    // unpersists eagerly.
-    if (stageCache.size > 64) stageCache.clear()
-    stageCache.computeIfAbsent((s, dir, stage),
-      _ => build.localCheckpoint(eager = false))
-  }
+      (build: => DataFrame): DataFrame =
+    ArtifactCache(s, dir, Stage, stage)(build.localCheckpoint(eager = false))
 
   /** THE materialized shingle artifact: one row per doc carrying BOTH the
     * distinct shingle-set array (exact-rescoring side of q31/q60) and the

@@ -120,38 +120,12 @@ object SimilarityOps {
   private val RpDepth = 3
   private val RpMargin = 400000000L
 
-  /** Per-(sessionUUID, dir, k, iters) cache of the deterministic-Lloyd
-    * coarse quantizer (k × dim doubles of driver state). In deployment the
-    * quantizer is a persisted artifact trained once and reused by every
+  /** The deterministic-Lloyd coarse quantizer (k × dim doubles of driver
+    * state), keyed by (k, iters, vec_id slice). In deployment the quantizer
+    * is a persisted artifact trained once and reused by every
     * assignment/search job — recomputing it per query would re-run the
-    * training scans. Bench/PlanBaseline clear it per pass so the first IVF
-    * consumer pays the training cost honestly. Keyed by the session's UUID
-    * string (never the SparkSession itself, which would pin the session for
-    * the process lifetime) and bounded: crossing [[CacheMax]] entries evicts
-    * everything — quantizers are cheap to retrain relative to leaking driver
-    * state in a long-running multi-session service. */
-  private val CacheMax = 64
-  private val centroidCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, Int, Int), Seq[Seq[Double]]]()
-
-  def clearCache(): Unit = {
-    centroidCache.clear()
-    baselineCache.clear()
-    pqCache.clear()
-    pcaCache.clear()
-    fpsCache.clear()
-    nnGraphCache.clear()
-    hnswLayerCache.clear()
-    shardedServeCache.clear()
-    graphServeCache.clear()
-    storeGraphCache.clear()
-    endStateGraphCache.clear()
-    anisoCache.clear()
-    vecIngestServeCache.clear()
-    driftServeCache.clear()
-    sq8ServeCache.clear()
-    filteredStoreCache.clear()
-  }
+    * training scans. */
+  private val Centroids = new ArtifactCache.Kind[Seq[Seq[Double]]]("centroids")
 
   /** Per-(session, dir) cache of the NN-Descent graph artifact — a
     * deployment builds the graph once per ingest and serves many
@@ -159,77 +133,62 @@ object SimilarityOps {
     * q126 (alphabetically first) pays the build, q127 searches the
     * cached adjacency. Values are eager localCheckpoints (LogicalRDDs),
     * safe to share across query threads. */
-  private val nnGraphCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
+  private val NnGraph = new ArtifactCache.Kind[DataFrame]("nnGraph")
 
-  private def cachedNnGraph(s: SparkSession, dir: String)
-      : DataFrame = {
-    if (nnGraphCache.size > 64) nnGraphCache.clear()
-    nnGraphCache.computeIfAbsent((sessionKey(s), dir), _ =>
+  private def cachedNnGraph(s: SparkSession, dir: String): DataFrame =
+    ArtifactCache(s, dir, NnGraph)(
       graft.operators.NnDescent.knnGraph(
         emb(s, dir).filter(col("vec_id") < GraphGateSlice)
           .select(col("vec_id"), col("embedding")),
         k = NnBuildK, iters = NnIters))
-  }
 
   /** Per-(session, dir, split) cache of the STORE-slice NN-Descent graph
     * (vec_id < split) — the standing-graph artifact the ingest tier
     * inserts into: q131 (alphabetically first) pays the build, q141's
     * sharded-store composition reuses it (the q126/q127 pattern one
     * level up). */
-  private val storeGraphCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, Long), DataFrame]()
+  private val StoreGraph = new ArtifactCache.Kind[DataFrame]("storeGraph")
 
   private def cachedStoreGraph(s: SparkSession, dir: String,
-      split: Long): DataFrame = {
-    if (storeGraphCache.size > 64) storeGraphCache.clear()
-    storeGraphCache.computeIfAbsent((sessionKey(s), dir, split), _ =>
+      split: Long): DataFrame =
+    ArtifactCache(s, dir, StoreGraph, split)(
       graft.operators.NnDescent.knnGraph(
         emb(s, dir).filter(col("vec_id") < split)
           .select(col("vec_id"), col("embedding")),
         k = NnBuildK, iters = NnIters))
-  }
 
   /** Per-(session, dir, slice, split) cache of the INGESTED end-state
     * graph (store build ⊎ batch insertion) — q131 gates its NnK cut,
-    * q141 persists it sharded: one ingest, two consumers, the same
-    * build-once discipline as [[cachedStoreGraph]]. */
-  private val endStateGraphCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, Long, Long), DataFrame]()
+    * q141 persists it sharded: one ingest, two consumers. */
+  private val EndStateGraph = new ArtifactCache.Kind[DataFrame]("endStateGraph")
 
   private def cachedEndStateGraph(s: SparkSession, dir: String,
-      slice: Long, split: Long): DataFrame = {
-    if (endStateGraphCache.size > 64) endStateGraphCache.clear()
-    endStateGraphCache.computeIfAbsent((sessionKey(s), dir, slice, split),
-      _ => {
-        val e = emb(s, dir).filter(col("vec_id") < slice)
-          .select(col("vec_id"), col("embedding"))
-        graft.operators.NnDescent.insertBatch(
-            cachedStoreGraph(s, dir, split),
-            e.filter(col("vec_id") < split),
-            e.filter(col("vec_id") >= split),
-            k = NnBuildK, beam = NnBeam, hops = NnHops, seeds = NnSeeds)
-          .localCheckpoint(eager = true)
-      })
-  }
+      slice: Long, split: Long): DataFrame =
+    ArtifactCache(s, dir, EndStateGraph, slice, split) {
+      val e = emb(s, dir).filter(col("vec_id") < slice)
+        .select(col("vec_id"), col("embedding"))
+      graft.operators.NnDescent.insertBatch(
+          cachedStoreGraph(s, dir, split),
+          e.filter(col("vec_id") < split),
+          e.filter(col("vec_id") >= split),
+          k = NnBuildK, beam = NnBeam, hops = NnHops, seeds = NnSeeds)
+        .localCheckpoint(eager = true)
+    }
 
   /** Per-(session, dir) cache of the q130 upper-layer graphs — like the
     * layer-0 [[cachedNnGraph]], these are build-once serve-many
     * artifacts (an HNSW deployment persists every layer's adjacency
     * beside the vectors). Key includes the level. */
-  private val hnswLayerCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, Int, Long), DataFrame]()
+  private val HnswLayer = new ArtifactCache.Kind[DataFrame]("hnswLayer")
 
   private def cachedHnswLayer(s: SparkSession, dir: String,
-      lvl: Int, maxVec: Long): DataFrame = {
-    if (hnswLayerCache.size > 64) hnswLayerCache.clear()
-    hnswLayerCache.computeIfAbsent((sessionKey(s), dir, lvl, maxVec), _ =>
+      lvl: Int, maxVec: Long): DataFrame =
+    ArtifactCache(s, dir, HnswLayer, lvl, maxVec)(
       graft.operators.NnDescent.knnGraph(
         emb(s, dir).filter(col("vec_id") < maxVec)
           .filter(graft.operators.NnDescent.levelGate(col("vec_id"), lvl))
           .select(col("vec_id"), col("embedding")),
         k = HnswUpperK, iters = HnswUpperIters))
-  }
 
   /** q132's rotated corpus: r = R·(v − μ) through the full-rank PCA
     * basis (one fused codegen pass, `PcaProjectExpr` at k = Dim), cast
@@ -288,11 +247,6 @@ object SimilarityOps {
       g0, e, qs, seeds0, NnBeam, HnswL0Hops, 5)
   }
 
-  // identity hash, not the session reference: the key must not keep the
-  // SparkSession reachable after the session is discarded
-  private def sessionKey(s: SparkSession): String =
-    s"${s.sparkContext.applicationId}-${System.identityHashCode(s)}"
-
   /** Deterministic Lloyd refinement: seeds are the k lowest-vec_id vectors;
     * each iteration assigns via the fused [[NearestCentroid]] codegen
     * expression and recomputes per-cell element-wise means rounded to 6
@@ -301,26 +255,14 @@ object SimilarityOps {
     * the k × dim mean rows ever land on the driver. */
   private[graft] def lloydCentroids(
       s: SparkSession, dir: String, k: Int, iters: Int,
-      maxVec: Long = Long.MaxValue): Seq[Seq[Double]] = {
-    if (centroidCache.size > CacheMax) {
-      // baselines are measured AGAINST a specific quantizer — evicting
-      // centroids must evict the baselines too, or assignIncremental would
-      // compare batch distances under a freshly-retrained quantizer to a
-      // baseline from the evicted one
-      centroidCache.clear()
-      baselineCache.clear()
-    }
-    // a vec_id-sliced training corpus is a DIFFERENT quantizer — the
-    // slice rides the dir key so sliced/full artifacts never alias
-    val dirKey =
-      if (maxVec == Long.MaxValue) dir else s"$dir#vmax=$maxVec"
-    centroidCache.computeIfAbsent((sessionKey(s), dirKey, k, iters), { _ =>
+      maxVec: Long = Long.MaxValue): Seq[Seq[Double]] =
+    // a vec_id-sliced training corpus is a DIFFERENT quantizer
+    ArtifactCache(s, dir, Centroids, k, iters, maxVec) {
       val e = emb(s, dir).select(col("vec_id"), col("embedding"))
       lloydFromSeeds(
         if (maxVec == Long.MaxValue) e else e.filter(col("vec_id") < maxVec),
         k, iters)
-    })
-  }
+    }
 
   /** The Lloyd loop over an explicit (vec_id, embedding) frame — the
     * uncached training engine behind [[lloydCentroids]] and the
@@ -388,14 +330,13 @@ object SimilarityOps {
     * the sample is deterministic and engine-portable. */
   private[graft] val PqTrainTarget = 20000L
 
-  /** Per-(session, dir, geometry) cache of the PQ codebooks — one
+  /** The PQ codebooks as an artifact keyed by their geometry — one
     * deterministic-Lloyd run PER SUBSPACE over the sliced embeddings
     * (seeds/iteration/rounding rules identical to [[lloydCentroids]], so
     * the DuckDB oracle reproduces every codebook exactly). Driver state is
     * M × K × (Dim/M) doubles — the persisted-artifact shape a deployment
     * trains once and ships with the index. */
-  private val pqCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, Int, Int, Int, Long), Seq[Seq[Seq[Double]]]]()
+  private val PqBooks = new ArtifactCache.Kind[Seq[Seq[Seq[Double]]]]("pqCodebooks")
 
   /** All M codebooks train in ONE fused Lloyd loop over the exploded
     * (sub, subvector) stream: per iteration a single job computes every
@@ -410,22 +351,17 @@ object SimilarityOps {
       m: Int, k: Int, iters: Int,
       trainTarget: Long = PqTrainTarget,
       maxVec: Long = Long.MaxValue,
-      src: Option[DataFrame] = None, srcTag: String = ""): Seq[Seq[Seq[Double]]] = {
-    if (pqCache.size > CacheMax) pqCache.clear()
-    // sliced corpora yield different codebooks — slice rides the dir key
-    // (the [[lloydCentroids]] rule); an alternative training source
-    // (q132's rotated corpus) rides it as a tag
-    val dirKey0 =
-      if (maxVec == Long.MaxValue) dir else s"$dir#vmax=$maxVec"
-    val dirKey = if (srcTag.isEmpty) dirKey0 else s"$dirKey0#src=$srcTag"
-    pqCache.computeIfAbsent((sessionKey(s), dirKey, m, k, iters, trainTarget), { _ =>
+      src: Option[DataFrame] = None, srcTag: String = ""): Seq[Seq[Seq[Double]]] =
+    // sliced corpora yield different codebooks (the [[lloydCentroids]]
+    // rule); an alternative training source (q132's rotated corpus) is
+    // keyed by its tag
+    ArtifactCache(s, dir, PqBooks, m, k, iters, trainTarget, maxVec, srcTag) {
       val all0 = src.getOrElse(emb(s, dir))
         .select(col("vec_id"), col("embedding"))
       val all = if (maxVec == Long.MaxValue) all0
                 else all0.filter(col("vec_id") < maxVec)
       pqCodebooksFrom(all, m, k, iters, trainTarget)
-    })
-  }
+    }
 
   /** The uncached PQ training engine behind [[pqCodebooks]] — one fused
     * deterministic-Lloyd run over an explicit (vec_id, embedding) frame;
@@ -567,8 +503,7 @@ object SimilarityOps {
       else { if (s > 0) s" + $t" else s" - $t" }
     }.mkString
 
-  private val anisoCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, Int, Int, Int, Double, Long, Long), Seq[Seq[Seq[Double]]]]()
+  private val AnisoBooks = new ArtifactCache.Kind[Seq[Seq[Seq[Double]]]]("anisoCodebooks")
 
   /** ANISOTROPIC (score-aware) PQ codebooks — the [[pqCodebooks]] fused
     * Lloyd loop with BOTH halves of the ScaNN recipe:
@@ -593,14 +528,12 @@ object SimilarityOps {
       m: Int, k: Int, iters: Int, eta: Double,
       trainTarget: Long = PqTrainTarget,
       maxVec: Long = Long.MaxValue): Seq[Seq[Seq[Double]]] = {
-    if (anisoCache.size > CacheMax) anisoCache.clear()
     val sub = Dim / m
     require(sub == 4, "anisoCodebooks: the Cramer solve is generated for sub=4")
     val w = eta - 1.0
     // trainTarget rides the key (the pqCodebooks rule): a different
     // sample stride is a different quantizer
-    anisoCache.computeIfAbsent(
-      (sessionKey(s), dir, m, k, iters, eta, maxVec, trainTarget), { _ =>
+    ArtifactCache(s, dir, AnisoBooks, m, k, iters, eta, maxVec, trainTarget) {
       val all0 = emb(s, dir).select(col("vec_id"), col("embedding"))
       val all = if (maxVec == Long.MaxValue) all0
                 else all0.filter(col("vec_id") < maxVec)
@@ -690,7 +623,7 @@ object SimilarityOps {
       }
       cents.map(_.toSeq)
       }
-    })
+    }
   }
 
   /** Result of an incremental IVF batch assignment: the batch's cell
@@ -701,8 +634,7 @@ object SimilarityOps {
 
   /** Per-quantizer drift baseline: mean nearest-centroid squared-L2 of the
     * TRAINING corpus, cached beside the centroids. */
-  private val baselineCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, Int, Int), Double]()
+  private val Baseline = new ArtifactCache.Kind[Double]("driftBaseline")
 
   /** Mean squared-L2 of each vector to its assigned (nearest) centroid:
     * cell via the codegen'd [[NearestCentroid]], distance via ONE zip_with
@@ -753,9 +685,8 @@ object SimilarityOps {
   def assignIncremental(s: SparkSession, dir: String, k: Int, iters: Int,
       batch: DataFrame, driftFactor: Double = 2.0): BatchAssignment = {
     val cents = lloydCentroids(s, dir, k, iters)
-    val baseKey = (sessionKey(s), dir, k, iters)
-    val base = baselineCache.computeIfAbsent(baseKey,
-      _ => meanCellDist(emb(s, dir), cents))
+    val base = ArtifactCache(s, dir, Baseline, k, iters)(
+      meanCellDist(emb(s, dir), cents))
     val batchDist = meanCellDist(batch, cents)
     val ratio = if (base > 0.0) batchDist / base else 1.0
     if (ratio > driftFactor) {
@@ -763,8 +694,8 @@ object SimilarityOps {
         emb(s, dir).select(col("vec_id"), col("embedding"))
           .union(batch.select(col("vec_id"), col("embedding"))),
         k, iters)
-      centroidCache.put((sessionKey(s), dir, k, iters), retrained)
-      baselineCache.remove(baseKey)
+      ArtifactCache.put(s, dir, Centroids, k, iters, Long.MaxValue)(retrained)
+      ArtifactCache.remove(s, dir, Baseline, k, iters)
       BatchAssignment(
         batch.select(col("vec_id"), col("embedding"),
           NearestCentroid.cell(col("embedding"), retrained).as("cell")),
@@ -1904,16 +1835,13 @@ object SimilarityOps {
     })
   )
 
-  /** Per-(session, dir, k) cache of the FPS center chain: (vec_id, vector)
-    * in pick order — the greedy loop runs once per session, like
-    * [[lloydCentroids]]. */
-  private val fpsCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, Int), Seq[(Long, Seq[Double])]]()
+  /** The FPS center chain as an artifact: (vec_id, vector) in pick order
+    * — the greedy loop runs once per session, like [[lloydCentroids]]. */
+  private val FpsCenters = new ArtifactCache.Kind[Seq[(Long, Seq[Double])]]("fpsCenters")
 
   private[graft] def fpsCenters(s: SparkSession, dir: String,
-      k: Int): Seq[(Long, Seq[Double])] = {
-    if (fpsCache.size > CacheMax) fpsCache.clear()
-    fpsCache.computeIfAbsent((sessionKey(s), dir, k), { _ =>
+      k: Int): Seq[(Long, Seq[Double])] =
+    ArtifactCache(s, dir, FpsCenters, k) {
       val e = emb(s, dir).select(col("vec_id"), col("embedding"))
       val first = e.orderBy("vec_id").limit(1).collect()(0)
       var centers = Vector(
@@ -1927,8 +1855,7 @@ object SimilarityOps {
           ((next.getLong(0), next.getSeq[Float](1).map(_.toDouble): Seq[Double]))
       }
       centers
-    })
-  }
+    }
 
   /** q148: MMR balance knob (0.25 ⇒ 1−λ = 0.75, both exact in binary —
     * no ugly cross-engine literal). On the planted-cluster geometry
@@ -2067,8 +1994,7 @@ object SimilarityOps {
         (col("pos") + 1).cast("long").as("rnk"))
   }
 
-  private val sq8ServeCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
+  private val Sq8Serve = new ArtifactCache.Kind[DataFrame]("sq8Serve")
 
   /** (touched store bytes, total store bytes) of the last q152 serve —
     * the int8 tier's bandwidth claim, measured. */
@@ -2089,11 +2015,8 @@ object SimilarityOps {
     * top-R, then the optional exact fp re-rank reads ONLY the R
     * survivors from the raw tier (the q123 shape). Serve bytes touched
     * vs store total land in [[lastSq8ServeBytes]]. */
-  private[graft] def sq8StoreServe(s: SparkSession, dir: String): DataFrame = {
-    if (sq8ServeCache.size > CacheMax) sq8ServeCache.clear()
-    sq8ServeCache.computeIfAbsent((sessionKey(s), dir),
-      _ => sq8StoreServeUncached(s, dir))
-  }
+  private[graft] def sq8StoreServe(s: SparkSession, dir: String): DataFrame =
+    ArtifactCache(s, dir, Sq8Serve)(sq8StoreServeUncached(s, dir))
 
   private def sq8StoreServeUncached(s: SparkSession,
       dir: String): DataFrame = {
@@ -2260,8 +2183,7 @@ object SimilarityOps {
           org.apache.spark.sql.types.DoubleType, nullable = false))))
   }
 
-  private val filteredStoreCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
+  private val FilteredServe = new ArtifactCache.Kind[DataFrame]("filteredServe")
 
   /** (touched store bytes, total store bytes) of the last q153 serve. */
   private[graft] val lastFilteredServeBytes =
@@ -2280,11 +2202,8 @@ object SimilarityOps {
     * q134's). Both partition columns are self-verified on the physical
     * scan; touched vs total bytes land in [[lastFilteredServeBytes]]. */
   private[graft] def filteredStoreServe(s: SparkSession,
-      dir: String): DataFrame = {
-    if (filteredStoreCache.size > CacheMax) filteredStoreCache.clear()
-    filteredStoreCache.computeIfAbsent((sessionKey(s), dir),
-      _ => filteredStoreServeUncached(s, dir))
-  }
+      dir: String): DataFrame =
+    ArtifactCache(s, dir, FilteredServe)(filteredStoreServeUncached(s, dir))
 
   private def filteredStoreServeUncached(s: SparkSession,
       dir: String): DataFrame = {
@@ -2914,15 +2833,12 @@ object SimilarityOps {
     * checks (same SQL; the store changes WHERE bytes live, never what
     * they say). AnnRecallSpec additionally pins result ≡ q97 in-engine
     * and that the serve scan carries a partition filter. */
-  private val shardedServeCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, Long), DataFrame]()
+  private val ShardedServe = new ArtifactCache.Kind[DataFrame]("shardedServe")
 
   private[graft] def annShardedStoreServe(s: SparkSession, dir: String,
-      maxVec: Long = IvfPqGateSlice): DataFrame = {
-    if (shardedServeCache.size > CacheMax) shardedServeCache.clear()
-    shardedServeCache.computeIfAbsent((sessionKey(s), dir, maxVec), _ =>
+      maxVec: Long = IvfPqGateSlice): DataFrame =
+    ArtifactCache(s, dir, ShardedServe, maxVec)(
       annShardedStoreServeUncached(s, dir, maxVec))
-  }
 
   private def annShardedStoreServeUncached(s: SparkSession, dir: String,
       maxVec: Long): DataFrame = {
@@ -2994,8 +2910,7 @@ object SimilarityOps {
     }
   }
 
-  private val vecIngestServeCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, Long, Long, Seq[Long]), DataFrame]()
+  private val VecIngestServe = new ArtifactCache.Kind[DataFrame]("vecIngestServe")
 
   /** q144's body: STREAMING ingest into the q137 store —
     * [[graft.streaming.VectorStoreIngest]] (Structured Streaming
@@ -3019,11 +2934,9 @@ object SimilarityOps {
       maxVec: Long = IvfPqGateSlice,
       split: Long = IvfPqIngestSplit,
       cuts: Option[Seq[Long]] = None): DataFrame = {
-    if (vecIngestServeCache.size > CacheMax) vecIngestServeCache.clear()
     val cutList = cuts.getOrElse(Seq((split + maxVec) / 2))
-    vecIngestServeCache.computeIfAbsent(
-      (sessionKey(s), dir, maxVec, split, cutList),
-      _ => vectorStoreIngestServeUncached(s, dir, maxVec, split, cutList))
+    ArtifactCache(s, dir, VecIngestServe, maxVec, split, cutList)(
+      vectorStoreIngestServeUncached(s, dir, maxVec, split, cutList))
   }
 
   private def vectorStoreIngestServeUncached(s: SparkSession, dir: String,
@@ -3137,8 +3050,7 @@ object SimilarityOps {
   private[graft] val DriftBatchSlice = 100L
   private[graft] val DriftIdOffset = 200000L
 
-  private val driftServeCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
+  private val DriftServe = new ArtifactCache.Kind[DataFrame]("driftServe")
 
   /** q150's body: the STREAMING DRIFT-RETRAIN lifecycle
     * ([[graft.streaming.DriftingVectorStore]]) driven end to end — the
@@ -3158,11 +3070,8 @@ object SimilarityOps {
     * didn't when it should) hash-mismatches, not just differs in a
     * flag. */
   private[graft] def driftRetrainServe(s: SparkSession,
-      dir: String): DataFrame = {
-    if (driftServeCache.size > CacheMax) driftServeCache.clear()
-    driftServeCache.computeIfAbsent((sessionKey(s), dir),
-      _ => driftRetrainServeUncached(s, dir))
-  }
+      dir: String): DataFrame =
+    ArtifactCache(s, dir, DriftServe)(driftRetrainServeUncached(s, dir))
 
   private def driftRetrainServeUncached(s: SparkSession,
       dir: String): DataFrame = {
@@ -3220,8 +3129,7 @@ object SimilarityOps {
     * NnSeeds so the fixed entry seeds (lowest ids) live in shard 0. */
   private[graft] val GraphShardW = 64L
 
-  private val graphServeCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, Long, Long, Long), DataFrame]()
+  private val GraphServe = new ArtifactCache.Kind[DataFrame]("graphServe")
 
   /** (touched store bytes, total store bytes) of the last q141 serve —
     * the serve-bytes fraction measurement scale probes read. */
@@ -3251,12 +3159,9 @@ object SimilarityOps {
       slice: Long = GraphGateSlice,
       split: Long = RpIngestSplit,
       serveDriverMax: Long = graft.operators.NnDescent.DriverMaxVectors)
-      : DataFrame = {
-    if (graphServeCache.size > CacheMax) graphServeCache.clear()
-    graphServeCache.computeIfAbsent(
-      (sessionKey(s), dir, slice, split, serveDriverMax), _ =>
-        graphShardedStoreServeUncached(s, dir, slice, split, serveDriverMax))
-  }
+      : DataFrame =
+    ArtifactCache(s, dir, GraphServe, slice, split, serveDriverMax)(
+      graphShardedStoreServeUncached(s, dir, slice, split, serveDriverMax))
 
   private def requireCellFilter(df: DataFrame, what: String): Unit = {
     val partFilters = df.queryExecution.executedPlan.collect {
@@ -3328,8 +3233,7 @@ object SimilarityOps {
     * embeddings id range. */
   private[graft] val BatchProbeMax = 1024L
 
-  private val graphBatchServeCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, Long), DataFrame]()
+  private val GraphBatchServe = new ArtifactCache.Kind[DataFrame]("graphBatchServe")
 
   /** q158's body: DISTRIBUTED BATCH SERVE through the q141 sharded
     * store — the same store build, the same navigation arithmetic, but
@@ -3341,14 +3245,11 @@ object SimilarityOps {
     * [[lastGraphServeBytes]]; GraphServeProbe pins wall ∝ probes and
     * flat in corpus size. */
   private[graft] def graphBatchServe(s: SparkSession, dir: String,
-      probeMax: Long = BatchProbeMax): DataFrame = {
-    if (graphBatchServeCache.size > CacheMax) graphBatchServeCache.clear()
-    graphBatchServeCache.computeIfAbsent((sessionKey(s), dir, probeMax),
-      _ => graphBatchServeUncached(s, dir, probeMax))
-  }
+      probeMax: Long = BatchProbeMax): DataFrame =
+    ArtifactCache(s, dir, GraphBatchServe, probeMax)(
+      graphBatchServeUncached(s, dir, probeMax))
 
-  private val graphEntryServeCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
+  private val GraphEntryServe = new ArtifactCache.Kind[DataFrame]("graphEntryServe")
 
   /** q165's body — the ENTRY-DISCIPLINED batch serve: the same q141
     * store and the same per-hop navigation as q158, but each probe's
@@ -3367,9 +3268,8 @@ object SimilarityOps {
     * single-entry stack pays for its cheaper hop-1 — which is why this
     * ships as its OWN gate beside q158 rather than replacing it. */
   private[graft] def graphEntryServe(s: SparkSession, dir: String,
-      probeMax: Long = BatchProbeMax): DataFrame = {
-    if (graphEntryServeCache.size > CacheMax) graphEntryServeCache.clear()
-    graphEntryServeCache.computeIfAbsent((sessionKey(s), dir), _ => {
+      probeMax: Long = BatchProbeMax): DataFrame =
+    ArtifactCache(s, dir, GraphEntryServe, probeMax) {
       val base = java.nio.file.Files.createTempDirectory("q165_store").toString
       try {
         buildGraphShardedStore(s, dir, GraphGateSlice, RpIngestSplit, base)
@@ -3384,8 +3284,7 @@ object SimilarityOps {
       } finally {
         graft.export.Exporter.deleteRecursively(java.nio.file.Paths.get(base))
       }
-    })
-  }
+    }
 
   /** q167's body — RRF hybrid retrieval. The lexical list is q119's
     * gated output verbatim (probe selection included: lowest-id docs of
@@ -3882,11 +3781,10 @@ object SimilarityOps {
         (col("pos") + 1).cast("long").as("rnk"))
   }
 
-  /** Per-(session, dir, k) cache of the fitted PCA basis — see
+  /** The fitted PCA basis as an artifact keyed by k — see
     * [[graft.operators.Pca.fit]]; the artifact-persistence shape of
-    * [[lloydCentroids]], with the same bounded-eviction rule. */
-  private val pcaCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, Int), graft.operators.Pca.Basis]()
+    * [[lloydCentroids]]. */
+  private val PcaBasis = new ArtifactCache.Kind[graft.operators.Pca.Basis]("pcaBasis")
 
   // ---- probe hooks for tools/Q132Probe's decomposition ----
   private[graft] def q132PcaBasisForProbe(s: SparkSession, dir: String): Unit =
@@ -3898,11 +3796,9 @@ object SimilarityOps {
       src = Some(opqRotatedCorpus(s, dir, GraphGateSlice)
         .select(col("vec_id"), col("embedding"))), srcTag = "opq")
 
-  private[graft] def pcaBasis(s: SparkSession, dir: String, k: Int): graft.operators.Pca.Basis = {
-    if (pcaCache.size > CacheMax) pcaCache.clear()
-    pcaCache.computeIfAbsent((sessionKey(s), dir, k),
-      _ => graft.operators.Pca.fit(emb(s, dir), "embedding", Dim, k))
-  }
+  private[graft] def pcaBasis(s: SparkSession, dir: String, k: Int): graft.operators.Pca.Basis =
+    ArtifactCache(s, dir, PcaBasis, k)(
+      graft.operators.Pca.fit(emb(s, dir), "embedding", Dim, k))
 
   /** DuckDB CTE chain replicating the deterministic Lloyd refinement
     * ([[lloydCentroids]]): assignment = row_number over (distance, cell) —

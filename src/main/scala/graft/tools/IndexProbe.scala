@@ -42,7 +42,7 @@ object IndexProbe {
     val ck = time("postingsOf + localCheckpoint")(
       graft.queries.IndexOps.postingsOf(docs).localCheckpoint(eager = true))
     time("termIndexOf over ckpt")(noop(graft.queries.IndexOps.termIndexOf(ck)))
-    graft.queries.IndexOps.clearCache()
+    graft.queries.ArtifactCache.clearAll()
     time("q118 full (fresh cache)")(
       noop(graft.SparkEntry.queries("q118_inverted_index")(spark, dir)))
     time("q118 full (warm cache)")(

@@ -28,27 +28,15 @@ object JobsProbe {
         last = jobs.get(); Thread.sleep(50); spins += 1
       }
     }
-    val nonQuery = Set("q86_ingest_endstate", "q90_image_ingest_endstate",
-      "q91_audio_ingest_endstate", "q92_video_ingest_endstate",
-      "q95_stream_sessionize_endstate", "q96_stream_window_endstate",
-      "q98_stream_join_endstate", "q100_stream_dedup_endstate",
-      "q104_stream_timer_sessionize_endstate", "q121_index_ingest_endstate",
-      "q125_bm25_sharded_store")
     val names = graft.SparkEntry.queries.keys.toSeq.sorted
-      .filterNot(nonQuery)
+      .filterNot(graft.SparkEntry.untimed)
       .filter(n => only.forall(f => f.exists(n.startsWith)))
-    def clear(): Unit = {
-      graft.queries.CurationOps.clearCache()
-      graft.queries.DedupOps.clearCache()
-      graft.queries.SimilarityOps.clearCache()
-      graft.queries.IndexOps.clearCache()
-      graft.queries.TextOps.clearCache()
-    }
     def exec(n: String): Unit =
       graft.SparkEntry.queries(n)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
-    clear(); names.foreach(exec) // warm: JIT, codegen, artifact caches
-    clear()
+    graft.queries.ArtifactCache.clearAll()
+    names.foreach(exec) // warm: JIT, codegen, artifact caches
+    graft.queries.ArtifactCache.clearAll()
     val stats = names.map { n =>
       settle()
       val j0 = jobs.get()

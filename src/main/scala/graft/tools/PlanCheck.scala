@@ -114,11 +114,7 @@ object PlanCheck {
     val spark = graft.core.GraftSession.local(8)
     val names = graft.SparkEntry.queries.keys.toSeq.sorted
     val out = new StringBuilder
-    graft.queries.CurationOps.clearCache() // signatures assume a cold cache
-    graft.queries.DedupOps.clearCache()
-    graft.queries.SimilarityOps.clearCache()
-    graft.queries.IndexOps.clearCache()
-    graft.queries.TextOps.clearCache()
+    graft.queries.ArtifactCache.clearAll() // signatures assume a cold cache
     withStaticPlans(spark) {
       names.foreach { name =>
         try {

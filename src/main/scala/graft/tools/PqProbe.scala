@@ -13,7 +13,7 @@ object PqProbe {
       val t0 = System.nanoTime(); val r = f
       System.err.println(f"[pqprobe] $label: ${(System.nanoTime() - t0) / 1e9}%.2f s"); r
     }
-    graft.queries.SimilarityOps.clearCache()
+    graft.queries.ArtifactCache.clearAll()
     t("coarse lloyd (8,3)") { graft.queries.SimilarityOps.lloydCentroids(spark, dir, 8, 3) }
     t("pq codebooks fused (16,16,3)") { graft.queries.SimilarityOps.pqCodebooks(spark, dir, 16, 16, 3) }
     // unsliced path (the gate query slice-bounds; scaling is probed here)

@@ -17,7 +17,7 @@ object Q123Probe {
     import graft.queries.SimilarityOps
     val slice = SimilarityOps.IvfPqGateSlice
     // warm JIT/codegen once, then measure with warm artifact caches
-    SimilarityOps.clearCache()
+    graft.queries.ArtifactCache.clearAll()
     t("warmup q123 (cold caches)") {
       SimilarityOps.ivfPqRerank(spark, dir, slice)
         .write.format("noop").mode("overwrite").save()

@@ -37,14 +37,14 @@ object Q128Probe {
     }
     // warm pass (JIT + codegen), then clear and decompose
     run()
-    graft.queries.DedupOps.clearCache()
+    graft.queries.ArtifactCache.clearAll()
     timed("artifact (shingleTfIdf)") {
       // materialize the cached artifact alone via a cheap consumer
       graft.queries.DedupOps.q128ArtifactForProbe(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
     }
     timed("rest (dt + final, warm art)") { run() }
-    graft.queries.DedupOps.clearCache()
+    graft.queries.ArtifactCache.clearAll()
     timed("full (cold caches)") { run() }
     spark.stop()
   }

@@ -34,7 +34,7 @@ object Q132Probe {
       graft.SparkEntry.queries("q132_opq_rotated_pq")(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
     run() // warm
-    graft.queries.SimilarityOps.clearCache()
+    graft.queries.ArtifactCache.clearAll()
     timed("pcaBasis") {
       graft.queries.SimilarityOps.q132PcaBasisForProbe(spark, sfDir)
     }
@@ -46,7 +46,7 @@ object Q132Probe {
       graft.queries.SimilarityOps.q132PqForProbe(spark, sfDir)
     }
     timed("final (warm artifacts)") { run() }
-    graft.queries.SimilarityOps.clearCache()
+    graft.queries.ArtifactCache.clearAll()
     timed("full (cold caches)") { run() }
     spark.stop()
   }

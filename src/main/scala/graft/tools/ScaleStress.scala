@@ -211,14 +211,6 @@ object ScaleStress {
     }
   }
 
-  private def clearCaches(): Unit = {
-    graft.queries.CurationOps.clearCache()
-    graft.queries.DedupOps.clearCache()
-    graft.queries.SimilarityOps.clearCache()
-    graft.queries.IndexOps.clearCache()
-    graft.queries.TextOps.clearCache()
-  }
-
   final case class QStat(name: String, sec: Double, shufReadB: Long,
       shufWriteB: Long, outRows: Long)
 
@@ -254,7 +246,7 @@ object ScaleStress {
   def runSuite(spark: SparkSession, dir: String, meter: ShuffleMeter,
       rows: Map[String, Long] = Map.empty,
       qs: Seq[String] = SuiteQueries): Seq[QStat] = {
-    clearCaches()
+    graft.queries.ArtifactCache.clearAll()
     qs.map { name =>
       meter.settle()
       val (r0, w0, _, _) = meter.snapshot()
@@ -270,7 +262,7 @@ object ScaleStress {
 
   /** Untimed output-row counts (deterministic per scale). */
   def countRows(spark: SparkSession, dir: String): Map[String, Long] = {
-    clearCaches()
+    graft.queries.ArtifactCache.clearAll()
     SuiteQueries.map(n =>
       n -> queryFn(n)(spark, dir).count()).toMap
   }
@@ -282,7 +274,8 @@ object ScaleStress {
     * grows ~quadratically on a small-vocab corpus; the tuned one must stay
     * ~linear with recall ≈ 1 on true dups. */
   def lshTunedStage(spark: SparkSession, dir: String): (Double, Long, Double) = {
-    clearCaches() // the 64-hash artifact build is billed to this stage
+    // the 64-hash artifact build is billed to this stage
+    graft.queries.ArtifactCache.clearAll()
     val t0 = System.nanoTime()
     val pairs = graft.queries.DedupOps
       .lshPairsTuned(spark, dir, numHashes = 64, bandRows = 8,
@@ -313,7 +306,7 @@ object ScaleStress {
     * output ~linear at preserved true-dup recall. */
   def enumTunedStage(spark: SparkSession, dir: String)
       : (Double, Long, Double, Double, Long) = {
-    clearCaches()
+    graft.queries.ArtifactCache.clearAll()
     // planes ∝ log n — THE enumeration-family scale lever (fixed width ⇒
     // bucket populations grow with n and a fixed cap eventually swallows
     // true pairs too, measured: recall 1.0 → 0.33 from 1× to 10× at a
@@ -518,7 +511,7 @@ object ScaleStress {
   def indexStoreStage(spark: SparkSession, dir: String,
       meter: ShuffleMeter): IndexStoreStat = {
     import graft.queries.IndexOps
-    clearCaches()
+    graft.queries.ArtifactCache.clearAll()
     val base = java.nio.file.Files.createTempDirectory("graft_idx_store")
     val d = graft.sources.Tables(spark, dir, "documents")
       .select(col("doc_id"), col("text"))
@@ -568,7 +561,7 @@ object ScaleStress {
     * driver), checked for exact agreement with the driver union-find path. */
   def ccForcedDistributed(spark: SparkSession, dir: String): (Double, Long) = {
     import graft.operators.ConnectedComponents
-    clearCaches()
+    graft.queries.ArtifactCache.clearAll()
     val pairs = graft.queries.DedupOps.queries("q33_minhash_lsh_pairs")(spark, dir)
       .filter(col("est_jaccard") >= 0.5)
       .select(col("doc_a"), col("doc_b"))
@@ -741,7 +734,7 @@ object ScaleStress {
       val shapes = Seq(("fixed8", 8L), ("scaled", 8L * m))
       val line = shapes.map { case (label, sh) =>
         val runs = (1 to 2).map { _ =>
-          clearCaches()
+          graft.queries.ArtifactCache.clearAll()
           meter.settle()
           val (_, w0, _, _) = meter.snapshot()
           val t0 = System.nanoTime()

@@ -49,16 +49,7 @@ object SuiteDrift {
     }
 
     val names = graft.SparkEntry.queries.keys.toSeq.sorted
-      .filterNot(Set("q86_ingest_endstate", "q90_image_ingest_endstate",
-        "q91_audio_ingest_endstate", "q92_video_ingest_endstate",
-        "q95_stream_sessionize_endstate", "q96_stream_window_endstate",
-        "q98_stream_join_endstate", "q100_stream_dedup_endstate",
-        "q104_stream_timer_sessionize_endstate", "q121_index_ingest_endstate",
-        "q125_bm25_sharded_store", "q144_vector_store_ingest_endstate",
-        "q150_drift_retrain_endstate", "q156_tokenizer_retrain_endstate",
-        "q137_ann_sharded_store", "q141_graph_sharded_store",
-        "q152_ann_sq8_store", "q153_ann_filtered_store",
-        "q158_graph_batch_serve", "q165_graph_entry_serve"))
+      .filterNot(graft.SparkEntry.untimed)
     // warm the basket twice so JIT/codegen of the basket itself is done
     timeBasket("fresh-cold")
     timeBasket("fresh-warm")

@@ -50,7 +50,7 @@ object VectorStoreProbe {
             .cast("double") / 1000.0).cast("float")))
         .repartition(math.max(2, (n / 100000L).toInt))
         .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-      SimilarityOps.clearCache()
+      graft.queries.ArtifactCache.clearAll()
       val e = graft.sources.Tables(spark, dir, "embeddings")
         .select(col("vec_id"), col("embedding"))
       // frozen artifacts on the standing slice (bounded-sample training)

@@ -470,7 +470,7 @@ class AnnRecallSpec extends AnyFunSuite {
   test("fused PQ codebook training equals independent per-subspace Lloyd") {
     import org.apache.spark.sql.functions._
     import graft.queries.SimilarityOps
-    SimilarityOps.clearCache()
+    graft.queries.ArtifactCache.clearAll()
     val (m, k, iters) =
       (SimilarityOps.PqM, SimilarityOps.PqK, SimilarityOps.PqIters)
     val sub = SimilarityOps.PqSub
@@ -500,7 +500,7 @@ class AnnRecallSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     import graft.queries.SimilarityOps
     import org.apache.spark.sql.graft.PqExpr
-    SimilarityOps.clearCache()
+    graft.queries.ArtifactCache.clearAll()
     // the deployment shape: codebooks + coarse quantizer are persisted
     // artifacts trained once on the standing corpus; a NEW batch is
     // encoded against them with per-batch cost (the PQ twin of
@@ -531,7 +531,7 @@ class AnnRecallSpec extends AnyFunSuite {
   test("bounded-budget PQ training: small target trains on the strided sample only") {
     import org.apache.spark.sql.functions._
     import graft.queries.SimilarityOps
-    SimilarityOps.clearCache()
+    graft.queries.ArtifactCache.clearAll()
     val (m, k, iters) = (4, 8, 2)
     val sub = 64 / m
     // target 100 over 500 vectors → stride 5: codebooks must equal an
@@ -650,7 +650,7 @@ class AnnRecallSpec extends AnyFunSuite {
   test("incremental IVF: batch assignment equals full recompute; no retrain") {
     import org.apache.spark.sql.functions._
     import graft.queries.SimilarityOps
-    SimilarityOps.clearCache()
+    graft.queries.ArtifactCache.clearAll()
     val (k, iters) = (8, 3)
     val e = graft.sources.Tables(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding"))
@@ -674,7 +674,7 @@ class AnnRecallSpec extends AnyFunSuite {
   test("incremental IVF: a drifted batch triggers the retrain hook") {
     import org.apache.spark.sql.functions._
     import graft.queries.SimilarityOps
-    SimilarityOps.clearCache()
+    graft.queries.ArtifactCache.clearAll()
     val (k, iters) = (8, 3)
     // push the batch far outside the trained space: +25 on every element
     val drifted = graft.sources.Tables(spark, dir, "embeddings")
@@ -692,7 +692,7 @@ class AnnRecallSpec extends AnyFunSuite {
       drifted.select((col("vec_id") + 1000L).as("vec_id"), col("embedding")))
     assert(!followup.retrained,
       f"followup drift ${followup.driftRatio}%.3f after retrain")
-    SimilarityOps.clearCache() // don't leak the retrained quantizer to other specs
+    graft.queries.ArtifactCache.clearAll() // don't leak the retrained quantizer to other specs
   }
 
   test("q126 NN-Descent graph: mean neighbor recall vs brute-force k-NN >= 0.85; degree bounded") {

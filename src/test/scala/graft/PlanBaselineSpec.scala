@@ -31,11 +31,7 @@ class PlanBaselineSpec extends AnyFunSuite {
     // a checkpoint scan), and likewise the shared shingle/signature stages —
     // signatures are defined over a cold cache, queries built in sorted
     // order (matching PlanCheck.main, so the cold/warm split is identical)
-    graft.queries.CurationOps.clearCache()
-    graft.queries.DedupOps.clearCache()
-    graft.queries.SimilarityOps.clearCache()
-    graft.queries.IndexOps.clearCache()
-    graft.queries.TextOps.clearCache()
+    graft.queries.ArtifactCache.clearAll()
     val diffs = PlanCheck.withStaticPlans(spark) {
       baseline.toSeq.sortBy(_._1).flatMap { case (name, want) =>
         val got = PlanCheck.signature(spark, dir, name)
@@ -52,11 +48,7 @@ class PlanBaselineSpec extends AnyFunSuite {
     // per GENERATED row, so split/regexp/json/HOF expressions there that
     // reference only carried-through input columns pay explode-fanout×
     // redundant work. Such expressions belong below the Generate.
-    graft.queries.CurationOps.clearCache()
-    graft.queries.DedupOps.clearCache()
-    graft.queries.SimilarityOps.clearCache()
-    graft.queries.IndexOps.clearCache()
-    graft.queries.TextOps.clearCache()
+    graft.queries.ArtifactCache.clearAll()
     val findings = PlanCheck.withStaticPlans(spark) {
       SparkEntry.queries.keys.toSeq.sorted.flatMap { name =>
         PlanCheck.postGenerateRecomputes(

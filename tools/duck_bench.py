@@ -6,9 +6,10 @@ Usage: python3 tools/duck_bench.py [sfDir] [verifyOutDir-with-oracle_sql.json]
 
 Prints per-query seconds (descending) and the total. q40 is skipped (its
 oracle hardcodes the sf0.01 path — it's a catalog operator, not a bench
-query). q86 is skipped SYMMETRICALLY with graft.Bench (see the comment
-there): its Spark side runs a streaming-ingest lifecycle, not a query,
-so neither side times it; the correctness gate still covers it.
+query). The lifecycle and store gates are skipped SYMMETRICALLY with
+graft.Bench (graft.SparkEntry.untimed): their Spark side runs an ingest
+lifecycle or a store build, not a query, so neither side times them; the
+correctness gate still covers them.
 
 Also importable (tools/paired_bench.py): `connect(sf)` builds the view'd
 connection, `run_pass(con, sql)` times one full pass and returns the
@@ -16,12 +17,9 @@ per-query dict.
 """
 import duckdb, json, sys, time
 
-# skipped SYMMETRICALLY with graft.Bench's nonQueryEntries (see the
-# comments there): lifecycle/store-build gates whose Spark side pays an
-# ingest or store build+write per pass while these oracles are one-shot
-# SELECTs — neither side would be timing query execution. q40's oracle
-# hardcodes the sf0.01 path (catalog operator). Correctness stays gated
-# every round via Verify.
+# graft.SparkEntry.untimed (the rationale lives there) plus q40, whose
+# oracle hardcodes the sf0.01 path (catalog operator); UntimedRegistrySpec
+# keeps the two lists equal.
 SKIP = frozenset((
     "q40_parquet_meta", "q86_ingest_endstate",
     "q90_image_ingest_endstate", "q91_audio_ingest_endstate",
@@ -34,9 +32,6 @@ SKIP = frozenset((
     "q144_vector_store_ingest_endstate",
     "q150_drift_retrain_endstate",
     "q156_tokenizer_retrain_endstate",
-    # r16: the four partitioned-store gates, skipped SYMMETRICALLY with
-    # graft.Bench (see the comment there) — their Spark side pays a full
-    # store build+write per pass while these oracles are one-shot SELECTs
     "q137_ann_sharded_store", "q141_graph_sharded_store",
     "q152_ann_sq8_store", "q153_ann_filtered_store",
     "q158_graph_batch_serve", "q165_graph_entry_serve"))
