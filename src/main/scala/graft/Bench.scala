@@ -113,7 +113,7 @@ object Bench {
       val p = timedPass()
       // codegen-cache health (stderr): if this count grows pass over pass,
       // the Janino cache is evicting and the pass is paying recompiles
-      // (the r17 late-suite finding — tools/SuiteDrift measures it)
+      // (the r17 late-suite finding — tools/Probe prints it per query)
       System.err.println(s"[bench] pass $k janinoCompiles=" +
         org.apache.spark.metrics.source.CodegenMetrics
           .METRIC_COMPILATION_TIME.getCount)

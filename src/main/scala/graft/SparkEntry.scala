@@ -21,8 +21,8 @@ object SparkEntry {
       SimilarityOps.queries ++ TemporalOps.queries ++ CurationOps.queries ++
       ScaleOps.queries ++ MediaOps.queries ++ SketchOps.queries ++ IndexOps.queries
 
-  /** Lifecycle and store gates that no bench times (Bench, JobsProbe,
-    * SuiteDrift here; `tools/duck_bench.py` skips the same names plus
+  /** Lifecycle and store gates that no bench times (Bench and
+    * tools/Probe here; `tools/duck_bench.py` skips the same names plus
     * q40). Each one runs an ingest lifecycle (streaming micro-batches
     * with checkpoint and state writes, ~7 s a run for q86 at sf0.1,
     * dispatch- and IO-floor-bound; q150 and q156 add a drift-triggered

@@ -1,19 +1,14 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the conf Bench times: GraftSession's factory, shuffle partitions
+    // max(cpus, 4)
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = graft.core.GraftSession.local(cpus)
     new java.io.File(outDir).mkdirs()
     // run queries on a small thread pool: each query's jobs parallelize
     // across cores, but scheduling gaps + driver-side planning serialize
@@ -24,11 +19,15 @@ object Verify {
     // SPARK_GRAFT_VERIFY_ONLY=q117,q118 — iterate on a subset locally;
     // unset (the driver's mode) runs everything. A token matches the
     // exact query name or a prefix up to '_' (so "q11" selects
-    // q11_running_sum, NOT q110–q119 — r9 ADVICE).
+    // q11_running_sum, NOT q110–q119 — r9 ADVICE). oracle_sql.json then
+    // holds only the selected entries, so tools/check_oracle.py checks
+    // exactly the subset.
     val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY").filter(_.nonEmpty)
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    def picked(name: String): Boolean =
+      only.forall(_.exists(p => name == p || name.startsWith(p + "_")))
     val selected = SparkEntry.queries.toSeq.filter { case (name, _) =>
-      only.forall(_.exists(p => name == p || name.startsWith(p + "_"))) }
+      picked(name) }
     val tasks = selected.map { case (name, fn) =>
       pool.submit(new Runnable {
         override def run(): Unit =
@@ -64,6 +63,7 @@ object Verify {
     // parquet_metadata scan) and stay verifiable at EVERY scale factor —
     // substituted here because only Verify knows which sf dir this run is
     val json = SparkEntry.oracleSql
+      .filter { case (k, _) => picked(k) }
       .map { case (k, v) => s"${q(k)}: ${q(v.replace("@SF_DIR@", sfDir))}" }
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)

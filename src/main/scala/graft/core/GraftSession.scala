@@ -21,7 +21,7 @@ object GraftSession {
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.parquet.compression.codec", "zstd")
       // 169 distinct query shapes compile ~1900 whole-stage-codegen units
-      // per suite pass (measured by tools/SuiteDrift r17) — above the 1000
+      // per suite pass (measured r17, OPTIMIZATION_r17.md) — above the 1000
       // entries r4 set, so min-of-k passes re-running in sorted order hit
       // worst-case LRU thrash: ~every unit recompiles every pass at
       // ~11-45 ms each (~20 s/pass of pure Janino). 8000 holds the whole

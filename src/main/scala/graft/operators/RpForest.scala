@@ -106,7 +106,7 @@ object RpForest {
     * `driverMax` contract): a corpus of ≤ this many vectors builds the
     * IDENTICAL forest in local Scala — the distributed build's per-level
     * checkpoint + threshold-collect rounds are pure dispatch floor at
-    * slice scale (JobsProbe: 32 jobs / 2.95 s on the 6k-vector sf0.1
+    * slice scale (measured: 32 jobs / 2.95 s on the 6k-vector sf0.1
     * bench corpus), while past the gate the shuffle-bounded level loop
     * takes over untouched. `take(max+1)` doubles as the branch probe.
     * Local ≡ distributed is asserted by AnnRecallSpec (exact leaf /

@@ -371,10 +371,6 @@ object DedupOps {
     * hash shingles to 64-bit and pair on the digests); a cross-shingle
     * xxhash64 collision within one corpus (~|V|²/2⁶⁵, ≈3e-9 at the gate
     * vocab) is the same accepted risk class. */
-  /** Probe hook: the q128 artifact, for tools/Q128Probe's decomposition. */
-  private[graft] def q128ArtifactForProbe(s: SparkSession,
-      dir: String): DataFrame = shingleTfIdfCached(s, dir)
-
   private def shingleTfIdfCached(s: SparkSession, dir: String): DataFrame =
     cachedStage(s, dir, "shingleTfIdf") {
       val stf = docs(s, dir)

@@ -1188,7 +1188,7 @@ object SimilarityOps {
     // slice keeps BOTH engines' gate cost flat at any SF (the oracle
     // replays the full Lloyd chain in SQL; unsliced it retrains over the
     // whole corpus and dominates the DuckDB suite, r12 verdict item 5).
-    // Full-corpus scaling stays measured: ScaleStress/PqProbe drive
+    // Full-corpus scaling stays measured: ScaleStress drives
     // [[ivfPqTop5]]/[[ivfPqRerank]] with maxVec = MaxValue.
     "q97_ann_ivfpq" -> ((s, dir) => ivfPqTop5(s, dir, IvfPqGateSlice)),
 
@@ -2411,7 +2411,7 @@ object SimilarityOps {
     // query-time-LUT shape. The old spelling built them as a PqM×PqK
     // literal expression tree (~10k Catalyst nodes): measured 0.4-0.7 s
     // of analysis + planning PER RUN before any task launched
-    // (tools/Q123Probe), against ~1 ms of driver arithmetic here.
+    // (r18, OPTIMIZATION_r18.md), against ~1 ms of driver arithmetic here.
     // sqL2Local mirrors the retired sqL2 Column bit-for-bit; cell ties
     // (d, then cell) keep the oracle's row_number order, and rank 1
     // reproduces NearestCentroid's strict-< lowest-index rule exactly.
@@ -2438,7 +2438,7 @@ object SimilarityOps {
     * slicing changes nothing where the oracle history was established,
     * and a fixed bound above that — the gate's cost (in BOTH engines,
     * crucially the oracle's SQL replay of the Lloyd chains) stays flat
-    * at any SF while ScaleStress/PqProbe keep measuring the unsliced
+    * at any SF while ScaleStress keeps measuring the unsliced
     * path. */
   private[graft] val IvfPqGateSlice = 500L
 
@@ -3785,16 +3785,6 @@ object SimilarityOps {
     * [[graft.operators.Pca.fit]]; the artifact-persistence shape of
     * [[lloydCentroids]]. */
   private val PcaBasis = new ArtifactCache.Kind[graft.operators.Pca.Basis]("pcaBasis")
-
-  // ---- probe hooks for tools/Q132Probe's decomposition ----
-  private[graft] def q132PcaBasisForProbe(s: SparkSession, dir: String): Unit =
-    pcaBasis(s, dir, Dim)
-  private[graft] def q132RotForProbe(s: SparkSession, dir: String): DataFrame =
-    opqRotatedCorpus(s, dir, GraphGateSlice)
-  private[graft] def q132PqForProbe(s: SparkSession, dir: String): Unit =
-    pqCodebooks(s, dir, PqM, PqK, PqIters, maxVec = GraphGateSlice,
-      src = Some(opqRotatedCorpus(s, dir, GraphGateSlice)
-        .select(col("vec_id"), col("embedding"))), srcTag = "opq")
 
   private[graft] def pcaBasis(s: SparkSession, dir: String, k: Int): graft.operators.Pca.Basis =
     ArtifactCache(s, dir, PcaBasis, k)(

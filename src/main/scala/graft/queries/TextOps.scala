@@ -276,7 +276,7 @@ object TextOps {
     // docs. All integer arithmetic: margins, filters and updates are
     // bit-identical to the r16 three-consumer spelling (asserted by the
     // oracle's unrolled epoch CTEs and PerceptronSpec), but each epoch is
-    // ~2 jobs instead of ~7 (JobsProbe: q129 29 → 11 jobs).
+    // ~2 jobs instead of ~7 (measured: q129 29 → 11 jobs).
     val aug = dtf.unionByName(
         dtf.groupBy("doc_id", "y").agg(count(lit(1)).as("tf"))
           .select(col("doc_id"), col("y"),
@@ -814,7 +814,10 @@ object TextOps {
       // §1.2.1): the oovMu collect and the broadcast-mu build otherwise
       // each re-run the corpus tokenize+explode+groupBy (sibling
       // consumers — exchange reuse does not fire across jobs, the q119
-      // lesson)
+      // lesson). A/B against no checkpoint (tools/Probe, sf0.1, 4 cores,
+      // 6 alternating fresh-JVM pairs): 15 vs 16 jobs warm, 16,239 vs
+      // 21,177 input records; warm wall 2.37 vs 3.12 s median (faster in
+      // 6 of 6 pairs), cold 13.35 vs 15.83 s (4 of 6). PERF.md has the runs.
       val ref = tox.filter(col("b") < 80)
         .groupBy("tok").agg(count(lit(1)).as("pc"))
         .localCheckpoint(eager = false)

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measurement probe for ANISOTROPIC (score-aware) product quantization
@@ -243,10 +242,7 @@ object AnisoProbe {
 
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .appName("aniso-probe").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.local(8)
 
     def runOn(tag: String, vecs: Map[Long, Array[Double]]): Unit = {
       val ids = vecs.keys.toArray.sorted

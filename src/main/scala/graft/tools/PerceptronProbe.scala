@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 
 /** q129 cost decomposition probe — times the design-matrix build, vocab
   * collect, and each epoch's miss/aggregate/update jobs in isolation
-  * (the PqProbe recipe). Found the r13 fused-explode regression: a
+  * (one timer per stage). Found the r13 fused-explode regression: a
   * per-doc label computed in the explode's projection re-evaluates per
   * token. Usage: `sbt "runMain graft.tools.PerceptronProbe [sfDir]"`. */
 object PerceptronProbe {

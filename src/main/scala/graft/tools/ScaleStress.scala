@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import java.util.concurrent.atomic.AtomicLong
+import graft.core.Meter
 
 /** Scale-stress harness: synthesizes an N× replica of the sf0.1
   * documents/embeddings corpus (same schema, same duplicate structure,
@@ -184,33 +184,6 @@ object ScaleStress {
     "q140_rpforest_ingest_endstate", "q142_exact_substr_canonical",
     "q143_exact_substr_ingest_endstate")
 
-  private final class ShuffleMeter extends org.apache.spark.scheduler.SparkListener {
-    val shufRead = new AtomicLong(0L)
-    val shufWrite = new AtomicLong(0L)
-    val recordsRead = new AtomicLong(0L)
-    val bytesRead = new AtomicLong(0L)
-    override def onTaskEnd(
-        e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-      val m = e.taskMetrics
-      if (m != null) {
-        shufRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-        shufWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        recordsRead.addAndGet(m.inputMetrics.recordsRead)
-        bytesRead.addAndGet(m.inputMetrics.bytesRead)
-      }
-    }
-    def snapshot(): (Long, Long, Long, Long) =
-      (shufRead.get(), shufWrite.get(), recordsRead.get(), bytesRead.get())
-    /** Listener bus is async: poll until counters stop moving. */
-    def settle(): Unit = {
-      var last = (-1L, -1L, -1L, -1L)
-      var spins = 0
-      while (snapshot() != last && spins < 40) {
-        last = snapshot(); Thread.sleep(50); spins += 1
-      }
-    }
-  }
-
   final case class QStat(name: String, sec: Double, shufReadB: Long,
       shufWriteB: Long, outRows: Long)
 
@@ -243,20 +216,15 @@ object ScaleStress {
   private def queryFn(name: String) =
     FullPathOverrides.getOrElse(name, graft.SparkEntry.queries(name))
 
-  def runSuite(spark: SparkSession, dir: String, meter: ShuffleMeter,
+  def runSuite(spark: SparkSession, dir: String,
       rows: Map[String, Long] = Map.empty,
       qs: Seq[String] = SuiteQueries): Seq[QStat] = {
     graft.queries.ArtifactCache.clearAll()
     qs.map { name =>
-      meter.settle()
-      val (r0, w0, _, _) = meter.snapshot()
-      val t0 = System.nanoTime()
-      queryFn(name)(spark, dir)
-        .write.format("noop").mode("overwrite").save()
-      val sec = (System.nanoTime() - t0) / 1e9
-      meter.settle()
-      val (r1, w1, _, _) = meter.snapshot()
-      QStat(name, sec, r1 - r0, w1 - w0, rows.getOrElse(name, -1L))
+      val (_, c) = Meter.measure(spark)(queryFn(name)(spark, dir)
+        .write.format("noop").mode("overwrite").save())
+      QStat(name, c.wallSec, c.shuffleReadBytes, c.shuffleWriteBytes,
+        rows.getOrElse(name, -1L))
     }
   }
 
@@ -508,8 +476,7 @@ object ScaleStress {
     * plan as local relations, so the measured scan is ONLY the pruned
     * store read: per-query bytes ≪ store is the property that makes a
     * 100 TB index answerable without touching the corpus. */
-  def indexStoreStage(spark: SparkSession, dir: String,
-      meter: ShuffleMeter): IndexStoreStat = {
+  def indexStoreStage(spark: SparkSession, dir: String): IndexStoreStat = {
     import graft.queries.IndexOps
     graft.queries.ArtifactCache.clearAll()
     val base = java.nio.file.Files.createTempDirectory("graft_idx_store")
@@ -543,17 +510,12 @@ object ScaleStress {
     val store = spark.read.parquet(s"$base/p")
     val pruned = store.filter(col("shard").isin(shards: _*) &&
       col("tok").isin(toks: _*))
-    meter.settle()
-    val (_, _, _, b0) = meter.snapshot()
-    val t1 = System.nanoTime()
-    val served = IndexOps.scoreCandidates(pruned, qtermsL, dftL, statsL)
-      .localCheckpoint(eager = true)
-    val serveSec = (System.nanoTime() - t1) / 1e9
-    meter.settle()
-    val (_, _, _, b1) = meter.snapshot()
+    val (served, serve) = Meter.measure(spark)(
+      IndexOps.scoreCandidates(pruned, qtermsL, dftL, statsL)
+        .localCheckpoint(eager = true))
     val rows = served.count()
     graft.export.Exporter.deleteRecursively(base)
-    IndexStoreStat(buildSec, serveSec, storeBytes, b1 - b0, rows)
+    IndexStoreStat(buildSec, serve.wallSec, storeBytes, serve.inputBytes, rows)
   }
 
   /** Forced-distributed CC over the real q33 pair pipeline (driverMax = 0 ⇒
@@ -585,7 +547,7 @@ object ScaleStress {
     * IVF-PQ full path, q119 BM25, q137 sharded ANN store full path, the
     * q125 postings store build+serve with serve-bytes fraction, tuned
     * LSH pairs with planted recall, forced-distributed CC — min-of-2
-    * walls, shuffle bytes from the meter. Plus the q141 sharded GRAPH
+    * walls, shuffle bytes from Meter. Plus the q141 sharded GRAPH
     * store at full corpus (store = 3/4 of the vectors, batch = the
     * rest): build + ingest + serve-through-files wall and the serve-
     * bytes fraction from [[graft.queries.SimilarityOps
@@ -606,26 +568,24 @@ object ScaleStress {
       .config("spark.locality.wait", "0")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val meter = new ShuffleMeter
-    spark.sparkContext.addSparkListener(meter)
     val Flat = Seq("q97_ann_ivfpq", "q119_bm25_topk", "q137_ann_sharded_store")
     // warm-up at the smallest scale (JIT/codegen unbilled)
     val warmDir = s"$outRoot/x${mults.min}"
     synthesize(spark, warmDir, mults.min)
-    runSuite(spark, warmDir, meter, qs = Flat)
+    runSuite(spark, warmDir, qs = Flat)
     mults.foreach { m =>
       val dir = s"$outRoot/x$m"
       if (m != mults.min) synthesize(spark, dir, m)
-      val passes = Seq(runSuite(spark, dir, meter, qs = Flat),
-        runSuite(spark, dir, meter, qs = Flat))
+      val passes = Seq(runSuite(spark, dir, qs = Flat),
+        runSuite(spark, dir, qs = Flat))
       val stats = passes.last.zip(passes.head).map { case (a, b) =>
         a.copy(sec = math.min(a.sec, b.sec)) }
       stats.foreach { st =>
         System.err.println(f"[flat x$m] ${st.name}%-24s ${st.sec}%7.2f s  " +
           f"shufW=${st.shufWriteB / 1024.0 / 1024.0}%9.2f MB")
       }
-      val idx = Seq(indexStoreStage(spark, dir, meter),
-        indexStoreStage(spark, dir, meter)).minBy(_.serveSec)
+      val idx = Seq(indexStoreStage(spark, dir),
+        indexStoreStage(spark, dir)).minBy(_.serveSec)
       System.err.println(f"[flat x$m] idxStore build=${idx.buildSec}%.2f s  " +
         f"store=${idx.storeBytes / 1024.0 / 1024.0}%.2f MB  " +
         f"serve=${idx.serveSec}%.3f s reading " +
@@ -682,16 +642,14 @@ object ScaleStress {
       .config("spark.locality.wait", "0")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val meter = new ShuffleMeter
-    spark.sparkContext.addSparkListener(meter)
     val warmDir = s"$outRoot/x${mults.min}"
     synthesize(spark, warmDir, mults.min)
-    runSuite(spark, warmDir, meter, qs = qs)
+    runSuite(spark, warmDir, qs = qs)
     mults.foreach { m =>
       val dir = s"$outRoot/x$m"
       if (m != mults.min) synthesize(spark, dir, m)
-      val passes = Seq(runSuite(spark, dir, meter, qs = qs),
-        runSuite(spark, dir, meter, qs = qs))
+      val passes = Seq(runSuite(spark, dir, qs = qs),
+        runSuite(spark, dir, qs = qs))
       val stats = passes.last.zip(passes.head).map { case (a, b) =>
         a.copy(sec = math.min(a.sec, b.sec)) }
       stats.foreach { st =>
@@ -722,8 +680,6 @@ object ScaleStress {
       .config("spark.locality.wait", "0")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val meter = new ShuffleMeter
-    spark.sparkContext.addSparkListener(meter)
     val warmDir = s"$outRoot/x${mults.min}"
     synthesize(spark, warmDir, mults.min)
     graft.queries.TextOps.bfdPack(spark, warmDir)
@@ -735,15 +691,10 @@ object ScaleStress {
       val line = shapes.map { case (label, sh) =>
         val runs = (1 to 2).map { _ =>
           graft.queries.ArtifactCache.clearAll()
-          meter.settle()
-          val (_, w0, _, _) = meter.snapshot()
-          val t0 = System.nanoTime()
-          graft.queries.TextOps.bfdPack(spark, dir, shards = sh)
-            .write.format("noop").mode("overwrite").save()
-          val sec = (System.nanoTime() - t0) / 1e9
-          meter.settle()
-          val (_, w1, _, _) = meter.snapshot()
-          (sec, w1 - w0)
+          val (_, c) = Meter.measure(spark)(
+            graft.queries.TextOps.bfdPack(spark, dir, shards = sh)
+              .write.format("noop").mode("overwrite").save())
+          (c.wallSec, c.shuffleWriteBytes)
         }
         val (sec, shufW) = runs.minBy(_._1)
         System.err.println(f"[pack x$m] $label%-7s shards=$sh%4d " +
@@ -771,14 +722,12 @@ object ScaleStress {
       .config("spark.locality.wait", "0")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val meter = new ShuffleMeter
-    spark.sparkContext.addSparkListener(meter)
 
     // warm-up at the smallest scale: JIT + codegen compile once, unbilled
     val warmDir = s"$outRoot/x${mults.min}"
     synthesize(spark, warmDir, mults.min)
     synthesizeEvents(spark, warmDir, mults.min)
-    runSuite(spark, warmDir, meter)
+    runSuite(spark, warmDir)
 
     val perScale = mults.map { m =>
       val dir = s"$outRoot/x$m"
@@ -788,8 +737,8 @@ object ScaleStress {
       // stall to a query. Shuffle bytes / rows are deterministic — taken
       // from the last pass; seconds are the per-query min.
       val rows = countRows(spark, dir)
-      val passes = Seq(runSuite(spark, dir, meter, rows),
-        runSuite(spark, dir, meter, rows))
+      val passes = Seq(runSuite(spark, dir, rows),
+        runSuite(spark, dir, rows))
       val stats = passes.last.zip(passes.head).map { case (a, b) =>
         a.copy(sec = math.min(a.sec, b.sec)) }
       val (ccSec, _) = Seq(ccForcedDistributed(spark, dir),
@@ -806,8 +755,8 @@ object ScaleStress {
           f"state=${st.stateBytes.last / 1024.0}%.0f KB  " +
           f"recovery=${st.recoverySec}%.2f s  rows=${st.outRows}%d")
       }
-      val idx = Seq(indexStoreStage(spark, dir, meter),
-        indexStoreStage(spark, dir, meter)).minBy(_.serveSec)
+      val idx = Seq(indexStoreStage(spark, dir),
+        indexStoreStage(spark, dir)).minBy(_.serveSec)
       System.err.println(f"[scale x$m] idxStore build=${idx.buildSec}%.2f s  " +
         f"store=${idx.storeBytes / 1024.0 / 1024.0}%.2f MB  " +
         f"serve=${idx.serveSec}%.3f s reading " +

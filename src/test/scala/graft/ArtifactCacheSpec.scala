@@ -107,10 +107,7 @@ class ArtifactCacheSpec extends AnyFunSuite {
   }
 
   test("clearAll between passes leaves no entries and leaks no blocks") {
-    // the sf0.01 tables, where TESTDATA.md documents them
-    val dir = "`([^`]+/sf0\\.01)/`".r.findFirstMatchIn(new String(
-      java.nio.file.Files.readAllBytes(java.nio.file.Paths.get("TESTDATA.md")),
-      "UTF-8")).map(_.group(1)).getOrElse(fail("no sf0.01 dir in TESTDATA.md"))
+    val dir = SparkTestBase.testData("0.01")
     val pass = Seq("q126_knn_graph_nndescent", "q127_graph_ann_search",
       "q129_perceptron_classifier", "q138_perceptron_hashed",
       "q158_graph_batch_serve")

@@ -157,24 +157,8 @@ class IndexSpec extends AnyFunSuite {
         .filter(col("tok") === "dup").limit(1).collect()
       assert(probe.nonEmpty, "fixture token 'dup' must exist in the store")
       val shard = probe.head.getInt(1)
-      val read = new java.util.concurrent.atomic.AtomicLong()
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-          if (e.taskMetrics != null)
-            read.addAndGet(e.taskMetrics.inputMetrics.recordsRead)
-      }
-      def measured(f: => Unit): Long = {
-        spark.sparkContext.addSparkListener(listener)
-        try {
-          read.set(0L); f
-          var last = -1L; var spins = 0
-          while (read.get() != last && spins < 50) {
-            last = read.get(); Thread.sleep(100); spins += 1
-          }
-          read.get()
-        } finally spark.sparkContext.removeSparkListener(listener)
-      }
+      def measured(f: => Unit): Long =
+        graft.core.Meter.measure(spark)(f)._2.inputRecords
       val full = measured(store.agg(sum(col("tf"))).collect())
       val pruned = measured(
         store.filter(col("shard") === shard && col("tok") === "dup")

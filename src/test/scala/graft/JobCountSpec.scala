@@ -9,54 +9,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * ran corpus scans) flagged by two judges. Now every scalar rides in as
   * a broadcast 1-row cross join; this spec keeps it that way.
   *
-  * Counting is DETERMINISTIC, not a quiet-gap poll (which can declare the
-  * async listener bus settled while a late JobStart is still in flight
-  * and silently pass a reintroduced eager job): the body runs between two
-  * MARKER jobs tagged via job groups. The listener bus is FIFO, so every
-  * JobStart the body caused is delivered strictly between the two
-  * markers' events — the count of in-between events IS the body's job
-  * count, however slowly the bus drains.
+  * Counting is deterministic: [[graft.core.Meter]] drains the listener
+  * bus before and after the builder, so a reintroduced eager job is always
+  * in the window, however slowly the bus delivers it.
   */
 class JobCountSpec extends AnyFunSuite {
   private val spark = SparkTestBase.spark
   private val sf = "/root/testdata/sf0.001"
-
-  private def jobsDuring(body: => Unit): Int = {
-    val phase = new java.util.concurrent.atomic.AtomicInteger(0)
-    val counted = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val group = Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .getOrElse("")
-        group match {
-          case "jobcount-open" => phase.compareAndSet(0, 1)
-          case "jobcount-close" => phase.compareAndSet(1, 2)
-          case _ => if (phase.get() == 1) counted.incrementAndGet()
-        }
-      }
-    }
-    def marker(tag: String): Unit = {
-      spark.sparkContext.setJobGroup(tag, tag)
-      try spark.range(1).count()
-      finally spark.sparkContext.clearJobGroup()
-    }
-    def awaitPhase(p: Int): Unit = {
-      var spins = 0
-      while (phase.get() < p && spins < 400) { Thread.sleep(25); spins += 1 }
-      assert(phase.get() >= p, s"listener bus never delivered marker $p")
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      marker("jobcount-open")
-      awaitPhase(1)
-      body
-      marker("jobcount-close")
-      awaitPhase(2)
-      counted.get()
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
 
   // q162 joins the list (r16): the manifest composes the keep gate, the
   // waterfill and the repeat arithmetic as pure plans — broadcast joins,
@@ -67,7 +26,8 @@ class JobCountSpec extends AnyFunSuite {
       // warm the Tables schema cache: the one 1-task footer-inference job
       // per cold table path is scan setup, not builder eagerness
       SparkEntry.queries(q)(spark, sf)
-      val n = jobsDuring { SparkEntry.queries(q)(spark, sf) }
+      val n = graft.core.Meter.measure(spark)(
+        SparkEntry.queries(q)(spark, sf))._2.jobs
       assert(n === 0, s"$q builder ran $n Spark jobs at construction time")
     }
 }

@@ -144,25 +144,8 @@ class ScaleSpec extends AnyFunSuite {
     // control: same data, same file/row-group geometry, no clustering
     graft.export.Exporter.parquet(
       z.repartition(8), s"$dir/shuffled", rowGroupRows = 2048L)
-    def recordsRead(path: String): Long = {
-      val read = new java.util.concurrent.atomic.AtomicLong(0L)
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-          if (e.taskMetrics != null)
-            read.addAndGet(e.taskMetrics.inputMetrics.recordsRead)
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        spark.read.parquet(path).filter(col("px") < 64).count()
-        var last = -1L
-        var spins = 0
-        while (read.get() != last && spins < 50) {
-          last = read.get(); Thread.sleep(100); spins += 1
-        }
-        read.get()
-      } finally spark.sparkContext.removeSparkListener(listener)
-    }
+    def recordsRead(path: String): Long = graft.core.Meter.measure(spark)(
+      spark.read.parquet(path).filter(col("px") < 64).count())._2.inputRecords
     val clustered = recordsRead(s"$dir/zorder")
     val shuffled = recordsRead(s"$dir/shuffled")
     // px < 64 is 1/16 of the px space; zkey order clusters it into a few

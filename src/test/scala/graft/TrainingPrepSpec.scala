@@ -216,28 +216,14 @@ class TrainingPrepSpec extends AnyFunSuite {
       .select("text")
     // distributed loop forced with driverMax = 0 — the ground truth
     val distributed = BpeTrainer.train(docs, "text", 10, driverMax = 0)
-    // driver-gated loop, with a job counter listening
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val gated = BpeTrainer.train(docs, "text", 10)
-      assert(gated === distributed)
-      // listener bus is async: poll until the counter settles
-      var last = -1
-      var spins = 0
-      while (jobs.get() != last && spins < 40) {
-        last = jobs.get(); Thread.sleep(50); spins += 1
-      }
-      // corpus read + probe collect (+ AQE sub-jobs) — NOT O(numMerges):
-      // the distributed loop would run ~2 jobs per merge (20+ here)
-      assert(jobs.get() <= 6,
-        s"driver-gated train ran ${jobs.get()} jobs — merge loop not gated?")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    // driver-gated loop, its jobs counted
+    val (gated, counts) = graft.core.Meter.measure(spark)(
+      BpeTrainer.train(docs, "text", 10))
+    assert(gated === distributed)
+    // corpus read + probe collect (+ AQE sub-jobs) — NOT O(numMerges):
+    // the distributed loop would run ~2 jobs per merge (20+ here)
+    assert(counts.jobs <= 6,
+      s"driver-gated train ran ${counts.jobs} jobs — merge loop not gated?")
   }
 
   test("BPE trainer is deterministic and merges shrink encoded lengths monotonically") {

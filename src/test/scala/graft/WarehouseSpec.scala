@@ -231,33 +231,19 @@ class WarehouseSpec extends AnyFunSuite {
       materialization = Materialization.Table,
       build = Some((s: SparkSession, c: EngineConfig) =>
         s.read.parquet(s"${c.dataRoot}/items.parquet")))
-    val read = new java.util.concurrent.atomic.AtomicLong(0L)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (e.taskMetrics != null)
-          read.addAndGet(e.taskMetrics.inputMetrics.recordsRead)
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val res = new DagRunner(spark, cfg, Seq(m)).run()
-      assert(res.head.status === "success")
-      assert(res.head.rows === 1000L)
-      // the view is the table read back with the schema it was written with
-      assert(spark.table("mart_items").schema ===
-        spark.read.parquet(s"${cfg.warehouseDir}/mart/mart_items").schema)
-      // listener bus is async — poll until the counter stabilizes
-      var last = -1L
-      var spins = 0
-      while (read.get() != last && spins < 50) {
-        last = read.get(); Thread.sleep(100); spins += 1
-      }
-      // one scan of the 1000-row input; the post-write count comes from
-      // footers (metadata-only), so a second 1000-record read means the
-      // out.count() re-scan regressed back in
-      assert(read.get() < 2000L, s"expected one input scan, read=${read.get()}")
-      assert(read.get() >= 1000L)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (res, counts) = graft.core.Meter.measure(spark)(
+      new DagRunner(spark, cfg, Seq(m)).run())
+    assert(res.head.status === "success")
+    assert(res.head.rows === 1000L)
+    // the view is the table read back with the schema it was written with
+    assert(spark.table("mart_items").schema ===
+      spark.read.parquet(s"${cfg.warehouseDir}/mart/mart_items").schema)
+    // one scan of the 1000-row input; the post-write count comes from
+    // footers (metadata-only), so a second 1000-record read means the
+    // out.count() re-scan regressed back in
+    val read = counts.inputRecords
+    assert(read < 2000L, s"expected one input scan, read=$read")
+    assert(read >= 1000L)
   }
 
   test("incremental refresh counts rows from footers and reads back the written schema") {
@@ -285,25 +271,18 @@ class WarehouseSpec extends AnyFunSuite {
     def refresh(from: String, to: String, vars: Map[String, String] = Map.empty) = {
       val cfg = EngineConfig(lake, wh, "/none",
         Map("start_ds" -> from, "end_ds" -> to) ++ vars)
-      val read = new java.util.concurrent.atomic.AtomicLong(0L)
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-          if (e.taskMetrics != null) read.addAndGet(e.taskMetrics.inputMetrics.recordsRead)
-      }
-      spark.sparkContext.addSparkListener(listener)
-      val res = try new DagRunner(spark, cfg, models).run().last finally {
-        var last = -1L // listener bus is async: wait for the counter to settle
-        while (read.get() != last) { last = read.get(); Thread.sleep(200) }
-        spark.sparkContext.removeSparkListener(listener)
-      }
+      val (runs, counts) = graft.core.Meter.measure(spark)(
+        new DagRunner(spark, cfg, models).run())
+      val res = runs.last
+      val read = counts.inputRecords
       assert(res.status === "success", res)
       val inferred = spark.read.parquet(table)
       assert(res.rows === inferred.filter(col("_ds").between(from, to)).count())
       assert(spark.table("stg_items").schema === inferred.schema)
       assert(inferred.schema("_ds").dataType === DateType)
       // the source is scanned at most once; the table just written, never
-      assert(read.get() <= sourceRows, s"read ${read.get()} records")
-      (res.rows, read.get())
+      assert(read <= sourceRows, s"read $read records")
+      (res.rows, read)
     }
 
     assert(refresh("2005-05-28", "2005-05-30")._1 === 5L) // fresh window
