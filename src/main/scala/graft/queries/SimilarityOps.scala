@@ -810,13 +810,7 @@ object SimilarityOps {
       c.join(broadcast(q), col("cid") =!= col("qid"))
         .select(col("qid"), col("cid"),
           cosineSim(col("qe"), col("ce")).as("cos"))
-        .groupBy("qid")
-        .agg(org.apache.spark.sql.graft.TopKByScore
-          .columnFor(col("cos"), col("cid"), 5).as("top"))
-        .select(col("qid"), posexplode(col("top")))
-        .select(col("qid"), col("col.payload").as("cid"),
-          round(col("col.score"), 4).as("cosine"),
-          (col("pos") + 1).cast("long").as("rnk"))
+        .transform(ranked(_, col("cos"), 5, "cosine"))
     }),
 
     // Random-projection-tree FOREST ANN (Dasgupta & Freund STOC'08
@@ -848,13 +842,7 @@ object SimilarityOps {
         .join(c, Seq("cid"))
         .select(col("qid"), col("cid"),
           cosineSim(col("qe"), col("ce")).as("cos"))
-        .groupBy("qid")
-        .agg(org.apache.spark.sql.graft.TopKByScore
-          .columnFor(col("cos"), col("cid"), 5).as("top"))
-        .select(col("qid"), posexplode(col("top")))
-        .select(col("qid"), col("col.payload").as("cid"),
-          round(col("col.score"), 4).as("cosine"),
-          (col("pos") + 1).cast("long").as("rnk"))
+        .transform(ranked(_, col("cos"), 5, "cosine"))
     }),
 
     // RP-forest INCREMENTAL INGEST end state (the q131 recipe on the
@@ -911,13 +899,7 @@ object SimilarityOps {
       c.join(broadcast(q), col("cid") =!= col("qid"))
         .select(col("qid"), col("cid"),
           cosineSim(col("qe"), col("ce")).as("cosq"))
-        .groupBy("qid")
-        .agg(org.apache.spark.sql.graft.TopKByScore
-          .columnFor(col("cosq"), col("cid"), 5).as("top"))
-        .select(col("qid"), posexplode(col("top")))
-        .select(col("qid"), col("col.payload").as("cid"),
-          round(col("col.score"), 4).as("cosine_q"),
-          (col("pos") + 1).cast("long").as("rnk"))
+        .transform(ranked(_, col("cosq"), 5, "cosine_q"))
     }),
 
     // Chunk→document embedding MEAN-POOLING — the aggregation step of a
@@ -1065,13 +1047,7 @@ object SimilarityOps {
         .filter(col("cid") =!= col("qid"))
         .select(col("qid"), col("cid"),
           cosineSim(col("qe"), col("ce")).as("cos"))
-        .groupBy("qid")
-        .agg(org.apache.spark.sql.graft.TopKByScore
-          .columnFor(col("cos"), col("cid"), 5).as("top"))
-        .select(col("qid"), posexplode(col("top")))
-        .select(col("qid"), col("col.payload").as("cid"),
-          round(col("col.score"), 4).as("cosine"),
-          (col("pos") + 1).cast("long").as("rnk"))
+        .transform(ranked(_, col("cos"), 5, "cosine"))
     }),
 
     // Metadata-FILTERED ANN — the production vector-search shape: every
@@ -1113,13 +1089,7 @@ object SimilarityOps {
         .filter(col("cid") =!= col("qid"))
         .select(col("qid"), col("cid"),
           cosineSim(col("qe"), col("ce")).as("cos"))
-        .groupBy("qid")
-        .agg(org.apache.spark.sql.graft.TopKByScore
-          .columnFor(col("cos"), col("cid"), 5).as("top"))
-        .select(col("qid"), posexplode(col("top")))
-        .select(col("qid"), col("col.payload").as("cid"),
-          round(col("col.score"), 4).as("cosine"),
-          (col("pos") + 1).cast("long").as("rnk"))
+        .transform(ranked(_, col("cos"), 5, "cosine"))
     }),
 
     // Hard-negative mining — the contrastive-training prep step
@@ -1157,13 +1127,7 @@ object SimilarityOps {
         .select(col("qid"), col("cid"),
           cosineSim(col("qe"), col("ce")).as("cos"))
         .filter(col("cos") < lit(posThr))
-        .groupBy("qid")
-        .agg(org.apache.spark.sql.graft.TopKByScore
-          .columnFor(col("cos"), col("cid"), negK).as("top"))
-        .select(col("qid"), posexplode(col("top")))
-        .select(col("qid"), col("col.payload").as("cid"),
-          round(col("col.score"), 4).as("cosine"),
-          (col("pos") + 1).cast("long").as("rnk"))
+        .transform(ranked(_, col("cos"), negK, "cosine"))
     }),
 
     // IVF-PQ (Jégou, Douze, Schmid 2011, "Product Quantization for
@@ -1467,13 +1431,8 @@ object SimilarityOps {
     // graph QUALITY (recall of true neighbors) is AnnRecallSpec's gate.
     "q126_knn_graph_nndescent" -> ((s, dir) => {
       cachedNnGraph(s, dir)
-        .groupBy("vec_id")
-        .agg(org.apache.spark.sql.graft.TopKByScore
-          .columnFor(col("cos"), col("nid"), NnK).as("top"))
-        .select(col("vec_id"), posexplode(col("top")))
-        .select(col("vec_id"), col("col.payload").as("nid"),
-          round(col("col.score"), 4).as("cosine"),
-          (col("pos") + 1).cast("long").as("rnk"))
+        .transform(ranked(_, col("cos"), NnK, "cosine",
+          key = Seq("vec_id"), payload = "nid"))
     }),
 
     // Greedy beam SEARCH over the q126 graph — the serving tier the
@@ -1520,13 +1479,8 @@ object SimilarityOps {
     // + back-link fold in DuckDB CTEs.
     "q131_graph_ingest_endstate" -> ((s, dir) => {
       cachedEndStateGraph(s, dir, GraphGateSlice, 450L)
-        .groupBy("vec_id")
-        .agg(org.apache.spark.sql.graft.TopKByScore
-          .columnFor(col("cos"), col("nid"), NnK).as("top"))
-        .select(col("vec_id"), posexplode(col("top")))
-        .select(col("vec_id"), col("col.payload").as("nid"),
-          round(col("col.score"), 4).as("cosine"),
-          (col("pos") + 1).cast("long").as("rnk"))
+        .transform(ranked(_, col("cos"), NnK, "cosine",
+          key = Seq("vec_id"), payload = "nid"))
     }),
 
     // OPQ-style ROTATED product quantization (Ge et al. CVPR'13 /
@@ -1552,9 +1506,6 @@ object SimilarityOps {
       val sliceMax = GraphGateSlice
       val e = emb(s, dir).filter(col("vec_id") < sliceMax)
         .select(col("vec_id"), col("embedding"))
-      def sqL2(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-        aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
-          lit(0.0), _ + _)
       val rot = opqRotatedCorpus(s, dir, sliceMax)
       val isoOk = rot.agg(bool_and(
         abs(col("p_sq") - col("c_sq")) <= lit(1e-9) * (col("c_sq") + lit(1.0)))
@@ -1565,25 +1516,18 @@ object SimilarityOps {
       val enc = rot.select(col("vec_id"),
         org.apache.spark.sql.graft.PqExpr.encode(col("embedding"), pq)
           .as("codes"))
-      // DRIVER TIER (r18, the ivfPqAdcCandidates precedent): the ADC LUT
-      // over the ROTATED probes is [[pqLutLocal]] driver arithmetic — a
-      // 10-row local relation instead of a PqM×PqK literal tree.
-      import s.implicits._
-      val lut = collectProbes(rot.select(col("vec_id"), col("embedding")))
-        .toSeq.map { case (qid, qe) => (qid, pqLutLocal(qe, pq)) }
-        .toDF("qid", "lut")
+      // the ADC LUT over the ROTATED probes ([[probeLuts]])
+      val lut = probeLuts(s, collectProbes(rot.select(col("vec_id"),
+        col("embedding"))))((qe, _) => pqLutLocal(qe, pq))
       val adcTop = enc.crossJoin(broadcast(lut))
         .filter(col("vec_id") =!= col("qid"))
         .select(col("qid"), col("vec_id").as("cid"),
           org.apache.spark.sql.graft.PqExpr.adc(col("codes"), col("lut"))
             .as("adc"))
-        .groupBy("qid")
-        .agg(org.apache.spark.sql.graft.TopKByScore
-          .columnFor(negate(col("adc")) + lit(0.0), col("cid"), 64).as("top"))
-        .select(col("qid"), explode(col("top")).as("t"))
-        .select(col("qid"), col("t.payload").as("cid"))
+        .transform(topIds(_, negate(col("adc")) + lit(0.0), 64))
       // the truth-side probes as a ≤10-row local relation (one collect,
       // pushed-filter scan) instead of a second scan + broadcast build
+      import s.implicits._
       val probes0 = collectProbes(e).toSeq.toDF("qid", "qe0")
       // ONE exact-L2 pass serves BOTH the ground truth and the re-rank
       // (r18, guide §1.2.1): d2 is computed once per (probe, corpus) pair;
@@ -1743,16 +1687,12 @@ object SimilarityOps {
       val (k, iters) = (8, 3)
       val budget = 100
       val perCell = (budget + k - 1) / k // 13
-      centroidCosines(s, dir, k, iters)
-        .groupBy("cell")
-        .agg(org.apache.spark.sql.graft.TopKByScore
-          .columnFor(round(col("cos"), 6) + lit(0.0), col("vec_id"),
-            perCell).as("top"))
-        .select(col("cell"), posexplode(col("top")))
-        .select(col("col.payload").as("vec_id"), col("cell"),
-          (col("pos") + 1).cast("long").as("rnk"),
-          ((col("pos").cast("long")) * k + col("cell")).as("pick_order"),
-          col("col.score").as("cos6"))
+      ranked(centroidCosines(s, dir, k, iters),
+          round(col("cos"), 6) + lit(0.0), perCell, "cos6", identity,
+          key = Seq("cell"), payload = "vec_id")
+        .select(col("vec_id"), col("cell"), col("rnk"),
+          ((col("rnk") - 1) * k + col("cell")).as("pick_order"),
+          col("cos6"))
         .orderBy("pick_order").limit(budget)
     }),
 
@@ -1826,12 +1766,9 @@ object SimilarityOps {
             }))
         .select(col("vec_id"),
           aggregate(col("terms"), lit(0L), (acc, t) => acc + t).as("score_micro"))
-      scored.agg(org.apache.spark.sql.graft.TopKByScore.columnFor(
-        col("score_micro").cast("double"), col("vec_id"), 32).as("top"))
-        .select(posexplode(col("top")))
-        .select((col("pos") + 1).cast("long").as("rnk"),
-          col("col.payload").as("vec_id"),
-          col("col.score").cast("long").as("score_micro"))
+      ranked(scored, col("score_micro").cast("double"), 32, "score_micro",
+          _.cast("long"), key = Nil, payload = "vec_id")
+        .select(col("rnk"), col("vec_id"), col("score_micro"))
     })
   )
 
@@ -1975,23 +1912,13 @@ object SimilarityOps {
           lit(0.0), (a, x) => a + x)
           / lit(8.0) / col("norm_q") / greatest(col("sdot"), lit(1e-12)))
           .as("est"))
-    val cand = est.groupBy("qid")
-      .agg(org.apache.spark.sql.graft.TopKByScore
-        .columnFor(col("est"), col("cid"), rerankR).as("top"))
-      .select(col("qid"), explode(col("top")).as("t"))
-      .select(col("qid"), col("t.payload").as("cid"))
+    val cand = est.transform(topIds(_, col("est"), rerankR))
     cand.join(broadcast(q.select(col("qid"), col("qe"))), "qid")
       .join(e.select(col("vec_id").as("cid"), col("embedding").as("ce")),
         "cid")
       .select(col("qid"), col("cid"),
         cosineSim(col("qe"), col("ce")).as("cos"))
-      .groupBy("qid")
-      .agg(org.apache.spark.sql.graft.TopKByScore
-        .columnFor(col("cos"), col("cid"), 5).as("top"))
-      .select(col("qid"), posexplode(col("top")))
-      .select(col("qid"), col("col.payload").as("cid"),
-        round(col("col.score"), 4).as("cosine"),
-        (col("pos") + 1).cast("long").as("rnk"))
+      .transform(ranked(_, col("cos"), 5, "cosine"))
   }
 
   private val Sq8Serve = new ArtifactCache.Kind[DataFrame]("sq8Serve")
@@ -2023,9 +1950,6 @@ object SimilarityOps {
     val (k, iters, nprobe, rerankR) = (8, 3, 2, 32)
     val e = emb(s, dir).select(col("vec_id"), col("embedding"))
     val cents = lloydCentroids(s, dir, k, iters)
-    def sqL2(a: Column, c: Seq[Double]): Column =
-      aggregate(zip_with(a, array(c.map(lit): _*),
-        (x, y) => (x - y) * (x - y)), lit(0.0), _ + _)
     def quantD(c: Column): Column = {
       val xs = transform(c, x => x.cast("double"))
       val scale = greatest(
@@ -2061,31 +1985,15 @@ object SimilarityOps {
         .localCheckpoint(eager = true)
       val cells = probes.select("cell").distinct().collect().map(_.getInt(0))
       val pruned = store.filter(col("cell").isin(cells.toSeq: _*))
-      val partFilters = pruned.queryExecution.executedPlan.collect {
-        case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-          f.partitionFilters
-      }.flatten
-      require(partFilters.exists(_.references.exists(_.name == "cell")),
-        "q152 serve scan lost its cell partition filter:\n" +
-          pruned.queryExecution.executedPlan.toString)
+      requirePartFilter(pruned, "cell", "q152 serve")
       val stage1 = pruned.join(broadcast(probes), Seq("cell"))
         .filter(col("vec_id") =!= col("qid"))
         .select(col("qid"), col("vec_id").as("cid"),
           cosineSim(col("qq"),
             transform(col("q8"), x => x.cast("double"))).as("cosq"))
-        .groupBy("qid")
-        .agg(org.apache.spark.sql.graft.TopKByScore
-          .columnFor(col("cosq"), col("cid"), rerankR).as("top"))
-        .select(col("qid"), explode(col("top")).as("t"))
-        .select(col("qid"), col("t.payload").as("cid"))
+        .transform(topIds(_, col("cosq"), rerankR))
         .localCheckpoint(eager = true)
       // bandwidth accounting: bytes under the probed cell dirs vs total
-      def dirBytes(p: java.nio.file.Path): Long = {
-        val st = java.nio.file.Files.walk(p)
-        try st.filter(java.nio.file.Files.isRegularFile(_))
-          .mapToLong(java.nio.file.Files.size(_)).sum()
-        finally st.close()
-      }
       val storeP = java.nio.file.Paths.get(s"$base/store")
       lastSq8ServeBytes.set((
         cells.map(c => dirBytes(storeP.resolve(s"cell=$c"))).sum,
@@ -2098,13 +2006,7 @@ object SimilarityOps {
         .join(broadcast(qRaw), "qid")
         .select(col("qid"), col("cid"),
           cosineSim(col("qe"), col("ce")).as("cos"))
-        .groupBy("qid")
-        .agg(org.apache.spark.sql.graft.TopKByScore
-          .columnFor(col("cos"), col("cid"), 5).as("top"))
-        .select(col("qid"), posexplode(col("top")))
-        .select(col("qid"), col("col.payload").as("cid"),
-          round(col("col.score"), 4).as("cosine"),
-          (col("pos") + 1).cast("long").as("rnk"))
+        .transform(ranked(_, col("cos"), 5, "cosine"))
         .localCheckpoint(eager = true)
     } finally {
       graft.export.Exporter.deleteRecursively(java.nio.file.Paths.get(base))
@@ -2137,10 +2039,7 @@ object SimilarityOps {
       .select(col("vec_id"),
         cosineSim(slice(col("embedding"), 1, dPrime),
           array(qPrime: _*)).as("cosd"))
-      .agg(org.apache.spark.sql.graft.TopKByScore
-        .columnFor(col("cosd"), col("vec_id"), r).as("top"))
-      .select(explode(col("top")).as("t"))
-      .select(col("t.payload").as("vec_id"))
+      .transform(topIds(_, col("cosd"), r, key = Nil, payload = "vec_id"))
     val cand = e.join(broadcast(topR), "vec_id")
       .select(col("vec_id"), col("embedding"))
       .collect()
@@ -2239,20 +2138,7 @@ object SimilarityOps {
       // accounting never summed (r15 advice)
       val pruned = store.filter(pairs.map { case (l, c) =>
         col("label") === l && col("cell") === c }.reduce(_ || _))
-      val partFilters = pruned.queryExecution.executedPlan.collect {
-        case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-          f.partitionFilters
-      }.flatten
-      for (c <- Seq("label", "cell"))
-        require(partFilters.exists(_.references.exists(_.name == c)),
-          s"q153 serve scan lost its $c partition filter:\n" +
-            pruned.queryExecution.executedPlan.toString)
-      def dirBytes(p: java.nio.file.Path): Long = {
-        val st = java.nio.file.Files.walk(p)
-        try st.filter(java.nio.file.Files.isRegularFile(_))
-          .mapToLong(java.nio.file.Files.size(_)).sum()
-        finally st.close()
-      }
+      for (c <- Seq("label", "cell")) requirePartFilter(pruned, c, "q153 serve")
       val storeP = java.nio.file.Paths.get(s"$base/store")
       lastFilteredServeBytes.set((
         pairs.map { case (l, c) =>
@@ -2264,13 +2150,7 @@ object SimilarityOps {
         .filter(col("vec_id") =!= col("qid"))
         .select(col("qid"), col("vec_id").as("cid"),
           cosineSim(col("qe"), col("embedding")).as("cos"))
-        .groupBy("qid")
-        .agg(org.apache.spark.sql.graft.TopKByScore
-          .columnFor(col("cos"), col("cid"), 5).as("top"))
-        .select(col("qid"), posexplode(col("top")))
-        .select(col("qid"), col("col.payload").as("cid"),
-          round(col("col.score"), 4).as("cosine"),
-          (col("pos") + 1).cast("long").as("rnk"))
+        .transform(ranked(_, col("cos"), 5, "cosine"))
         .localCheckpoint(eager = true)
     } finally {
       graft.export.Exporter.deleteRecursively(java.nio.file.Paths.get(base))
@@ -2304,18 +2184,6 @@ object SimilarityOps {
         cosineSim(col("embedding"), col("cent")).as("cos"))
   }
 
-  /** IVF-PQ candidate scoring (Jégou et al. 2011's IVFADC, by_residual
-    * disabled), shared by q97 (top-5 by ADC) and q123 (exact re-rank):
-    * coarse IVF restricts candidates to each probe's `nprobe` nearest
-    * cells; within them candidates are scored from their PQ codes alone
-    * via asymmetric distance. Each vector encodes ONCE as M=16 4-bit
-    * codes (one fused codegen loop — M separate NearestCentroid columns
-    * blew the JVM method limit and fell out of codegen); each probe
-    * precomputes its M×K LUT of subspace distances on the broadcast side
-    * (never per pair); per-pair work is 16 lookups + 15 adds in fixed
-    * association order. Codebooks are per-subspace deterministic Lloyd
-    * (identical seed/round rules to q39) so DuckDB re-derives them
-    * exactly for the q97 gate. Returns (qid, cid, adc). */
   /** The ≤10 probe vectors (vec_id < 10 — bounded by contract at ANY
     * scale; the predicate pushes to the parquet scan), collected once and
     * shared by the driver-side LUT build and the rerank's probe side.
@@ -2391,46 +2259,137 @@ object SimilarityOps {
     coarse.indices.map(c => (sqL2Local(q, 0, coarse(c)), c))
       .sorted.take(nprobe).map(_._2)
 
+  // ---- The ANN serving pipeline. Every IVF-PQ / ANN family member is a
+  // composition of these stages: corpusSlice → collectProbes → probeLuts
+  // (per-probe LUT, optional nprobe cell ranking) → ADC score → topIds
+  // (top-R cut) → exactRerank → ranked (top-k emission).
+
+  /** (vec_id, embedding) below `maxVec`: the ANN family's corpus slice.
+    * MaxValue reads the unsliced corpus (the ScaleStress full path). */
+  private def corpusSlice(s: SparkSession, dir: String, maxVec: Long): DataFrame = {
+    val e = emb(s, dir).select(col("vec_id"), col("embedding"))
+    if (maxVec == Long.MaxValue) e else e.filter(col("vec_id") < maxVec)
+  }
+
+  /** DRIVER TIER LUT stage (guide §1.2 "per-task work" + §5): the per-probe
+    * lookup table and the nprobe nearest-cell ranking are pure functions of
+    * the ≤10 collected probe vectors and the driver-resident codebooks —
+    * the FAISS query-time-LUT shape — so they are built here in driver
+    * arithmetic and shipped as a ≤ probes·nprobe-row local relation. The
+    * retired spelling built them as a PqM×PqK literal expression tree
+    * (~10k Catalyst nodes): measured 0.4-0.7 s of analysis + planning PER
+    * RUN before any task launched (OPTIMIZATION_r18.md), against ~1 ms of
+    * driver arithmetic here. `lut(qe, cell)` is [[pqLutLocal]] (L2 ADC),
+    * [[ipLutLocal]] (inner-product ADC) or q136's per-cell residual LUT;
+    * all mirror the retired Column spellings bit-for-bit (AnnRecallSpec).
+    * With `cells = Some((coarse, nprobe))` each probe fans out to its
+    * [[nearestCellsLocal]] cells and the relation is (qid, cell, lut);
+    * without it, (qid, lut) and `lut` sees cell -1. */
+  private def probeLuts(s: SparkSession, probes: Array[(Long, Array[Float])],
+      cells: Option[(Seq[Seq[Double]], Int)] = None)(
+      lut: (Array[Float], Int) => Seq[Seq[Double]]): DataFrame = {
+    import s.implicits._
+    cells match {
+      case None =>
+        probes.toSeq.map { case (qid, qe) => (qid, lut(qe, -1)) }.toDF("qid", "lut")
+      case Some((coarse, nprobe)) =>
+        probes.toSeq.flatMap { case (qid, qe) =>
+          nearestCellsLocal(qe, coarse, nprobe).map(cell => (qid, cell, lut(qe, cell)))
+        }.toDF("qid", "cell", "lut")
+    }
+  }
+
+  /** ADC score stage over a (vec_id, cell, codes) frame and a
+    * (qid, cell, lut) relation: (qid, cid, adc). The sum is one generated
+    * index-order loop (≡ the oracle's left-to-right l0.d + l1.d + …
+    * association); `+ 0.0` at the consumers drops a negated zero. */
+  private def adcScores(enc: DataFrame, lut: DataFrame): DataFrame =
+    enc.join(broadcast(lut), Seq("cell"))
+      .filter(col("vec_id") =!= col("qid"))
+      .select(col("qid"), col("vec_id").as("cid"),
+        org.apache.spark.sql.graft.PqExpr.adc(col("codes"), col("lut")).as("adc"))
+
+  /** The k-bounded heap tail every ranked output shares: per `key`, the
+    * top-k `payload` rows by `score` (desc, payload asc — the oracles'
+    * ORDER BY) through TopKByScore (≤ k entries per key cross the
+    * shuffle, never a window sort), emitted as (key, payload,
+    * outName = out(score), rnk). `score` and `out` carry each query's own
+    * spelling (negation, `+ 0.0`, rounding). An empty `key` ranks the
+    * whole frame. */
+  private def ranked(df: DataFrame, score: Column, k: Int, outName: String,
+      out: Column => Column = round(_, 4), key: Seq[String] = Seq("qid"),
+      payload: String = "cid"): DataFrame =
+    df.groupBy(key.map(col): _*)
+      .agg(org.apache.spark.sql.graft.TopKByScore
+        .columnFor(score, col(payload), k).as("top"))
+      .select(key.map(col) :+ posexplode(col("top")): _*)
+      .select(key.map(col) ++ Seq(col("col.payload").as(payload),
+        out(col("col.score")).as(outName),
+        (col("pos") + 1).cast("long").as("rnk")): _*)
+
+  /** The top-R candidate cut: per `key`, the R best `payload` ids by
+    * `score` through the same heap as [[ranked]], scores dropped. */
+  private def topIds(df: DataFrame, score: Column, r: Int,
+      key: Seq[String] = Seq("qid"), payload: String = "cid"): DataFrame =
+    df.groupBy(key.map(col): _*)
+      .agg(org.apache.spark.sql.graft.TopKByScore
+        .columnFor(score, col(payload), r).as("top"))
+      .select(key.map(col) :+ explode(col("top")).as("t"): _*)
+      .select(key.map(col) :+ col("t.payload").as(payload): _*)
+
+  /** The L2-ADC top-5 emission (q97, q136 and the store serves). */
+  private def adcTop5(adc: DataFrame): DataFrame =
+    ranked(adc, negate(col("adc")) + lit(0.0), 5, "adc_dist",
+      c => round(negate(c) + lit(0.0), 4))
+
+  /** Exact re-rank of a (qid, cid) candidate cut: ONE narrow pass joins
+    * the R·|probes| broadcast ids back to the corpus `e`, then the
+    * broadcast (qid, qe) probe vectors, scoring `name` = kernel(qe,
+    * embedding) — R·d exact work per probe instead of n·d. */
+  private def exactRerank(e: DataFrame, cand: DataFrame, probes: DataFrame,
+      name: String)(kernel: (Column, Column) => Column): DataFrame =
+    e.join(broadcast(cand), e("vec_id") === cand("cid"))
+      .join(broadcast(probes), "qid")
+      .select(col("qid"), col("cid"),
+        kernel(col("qe"), col("embedding")).as(name))
+
+  /** ‖a − b‖² as one fused fold — (x−y)² summed left to right from 0.0,
+    * the spelling [[sqL2Local]] mirrors and the oracles replay. */
+  private def sqL2(a: Column, b: Column): Column =
+    aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)), lit(0.0), _ + _)
+
+  private def sqL2(a: Column, c: Seq[Double]): Column =
+    sqL2(a, array(c.map(lit): _*))
+
+  /** ⟨a, b⟩ over double-widened elements: the exact IP re-rank kernel. */
+  private def dotC(a: Column, b: Column): Column =
+    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
+      lit(0.0), _ + _)
+
+  /** IVF-PQ candidate scoring (Jégou et al. 2011's IVFADC, by_residual
+    * disabled), shared by q97 (top-5 by ADC) and q123 (exact re-rank):
+    * coarse IVF restricts candidates to each probe's `nprobe` nearest
+    * cells; within them candidates are scored from their PQ codes alone
+    * via asymmetric distance. Each vector encodes ONCE as M=16 4-bit
+    * codes (one fused codegen loop — M separate NearestCentroid columns
+    * blew the JVM method limit and fell out of codegen); each probe's
+    * M×K LUT of subspace distances comes from [[probeLuts]] (never per
+    * pair); per-pair work is 16 lookups + 15 adds in fixed association
+    * order. Codebooks are per-subspace deterministic Lloyd (identical
+    * seed/round rules to q39) so DuckDB re-derives them exactly for the
+    * q97 gate. Returns (qid, cid, adc). */
   private def ivfPqAdcCandidates(s: SparkSession, dir: String,
       nprobe: Int, maxVec: Long = Long.MaxValue,
       probes0: Option[Array[(Long, Array[Float])]] = None): DataFrame = {
-    val (k, iters) = (8, 3)
-    val coarse = lloydCentroids(s, dir, k, iters, maxVec)
+    val coarse = lloydCentroids(s, dir, 8, 3, maxVec)
     val pq = pqCodebooks(s, dir, PqM, PqK, PqIters, maxVec = maxVec)
-    val e0 = emb(s, dir).select(col("vec_id"), col("embedding"))
-    val e = if (maxVec == Long.MaxValue) e0
-            else e0.filter(col("vec_id") < maxVec)
+    val e = corpusSlice(s, dir, maxVec)
     val enc = e.select(col("vec_id"),
       NearestCentroid.cell(col("embedding"), coarse).as("cell"),
       org.apache.spark.sql.graft.PqExpr
         .encode(col("embedding"), pq).as("codes"))
-    // DRIVER TIER (r18, guide §1.2 "per-task work" + §5): the per-probe
-    // ADC lookup table (lut[m][c] = ||q_sub_m − codebook_m[c]||²) and the
-    // nprobe nearest-cell ranking are pure functions of the ≤10 collected
-    // probe vectors and the (driver-resident) codebooks — the FAISS
-    // query-time-LUT shape. The old spelling built them as a PqM×PqK
-    // literal expression tree (~10k Catalyst nodes): measured 0.4-0.7 s
-    // of analysis + planning PER RUN before any task launched
-    // (r18, OPTIMIZATION_r18.md), against ~1 ms of driver arithmetic here.
-    // sqL2Local mirrors the retired sqL2 Column bit-for-bit; cell ties
-    // (d, then cell) keep the oracle's row_number order, and rank 1
-    // reproduces NearestCentroid's strict-< lowest-index rule exactly.
-    val probes = probes0.getOrElse(collectProbes(e))
-    val lutRows = probes.iterator.flatMap { case (qid, qe) =>
-      val lut = pqLutLocal(qe, pq)
-      nearestCellsLocal(qe, coarse, nprobe).iterator
-        .map(cell => (qid, cell, lut))
-    }.toSeq
-    import s.implicits._
-    val lut = lutRows.toDF("qid", "cell", "lut")
-    // one generated index-order loop (≡ the oracle's left-to-right
-    // l0.d + l1.d + … association); `+ 0.0` at the consumers drops a
-    // negated zero (q79 precedent)
-    val adc = org.apache.spark.sql.graft.PqExpr
-      .adc(col("codes"), col("lut"))
-    enc.join(broadcast(lut), Seq("cell"))
-      .filter(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id").as("cid"), adc.as("adc"))
+    adcScores(enc, probeLuts(s, probes0.getOrElse(collectProbes(e)),
+      Some((coarse, nprobe)))((qe, _) => pqLutLocal(qe, pq)))
   }
 
   /** Gate slice for the q97/q123 IVF-PQ lifecycle (the q121/q122
@@ -2453,14 +2412,7 @@ object SimilarityOps {
     * probes. */
   private[graft] def ivfPqTop5(s: SparkSession, dir: String,
       maxVec: Long = Long.MaxValue): DataFrame =
-    ivfPqAdcCandidates(s, dir, nprobe = 2, maxVec)
-      .groupBy("qid")
-      .agg(org.apache.spark.sql.graft.TopKByScore
-        .columnFor(negate(col("adc")) + lit(0.0), col("cid"), 5).as("top"))
-      .select(col("qid"), posexplode(col("top")))
-      .select(col("qid"), col("col.payload").as("cid"),
-        round(negate(col("col.score")) + lit(0.0), 4).as("adc_dist"),
-        (col("pos") + 1).cast("long").as("rnk"))
+    adcTop5(ivfPqAdcCandidates(s, dir, nprobe = 2, maxVec))
 
   /** q145's body: MIPS top-5 via ANISOTROPIC PQ — encode the slice with
     * the score-aware codebooks ([[anisoCodebooks]]), then per probe an
@@ -2473,30 +2425,17 @@ object SimilarityOps {
   private[graft] def anisoPqTop5(s: SparkSession, dir: String,
       eta: Double, maxVec: Long = IvfPqGateSlice): DataFrame = {
     val books = anisoCodebooks(s, dir, PqM, PqK, PqIters, eta, maxVec = maxVec)
-    val e0 = emb(s, dir).select(col("vec_id"), col("embedding"))
-    val e = if (maxVec == Long.MaxValue) e0
-            else e0.filter(col("vec_id") < maxVec)
+    val e = corpusSlice(s, dir, maxVec)
     val enc = e.select(col("vec_id").as("cid"),
       org.apache.spark.sql.graft.PqExpr
         .encodeAniso(col("embedding"), books, eta).as("codes"))
-    // DRIVER TIER (r18, the ivfPqAdcCandidates precedent): the per-probe
-    // IP LUT is [[ipLutLocal]] over the ≤10 collected probes — a 10-row
-    // local relation instead of a PqM×PqK literal expression tree.
-    import s.implicits._
-    val lut = collectProbes(e).toSeq
-      .map { case (qid, qe) => (qid, ipLutLocal(qe, books)) }
-      .toDF("qid", "lut")
+    val lut = probeLuts(s, collectProbes(e))((qe, _) => ipLutLocal(qe, books))
     enc.join(broadcast(lut), col("cid") =!= col("qid"))
       .select(col("qid"), col("cid"),
         org.apache.spark.sql.graft.PqExpr
           .adc(col("codes"), col("lut")).as("ip"))
-      .groupBy("qid")
-      .agg(org.apache.spark.sql.graft.TopKByScore
-        .columnFor(col("ip") + lit(0.0), col("cid"), 5).as("top"))
-      .select(col("qid"), posexplode(col("top")))
-      .select(col("qid"), col("col.payload").as("cid"),
-        round(col("col.score") + lit(0.0), 4).as("ip_score"),
-        (col("pos") + 1).cast("long").as("rnk"))
+      .transform(ranked(_, col("ip") + lit(0.0), 5, "ip_score",
+        c => round(c + lit(0.0), 4)))
   }
 
   /** q146's body: the FULL ScaNN serving stack composed — IVF coarse
@@ -2510,53 +2449,8 @@ object SimilarityOps {
     * get exact dots — the 100 TB serving shape. */
   private[graft] def scannStackTop5(s: SparkSession, dir: String,
       eta: Double = AnisoEta, maxVec: Long = IvfPqGateSlice,
-      nprobe: Int = 2, rerankR: Int = 32): DataFrame = {
-    val (k, iters) = (8, 3)
-    val coarse = lloydCentroids(s, dir, k, iters, maxVec)
-    val books = anisoCodebooks(s, dir, PqM, PqK, PqIters, eta, maxVec = maxVec)
-    val e0 = emb(s, dir).select(col("vec_id"), col("embedding"))
-    val e = if (maxVec == Long.MaxValue) e0
-            else e0.filter(col("vec_id") < maxVec)
-    val enc = e.select(col("vec_id").as("cid"),
-      NearestCentroid.cell(col("embedding"), coarse).as("cell"),
-      org.apache.spark.sql.graft.PqExpr
-        .encodeAniso(col("embedding"), books, eta).as("codes"))
-    // DRIVER TIER (r18, the ivfPqAdcCandidates precedent): per-probe IP
-    // LUT + nprobe cell ranking over the ≤10 collected probes, shared
-    // with the re-rank's probe side below.
-    val probes = collectProbes(e)
-    val lutRows = probes.iterator.flatMap { case (qid, qe) =>
-      val l = ipLutLocal(qe, books)
-      nearestCellsLocal(qe, coarse, nprobe).iterator
-        .map(cell => (qid, cell, l))
-    }.toSeq
-    import s.implicits._
-    val lut = lutRows.toDF("qid", "cell", "lut")
-    val cand = enc.join(broadcast(lut), Seq("cell"))
-      .filter(col("cid") =!= col("qid"))
-      .select(col("qid"), col("cid"),
-        org.apache.spark.sql.graft.PqExpr
-          .adc(col("codes"), col("lut")).as("ip"))
-      .groupBy("qid")
-      .agg(org.apache.spark.sql.graft.TopKByScore
-        .columnFor(col("ip") + lit(0.0), col("cid"), rerankR).as("top"))
-      .select(col("qid"), explode(col("top")).as("t"))
-      .select(col("qid"), col("t.payload").as("cid"))
-    def dotC(a: Column, b: Column): Column =
-      aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-        lit(0.0), _ + _)
-    val probeVecs = probes.toSeq.toDF("qid", "qe")
-    e.join(broadcast(cand), e("vec_id") === cand("cid"))
-      .join(broadcast(probeVecs), "qid")
-      .select(col("qid"), col("cid"), dotC(col("qe"), col("embedding")).as("ip"))
-      .groupBy("qid")
-      .agg(org.apache.spark.sql.graft.TopKByScore
-        .columnFor(col("ip") + lit(0.0), col("cid"), 5).as("top"))
-      .select(col("qid"), posexplode(col("top")))
-      .select(col("qid"), col("col.payload").as("cid"),
-        round(col("col.score") + lit(0.0), 4).as("ip_score"),
-        (col("pos") + 1).cast("long").as("rnk"))
-  }
+      nprobe: Int = 2, rerankR: Int = 32): DataFrame =
+    scannStack(s, dir, eta, maxVec, nprobe, rerankR, spill = false)
 
   /** q159's SOAR spill penalty λ (Sun et al., "SOAR: Improved Indexing
     * for Approximate Nearest Neighbor Search", NeurIPS 2023): exact
@@ -2574,36 +2468,73 @@ object SimilarityOps {
     * PROBE cost stays nprobe cells (the equal-probe-cost framing the
     * paper measures; AnnRecallSpec measures the recall delta here).
     * Candidates reached through both copies dedupe exactly (identical
-    * codes ⇒ identical ADC — max() is exact). Everything is composed
-    * codegen'd expressions over the k-cell literal (per-row work Θ(k·d),
-    * one narrow pass — the assignment parallelizes per row at any
-    * corpus size); the oracle replays the same spill rule in CTEs. */
+    * codes ⇒ identical ADC — max() is exact). The assignment
+    * ([[soarAssign]]) is composed codegen'd expressions over the k-cell
+    * literal (per-row work Θ(k·d), one narrow pass — it parallelizes per
+    * row at any corpus size); the oracle replays the same spill rule in
+    * CTEs. */
   private[graft] def soarStackTop5(s: SparkSession, dir: String,
       eta: Double = AnisoEta, maxVec: Long = IvfPqGateSlice,
-      nprobe: Int = 2, rerankR: Int = 32): DataFrame = {
-    val (k, iters) = (8, 3)
-    val coarse = lloydCentroids(s, dir, k, iters, maxVec)
+      nprobe: Int = 2, rerankR: Int = 32): DataFrame =
+    scannStack(s, dir, eta, maxVec, nprobe, rerankR, spill = true)
+
+  /** The q146/q159 pipeline: IP-ADC over the probed cells, top-R cut,
+    * exact inner-product re-rank, top-5. `spill` swaps single
+    * assignment for [[soarAssign]]'s two copies and dedupes the
+    * candidates reached through both. */
+  private def scannStack(s: SparkSession, dir: String, eta: Double,
+      maxVec: Long, nprobe: Int, rerankR: Int, spill: Boolean): DataFrame = {
+    val coarse = lloydCentroids(s, dir, 8, 3, maxVec)
     val books = anisoCodebooks(s, dir, PqM, PqK, PqIters, eta, maxVec = maxVec)
-    val e0 = emb(s, dir).select(col("vec_id"), col("embedding"))
-    val e = if (maxVec == Long.MaxValue) e0
-            else e0.filter(col("vec_id") < maxVec)
-    def sqL2(a: Column, cent: Seq[Double]): Column =
-      aggregate(zip_with(a, array(cent.map(lit): _*),
-        (x, y) => (x - y) * (x - y)), lit(0.0), _ + _)
-    // primary assignment + its squared distance, via the sorted
-    // (d, cell) struct array — the proven probe spelling (ties to the
-    // lower cell, ≡ the oracle's row_number ORDER BY d, cell).
-    // STAGED projections: sortedC / rx1 / per-cell dotr land as real
-    // columns between selects so the SOAR score tree references them
-    // instead of re-inlining the 64-element loops per cell (the
-    // unstaged spelling re-evaluated the sort ~20× per row — measured
-    // 14.6 s vs q146's 3.1 s at 30×; HOFs are non-cheap, so
-    // CollapseProject keeps the stages apart)
-    // the k per-cell distances land ONCE as a real array column (r18):
-    // the primary-assignment sort AND the spill-loss dc$c terms both read
-    // element_at(dcs, ·) instead of re-running the k 64-element sqL2
-    // loops a second time per row (same IEEE values — element_at is the
-    // identical expression result, so the oracle is untouched)
+    val e = corpusSlice(s, dir, maxVec)
+    val codes = org.apache.spark.sql.graft.PqExpr
+      .encodeAniso(col("embedding"), books, eta).as("codes")
+    val enc =
+      if (spill) soarAssign(e, coarse).select(col("vec_id").as("cid"),
+        explode(array(col("cell1"), col("cell2"))).as("cell"), codes)
+      else e.select(col("vec_id").as("cid"),
+        NearestCentroid.cell(col("embedding"), coarse).as("cell"), codes)
+    val probes = collectProbes(e)
+    val lut = probeLuts(s, probes, Some((coarse, nprobe)))(
+      (qe, _) => ipLutLocal(qe, books))
+    val scored = enc.join(broadcast(lut), Seq("cell"))
+      .filter(col("cid") =!= col("qid"))
+      .select(col("qid"), col("cid"),
+        org.apache.spark.sql.graft.PqExpr
+          .adc(col("codes"), col("lut")).as("ip"))
+    // a candidate probed through BOTH copies carries identical codes →
+    // identical ip; max() is the exact dedupe. ONE qid exchange serves
+    // both aggregation levels (r18, guide §2.4): HashPartitioning(qid)
+    // satisfies the (qid, cid) clustering too, so the dedupe and the
+    // per-probe heap run exchange-free on top of it — the unhinted
+    // spelling shuffled twice ((qid, cid) then (qid))
+    val cand = (if (spill) scored.repartition(col("qid"))
+        .groupBy("qid", "cid").agg(max(col("ip")).as("ip")) else scored)
+      .transform(topIds(_, col("ip") + lit(0.0), rerankR))
+    import s.implicits._
+    exactRerank(e, cand, probes.toSeq.toDF("qid", "qe"), "ip")(dotC)
+      .transform(ranked(_, col("ip") + lit(0.0), 5, "ip_score",
+        c => round(c + lit(0.0), 4)))
+  }
+
+  /** SOAR spill-2 assignment: (vec_id, embedding, cell1, cell2) — the
+    * nearest cell, then the spill cell minimizing the SOAR loss.
+    * Primary assignment + its squared distance come from the sorted
+    * (d, cell) struct array — the proven probe spelling (ties to the
+    * lower cell, ≡ the oracle's row_number ORDER BY d, cell).
+    * STAGED projections: sortedC / rx1 / per-cell dotr land as real
+    * columns between selects so the SOAR score tree references them
+    * instead of re-inlining the 64-element loops per cell (the unstaged
+    * spelling re-evaluated the sort ~20× per row — measured 14.6 s vs
+    * q146's 3.1 s at 30×; HOFs are non-cheap, so CollapseProject keeps
+    * the stages apart). The k per-cell distances land ONCE as a real
+    * array column (r18): the primary-assignment sort AND the spill-loss
+    * dc$c terms both read element_at(dcs, ·) instead of re-running the k
+    * 64-element sqL2 loops a second time per row (same IEEE values —
+    * element_at is the identical expression result, so the oracle is
+    * untouched). */
+  private def soarAssign(e: DataFrame, coarse: Seq[Seq[Double]]): DataFrame = {
+    val k = coarse.length
     val cents2d = array(coarse.map(cc => array(cc.map(lit): _*)): _*)
     val a0 = e.select(col("vec_id"), col("embedding"),
       array((0 until k).map(c =>
@@ -2638,58 +2569,10 @@ object SimilarityOps {
         .as("d"),
         lit(c).as("cell"))
     }: _*)
-    val a5 = a4.select(col("vec_id"), col("embedding"), col("cell1"),
+    a4.select(col("vec_id"), col("embedding"), col("cell1"),
       element_at(array_sort(
         filter(scored2, st => st.getField("cell") =!= col("cell1"))), 1)
         .getField("cell").as("cell2"))
-    val enc = a5.select(col("vec_id").as("cid"),
-      explode(array(col("cell1"), col("cell2"))).as("cell"),
-      org.apache.spark.sql.graft.PqExpr
-        .encodeAniso(col("embedding"), books, eta).as("codes"))
-    // DRIVER TIER (r18, the ivfPqAdcCandidates precedent): per-probe IP
-    // LUT + nprobe cell ranking over the ≤10 collected probes, shared
-    // with the re-rank's probe side below. The SOAR spill-2 ASSIGNMENT
-    // above stays distributed — that is per-row corpus work.
-    val probes = collectProbes(e)
-    val lutRows = probes.iterator.flatMap { case (qid, qe) =>
-      val l = ipLutLocal(qe, books)
-      nearestCellsLocal(qe, coarse, nprobe).iterator
-        .map(cell => (qid, cell, l))
-    }.toSeq
-    import s.implicits._
-    val lut = lutRows.toDF("qid", "cell", "lut")
-    val cand = enc.join(broadcast(lut), Seq("cell"))
-      .filter(col("cid") =!= col("qid"))
-      .select(col("qid"), col("cid"),
-        org.apache.spark.sql.graft.PqExpr
-          .adc(col("codes"), col("lut")).as("ip"))
-      // a candidate probed through BOTH copies carries identical codes →
-      // identical ip; max() is the exact dedupe. ONE qid exchange serves
-      // both aggregation levels (r18, guide §2.4): HashPartitioning(qid)
-      // satisfies the (qid, cid) clustering too, so the dedupe and the
-      // per-probe heap run exchange-free on top of it — the unhinted
-      // spelling shuffled twice ((qid, cid) then (qid))
-      .repartition(col("qid"))
-      .groupBy("qid", "cid").agg(max(col("ip")).as("ip"))
-      .groupBy("qid")
-      .agg(org.apache.spark.sql.graft.TopKByScore
-        .columnFor(col("ip") + lit(0.0), col("cid"), rerankR).as("top"))
-      .select(col("qid"), explode(col("top")).as("t"))
-      .select(col("qid"), col("t.payload").as("cid"))
-    def dotC(a: Column, b: Column): Column =
-      aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-        lit(0.0), _ + _)
-    val probeVecs = probes.toSeq.toDF("qid", "qe")
-    e.join(broadcast(cand), e("vec_id") === cand("cid"))
-      .join(broadcast(probeVecs), "qid")
-      .select(col("qid"), col("cid"), dotC(col("qe"), col("embedding")).as("ip"))
-      .groupBy("qid")
-      .agg(org.apache.spark.sql.graft.TopKByScore
-        .columnFor(col("ip") + lit(0.0), col("cid"), 5).as("top"))
-      .select(col("qid"), posexplode(col("top")))
-      .select(col("qid"), col("col.payload").as("cid"),
-        round(col("col.score") + lit(0.0), 4).as("ip_score"),
-        (col("pos") + 1).cast("long").as("rnk"))
   }
 
   /** q147: matryoshka truncation depth (first dims used by the cheap
@@ -2725,45 +2608,19 @@ object SimilarityOps {
       .select(col("qid"), col("cid"),
         cosineSim(slice(col("qe"), 1, dPrime),
           slice(col("ce"), 1, dPrime)).as("cosd"))
-      .groupBy("qid")
-      .agg(org.apache.spark.sql.graft.TopKByScore
-        .columnFor(col("cosd"), col("cid"), rerankR).as("top"))
-      .select(col("qid"), explode(col("top")).as("t"))
-      .select(col("qid"), col("t.payload").as("cid"))
-    e.join(broadcast(first), e("vec_id") === first("cid"))
-      .join(broadcast(q), "qid")
-      .select(col("qid"), col("cid"),
-        cosineSim(col("qe"), col("embedding")).as("cos"))
-      .groupBy("qid")
-      .agg(org.apache.spark.sql.graft.TopKByScore
-        .columnFor(col("cos"), col("cid"), 5).as("top"))
-      .select(col("qid"), posexplode(col("top")))
-      .select(col("qid"), col("col.payload").as("cid"),
-        round(col("col.score"), 4).as("cosine"),
-        (col("pos") + 1).cast("long").as("rnk"))
+      .transform(topIds(_, col("cosd"), rerankR))
+    exactRerank(e, first, q, "cos")(cosineSim)
+      .transform(ranked(_, col("cos"), 5, "cosine"))
   }
 
-  /** q136's body: by_residual IVF-PQ ADC top-5. Residual = one narrow
-    * zip_with against the per-cell centroid literal, FLOAT-cast in both
-    * engines (the q132 rotated-corpus precedent — the cast pins the
-    * value set both chains train on); training/encoding rides the
-    * standing pqCodebooks/PqExpr machinery via the src override; the LUT
-    * is per (probe, PROBED cell) — by_residual's serve-time cost — so
-    * its projection legitimately sits above the nprobe explode
-    * (references the generator output; the carried-column lint stays
-    * clean). */
   /** (vec_id, cell, embedding=float residual v − cent(cell)) — the
     * by_residual corpus q136 trains/encodes on; shared with the
     * AnnRecallSpec reproducibility device. */
   private[graft] def residualCorpus(s: SparkSession, dir: String,
       maxVec: Long): DataFrame = {
-    val (k, iters) = (8, 3)
-    val coarse = lloydCentroids(s, dir, k, iters, maxVec)
-    val e0 = emb(s, dir).select(col("vec_id"), col("embedding"))
-    val e = if (maxVec == Long.MaxValue) e0
-            else e0.filter(col("vec_id") < maxVec)
+    val coarse = lloydCentroids(s, dir, 8, 3, maxVec)
     val centArr = array(coarse.map(c => array(c.map(lit): _*)): _*)
-    e.select(col("vec_id"),
+    corpusSlice(s, dir, maxVec).select(col("vec_id"),
         NearestCentroid.cell(col("embedding"), coarse).as("cell"),
         col("embedding"))
       .select(col("vec_id"), col("cell"),
@@ -2772,13 +2629,17 @@ object SimilarityOps {
       .localCheckpoint(eager = false)
   }
 
+  /** q136's body: by_residual IVF-PQ ADC top-5. Residual = one narrow
+    * zip_with against the per-cell centroid literal, FLOAT-cast in both
+    * engines (the q132 rotated-corpus precedent — the cast pins the
+    * value set both chains train on); training/encoding rides the
+    * standing pqCodebooks/PqExpr machinery via the src override; the LUT
+    * is per (probe, PROBED cell) — by_residual's serve-time cost: the
+    * float-cast query residual qr = (qe − c).toFloat, element-wise the
+    * residualCorpus cast, then [[pqLutLocal]] over qr. */
   private[graft] def ivfPqResidualTop5(s: SparkSession, dir: String,
       maxVec: Long = Long.MaxValue): DataFrame = {
-    val (k, iters, nprobe) = (8, 3, 2)
-    val coarse = lloydCentroids(s, dir, k, iters, maxVec)
-    val e0 = emb(s, dir).select(col("vec_id"), col("embedding"))
-    val e = if (maxVec == Long.MaxValue) e0
-            else e0.filter(col("vec_id") < maxVec)
+    val coarse = lloydCentroids(s, dir, 8, 3, maxVec)
     val res = residualCorpus(s, dir, maxVec)
     val pq = pqCodebooks(s, dir, PqM, PqK, PqIters, maxVec = maxVec,
       src = Some(res.select(col("vec_id"), col("embedding"))),
@@ -2786,39 +2647,12 @@ object SimilarityOps {
     val enc = res.select(col("vec_id"), col("cell"),
       org.apache.spark.sql.graft.PqExpr
         .encode(col("embedding"), pq).as("codes"))
-    // DRIVER TIER (r18, the ivfPqAdcCandidates precedent): per probe and
-    // probed cell, the float-cast residual qr = (qe − c).toFloat and its
-    // PQ LUT are driver arithmetic over the ≤10 collected probes —
-    // (x.cast(double) − c).cast(float) mirrored element-wise, then
-    // [[pqLutLocal]] over qr, bit-identical to the retired residual()/
-    // sqL2 expression trees.
-    val probes = collectProbes(e)
-    val lutRows = probes.iterator.flatMap { case (qid, qe) =>
-      nearestCellsLocal(qe, coarse, nprobe).iterator.map { cell =>
-        val cent = coarse(cell)
-        val qr = new Array[Float](qe.length)
-        var i = 0
-        while (i < qe.length) {
-          qr(i) = (qe(i).toDouble - cent(i)).toFloat
-          i += 1
-        }
-        (qid, cell, pqLutLocal(qr, pq))
-      }
-    }.toSeq
-    import s.implicits._
-    val lut = lutRows.toDF("qid", "cell", "lut")
-    enc.join(broadcast(lut), Seq("cell"))
-      .filter(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id").as("cid"),
-        org.apache.spark.sql.graft.PqExpr
-          .adc(col("codes"), col("lut")).as("adc"))
-      .groupBy("qid")
-      .agg(org.apache.spark.sql.graft.TopKByScore
-        .columnFor(negate(col("adc")) + lit(0.0), col("cid"), 5).as("top"))
-      .select(col("qid"), posexplode(col("top")))
-      .select(col("qid"), col("col.payload").as("cid"),
-        round(negate(col("col.score")) + lit(0.0), 4).as("adc_dist"),
-        (col("pos") + 1).cast("long").as("rnk"))
+    val lut = probeLuts(s, collectProbes(corpusSlice(s, dir, maxVec)),
+        Some((coarse, 2))) { (qe, cell) =>
+      pqLutLocal(Array.tabulate(qe.length)(
+        i => (qe(i).toDouble - coarse(cell)(i)).toFloat), pq)
+    }
+    adcTop5(adcScores(enc, lut))
   }
 
   /** q137's body: the q125 sharded-store recipe applied to the ANN
@@ -2826,13 +2660,12 @@ object SimilarityOps {
     * store and retrieval reads ONLY the probed cells' directories
     * (partition pruning on the `cell=` path), the property that lets a
     * 100 TB vector index serve probes from a fraction of the store. The
-    * probed-cell list is bounded driver state (≤ nprobe · Probes ints —
-    * the per-query unit a serving frontend holds), codes/cells/ids are
-    * integers so the store round-trip is exact, and the ADC arithmetic
-    * is q97's verbatim — output ≡ q97, which is exactly what the oracle
-    * checks (same SQL; the store changes WHERE bytes live, never what
-    * they say). AnnRecallSpec additionally pins result ≡ q97 in-engine
-    * and that the serve scan carries a partition filter. */
+    * serve is [[adcProbeServe]]: codes/cells/ids are integers so the
+    * store round-trip is exact, and the ADC arithmetic is q97's verbatim
+    * — output ≡ q97, which is exactly what the oracle checks (same SQL;
+    * the store changes WHERE bytes live, never what they say).
+    * AnnRecallSpec additionally pins result ≡ q97 in-engine and that the
+    * serve scan carries a partition filter. */
   private val ShardedServe = new ArtifactCache.Kind[DataFrame]("shardedServe")
 
   private[graft] def annShardedStoreServe(s: SparkSession, dir: String,
@@ -2842,67 +2675,19 @@ object SimilarityOps {
 
   private def annShardedStoreServeUncached(s: SparkSession, dir: String,
       maxVec: Long): DataFrame = {
-    val (k, iters, nprobe) = (8, 3, 2)
     val base = java.nio.file.Files.createTempDirectory("q137_store").toString
     try {
-    val coarse = lloydCentroids(s, dir, k, iters, maxVec)
-    val pq = pqCodebooks(s, dir, PqM, PqK, PqIters, maxVec = maxVec)
-    val e = emb(s, dir).select(col("vec_id"), col("embedding"))
-      .filter(col("vec_id") < maxVec)
-    def sqL2(a: Column, b: Column): Column =
-      aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
-        lit(0.0), _ + _)
-    e.select(col("vec_id"),
-        NearestCentroid.cell(col("embedding"), coarse).as("cell"),
-        org.apache.spark.sql.graft.PqExpr
-          .encode(col("embedding"), pq).as("codes"))
-      .repartition(col("cell"))
-      .sortWithinPartitions("vec_id")
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$base/ivfpq")
-    val store = s.read.parquet(s"$base/ivfpq")
-    val lut = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-      .select(col("qid"), col("qe"),
-        array((0 until PqM).map { m =>
-          array(pq(m).indices.map { c =>
-            sqL2(slice(col("qe"), m * PqSub + 1, PqSub),
-              array(pq(m)(c).map(lit): _*))
-          }: _*)
-        }: _*).as("lut"))
-      .select(col("qid"), col("lut"),
-        explode(slice(array_sort(array((0 until k).map(c =>
-          struct(sqL2(col("qe"), array(coarse(c).map(lit): _*)).as("d"),
-            lit(c).as("cell"))): _*)), 1, nprobe)).as("cc"))
-      .select(col("qid"), col("cc.cell").as("cell"), col("lut"))
-      .localCheckpoint(eager = true) // the store dir is deleted on return
-    val cells = lut.select("cell").distinct().collect().map(_.getInt(0))
-    val pruned = store.filter(col("cell").isin(cells.toSeq: _*))
-    // self-verifying serve: the scan must carry the cell partition filter
-    // (directory pruning) — if a refactor ever demotes it to a post-scan
-    // filter, serving would silently read the whole store. Inspect the
-    // scan node's partitionFilters expressions directly (not the plan's
-    // string rendering, which is renderer/version fragile).
-    val partFilters = pruned.queryExecution.executedPlan.collect {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-        f.partitionFilters
-    }.flatten
-    require(partFilters.exists(_.references.exists(_.name == "cell")),
-      "q137 serve scan lost its cell partition filter:\n" +
-        pruned.queryExecution.executedPlan.toString)
-    val out = pruned.join(broadcast(lut), Seq("cell"))
-      .filter(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id").as("cid"),
-        org.apache.spark.sql.graft.PqExpr
-          .adc(col("codes"), col("lut")).as("adc"))
-      .groupBy("qid")
-      .agg(org.apache.spark.sql.graft.TopKByScore
-        .columnFor(negate(col("adc")) + lit(0.0), col("cid"), 5).as("top"))
-      .select(col("qid"), posexplode(col("top")))
-      .select(col("qid"), col("col.payload").as("cid"),
-        round(negate(col("col.score")) + lit(0.0), 4).as("adc_dist"),
-        (col("pos") + 1).cast("long").as("rnk"))
-      .localCheckpoint(eager = true)
-    out
+      val coarse = lloydCentroids(s, dir, 8, 3, maxVec)
+      val pq = pqCodebooks(s, dir, PqM, PqK, PqIters, maxVec = maxVec)
+      val e = corpusSlice(s, dir, maxVec)
+      e.select(col("vec_id"),
+          NearestCentroid.cell(col("embedding"), coarse).as("cell"),
+          org.apache.spark.sql.graft.PqExpr
+            .encode(col("embedding"), pq).as("codes"))
+        .repartition(col("cell"))
+        .sortWithinPartitions("vec_id")
+        .write.mode("overwrite").partitionBy("cell").parquet(s"$base/ivfpq")
+      adcProbeServe(e, s.read.parquet(s"$base/ivfpq"), coarse, pq, 2, "q137")
     } finally {
       // the checkpointed result no longer needs the store; a throw above
       // must not leak the temp directory either
@@ -2941,15 +2726,13 @@ object SimilarityOps {
 
   private def vectorStoreIngestServeUncached(s: SparkSession, dir: String,
       maxVec: Long, split: Long, cuts: Seq[Long]): DataFrame = {
-    val (k, iters, nprobe) = (8, 3, 2)
     // FROZEN artifacts, trained on the standing slice ONLY — the batches
     // never feed training (drift-triggered retraining is
     // [[assignIncremental]]'s hook; the gate freezes so the end state is
     // exactly replayable)
-    val coarse = lloydCentroids(s, dir, k, iters, split)
+    val coarse = lloydCentroids(s, dir, 8, 3, split)
     val pq = pqCodebooks(s, dir, PqM, PqK, PqIters, maxVec = split)
-    val e = emb(s, dir).select(col("vec_id"), col("embedding"))
-      .filter(col("vec_id") < maxVec)
+    val e = corpusSlice(s, dir, maxVec)
     val base = java.nio.file.Files.createTempDirectory("q144_store").toString
     try {
       val inDir = s"$base/in"
@@ -2975,7 +2758,7 @@ object SimilarityOps {
       graft.streaming.VectorStoreIngest.start(s, inDir, e.schema,
         s"$base/store", s"$base/ckpt", coarse, pq).awaitTermination()
       val store = s.read.parquet(s"$base/store")
-      adcProbeServe(e, store, coarse, pq, k, nprobe, "q144")
+      adcProbeServe(e, store, coarse, pq, 2, "q144")
     } finally {
       // the checkpointed result no longer needs the store; a throw above
       // must not leak the temp directory either
@@ -2983,60 +2766,52 @@ object SimilarityOps {
     }
   }
 
-  /** The q137/q144 ADC probe serve over a `cell=`-partitioned store
-    * frame: probes are the `e` rows with vec_id < 10; per probe the
-    * nprobe nearest coarse cells are scanned (cell partition filter
-    * self-verified against the physical plan — directory pruning is the
-    * property the store layout exists for), candidates scored by the
-    * fixed-order ADC sum against the per-query LUT, top-5 by (adc, cid).
-    * Factored from the q144 body so the drift-lifecycle gate (q150)
-    * serves its final-epoch store through the IDENTICAL plan. */
+  /** The q137/q144/q150 ADC probe serve over a `cell=`-partitioned store
+    * frame: probes are the `e` rows with vec_id < 10; the pipeline's
+    * [[probeLuts]] gives each probe its LUT and nprobe nearest coarse
+    * cells, and the store scan reads only those cells — the cell list is
+    * driver state from [[nearestCellsLocal]], and the scan's partition
+    * filter is self-verified against the physical plan (directory pruning
+    * is the property the store layout exists for; inside EVERY batch dir
+    * of a multi-batch store). Candidates are scored by the fixed-order ADC
+    * sum, top-5 by (adc, cid). One serve for all three store gates, so the
+    * drift-lifecycle gate (q150) serves its final-epoch store through the
+    * IDENTICAL plan. */
   private[graft] def adcProbeServe(e: DataFrame, store: DataFrame,
       coarse: Seq[Seq[Double]], pq: Seq[Seq[Seq[Double]]],
-      k: Int, nprobe: Int, gateName: String): DataFrame = {
-      def sqL2(a: Column, b: Column): Column =
-        aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
-          lit(0.0), _ + _)
-      val lut = e.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-        .select(col("qid"), col("qe"),
-          array((0 until PqM).map { m =>
-            array(pq(m).indices.map { c =>
-              sqL2(slice(col("qe"), m * PqSub + 1, PqSub),
-                array(pq(m)(c).map(lit): _*))
-            }: _*)
-          }: _*).as("lut"))
-        .select(col("qid"), col("lut"),
-          explode(slice(array_sort(array((0 until k).map(c =>
-            struct(sqL2(col("qe"), array(coarse(c).map(lit): _*)).as("d"),
-              lit(c).as("cell"))): _*)), 1, nprobe)).as("cc"))
-        .select(col("qid"), col("cc.cell").as("cell"), col("lut"))
-        .localCheckpoint(eager = true) // the store dir is deleted on return
-      val cells = lut.select("cell").distinct().collect().map(_.getInt(0))
-      val pruned = store.filter(col("cell").isin(cells.toSeq: _*))
-      // self-verifying serve (the q137 check): the scan must carry the
-      // cell partition filter — directory pruning inside EVERY batch dir —
-      // or serving would silently read the whole multi-batch store
-      val partFilters = pruned.queryExecution.executedPlan.collect {
-        case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-          f.partitionFilters
-      }.flatten
-      require(partFilters.exists(_.references.exists(_.name == "cell")),
-        s"$gateName serve scan lost its cell partition filter:\n" +
-          pruned.queryExecution.executedPlan.toString)
-      pruned.join(broadcast(lut), Seq("cell"))
-        .filter(col("vec_id") =!= col("qid"))
-        .select(col("qid"), col("vec_id").as("cid"),
-          org.apache.spark.sql.graft.PqExpr
-            .adc(col("codes"), col("lut")).as("adc"))
-        .groupBy("qid")
-        .agg(org.apache.spark.sql.graft.TopKByScore
-          .columnFor(negate(col("adc")) + lit(0.0), col("cid"), 5).as("top"))
-        .select(col("qid"), posexplode(col("top")))
-        .select(col("qid"), col("col.payload").as("cid"),
-          round(negate(col("col.score")) + lit(0.0), 4).as("adc_dist"),
-          (col("pos") + 1).cast("long").as("rnk"))
-        .localCheckpoint(eager = true)
+      nprobe: Int, gateName: String): DataFrame = {
+    val probes = collectProbes(e)
+    val cells = probes.flatMap { case (_, qe) =>
+      nearestCellsLocal(qe, coarse, nprobe) }.distinct.sorted
+    val pruned = store.filter(col("cell").isin(cells.toSeq: _*))
+    requirePartFilter(pruned, "cell", s"$gateName serve")
+    adcTop5(adcScores(pruned, probeLuts(e.sparkSession, probes,
+        Some((coarse, nprobe)))((qe, _) => pqLutLocal(qe, pq))))
+      .localCheckpoint(eager = true) // the store dir is deleted on return
+  }
+
+  /** Self-verifying serve: the scan of `df` must carry a partition filter
+    * on `column` (directory pruning) — if a refactor ever demotes it to a
+    * post-scan filter, serving would silently read the whole store. The
+    * scan node's partitionFilters expressions are inspected directly (not
+    * the plan's string rendering, which is renderer/version fragile). */
+  private def requirePartFilter(df: DataFrame, column: String,
+      what: String): Unit = {
+    val partFilters = df.queryExecution.executedPlan.collect {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec =>
+        f.partitionFilters
+    }.flatten
+    require(partFilters.exists(_.references.exists(_.name == column)),
+      s"$what scan lost its $column partition filter:\n" +
+        df.queryExecution.executedPlan.toString)
+  }
+
+  /** Total bytes of the regular files under `p` (store accounting). */
+  private def dirBytes(p: java.nio.file.Path): Long = {
+    val st = java.nio.file.Files.walk(p)
+    try st.filter(java.nio.file.Files.isRegularFile(_))
+      .mapToLong(java.nio.file.Files.size(_)).sum()
+    finally st.close()
   }
 
   /** q150's drift-lifecycle geometry: the drifted micro-batch is the
@@ -3114,7 +2889,7 @@ object SimilarityOps {
         round(lit(reps(1).driftRatio), 4).as("ratio_b"),
         lit(reps(1).retrained).as("retrained_b"),
         lit(dvs.retrains).as("n_retrains"))
-      adcProbeServe(e, dvs.store, dvs.coarse, dvs.pq, k, nprobe, "q150")
+      adcProbeServe(e, dvs.store, dvs.coarse, dvs.pq, nprobe, "q150")
         .crossJoin(broadcast(summary))
         .localCheckpoint(eager = true)
     } finally {
@@ -3162,16 +2937,6 @@ object SimilarityOps {
       : DataFrame =
     ArtifactCache(s, dir, GraphServe, slice, split, serveDriverMax)(
       graphShardedStoreServeUncached(s, dir, slice, split, serveDriverMax))
-
-  private def requireCellFilter(df: DataFrame, what: String): Unit = {
-    val partFilters = df.queryExecution.executedPlan.collect {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-        f.partitionFilters
-    }.flatten
-    require(partFilters.exists(_.references.exists(_.name == "shard")),
-      s"q141 $what scan lost its shard partition filter:\n" +
-        df.queryExecution.executedPlan.toString)
-  }
 
   /** Builds the q141 sharded store (vec + adj + seeds tiers) under
     * `base` — factored from the gate body so GraphServeSpec can drive a
@@ -3314,12 +3079,8 @@ object SimilarityOps {
       .join(broadcast(probes), Seq("cell"))
       .filter(col("cid") =!= col("qid"))
       .select(col("qid"), col("cid"), cosineSim(col("qe"), col("ce")).as("cos"))
-      .groupBy("qid")
-      .agg(org.apache.spark.sql.graft.TopKByScore
-        .columnFor(col("cos"), col("cid"), topK).as("top"))
-      .select(col("qid"), posexplode(col("top")))
-      .select(col("qid"), col("col.payload").as("cid"),
-        (col("pos") + 1).cast("long").as("sem_rnk"))
+      .transform(ranked(_, col("cos"), topK, "cosine"))
+      .select(col("qid"), col("cid"), col("rnk").as("sem_rnk"))
     val fused = lex.join(sem, Seq("qid", "cid"), "full_outer")
       .withColumn("rrf",
         coalesce(lit(1.0) / (lit(60.0) + col("lex_rnk").cast("double")),
@@ -3453,7 +3214,7 @@ object SimilarityOps {
         val vecs = vecStore
           .filter(col("shard").isin(shardsOf(p.select("nid")).toSeq: _*))
           .select(col("vec_id").as("nid"), col("embedding").as("ne"))
-        if (!checked) { requireCellFilter(vecs, "vector"); checked = true }
+        if (!checked) { requirePartFilter(vecs, "shard", "q141 vector"); checked = true }
         p.join(broadcast(probes), "qid")
           .join(vecs, "nid")
           .select(col("qid"), col("nid"),
@@ -3466,7 +3227,7 @@ object SimilarityOps {
       for (_ <- 1 to NnHops) {
         val adjP = adjStore.filter(col("shard")
           .isin(shardsOf(bm.select("nid")).toSeq: _*))
-        requireCellFilter(adjP, "adjacency")
+        requirePartFilter(adjP, "shard", "q141 adjacency")
         val expand = bm.select(col("qid"), col("nid"))
           .join(adjP.select(col("vec_id").as("nid"), col("nid").as("cand"),
             col("nid_shard")), "nid")
@@ -3481,13 +3242,7 @@ object SimilarityOps {
           .localCheckpoint(eager = true)
       }
       bm.filter(col("nid") =!= col("qid"))
-        .groupBy("qid")
-        .agg(org.apache.spark.sql.graft.TopKByScore.columnFor(
-          col("cos"), col("nid"), 5).as("top"))
-        .select(col("qid"), posexplode(col("top")))
-        .select(col("qid"), col("col.payload").as("nid"),
-          round(col("col.score"), 4).as("cosine"),
-          (col("pos") + 1).cast("long").as("rnk"))
+        .transform(ranked(_, col("cos"), 5, "cosine", payload = "nid"))
         .localCheckpoint(eager = true)
   }
 
@@ -3575,12 +3330,6 @@ object SimilarityOps {
   /** Serve-bytes fraction: touched shard directories vs the whole store. */
   private def recordServeBytes(base: String,
       touched: scala.collection.mutable.Set[Int]): Unit = {
-    def dirBytes(p: java.nio.file.Path): Long = {
-      val st = java.nio.file.Files.walk(p)
-      try st.filter(java.nio.file.Files.isRegularFile(_))
-        .mapToLong(java.nio.file.Files.size(_)).sum()
-      finally st.close()
-    }
     val baseP = java.nio.file.Paths.get(base)
     val total = dirBytes(baseP)
     val touchedBytes = touched.toSeq.map { sh =>
@@ -3750,35 +3499,17 @@ object SimilarityOps {
   /** q123's body: ADC top-R cut, exact raw-cosine re-rank, top-5. */
   private[graft] def ivfPqRerank(s: SparkSession, dir: String,
       maxVec: Long = Long.MaxValue): DataFrame = {
-    val rerankR = 64
-    val e0 = emb(s, dir).select(col("vec_id"), col("embedding"))
-    val e = if (maxVec == Long.MaxValue) e0
-            else e0.filter(col("vec_id") < maxVec)
+    val e = corpusSlice(s, dir, maxVec)
     // ONE probe collect shared by the ADC LUT and the re-rank's probe
-    // side (r18): probeVecs becomes a 10-row local relation instead of a
-    // second corpus scan + broadcast build — same values (the collected
+    // side (r18): the probe vectors are a 10-row local relation instead of
+    // a second corpus scan + broadcast build — same values (the collected
     // floats ARE the scanned floats), one fewer job.
     val probes = collectProbes(e)
     val cand = ivfPqAdcCandidates(s, dir, nprobe = 6, maxVec, Some(probes))
-      .groupBy("qid")
-      .agg(org.apache.spark.sql.graft.TopKByScore
-        .columnFor(negate(col("adc")) + lit(0.0), col("cid"), rerankR)
-        .as("top"))
-      .select(col("qid"), explode(col("top")).as("t"))
-      .select(col("qid"), col("t.payload").as("cid"))
+      .transform(topIds(_, negate(col("adc")) + lit(0.0), 64))
     import s.implicits._
-    val probeVecs = probes.toSeq.toDF("qid", "qe")
-    e.join(broadcast(cand), e("vec_id") === cand("cid"))
-      .join(broadcast(probeVecs), "qid")
-      .select(col("qid"), col("cid"),
-        cosineSim(col("qe"), col("embedding")).as("cos"))
-      .groupBy("qid")
-      .agg(org.apache.spark.sql.graft.TopKByScore
-        .columnFor(col("cos"), col("cid"), 5).as("top"))
-      .select(col("qid"), posexplode(col("top")))
-      .select(col("qid"), col("col.payload").as("cid"),
-        round(col("col.score"), 4).as("cosine"),
-        (col("pos") + 1).cast("long").as("rnk"))
+    exactRerank(e, cand, probes.toSeq.toDF("qid", "qe"), "cos")(cosineSim)
+      .transform(ranked(_, col("cos"), 5, "cosine"))
   }
 
   /** The fitted PCA basis as an artifact keyed by k — see

@@ -45,7 +45,7 @@ object SwapServeProbe {
         SimilarityOps.PqM, SimilarityOps.PqK, SimilarityOps.PqIters)
       dvs.init(spark, e)
       val expectRows = SimilarityOps.adcProbeServe(
-        e, dvs.store, dvs.coarse, dvs.pq, 8, 2, "swap-warm").count()
+        e, dvs.store, dvs.coarse, dvs.pq, 2, "swap-warm").count()
       val stop = new AtomicBoolean(false)
       val serves = new AtomicInteger(0)
       val failures = new AtomicInteger(0)
@@ -57,7 +57,7 @@ object SwapServeProbe {
           try {
             val (ep, st, c, p) = dvs.serveSnapshot()
             val rows = SimilarityOps
-              .adcProbeServe(e, st, c, p, 8, 2, s"swap-e$ep").count()
+              .adcProbeServe(e, st, c, p, 2, s"swap-e$ep").count()
             epochsSeen.add(ep)
             serves.incrementAndGet()
             // every serve must return the complete probe wave — a

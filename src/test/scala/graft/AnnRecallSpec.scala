@@ -161,6 +161,10 @@ class AnnRecallSpec extends AnyFunSuite {
     // oracle proves end-to-end agreement; this pins the mirroring claim
     // itself: every value the retired Column spelling evaluates must equal
     // driver mirror to the BIT (doubleToLongBits), on the real probes.
+    // It also covers the store serve's retired spelling: adcProbeServe
+    // (q137/q144/q150) built the same sqL2 literal-tree LUT and
+    // array_sort(struct(d, cell)) ranking at nprobe 2, and the first 2 of
+    // the nprobe-6 cells checked here are exactly that serve's cells.
     val coarse = SimilarityOps.lloydCentroids(spark, dir, 8, 3)
     val pq = SimilarityOps.pqCodebooks(spark, dir,
       SimilarityOps.PqM, SimilarityOps.PqK, SimilarityOps.PqIters)

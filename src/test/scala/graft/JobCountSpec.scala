@@ -7,7 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * builders collected a vocab table / bucket distribution / vocab count
   * eagerly to feed literals — a composability surprise (building a plan
   * ran corpus scans) flagged by two judges. Now every scalar rides in as
-  * a broadcast 1-row cross join; this spec keeps it that way.
+  * a broadcast 1-row cross join; this spec keeps it that way. It also
+  * pins the job counts of the ANN serving pipeline's builders and store
+  * serve (see the tests below).
   *
   * Counting is deterministic: [[graft.core.Meter]] drains the listener
   * bus before and after the builder, so a reintroduced eager job is always
@@ -30,4 +32,48 @@ class JobCountSpec extends AnyFunSuite {
         SparkEntry.queries(q)(spark, sf))._2.jobs
       assert(n === 0, s"$q builder ran $n Spark jobs at construction time")
     }
+
+  // The ANN serving pipeline shares ONE probe collect per frame: with the
+  // artifacts warm (centroids, codebooks), building one of these frames
+  // runs exactly that job — the ≤10-row collect that feeds the driver-side
+  // LUT stage and, for the re-ranking members, the exact re-rank's probe
+  // side. A second collect, or a LUT built as a Spark job, shows up here.
+  for (q <- Seq("q97_ann_ivfpq", "q123_ann_ivfpq_rerank",
+      "q136_ann_ivfpq_residual", "q145_ann_pq_anisotropic",
+      "q146_ann_scann_stack", "q159_ann_soar"))
+    test(s"$q builder runs one job with warm artifacts: the probe collect") {
+      SparkEntry.queries(q)(spark, sf)
+      val n = graft.core.Meter.measure(spark)(
+        SparkEntry.queries(q)(spark, sf))._2.jobs
+      assert(n === 1, s"$q builder ran $n Spark jobs with warm artifacts")
+    }
+
+  // The store serve (q137/q144/q150) with warm artifacts: the probe
+  // collect, then the eager result checkpoint's 3 jobs. Its probed-cell
+  // list and LUT are driver arithmetic over the collected probes; the
+  // retired spelling also checkpointed a literal-tree LUT and collected its
+  // distinct cells (6 jobs on this store).
+  test("an adcProbeServe serve runs 4 jobs: probe collect + result checkpoint") {
+    import org.apache.spark.sql.functions.col
+    import graft.queries.SimilarityOps._
+    val coarse = lloydCentroids(spark, sf, 8, 3, IvfPqGateSlice)
+    val pq = pqCodebooks(spark, sf, PqM, PqK, PqIters, maxVec = IvfPqGateSlice)
+    val e = graft.sources.Tables(spark, sf, "embeddings")
+      .select(col("vec_id"), col("embedding"))
+      .filter(col("vec_id") < IvfPqGateSlice)
+    val base = java.nio.file.Files.createTempDirectory("adc_serve_jobs")
+    try {
+      e.select(col("vec_id"),
+          graft.plans.NearestCentroid.cell(col("embedding"), coarse).as("cell"),
+          org.apache.spark.sql.graft.PqExpr.encode(col("embedding"), pq)
+            .as("codes"))
+        .write.partitionBy("cell").parquet(s"$base/store")
+      val store = spark.read.parquet(s"$base/store")
+      def serve() = adcProbeServe(e, store, coarse, pq, 2, "spec")
+      val want = serve().collect().toSeq
+      val (got, c) = graft.core.Meter.measure(spark)(serve())
+      assert(got.collect().toSeq === want)
+      assert(c.jobs === 4, s"adcProbeServe ran ${c.jobs} Spark jobs")
+    } finally graft.export.Exporter.deleteRecursively(base)
+  }
 }
