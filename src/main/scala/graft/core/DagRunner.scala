@@ -181,13 +181,9 @@ final class DagRunner(spark: SparkSession, cfg: EngineConfig,
       }
       // export if requested
       m.export.foreach { e =>
-        val src = spark.table(m.name)
-        val w = src.write.mode("overwrite")
-          .option("compression", e.compression)
-          .option("maxRecordsPerFile", e.maxRecordsPerFile)
-          .option("parquet.block.row.count.limit", e.rowGroupRows)
-        val w2 = if (e.partitionBy.nonEmpty) w.partitionBy(e.partitionBy: _*) else w
-        w2.format(e.format).save(s"${cfg.exportDir}/${e.relPath}")
+        graft.export.Exporter.parquet(spark.table(m.name),
+          s"${cfg.exportDir}/${e.relPath}", e.compression, e.partitionBy,
+          e.maxRecordsPerFile, e.rowGroupRows)
       }
       RunResult(m.name, m.layer, "success", t0,
         (System.currentTimeMillis() - t0) / 1000.0, rows, None)

@@ -31,11 +31,11 @@ object Materialization {
       start: String = "2001-01-01") extends Materialization
 }
 
-/** Export request attached to a model (`EXPORT_DEPLOYMENT.md:224-236`):
+/** Parquet export request attached to a model
+  * (`EXPORT_DEPLOYMENT.md:224-236`), written by [[graft.export.Exporter.parquet]]:
   * codec + optional hive partitioning + file/row-group sizing. */
 final case class ExportSpec(
     relPath: String,
-    format: String = "parquet",
     compression: String = "zstd",
     partitionBy: Seq[String] = Nil,
     maxRecordsPerFile: Long = 1000000L,

@@ -1921,7 +1921,7 @@ object SimilarityOps {
       .transform(ranked(_, col("cos"), 5, "cosine"))
   }
 
-  private val Sq8Serve = new ArtifactCache.Kind[DataFrame]("sq8Serve")
+  private[graft] val Sq8Serve = new ArtifactCache.Kind[DataFrame]("sq8Serve")
 
   /** (touched store bytes, total store bytes) of the last q152 serve —
     * the int8 tier's bandwidth claim, measured. */
@@ -1974,17 +1974,16 @@ object SimilarityOps {
         .write.mode("overwrite").partitionBy("cell")
         .parquet(s"$base/store")
       val store = s.read.parquet(s"$base/store")
-      val probes = e.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("qid"), quantD(col("embedding")).as("qq"),
-          col("embedding").as("qe"))
-        .select(col("qid"), col("qq"),
-          explode(slice(array_sort(array((0 until k).map(c =>
-            struct(sqL2(col("qe"), cents(c)).as("d"),
-              lit(c).as("cell"))): _*)), 1, nprobe)).as("cc"))
-        .select(col("qid"), col("qq"), col("cc.cell").as("cell"))
-        .localCheckpoint(eager = true)
-      val cells = probes.select("cell").distinct().collect().map(_.getInt(0))
-      val pruned = store.filter(col("cell").isin(cells.toSeq: _*))
+      // driver tier: each collected probe's nprobe nearest cells, shipped
+      // as a local (qid, qe, cell) relation
+      import s.implicits._
+      val probeCells = collectProbes(e).toSeq.flatMap { case (qid, qe) =>
+        nearestCellsLocal(qe, cents, nprobe).map(cell => (qid, qe, cell))
+      }
+      val cells = probeCells.map(_._3).distinct.sorted
+      val probes = probeCells.toDF("qid", "qe", "cell")
+        .select(col("qid"), quantD(col("qe")).as("qq"), col("cell"))
+      val pruned = store.filter(col("cell").isin(cells: _*))
       requirePartFilter(pruned, "cell", "q152 serve")
       val stage1 = pruned.join(broadcast(probes), Seq("cell"))
         .filter(col("vec_id") =!= col("qid"))
@@ -3521,6 +3520,147 @@ object SimilarityOps {
     ArtifactCache(s, dir, PcaBasis, k)(
       graft.operators.Pca.fit(emb(s, dir), "embedding", Dim, k))
 
+  // ---- The DuckDB oracles. Each generator below composes one SQL twin per
+  // serving-pipeline stage — topIdsSql (top-R cut), rankedSql (top-k
+  // emission), nearestCellsSql (nprobe cell ranking, Lloyd assignment),
+  // probeLutSql (per-probe LUT) and adcSql (ADC score) — the way the Spark
+  // bodies compose topIds, ranked, nearestCellsLocal, probeLuts and
+  // adcScores. The emitted SQL is the gate's reference; OracleSqlPinSpec
+  // pins every oracle token for token.
+
+  /** Twin of [[topIds]]: per `key`, the `inner` projection of `src`
+    * ranked by `order` (row_number, so the payload tiebreak is part of
+    * `order`) and kept where `$rn $cut` — "<= R" for a top-R cut, "= 1"
+    * for an argmin; `cols` is what survives. Unparenthesized. */
+  private def topIdsSql(src: String, order: String, cut: String,
+      cols: String = "qid, cid", key: String = "qid", inner: String = "",
+      rn: String = "rn"): String =
+    s"""SELECT $cols FROM (
+       |  SELECT ${if (inner.isEmpty) cols else inner},
+       |         row_number() OVER (PARTITION BY $key
+       |           ORDER BY $order) AS $rn
+       |  FROM $src) WHERE $rn $cut""".stripMargin
+
+  /** Twin of [[ranked]]: the top-k emission tail (key, payload,
+    * round(score, 4) AS name, rnk) by (score [DESC], payload); the graph
+    * members emit the rank `castRnk` to BIGINT. */
+  private def rankedSql(src: String, score: String, name: String, k: Int = 5,
+      desc: Boolean = true, key: String = "qid", payload: String = "cid",
+      castRnk: Boolean = false): String =
+    topIdsSql(src, s"$score${if (desc) " DESC" else ""}, $payload", s"<= $k",
+      cols = s"$key, $payload, round($score, 4) AS $name, " +
+        (if (castRnk) "CAST(rnk AS BIGINT) AS rnk" else "rnk"),
+      key = key, inner = s"$key, $payload, $score", rn = "rnk")
+
+  /** The graph family's (key, nid, cos) cut by (cos DESC, nid). */
+  private def nbrCutSql(key: String, src: String, cut: String): String =
+    topIdsSql(src, "cos DESC, nid", cut, cols = s"$key, nid, cos", key = key)
+
+  /** A beam / neighbour-list cut: `src`'s (key, nid) scores max-deduped,
+    * then the top `w` per key. */
+  private def topWSql(src: String, w: Int, key: String = "qid"): String =
+    s"""(${nbrCutSql(key, s"""(SELECT $key, nid, max(cos) AS cos FROM $src
+       |         GROUP BY 1, 2)""".stripMargin, s"<= $w")})"""
+
+  /** A descent's exits: the top `n` (qid, nid) of beam `bm`, self excluded. */
+  private def exitsSql(bm: String, n: Int): String =
+    s"(${topIdsSql(s"$bm WHERE nid <> qid", "cos DESC, nid", s"<= $n", cols = "qid, nid")})"
+
+  /** Twin of [[nearestCellsLocal]]: each `q` row of `from` against the
+    * `cents` (cell, cent) rows, ranked by squared L2 of `q.vec` (the
+    * ascending-i sum NearestCentroidExpr accumulates — list_distance's
+    * sqrt could merge distinct squared distances and let the cell
+    * tiebreak diverge from Spark's strict `<`), then cell; `cut` "<=
+    * nprobe" probes cells, "= 1" is the Lloyd assignment. `cols` (first =
+    * partition key) carry through. */
+  private def nearestCellsSql(cents: String, cut: String, cols: Seq[String],
+      vec: String = "v", q: String = "pr0", from: String = "pr0"): String =
+    topIdsSql(s"$from, $cents c",
+      s"""list_sum([($q.$vec[i]-c.cent[i])*($q.$vec[i]-c.cent[i])
+         |                              FOR i IN range(1, ${Dim + 1})]),
+         |                    c.cell""".stripMargin, cut,
+      cols = (cols :+ "cell").mkString(", "), key = s"$q.${cols.head}",
+      inner = (cols.map(c => s"$q.$c") :+ "c.cell").mkString(", "))
+
+  /** Twin of [[probeLuts]]' LUT: per (probe, sub, cell) of codebooks
+    * `books`, the subvector kernel — squared L2, or ⟨q_m, cent⟩ when
+    * `ip`. `residual` (q136) reads the per-probed-cell residual `prr.qr`
+    * and keys the LUT by that cell (pcell) too. */
+  private def probeLutSql(m: Int, books: String, ip: Boolean = false,
+      residual: Boolean = false): String = {
+    val sub = Dim / m
+    val (p, keys, v, qv) =
+      if (residual) ("prr", Seq("qid", "pcell"), "qr", "qsv")
+      else ("pr0", Seq("qid"), "v", "qv")
+    val d = if (ip) s"$qv[i]*cent[i]" else s"($qv[i]-cent[i])*($qv[i]-cent[i])"
+    s"""lut AS MATERIALIZED (SELECT ${keys.mkString(", ")}, sub, cell,
+       |               list_sum([$d
+       |                         FOR i IN range(1, ${sub + 1})]) AS d
+       |        FROM (SELECT ${keys.map(k => s"$p.$k").mkString(", ")}, c.sub, c.cell, c.cent,
+       |                     list_slice($p.$v, CAST(c.sub * $sub + 1 AS INTEGER),
+       |                                      CAST(c.sub * $sub + $sub AS INTEGER)) AS $qv
+       |              FROM $p, $books c))""".stripMargin
+  }
+
+  /** The `codes` pivot: one row per vector of the `paf` (vec_id, sub,
+    * cell) encode, c0 … c{m-1}. */
+  private def codesSql(m: Int, paf: String): String = {
+    val codeCols = (0 until m).map(i =>
+      s"max(CASE WHEN sub = $i THEN cell END) AS c$i").mkString(",\n         ")
+    s"""codes AS MATERIALIZED (SELECT vec_id AS cid,
+       |         $codeCols
+       |          FROM $paf GROUP BY vec_id)""".stripMargin
+  }
+
+  /** The corpus rows of index `idx` (vec_id, cell) in each probe's `pr`
+    * cells, self excluded, joined to their codes. */
+  private def probedCodesSql(idx: String): String =
+    s"""$idx a JOIN pr ON a.cell = pr.cell AND a.vec_id != pr.qid
+       |       JOIN codes cd ON cd.cid = a.vec_id""".stripMargin
+
+  /** Twin of [[adcScores]]: `sc` carries each (probe, candidate) pair
+    * `pairs` selects from `from` with the candidate's m codes, `sadc`
+    * scores it as the fixed-order sum l0.d + l1.d + … (the Spark loop's
+    * association order, so shared code words tie exactly), joined on the
+    * probed cell too when `pcell`. */
+  private def adcSql(m: Int, pairs: String, from: String, score: String,
+      pcell: Boolean = false): String = {
+    val joins = (0 until m).map(i =>
+      s"JOIN lut l$i ON l$i.qid = sc.qid${if (pcell) s" AND l$i.pcell = sc.pcell" else ""} " +
+        s"AND l$i.sub = $i AND l$i.cell = sc.c$i").mkString("\n         ")
+    s"""sc AS ($pairs, ${(0 until m).map(i => s"cd.c$i").mkString(", ")}
+       |       FROM $from),
+       |sadc AS (SELECT sc.qid, sc.cid, ${(0 until m).map(i => s"l$i.d").mkString(" + ")} AS $score
+       |         FROM sc
+       |         $joins)""".stripMargin
+  }
+
+  /** Twin of [[topIds]] → [[exactRerank]] → [[ranked]] over `sadc`: the
+    * top-R ADC cut `radc` by `adcOrder`, the exact `kernel` re-score of
+    * the survivors against the raw vectors, the top-5 emission. */
+  private def rerankSql(adcOrder: String, r: Int, kernel: String,
+      score: String, name: String): String =
+    s"""radc AS (${topIdsSql("sadc", adcOrder, s"<= $r")}),
+       |rex AS (SELECT r.qid, r.cid, $kernel AS $score
+       |        FROM radc r JOIN pr0 q ON q.qid = r.qid
+       |        JOIN e c ON c.vec_id = r.cid)
+       |${rankedSql("rex", score, name)}""".stripMargin
+
+  /** The corpus CTE every IVF oracle reads: (vec_id, v DOUBLE[]). */
+  private def eSql(where: String): String =
+    s"""e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
+       |           WHERE $where)""".stripMargin
+
+  /** `iters` unrolled Lloyd rounds: round `it` assigns against
+    * `${c}{it-1}` into `${a}it` and updates into `${c}it`. */
+  private def lloydRoundsSql(iters: Int, c: String, a: String)(
+      assign: (String, String) => String,
+      update: (String, String, String) => String): String =
+    (1 to iters).map { it =>
+      assign(s"$c${it - 1}", s"$a$it") + ",\n" +
+        update(s"$a$it", s"$c${it - 1}", s"$c$it")
+    }.mkString(",\n")
+
   /** DuckDB CTE chain replicating the deterministic Lloyd refinement
     * ([[lloydCentroids]]): assignment = row_number over (distance, cell) —
     * the same lowest-index-on-tie rule as NearestCentroidExpr's strict `<`
@@ -3530,8 +3670,7 @@ object SimilarityOps {
     * shared by the q39 and q79 oracles. */
   private def ivfPrefixSql(k: Int, iters: Int,
       where: String = "TRUE", trainWhere: String = "TRUE"): String =
-    s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-       |           WHERE $where),
+    s"""WITH ${eSql(where)},
        |${ivfChainSql(k, iters, trainWhere)}""".stripMargin
 
   /** The coarse-quantizer Lloyd chain alone (c0 … c$iters, af), assuming
@@ -3547,18 +3686,9 @@ object SimilarityOps {
     // q144 frozen-artifact ingest contract. "TRUE" (every other caller)
     // emits the historical text unchanged.
     val train = if (trainWhere == "TRUE") "e" else s"${pfx}etr"
-    // order by SQUARED L2 (sum of squared diffs, ascending-i, exactly what
-    // NearestCentroidExpr accumulates) — list_distance's sqrt can collapse
-    // two distinct squared distances into equal doubles and let the cell
-    // tiebreak diverge from Spark's strict `<` on near-equidistant vectors
     def assign(cent: String, out: String, src: String = "e") =
-      s"""$out AS (SELECT vec_id, v, cell FROM (
-         |  SELECT e.vec_id, e.v, c.cell,
-         |         row_number() OVER (PARTITION BY e.vec_id
-         |           ORDER BY list_sum([(e.v[i]-c.cent[i])*(e.v[i]-c.cent[i])
-         |                              FOR i IN range(1, ${Dim + 1})]),
-         |                    c.cell) AS rn
-         |  FROM ${if (src == "e") "e" else s"$src e"}, $cent c) WHERE rn = 1)""".stripMargin
+      s"""$out AS (${nearestCellsSql(cent, "= 1", Seq("vec_id", "v"), q = "e",
+        from = if (src == "e") "e" else s"$src e")})"""
     def update(assigned: String, prevCent: String, out: String) =
       s"""${out}m AS (SELECT a.cell, i, round(avg(a.v[i]), 6) AS m
          |  FROM $assigned a, range(1, ${Dim + 1}) t(i) GROUP BY a.cell, i),
@@ -3566,33 +3696,55 @@ object SimilarityOps {
          |  FROM $prevCent p LEFT JOIN
          |    (SELECT cell, list(m ORDER BY i) AS cent FROM ${out}m
          |     GROUP BY cell) n USING (cell))""".stripMargin
-    val steps = (1 to iters).map { it =>
-      assign(s"${pfx}c${it - 1}", s"${pfx}a$it", train) + ",\n" +
-        update(s"${pfx}a$it", s"${pfx}c${it - 1}", s"${pfx}c$it")
-    }.mkString(",\n")
     val etrCte =
       if (train == "e") ""
       else s"${pfx}etr AS (SELECT * FROM e WHERE $trainWhere),\n"
     s"""${etrCte}${pfx}c0 AS (SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INTEGER)
        |              AS cell, v AS cent
        |       FROM (SELECT vec_id, v FROM $train ORDER BY vec_id LIMIT $k)),
-       |$steps,
+       |${lloydRoundsSql(iters, s"${pfx}c", s"${pfx}a")(assign(_, _, train), update)},
        |${assign(s"${pfx}c$iters", s"${pfx}af")}""".stripMargin
   }
 
+  /** The PQ training chain shared by [[pqPrefixSql]] and
+    * [[anisoPqChainSql]]: `es` (vec_id × sub → subvector of `src`, read
+    * as `esFrom`), the deterministic 1-in-PqTrainMod training sample
+    * `est` (restricted by `trainWhere`), seeds `p0` = the k lowest-vec_id
+    * sample subvectors per sub, `iters` rounds of `assign` (on `est`) and
+    * `update`, and the final `paf` assignment of EVERY `es` row. */
+  private def pqChainSql(m: Int, k: Int, iters: Int, src: String,
+      esFrom: String, mat: String = "", trainWhere: String = "TRUE",
+      pfx: String = "")(assign: (String, String, String) => String,
+      update: (String, String, String) => String): String = {
+    val sub = Dim / m
+    // trainWhere restricts the training sample (est) and therefore the
+    // seeds + every Lloyd update, while `paf` still encodes EVERY es row —
+    // mirrors pqCodebooks(maxVec = split) exactly: the sample stride's
+    // count(*) runs over the SAME restricted rows the Spark side counts
+    val trainPred = if (trainWhere == "TRUE") "" else s"$trainWhere AND "
+    val trainCnt = if (trainWhere == "TRUE") "" else s" WHERE $trainWhere"
+    s"""${pfx}es AS $mat(SELECT e.vec_id, t.sub,
+       |          list_slice(e.v, CAST(t.sub * $sub + 1 AS INTEGER),
+       |                          CAST(t.sub * $sub + $sub AS INTEGER)) AS sv
+       |       FROM $esFrom, range(0, $m) t(sub)),
+       |${pfx}est AS $mat(SELECT * FROM ${pfx}es WHERE ${trainPred}vec_id %
+       |          (SELECT GREATEST(1, CAST(ceil(count(*) / $PqTrainTarget.0)
+       |                                   AS BIGINT)) FROM $src$trainCnt) = 0),
+       |${pfx}p0 AS (${topIdsSql(s"${pfx}est", "vec_id", s"<= $k",
+          cols = "sub, CAST(rn - 1 AS INTEGER) AS cell, sv AS cent", key = "sub",
+          inner = "sub, sv")}),
+       |${lloydRoundsSql(iters, s"${pfx}p", s"${pfx}pa")(
+          assign(_, _, s"${pfx}est"), update)},
+       |${assign(s"${pfx}p$iters", s"${pfx}paf", s"${pfx}es")}""".stripMargin
+  }
+
   /** DuckDB CTE chain replicating the per-subspace PQ codebook training
-    * ([[pqCodebooks]]): the same deterministic-Lloyd recipe as
-    * [[ivfPrefixSql]] with `sub` as an extra grouping key — training
-    * (seeds + iteration assigns) runs on the deterministic 1-in-PqTrainMod
-    * sample `est`, the final `paf` assignment on ALL vectors; seeds are
-    * the k lowest-vec_id SUBvectors of the sample, assignment is
-    * row_number over (squared-subspace-L2, cell), update is the
-    * 6-decimal-rounded per-(sub, cell, position) mean with empty cells
-    * keeping their previous centroid. Emits `es` (vec_id × sub →
-    * subvector), `p$iters` (final codebooks) and `paf` (final code
-    * assignment). Assumes [[ivfPrefixSql]]'s `e` CTE is already in
-    * scope. */
-  /** `src` = the (vec_id, v) CTE the PQ chain trains on and encodes —
+    * ([[pqCodebooks]]): the [[pqChainSql]] recipe with the [[ivfPrefixSql]]
+    * assignment (row_number over (squared-subspace-L2, cell)) and update
+    * (6-decimal-rounded per-(sub, cell, position) mean, empty cells
+    * keeping their previous centroid). Emits `es`, `p$iters` (final
+    * codebooks) and `paf` (final code assignment).
+    * `src` = the (vec_id, v) CTE the PQ chain trains on and encodes —
     * "e" for the raw corpus (q97/q123), a residual relation for q136.
     * `materialize` emits MATERIALIZED subvector CTEs — required when src
     * is itself a derived chain (DuckDB inlines multi-referenced CTEs, so
@@ -3601,22 +3753,14 @@ object SimilarityOps {
   private def pqPrefixSql(m: Int, k: Int, iters: Int,
       src: String = "e", materialize: Boolean = false,
       trainWhere: String = "TRUE", pfx: String = ""): String = {
-    val mat = if (materialize) "MATERIALIZED " else ""
     val sub = Dim / m
-    // trainWhere restricts the training sample (est) and therefore the
-    // seeds + every Lloyd update, while `paf` still encodes EVERY es row —
-    // mirrors pqCodebooks(maxVec = split) exactly: the sample stride's
-    // count(*) runs over the SAME restricted rows the Spark side counts
-    val trainPred = if (trainWhere == "TRUE") "" else s"$trainWhere AND "
-    val trainCnt = if (trainWhere == "TRUE") "" else s" WHERE $trainWhere"
-    def assign(cent: String, out: String, src: String = s"${pfx}est") =
-      s"""$out AS (SELECT vec_id, sub, sv, cell FROM (
-         |  SELECT es.vec_id, es.sub, es.sv, c.cell,
-         |         row_number() OVER (PARTITION BY es.vec_id, es.sub
-         |           ORDER BY list_sum([(es.sv[i]-c.cent[i])*(es.sv[i]-c.cent[i])
-         |                              FOR i IN range(1, ${sub + 1})]),
-         |                    c.cell) AS rn
-         |  FROM $src es JOIN $cent c ON es.sub = c.sub) WHERE rn = 1)""".stripMargin
+    def assign(cent: String, out: String, src: String) =
+      s"""$out AS (${topIdsSql(s"$src es JOIN $cent c ON es.sub = c.sub",
+        s"""list_sum([(es.sv[i]-c.cent[i])*(es.sv[i]-c.cent[i])
+           |                              FOR i IN range(1, ${sub + 1})]),
+           |                    c.cell""".stripMargin, "= 1",
+        cols = "vec_id, sub, sv, cell", key = "es.vec_id, es.sub",
+        inner = "es.vec_id, es.sub, es.sv, c.cell")})"""
     def update(assigned: String, prevCent: String, out: String) =
       s"""${out}m AS (SELECT sub, cell, i, round(avg(sv[i]), 6) AS m
          |  FROM $assigned, range(1, ${sub + 1}) t(i) GROUP BY sub, cell, i),
@@ -3624,22 +3768,8 @@ object SimilarityOps {
          |  FROM $prevCent p LEFT JOIN
          |    (SELECT sub, cell, list(m ORDER BY i) AS cent FROM ${out}m
          |     GROUP BY sub, cell) n USING (sub, cell))""".stripMargin
-    val steps = (1 to iters).map { it =>
-      assign(s"${pfx}p${it - 1}", s"${pfx}pa$it") + ",\n" +
-        update(s"${pfx}pa$it", s"${pfx}p${it - 1}", s"${pfx}p$it")
-    }.mkString(",\n")
-    s"""${pfx}es AS $mat(SELECT e.vec_id, t.sub,
-       |          list_slice(e.v, CAST(t.sub * $sub + 1 AS INTEGER),
-       |                          CAST(t.sub * $sub + $sub AS INTEGER)) AS sv
-       |       FROM $src e, range(0, $m) t(sub)),
-       |${pfx}est AS $mat(SELECT * FROM ${pfx}es WHERE ${trainPred}vec_id %
-       |          (SELECT GREATEST(1, CAST(ceil(count(*) / $PqTrainTarget.0)
-       |                                   AS BIGINT)) FROM $src$trainCnt) = 0),
-       |${pfx}p0 AS (SELECT sub, CAST(rn - 1 AS INTEGER) AS cell, sv AS cent FROM (
-       |         SELECT sub, sv, row_number() OVER (PARTITION BY sub
-       |                  ORDER BY vec_id) AS rn FROM ${pfx}est) WHERE rn <= $k),
-       |$steps,
-       |${assign(s"${pfx}p$iters", s"${pfx}paf", s"${pfx}es")}""".stripMargin
+    pqChainSql(m, k, iters, src, s"$src e", if (materialize) "MATERIALIZED " else "",
+      trainWhere, pfx)(assign, update)
   }
 
   /** q97: nprobe=2 coarse-cell candidate restriction (ranked against the
@@ -3651,42 +3781,14 @@ object SimilarityOps {
   private def ivfPqSadcSql(k: Int, iters: Int, m: Int, pk: Int,
       pqIters: Int, nprobe: Int,
       where: String = s"vec_id < $IvfPqGateSlice",
-      trainWhere: String = "TRUE"): String = {
-    val sub = Dim / m
-    val codeCols = (0 until m).map(i =>
-      s"max(CASE WHEN sub = $i THEN cell END) AS c$i").mkString(",\n         ")
-    val lutJoins = (0 until m).map(i =>
-      s"JOIN lut l$i ON l$i.qid = sc.qid AND l$i.sub = $i AND l$i.cell = sc.c$i")
-      .mkString("\n         ")
-    val adcSum = (0 until m).map(i => s"l$i.d").mkString(" + ")
-    val scCodes = (0 until m).map(i => s"cd.c$i").mkString(", ")
+      trainWhere: String = "TRUE"): String =
     s"""${ivfPrefixSql(k, iters, where, trainWhere)},
        |${pqPrefixSql(m, pk, pqIters, trainWhere = trainWhere)},
-       |codes AS MATERIALIZED (SELECT vec_id AS cid,
-       |         $codeCols
-       |          FROM paf GROUP BY vec_id),
+       |${codesSql(m, "paf")},
        |pr0 AS (SELECT vec_id AS qid, v FROM e WHERE vec_id < 10),
-       |pr AS MATERIALIZED (SELECT qid, v, cell FROM (
-       |  SELECT pr0.qid, pr0.v, c.cell,
-       |         row_number() OVER (PARTITION BY pr0.qid
-       |           ORDER BY list_sum([(pr0.v[i]-c.cent[i])*(pr0.v[i]-c.cent[i])
-       |                              FOR i IN range(1, ${Dim + 1})]),
-       |                    c.cell) AS rn
-       |  FROM pr0, c$iters c) WHERE rn <= $nprobe),
-       |lut AS MATERIALIZED (SELECT qid, sub, cell,
-       |               list_sum([(qv[i]-cent[i])*(qv[i]-cent[i])
-       |                         FOR i IN range(1, ${sub + 1})]) AS d
-       |        FROM (SELECT pr0.qid, c.sub, c.cell, c.cent,
-       |                     list_slice(pr0.v, CAST(c.sub * $sub + 1 AS INTEGER),
-       |                                      CAST(c.sub * $sub + $sub AS INTEGER)) AS qv
-       |              FROM pr0, p$pqIters c)),
-       |sc AS (SELECT pr.qid, a.vec_id AS cid, $scCodes
-       |       FROM af a JOIN pr ON a.cell = pr.cell AND a.vec_id != pr.qid
-       |       JOIN codes cd ON cd.cid = a.vec_id),
-       |sadc AS (SELECT sc.qid, sc.cid, $adcSum AS adc
-       |         FROM sc
-       |         $lutJoins)""".stripMargin
-  }
+       |pr AS MATERIALIZED (${nearestCellsSql(s"c$iters", s"<= $nprobe", Seq("qid", "v"))}),
+       |${probeLutSql(m, s"p$pqIters")},
+       |${adcSql(m, "SELECT pr.qid, a.vec_id AS cid", probedCodesSql("af"), "adc")}""".stripMargin
 
   /** q136: the q97 chain with RESIDUAL encoding — er float-casts
     * (v − cent) exactly as the Spark zip_with does, the PQ chain trains
@@ -3695,56 +3797,24 @@ object SimilarityOps {
     * cell. Everything else is the ivfPqSadcSql recipe verbatim. */
   private def ivfPqResidualOracleSql(k: Int, iters: Int, m: Int, pk: Int,
       pqIters: Int, nprobe: Int,
-      where: String = s"vec_id < $IvfPqGateSlice"): String = {
-    val sub = Dim / m
-    val codeCols = (0 until m).map(i =>
-      s"max(CASE WHEN sub = $i THEN cell END) AS c$i").mkString(",\n         ")
-    val lutJoins = (0 until m).map(i =>
-      s"JOIN lut l$i ON l$i.qid = sc.qid AND l$i.pcell = sc.pcell " +
-        s"AND l$i.sub = $i AND l$i.cell = sc.c$i")
-      .mkString("\n         ")
-    val adcSum = (0 until m).map(i => s"l$i.d").mkString(" + ")
-    val scCodes = (0 until m).map(i => s"cd.c$i").mkString(", ")
+      where: String = s"vec_id < $IvfPqGateSlice"): String =
     s"""${ivfPrefixSql(k, iters, where)},
        |er AS MATERIALIZED (SELECT a.vec_id,
        |         [CAST(CAST(a.v[i] - c.cent[i] AS FLOAT) AS DOUBLE)
        |          FOR i IN range(1, ${Dim + 1})] AS v
        |       FROM af a JOIN c$iters c USING (cell)),
        |${pqPrefixSql(m, pk, pqIters, src = "er", materialize = true)},
-       |codes AS MATERIALIZED (SELECT vec_id AS cid,
-       |         $codeCols
-       |          FROM paf GROUP BY vec_id),
+       |${codesSql(m, "paf")},
        |pr0 AS (SELECT vec_id AS qid, v FROM e WHERE vec_id < 10),
-       |pr AS MATERIALIZED (SELECT qid, v, cell FROM (
-       |  SELECT pr0.qid, pr0.v, c.cell,
-       |         row_number() OVER (PARTITION BY pr0.qid
-       |           ORDER BY list_sum([(pr0.v[i]-c.cent[i])*(pr0.v[i]-c.cent[i])
-       |                              FOR i IN range(1, ${Dim + 1})]),
-       |                    c.cell) AS rn
-       |  FROM pr0, c$iters c) WHERE rn <= $nprobe),
+       |pr AS MATERIALIZED (${nearestCellsSql(s"c$iters", s"<= $nprobe", Seq("qid", "v"))}),
        |prr AS MATERIALIZED (SELECT pr.qid, pr.cell AS pcell,
        |          [CAST(CAST(pr.v[i] - c.cent[i] AS FLOAT) AS DOUBLE)
        |           FOR i IN range(1, ${Dim + 1})] AS qr
        |        FROM pr JOIN c$iters c USING (cell)),
-       |lut AS MATERIALIZED (SELECT qid, pcell, sub, cell,
-       |               list_sum([(qsv[i]-cent[i])*(qsv[i]-cent[i])
-       |                         FOR i IN range(1, ${sub + 1})]) AS d
-       |        FROM (SELECT prr.qid, prr.pcell, c.sub, c.cell, c.cent,
-       |                     list_slice(prr.qr, CAST(c.sub * $sub + 1 AS INTEGER),
-       |                                CAST(c.sub * $sub + $sub AS INTEGER)) AS qsv
-       |              FROM prr, p$pqIters c)),
-       |sc AS (SELECT pr.qid, pr.cell AS pcell, a.vec_id AS cid, $scCodes
-       |       FROM af a JOIN pr ON a.cell = pr.cell AND a.vec_id != pr.qid
-       |       JOIN codes cd ON cd.cid = a.vec_id),
-       |sadc AS (SELECT sc.qid, sc.cid, $adcSum AS adc
-       |         FROM sc
-       |         $lutJoins)
-       |SELECT qid, cid, round(adc, 4) AS adc_dist, rnk FROM (
-       |  SELECT qid, cid, adc,
-       |         row_number() OVER (PARTITION BY qid
-       |                            ORDER BY adc, cid) AS rnk
-       |  FROM sadc) WHERE rnk <= 5""".stripMargin
-  }
+       |${probeLutSql(m, s"p$pqIters", residual = true)},
+       |${adcSql(m, "SELECT pr.qid, pr.cell AS pcell, a.vec_id AS cid",
+          probedCodesSql("af"), "adc", pcell = true)}
+       |${rankedSql("sadc", "adc", "adc_dist", desc = false)}""".stripMargin
 
   /** q145: the anisotropic PQ chain unrolled — assignment CTEs rank by
     * the anisotropic loss rr + w·rx²/xx (same accumulator order as the
@@ -3757,29 +3827,27 @@ object SimilarityOps {
     * inner-product ADC (lut = ⟨q_m, cent⟩ per (probe, sub, cell), sum in
     * fixed order) ranked DESC. */
   /** The anisotropic chain's CTE list (no WITH header; expects `e` in
-    * scope): es/est subvectors+sample, p0 seeds, the loss-ranked
-    * assignment + Cramer-update iterations, final `paf` encode of every
-    * es row, `codes` pivot. Shared by the q145 oracle and the q146
-    * stack oracle. */
+    * scope): the [[pqChainSql]] recipe with the loss-ranked assignment
+    * and Cramer update, then the `codes` pivot. Shared by the q145 oracle
+    * and the q146 stack oracle. */
   private def anisoPqChainSql(m: Int, pk: Int, iters: Int,
       eta: Double): String = {
     val sub = Dim / m
     require(sub == 4, "anisoPqChainSql: Cramer generated for sub=4")
     val w = eta - 1.0
-    def assign(cent: String, out: String, src: String = "est") =
-      s"""$out AS (SELECT vec_id, sub, sv, cell FROM (
-         |  SELECT vec_id, sub, sv, cell,
-         |         row_number() OVER (PARTITION BY vec_id, sub
-         |           ORDER BY rr + (CASE WHEN xx < 1e-12 THEN 0.0
-         |                          ELSE $w*rx*rx/xx END), cell) AS rn
-         |  FROM (SELECT es.vec_id, es.sub, es.sv, c.cell,
-         |           list_sum([(es.sv[i]-c.cent[i])*(es.sv[i]-c.cent[i])
-         |                     FOR i IN range(1, ${sub + 1})]) AS rr,
-         |           list_sum([(es.sv[i]-c.cent[i])*es.sv[i]
-         |                     FOR i IN range(1, ${sub + 1})]) AS rx,
-         |           list_sum([es.sv[i]*es.sv[i]
-         |                     FOR i IN range(1, ${sub + 1})]) AS xx
-         |        FROM $src es JOIN $cent c ON es.sub = c.sub)) WHERE rn = 1)""".stripMargin
+    def assign(cent: String, out: String, src: String) =
+      s"""$out AS (${topIdsSql(
+        s"""(SELECT es.vec_id, es.sub, es.sv, c.cell,
+           |           list_sum([(es.sv[i]-c.cent[i])*(es.sv[i]-c.cent[i])
+           |                     FOR i IN range(1, ${sub + 1})]) AS rr,
+           |           list_sum([(es.sv[i]-c.cent[i])*es.sv[i]
+           |                     FOR i IN range(1, ${sub + 1})]) AS rx,
+           |           list_sum([es.sv[i]*es.sv[i]
+           |                     FOR i IN range(1, ${sub + 1})]) AS xx
+           |        FROM $src es JOIN $cent c ON es.sub = c.sub)""".stripMargin,
+        s"""rr + (CASE WHEN xx < 1e-12 THEN 0.0
+           |                          ELSE $w*rx*rx/xx END), cell""".stripMargin,
+        "= 1", cols = "vec_id, sub, sv, cell", key = "vec_id, sub")})"""
     def update(assigned: String, prevCent: String, out: String) = {
       val bCols = (0 until sub).map(d =>
         s"round(avg(sv[${d + 1}]), 6) AS b$d").mkString(",\n         ")
@@ -3809,65 +3877,18 @@ object SimilarityOps {
          |    (SELECT sub, cell, [$solved] AS cent FROM ${out}s) n
          |  USING (sub, cell))""".stripMargin
     }
-    val iterCtes = (1 to iters).map { it =>
-      assign(s"p${it - 1}", s"pa$it") + ",\n" +
-        update(s"pa$it", s"p${it - 1}", s"p$it")
-    }.mkString(",\n")
-    val codeCols = (0 until m).map(i =>
-      s"max(CASE WHEN sub = $i THEN cell END) AS c$i").mkString(",\n         ")
-    s"""es AS (SELECT e.vec_id, t.sub,
-       |          list_slice(e.v, CAST(t.sub * $sub + 1 AS INTEGER),
-       |                          CAST(t.sub * $sub + $sub AS INTEGER)) AS sv
-       |       FROM e, range(0, $m) t(sub)),
-       |est AS (SELECT * FROM es WHERE vec_id %
-       |          (SELECT GREATEST(1, CAST(ceil(count(*) / $PqTrainTarget.0)
-       |                                   AS BIGINT)) FROM e) = 0),
-       |p0 AS (SELECT sub, CAST(rn - 1 AS INTEGER) AS cell, sv AS cent FROM (
-       |         SELECT sub, sv, row_number() OVER (PARTITION BY sub
-       |                  ORDER BY vec_id) AS rn FROM est) WHERE rn <= $pk),
-       |$iterCtes,
-       |${assign(s"p$iters", "paf", "es")},
-       |codes AS MATERIALIZED (SELECT vec_id AS cid,
-       |         $codeCols
-       |          FROM paf GROUP BY vec_id)""".stripMargin
-  }
-
-  /** q145's serve-probe LUT CTE (⟨q_m, cent⟩ per (probe, sub, cell)) —
-    * shared by the q145 and q146 oracles. */
-  private def anisoLutSql(m: Int, iters: Int): String = {
-    val sub = Dim / m
-    s"""lut AS MATERIALIZED (SELECT qid, sub, cell,
-       |               list_sum([qv[i]*cent[i]
-       |                         FOR i IN range(1, ${sub + 1})]) AS d
-       |        FROM (SELECT pr0.qid, c.sub, c.cell, c.cent,
-       |                     list_slice(pr0.v, CAST(c.sub * $sub + 1 AS INTEGER),
-       |                                      CAST(c.sub * $sub + $sub AS INTEGER)) AS qv
-       |              FROM pr0, p$iters c))""".stripMargin
+    s"""${pqChainSql(m, pk, iters, "e", "e")(assign, update)},
+       |${codesSql(m, "paf")}""".stripMargin
   }
 
   private def anisoPqOracleSql(m: Int, pk: Int, iters: Int, eta: Double,
-      where: String = s"vec_id < $IvfPqGateSlice"): String = {
-    val lutJoins = (0 until m).map(i =>
-      s"JOIN lut l$i ON l$i.qid = sc.qid AND l$i.sub = $i AND l$i.cell = sc.c$i")
-      .mkString("\n         ")
-    val adcSum = (0 until m).map(i => s"l$i.d").mkString(" + ")
-    val scCodes = (0 until m).map(i => s"cd.c$i").mkString(", ")
-    s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-       |           WHERE $where),
+      where: String = s"vec_id < $IvfPqGateSlice"): String =
+    s"""WITH ${eSql(where)},
        |${anisoPqChainSql(m, pk, iters, eta)},
        |pr0 AS (SELECT vec_id AS qid, v FROM e WHERE vec_id < 10),
-       |${anisoLutSql(m, iters)},
-       |sc AS (SELECT pr0.qid, cd.cid, $scCodes
-       |       FROM pr0, codes cd WHERE cd.cid != pr0.qid),
-       |sadc AS (SELECT sc.qid, sc.cid, $adcSum AS ip
-       |         FROM sc
-       |         $lutJoins)
-       |SELECT qid, cid, round(ip, 4) AS ip_score, rnk FROM (
-       |  SELECT qid, cid, ip,
-       |         row_number() OVER (PARTITION BY qid
-       |                            ORDER BY ip DESC, cid) AS rnk
-       |  FROM sadc) WHERE rnk <= 5""".stripMargin
-  }
+       |${probeLutSql(m, s"p$iters", ip = true)},
+       |${adcSql(m, "SELECT pr0.qid, cd.cid", "pr0, codes cd WHERE cd.cid != pr0.qid", "ip")}
+       |${rankedSql("sadc", "ip", "ip_score")}""".stripMargin
 
   /** q146: the full stack — [[ivfPrefixSql]]'s coarse chain (e … af, the
     * q97 spelling) + the anisotropic chain + nprobe cell probing + the
@@ -3880,11 +3901,6 @@ object SimilarityOps {
       pqIters: Int, eta: Double, nprobe: Int, rerankR: Int,
       where: String = s"vec_id < $IvfPqGateSlice",
       soar: Boolean = false, soarLambda: String = "1.0"): String = {
-    val lutJoins = (0 until m).map(i =>
-      s"JOIN lut l$i ON l$i.qid = sc.qid AND l$i.sub = $i AND l$i.cell = sc.c$i")
-      .mkString("\n         ")
-    val adcSum = (0 until m).map(i => s"l$i.d").mkString(" + ")
-    val scCodes = (0 until m).map(i => s"cd.c$i").mkString(", ")
     def sq(v: String, c: String) =
       s"list_sum([($v[i]-$c.cent[i])*($v[i]-$c.cent[i]) FOR i IN range(1, ${Dim + 1})])"
     val dr =
@@ -3893,14 +3909,12 @@ object SimilarityOps {
       s"""sp1 AS MATERIALIZED (SELECT a.vec_id, a.v, a.cell AS cell1,
          |       c.cent AS cent1, ${sq("a.v", "c")} AS d1
          |     FROM af a JOIN c$iters c ON c.cell = a.cell),
-         |soar AS MATERIALIZED (SELECT vec_id, cell FROM (
-         |  SELECT p.vec_id, c.cell,
-         |         row_number() OVER (PARTITION BY p.vec_id ORDER BY
-         |           CASE WHEN p.d1 = 0.0 THEN ${sq("p.v", "c")}
-         |                ELSE ${sq("p.v", "c")}
-         |                     + $soarLambda * $dr * $dr / p.d1 END,
-         |           c.cell) AS rn
-         |  FROM sp1 p, c$iters c WHERE c.cell <> p.cell1) WHERE rn = 1),
+         |soar AS MATERIALIZED (${topIdsSql(s"sp1 p, c$iters c WHERE c.cell <> p.cell1",
+           s"""CASE WHEN p.d1 = 0.0 THEN ${sq("p.v", "c")}
+              |                ELSE ${sq("p.v", "c")}
+              |                     + $soarLambda * $dr * $dr / p.d1 END,
+              |           c.cell""".stripMargin, "= 1",
+           cols = "vec_id, cell", key = "p.vec_id", inner = "p.vec_id, c.cell")}),
          |afx AS (SELECT vec_id, cell FROM af
          |        UNION ALL SELECT vec_id, cell FROM soar),
          |""".stripMargin
@@ -3909,34 +3923,11 @@ object SimilarityOps {
     s"""${ivfPrefixSql(k, iters, where)},
        |${anisoPqChainSql(m, pk, pqIters, eta)},
        |${soarCtes}pr0 AS (SELECT vec_id AS qid, v FROM e WHERE vec_id < 10),
-       |pr AS MATERIALIZED (SELECT qid, cell FROM (
-       |  SELECT pr0.qid, c.cell,
-       |         row_number() OVER (PARTITION BY pr0.qid
-       |           ORDER BY list_sum([(pr0.v[i]-c.cent[i])*(pr0.v[i]-c.cent[i])
-       |                              FOR i IN range(1, ${Dim + 1})]),
-       |                    c.cell) AS rn
-       |  FROM pr0, c$iters c) WHERE rn <= $nprobe),
-       |${anisoLutSql(m, pqIters)},
-       |sc AS ($scSel pr.qid, a.vec_id AS cid, $scCodes
-       |       FROM $idxSrc a JOIN pr ON a.cell = pr.cell AND a.vec_id != pr.qid
-       |       JOIN codes cd ON cd.cid = a.vec_id),
-       |sadc AS (SELECT sc.qid, sc.cid, $adcSum AS ip
-       |         FROM sc
-       |         $lutJoins),
-       |radc AS (SELECT qid, cid FROM (
-       |  SELECT qid, cid,
-       |         row_number() OVER (PARTITION BY qid
-       |                            ORDER BY ip DESC, cid) AS rn
-       |  FROM sadc) WHERE rn <= $rerankR),
-       |rex AS (SELECT r.qid, r.cid,
-       |        list_sum([q.v[i]*c.v[i] FOR i IN range(1, ${Dim + 1})]) AS ip
-       |        FROM radc r JOIN pr0 q ON q.qid = r.qid
-       |        JOIN e c ON c.vec_id = r.cid)
-       |SELECT qid, cid, round(ip, 4) AS ip_score, rnk FROM (
-       |  SELECT qid, cid, ip,
-       |         row_number() OVER (PARTITION BY qid
-       |                            ORDER BY ip DESC, cid) AS rnk
-       |  FROM rex) WHERE rnk <= 5""".stripMargin
+       |pr AS MATERIALIZED (${nearestCellsSql(s"c$iters", s"<= $nprobe", Seq("qid"))}),
+       |${probeLutSql(m, s"p$pqIters", ip = true)},
+       |${adcSql(m, s"$scSel pr.qid, a.vec_id AS cid", probedCodesSql(idxSrc), "ip")},
+       |${rerankSql("ip DESC, cid", rerankR,
+          s"list_sum([q.v[i]*c.v[i] FOR i IN range(1, ${Dim + 1})])", "ip", "ip_score")}""".stripMargin
   }
 
   /** q148: the MMR greedy trajectory unrolled — step 1 picks argmax
@@ -3999,11 +3990,7 @@ object SimilarityOps {
       trainWhere: String = "TRUE"): String =
     s"""${ivfPqSadcSql(k, iters, m, pk, pqIters, nprobe,
            trainWhere = trainWhere)}
-       |SELECT qid, cid, round(adc, 4) AS adc_dist, rnk FROM (
-       |  SELECT qid, cid, adc,
-       |         row_number() OVER (PARTITION BY qid
-       |                            ORDER BY adc, cid) AS rnk
-       |  FROM sadc) WHERE rnk <= 5""".stripMargin
+       |${rankedSql("sadc", "adc", "adc_dist", desc = false)}""".stripMargin
 
   /** q150 oracle: the drift-retrain lifecycle replayed RELATIONALLY —
     * all three candidate quantizer chains (trained on standing /
@@ -4013,10 +4000,11 @@ object SimilarityOps {
     * 4dp absorbs aggregation order), both retrain decisions DERIVED via
     * scalar-subquery comparisons (not hard-coded to the planted
     * outcome), the surviving artifacts CASE-selected, and the q144 ADC
-    * probe served over the final encode. */
+    * probe served over the final encode. The emission tail carries the
+    * summary columns through a CROSS JOIN inside the cut, so it is the
+    * one ranked tail not spelled by [[rankedSql]]. */
   private def driftRetrainOracleSql(k: Int, iters: Int, m: Int, pk: Int,
       pqIters: Int, nprobe: Int): String = {
-    val sub = Dim / m
     val split = IvfPqIngestSplit
     val slice = IvfPqGateSlice
     val factor = "2.0"
@@ -4028,13 +4016,6 @@ object SimilarityOps {
          |         min(list_sum([(e.v[i]-c.cent[i])*(e.v[i]-c.cent[i])
          |                       FOR i IN range(1, ${Dim + 1})])) AS md
          |  FROM e, $cents c WHERE $where GROUP BY e.vec_id))""".stripMargin
-    val codeCols = (0 until m).map(i =>
-      s"max(CASE WHEN sub = $i THEN cell END) AS c$i").mkString(",\n         ")
-    val lutJoins = (0 until m).map(i =>
-      s"JOIN lut l$i ON l$i.qid = sc.qid AND l$i.sub = $i AND l$i.cell = sc.c$i")
-      .mkString("\n         ")
-    val adcSum = (0 until m).map(i => s"l$i.d").mkString(" + ")
-    val scCodes = (0 until m).map(i => s"cd.c$i").mkString(", ")
     s"""WITH e AS MATERIALIZED (
        |  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
        |  WHERE vec_id < $slice
@@ -4084,37 +4065,12 @@ object SimilarityOps {
        |       SELECT * FROM t0paf
        |       WHERE NOT ((SELECT r FROM rb) > $factor)
        |         AND NOT ((SELECT r FROM ra) > $factor)),
-       |faf AS (SELECT vec_id, v, cell FROM (
-       |  SELECT e.vec_id, e.v, c.cell,
-       |         row_number() OVER (PARTITION BY e.vec_id
-       |           ORDER BY list_sum([(e.v[i]-c.cent[i])*(e.v[i]-c.cent[i])
-       |                              FOR i IN range(1, ${Dim + 1})]),
-       |                    c.cell) AS rn
-       |  FROM e, fc c) WHERE rn = 1),
-       |codes AS MATERIALIZED (SELECT vec_id AS cid,
-       |         $codeCols
-       |          FROM fpaf GROUP BY vec_id),
+       |faf AS (${nearestCellsSql("fc", "= 1", Seq("vec_id", "v"), q = "e", from = "e")}),
+       |${codesSql(m, "fpaf")},
        |pr0 AS (SELECT vec_id AS qid, v FROM e WHERE vec_id < 10),
-       |pr AS MATERIALIZED (SELECT qid, v, cell FROM (
-       |  SELECT pr0.qid, pr0.v, c.cell,
-       |         row_number() OVER (PARTITION BY pr0.qid
-       |           ORDER BY list_sum([(pr0.v[i]-c.cent[i])*(pr0.v[i]-c.cent[i])
-       |                              FOR i IN range(1, ${Dim + 1})]),
-       |                    c.cell) AS rn
-       |  FROM pr0, fc c) WHERE rn <= $nprobe),
-       |lut AS MATERIALIZED (SELECT qid, sub, cell,
-       |               list_sum([(qv[i]-cent[i])*(qv[i]-cent[i])
-       |                         FOR i IN range(1, ${sub + 1})]) AS d
-       |        FROM (SELECT pr0.qid, c.sub, c.cell, c.cent,
-       |                     list_slice(pr0.v, CAST(c.sub * $sub + 1 AS INTEGER),
-       |                                      CAST(c.sub * $sub + $sub AS INTEGER)) AS qv
-       |              FROM pr0, fp c)),
-       |sc AS (SELECT pr.qid, a.vec_id AS cid, $scCodes
-       |       FROM faf a JOIN pr ON a.cell = pr.cell AND a.vec_id != pr.qid
-       |       JOIN codes cd ON cd.cid = a.vec_id),
-       |sadc AS (SELECT sc.qid, sc.cid, $adcSum AS adc
-       |         FROM sc
-       |         $lutJoins),
+       |pr AS MATERIALIZED (${nearestCellsSql("fc", s"<= $nprobe", Seq("qid", "v"))}),
+       |${probeLutSql(m, "fp")},
+       |${adcSql(m, "SELECT pr.qid, a.vec_id AS cid", probedCodesSql("faf"), "adc")},
        |summary AS (SELECT round((SELECT r FROM ra), 4) AS ratio_a,
        |                   (SELECT r FROM ra) > $factor AS retrained_a,
        |                   round((SELECT r FROM rb), 4) AS ratio_b,
@@ -4168,19 +4124,11 @@ object SimilarityOps {
        |              list_sum([enc.sgn[i]*q.qr[i] FOR i IN range(1, $D1)])
        |                / 8.0 / q.norm_q / greatest(enc.sdot, 1e-12) AS est
        |       FROM enc, q WHERE enc.cid != q.qid),
-       |r1 AS (SELECT qid, cid FROM (
-       |  SELECT qid, cid,
-       |         row_number() OVER (PARTITION BY qid
-       |                            ORDER BY est DESC, cid) AS rn
-       |  FROM s1) WHERE rn <= $rerankR),
+       |r1 AS (${topIdsSql("s1", "est DESC, cid", s"<= $rerankR")}),
        |rr AS (SELECT r1.qid, r1.cid, list_cosine_similarity(q.qe, e.v) AS cos
        |       FROM r1 JOIN q ON q.qid = r1.qid
        |       JOIN e ON e.vec_id = r1.cid)
-       |SELECT qid, cid, round(cos, 4) AS cosine, rnk FROM (
-       |  SELECT qid, cid, cos,
-       |         row_number() OVER (PARTITION BY qid
-       |                            ORDER BY cos DESC, cid) AS rnk
-       |  FROM rr) WHERE rnk <= 5""".stripMargin
+       |${rankedSql("rr", "cos", "cosine")}""".stripMargin
   }
 
   /** q152 oracle: the IVF chain + q105's quantization CTEs + int8-cosine
@@ -4198,32 +4146,18 @@ object SimilarityOps {
        |          x -> least(greatest(round(x / scale), -127.0), 127.0)) AS qv
        |        FROM sc8),
        |pr0 AS (SELECT vec_id AS qid, v FROM e WHERE vec_id < 10),
-       |pr AS MATERIALIZED (SELECT qid, cell FROM (
-       |  SELECT pr0.qid, c.cell,
-       |         row_number() OVER (PARTITION BY pr0.qid
-       |           ORDER BY list_sum([(pr0.v[i]-c.cent[i])*(pr0.v[i]-c.cent[i])
-       |                              FOR i IN range(1, ${Dim + 1})]),
-       |                    c.cell) AS rn
-       |  FROM pr0, c$iters c) WHERE rn <= $nprobe),
+       |pr AS MATERIALIZED (${nearestCellsSql(s"c$iters", s"<= $nprobe", Seq("qid"))}),
        |s1 AS (SELECT pr.qid, a.vec_id AS cid,
        |              list_cosine_similarity(qc.qv, cc.qv) AS cosq
        |       FROM af a JOIN pr ON a.cell = pr.cell AND a.vec_id != pr.qid
        |       JOIN qq qc ON qc.vec_id = pr.qid
        |       JOIN qq cc ON cc.vec_id = a.vec_id),
-       |r1 AS (SELECT qid, cid FROM (
-       |  SELECT qid, cid,
-       |         row_number() OVER (PARTITION BY qid
-       |                            ORDER BY cosq DESC, cid) AS rn
-       |  FROM s1) WHERE rn <= $rerankR),
+       |r1 AS (${topIdsSql("s1", "cosq DESC, cid", s"<= $rerankR")}),
        |rr AS (SELECT r1.qid, r1.cid,
        |              list_cosine_similarity(eq.v, ec.v) AS cos
        |       FROM r1 JOIN e eq ON eq.vec_id = r1.qid
        |       JOIN e ec ON ec.vec_id = r1.cid)
-       |SELECT qid, cid, round(cos, 4) AS cosine, rnk FROM (
-       |  SELECT qid, cid, cos,
-       |         row_number() OVER (PARTITION BY qid
-       |                            ORDER BY cos DESC, cid) AS rnk
-       |  FROM rr) WHERE rnk <= 5""".stripMargin
+       |${rankedSql("rr", "cos", "cosine")}""".stripMargin
 
   /** q123: the full PQ-chain replay ([[ivfPqSadcSql]] at nprobe=6), the
     * ADC top-`rerankR` cut per probe (adc asc, cid tiebreak ≡ the Spark
@@ -4236,19 +4170,8 @@ object SimilarityOps {
   private def ivfPqRerankOracleSql(k: Int, iters: Int, m: Int, pk: Int,
       pqIters: Int, nprobe: Int, rerankR: Int): String =
     s"""${ivfPqSadcSql(k, iters, m, pk, pqIters, nprobe)},
-       |radc AS (SELECT qid, cid FROM (
-       |  SELECT qid, cid,
-       |         row_number() OVER (PARTITION BY qid
-       |                            ORDER BY adc, cid) AS rn
-       |  FROM sadc) WHERE rn <= $rerankR),
-       |rex AS (SELECT r.qid, r.cid, list_cosine_similarity(q.v, c.v) AS cos
-       |        FROM radc r JOIN pr0 q ON q.qid = r.qid
-       |        JOIN e c ON c.vec_id = r.cid)
-       |SELECT qid, cid, round(cos, 4) AS cosine, rnk FROM (
-       |  SELECT qid, cid, cos,
-       |         row_number() OVER (PARTITION BY qid
-       |                            ORDER BY cos DESC, cid) AS rnk
-       |  FROM rex) WHERE rnk <= 5""".stripMargin
+       |${rerankSql("adc, cid", rerankR, "list_cosine_similarity(q.v, c.v)",
+          "cos", "cosine")}""".stripMargin
 
   /** q126: the NN-Descent chain unrolled (the q97 PQ-chain recipe).
     * Every construct is engine-exact: the LCG init/sample keys are pure
@@ -4269,11 +4192,9 @@ object SimilarityOps {
     val A = 1103515245L; val C = 12345L; val M = 2147483647L
     val iterCtes = (1 to iters).map { it =>
       val prev = s"${p}b${it - 1}"
-      s"""${p}rev$it AS MATERIALIZED (SELECT src, dst FROM (
-         |    SELECT nid AS src, vec_id AS dst,
-         |           row_number() OVER (PARTITION BY nid
-         |             ORDER BY (vec_id*$A + ${it * C}) % $M, vec_id) AS rn
-         |    FROM $prev) WHERE rn <= $buildK),
+      s"""${p}rev$it AS MATERIALIZED (${topIdsSql(prev,
+           s"(vec_id*$A + ${it * C}) % $M, vec_id", s"<= $buildK",
+           cols = "src, dst", key = "nid", inner = "nid AS src, vec_id AS dst")}),
          |${p}genl$it AS MATERIALIZED (SELECT DISTINCT src, dst FROM (
          |    SELECT vec_id AS src, nid AS dst FROM $prev
          |    UNION ALL SELECT src, dst FROM ${p}rev$it)),
@@ -4285,13 +4206,9 @@ object SimilarityOps {
          |          FROM ${p}cand$it p
          |          JOIN ${p}e x ON x.vec_id = p.vec_id
          |          JOIN ${p}e y ON y.vec_id = p.nid),
-         |${p}b$it AS MATERIALIZED (SELECT vec_id, nid, cos FROM (
-         |    SELECT vec_id, nid, cos,
-         |           row_number() OVER (PARTITION BY vec_id
-         |             ORDER BY cos DESC, nid) AS rn
-         |    FROM (SELECT vec_id, nid, max(cos) AS cos FROM
-         |          (SELECT * FROM ${p}sc$it UNION ALL SELECT * FROM $prev)
-         |          GROUP BY 1, 2)) WHERE rn <= $buildK)""".stripMargin
+         |${p}b$it AS MATERIALIZED ${topWSql(
+           s"(SELECT * FROM ${p}sc$it UNION ALL SELECT * FROM $prev)", buildK,
+           "vec_id")}""".stripMargin
     }.mkString(",\n")
     s"""${p}e AS (SELECT vec_id, embedding::DOUBLE[] AS emb
        |           FROM $src WHERE $where),
@@ -4301,27 +4218,20 @@ object SimilarityOps {
        |                ((v.vec_id*$buildK + js.j)*$A % $M) % n.n AS nid
        |         FROM ${p}e v CROSS JOIN ${p}n n CROSS JOIN ${p}js js
        |         WHERE ((v.vec_id*$buildK + js.j)*$A % $M) % n.n <> v.vec_id),
-       |${p}b0 AS MATERIALIZED (SELECT vec_id, nid, cos FROM (
-       |    SELECT vec_id, nid, cos,
-       |           row_number() OVER (PARTITION BY vec_id
-       |             ORDER BY cos DESC, nid) AS rn
-       |    FROM (SELECT i.vec_id, i.nid, max(list_cosine_similarity(
-       |                 x.emb, y.emb)) AS cos
-       |          FROM ${p}init i JOIN ${p}e x ON x.vec_id = i.vec_id
-       |          JOIN ${p}e y ON y.vec_id = i.nid
-       |          GROUP BY 1, 2)) WHERE rn <= $buildK),
+       |${p}b0 AS MATERIALIZED (${nbrCutSql("vec_id",
+          s"""(SELECT i.vec_id, i.nid, max(list_cosine_similarity(
+             |                 x.emb, y.emb)) AS cos
+             |          FROM ${p}init i JOIN ${p}e x ON x.vec_id = i.vec_id
+             |          JOIN ${p}e y ON y.vec_id = i.nid
+             |          GROUP BY 1, 2)""".stripMargin, s"<= $buildK")}),
        |$iterCtes""".stripMargin
   }
 
   private def nnDescentOracleSql(k: Int, buildK: Int, iters: Int,
       slice: Long): String =
     s"""WITH ${nnDescentChainSql(buildK, iters, s"vec_id < $slice")}
-       |SELECT vec_id, nid, round(cos, 4) AS cosine,
-       |       CAST(rnk AS BIGINT) AS rnk FROM (
-       |  SELECT vec_id, nid, cos,
-       |         row_number() OVER (PARTITION BY vec_id
-       |           ORDER BY cos DESC, nid) AS rnk
-       |  FROM b$iters) WHERE rnk <= $k""".stripMargin
+       |${rankedSql(s"b$iters", "cos", "cosine", k, key = "vec_id",
+          payload = "nid", castRnk = true)}""".stripMargin
 
   /** q157 oracle: the q126 chain, then the robust-prune greedy unrolled —
     * candidate-pair cosines once (the kernel pair), then `r` rounds of
@@ -4331,12 +4241,7 @@ object SimilarityOps {
       r: Int, alpha: String): String = {
     val rounds = (1 to r).map { rd =>
       val prev = if (rd == 1) "rem0" else s"rem${rd - 1}"
-      val sel =
-        s"""sel$rd AS MATERIALIZED (SELECT vec_id, nid, cos FROM (
-           |   SELECT vec_id, nid, cos,
-           |          row_number() OVER (PARTITION BY vec_id
-           |            ORDER BY cos DESC, nid) AS rn
-           |   FROM $prev) WHERE rn = 1)""".stripMargin
+      val sel = s"sel$rd AS MATERIALIZED (${nbrCutSql("vec_id", prev, "= 1")})"
       val rem = if (rd < r) Seq(
         s"""rem$rd AS MATERIALIZED (
            |   SELECT t.vec_id, t.nid, t.cos FROM $prev t
@@ -4376,39 +4281,34 @@ object SimilarityOps {
     * (expand adjacency, score with the kernel pair, dedupe by max,
     * row_number beam cut with (cos DESC, nid) ≡ the heap order). */
   private def graphSearchOracleSql(buildK: Int, iters: Int, slice: Long,
-      beam: Int, hops: Int, seeds: Int, topk: Int): String = {
-    def topW(src: String, w: Int): String =
-      s"""(SELECT qid, nid, cos FROM (
-         |   SELECT qid, nid, cos,
-         |          row_number() OVER (PARTITION BY qid
-         |            ORDER BY cos DESC, nid) AS rn
-         |   FROM (SELECT qid, nid, max(cos) AS cos FROM $src
-         |         GROUP BY 1, 2)) WHERE rn <= $w)""".stripMargin
-    val hopCtes = (1 to hops).map { h =>
-      val p = s"bm${h - 1}"
-      s"""ex$h AS MATERIALIZED (SELECT DISTINCT b.qid, g.nid AS nid
-         |        FROM $p b JOIN b$iters g ON g.vec_id = b.nid),
-         |sx$h AS MATERIALIZED (SELECT x.qid, x.nid,
-         |          list_cosine_similarity(q.qe, v.emb) AS cos
-         |        FROM ex$h x JOIN qs q ON q.qid = x.qid
-         |        JOIN e v ON v.vec_id = x.nid),
-         |bm$h AS MATERIALIZED ${topW(
-        s"(SELECT * FROM sx$h UNION ALL SELECT * FROM $p)", beam)}""".stripMargin
-    }.mkString(",\n")
+      beam: Int, hops: Int, seeds: Int, topk: Int): String =
     s"""WITH ${nnDescentChainSql(buildK, iters, s"vec_id < $slice")},
        |qs AS (SELECT vec_id AS qid, emb AS qe FROM e WHERE vec_id < 10),
        |sd AS (SELECT vec_id AS nid FROM e ORDER BY vec_id LIMIT $seeds),
        |s0 AS (SELECT q.qid, s.nid, list_cosine_similarity(q.qe, v.emb) AS cos
        |       FROM qs q CROSS JOIN sd s JOIN e v ON v.vec_id = s.nid),
-       |bm0 AS MATERIALIZED ${topW("s0", beam)},
-       |$hopCtes
-       |SELECT qid, nid, round(cos, 4) AS cosine,
-       |       CAST(rnk AS BIGINT) AS rnk FROM (
-       |  SELECT qid, nid, cos,
-       |         row_number() OVER (PARTITION BY qid
-       |           ORDER BY cos DESC, nid) AS rnk
-       |  FROM bm$hops WHERE nid <> qid) WHERE rnk <= $topk""".stripMargin
-  }
+       |bm0 AS MATERIALIZED ${topWSql("s0", beam)},
+       |${beamHopsSql("", s"b$iters", "e", "qs", "q", beam, hops)}
+       |${rankedSql(s"bm$hops WHERE nid <> qid", "cos", "cosine", topk,
+          payload = "nid", castRnk = true)}""".stripMargin
+
+  /** `hops` expand/score/cut rounds of a beam descent: each round expands
+    * `${q}bm{h-1}` through graph `graphCte`, scores against `eCte` for the
+    * `qsCte` probes (aliased `qa`), and cuts the max-deduped union with
+    * the previous beam to `beam`. */
+  private def beamHopsSql(q: String, graphCte: String, eCte: String,
+      qsCte: String, qa: String, beam: Int, hops: Int): String =
+    (1 to hops).map { h =>
+      val prev = s"${q}bm${h - 1}"
+      s"""${q}ex$h AS MATERIALIZED (SELECT DISTINCT b.qid, g.nid AS nid
+         |        FROM $prev b JOIN $graphCte g ON g.vec_id = b.nid),
+         |${q}sx$h AS MATERIALIZED (SELECT x.qid, x.nid,
+         |          list_cosine_similarity($qa.qe, v.emb) AS cos
+         |        FROM ${q}ex$h x JOIN $qsCte $qa ON $qa.qid = x.qid
+         |        JOIN $eCte v ON v.vec_id = x.nid),
+         |${q}bm$h AS MATERIALIZED ${topWSql(
+        s"(SELECT * FROM ${q}sx$h UNION ALL SELECT * FROM $prev)", beam)}""".stripMargin
+    }.mkString(",\n")
 
   /** Beam-descent CTEs over a built chain: (qid, nid) seeds from
     * `$seedCte`, `hops` expand/score/cut rounds against graph
@@ -4419,33 +4319,14 @@ object SimilarityOps {
     * text); 1 ⇒ the q165 single-entry descent. */
   private def beamCtesSql(q: String, graphCte: String, eCte: String,
       seedCte: String, beam: Int, hops: Int,
-      qsCte: String = "qs", entryBeam: Int = 0): String = {
-    def topW(src: String, w: Int): String =
-      s"""(SELECT qid, nid, cos FROM (
-         |   SELECT qid, nid, cos,
-         |          row_number() OVER (PARTITION BY qid
-         |            ORDER BY cos DESC, nid) AS rn
-         |   FROM (SELECT qid, nid, max(cos) AS cos FROM $src
-         |         GROUP BY 1, 2)) WHERE rn <= $w)""".stripMargin
-    val hopCtes = (1 to hops).map { h =>
-      val prev = s"${q}bm${h - 1}"
-      s"""${q}ex$h AS MATERIALIZED (SELECT DISTINCT b.qid, g.nid AS nid
-         |        FROM $prev b JOIN $graphCte g ON g.vec_id = b.nid),
-         |${q}sx$h AS MATERIALIZED (SELECT x.qid, x.nid,
-         |          list_cosine_similarity(qq.qe, v.emb) AS cos
-         |        FROM ${q}ex$h x JOIN $qsCte qq ON qq.qid = x.qid
-         |        JOIN $eCte v ON v.vec_id = x.nid),
-         |${q}bm$h AS MATERIALIZED ${topW(
-        s"(SELECT * FROM ${q}sx$h UNION ALL SELECT * FROM $prev)", beam)}""".stripMargin
-    }.mkString(",\n")
+      qsCte: String = "qs", entryBeam: Int = 0): String =
     s"""${q}s0 AS (SELECT s.qid, s.nid,
        |          list_cosine_similarity(qq.qe, v.emb) AS cos
        |        FROM $seedCte s JOIN $qsCte qq ON qq.qid = s.qid
        |        JOIN $eCte v ON v.vec_id = s.nid),
-       |${q}bm0 AS MATERIALIZED ${topW(s"${q}s0",
+       |${q}bm0 AS MATERIALIZED ${topWSql(s"${q}s0",
         if (entryBeam > 0) entryBeam else beam)},
-       |$hopCtes""".stripMargin
-  }
+       |${beamHopsSql(q, graphCte, eCte, qsCte, "qq", beam, hops)}""".stripMargin
 
   /** q130: the full HNSW-style descent unrolled — three NN-Descent
     * build chains (layer 0 ≡ q126/q127's, upper layers level-gated by
@@ -4459,11 +4340,6 @@ object SimilarityOps {
       s"(vec_id*$A + ${graft.operators.NnDescent.LevelRound * C}) % $M"
     def lvlWhere(l: Int) =
       s"vec_id < $slice AND ($lvlKey) % ${1L << (2 * l)} = 0"
-    def exits(q: String, hops: Int, topn: Int): String =
-      s"""(SELECT qid, nid FROM (
-         |   SELECT qid, nid, row_number() OVER (PARTITION BY qid
-         |          ORDER BY cos DESC, nid) AS rn
-         |   FROM ${q}bm$hops WHERE nid <> qid) WHERE rn <= $topn)""".stripMargin
     s"""WITH ${nnDescentChainSql(NnBuildK, NnIters, s"vec_id < $slice")},
        |${nnDescentChainSql(HnswUpperK, HnswUpperIters, lvlWhere(1), "l1")},
        |${nnDescentChainSql(HnswUpperK, HnswUpperIters, lvlWhere(2), "l2")},
@@ -4472,44 +4348,32 @@ object SimilarityOps {
        |         FROM qs q),
        |${beamCtesSql("u2", s"l2b$HnswUpperIters", "l2e", "l2sd",
           HnswUpperBeam, HnswUpperHops)},
-       |l1sd AS ${exits("u2", HnswUpperHops, HnswUpperExits)},
+       |l1sd AS ${exitsSql(s"u2bm$HnswUpperHops", HnswUpperExits)},
        |${beamCtesSql("u1", s"l1b$HnswUpperIters", "l1e", "l1sd",
           HnswUpperBeam, HnswUpperHops)},
        |l0sd AS (SELECT qid, nid
-       |         FROM ${exits("u1", HnswUpperHops, HnswUpperExits)} x
+       |         FROM ${exitsSql(s"u1bm$HnswUpperHops", HnswUpperExits)} x
        |         UNION ALL
        |         SELECT q.qid, (SELECT min(vec_id) FROM e) AS nid
        |         FROM qs q),
        |${beamCtesSql("z", s"b$NnIters", "e", "l0sd", NnBeam, HnswL0Hops)}
-       |SELECT qid, nid, round(cos, 4) AS cosine,
-       |       CAST(rnk AS BIGINT) AS rnk FROM (
-       |  SELECT qid, nid, cos,
-       |         row_number() OVER (PARTITION BY qid
-       |           ORDER BY cos DESC, nid) AS rnk
-       |  FROM zbm$HnswL0Hops WHERE nid <> qid) WHERE rnk <= 5""".stripMargin
+       |${rankedSql(s"zbm$HnswL0Hops WHERE nid <> qid", "cos", "cosine",
+          payload = "nid", castRnk = true)}""".stripMargin
   }
 
-  /** q131: the graph-ingest end state unrolled — the store's NN-Descent
-    * build chain, the batch's beam descent over it (seeded at the
-    * `seeds` lowest STORE ids, exactly [[graft.operators.NnDescent
-    * .insertBatch]]'s selection), a raw-kernel re-score of the selected
-    * (qid, nid) pairs, then the back-link fold + per-node (cos desc,
-    * id asc) re-cut, forward edges unioned, NnK-cut emission. */
-  private def graphIngestOracleSql(storeMax: Long, batchMax: Long,
-      k: Int, iters: Int, beam: Int, hops: Int, seeds: Int,
-      emitK: Int): String = {
-    s"""WITH ${nnDescentChainSql(k, iters, s"vec_id < $storeMax")},
-       |qs AS (SELECT vec_id AS qid, embedding::DOUBLE[] AS qe
-       |       FROM embeddings
-       |       WHERE vec_id >= $storeMax AND vec_id < $batchMax),
-       |gsd AS (SELECT q.qid, s.nid FROM qs q CROSS JOIN
+  /** The batch insert over a built store chain (`e`, `b$iters`) for the
+    * `qs` batch, exactly [[graft.operators.NnDescent.insertBatch]]: the
+    * beam descent seeded at the `seeds` lowest STORE ids, a raw-kernel
+    * re-score of the found (qid, nid) pairs, the back-link fold +
+    * per-node (cos desc, id asc) re-cut, and `out` = the cut ∪ forward
+    * edges. Shared by the q131 and q141 oracles. */
+  private def graphInsertSql(k: Int, iters: Int, beam: Int, hops: Int,
+      seeds: Int, out: String): String =
+    s"""gsd AS (SELECT q.qid, s.nid FROM qs q CROSS JOIN
        |        (SELECT vec_id AS nid FROM e ORDER BY vec_id
        |         LIMIT $seeds) s),
        |${beamCtesSql("g", s"b$iters", "e", "gsd", beam, hops)},
-       |found AS (SELECT qid, nid FROM (
-       |   SELECT qid, nid, row_number() OVER (PARTITION BY qid
-       |          ORDER BY cos DESC, nid) AS rn
-       |   FROM gbm$hops WHERE nid <> qid) WHERE rn <= $k),
+       |found AS ${exitsSql(s"gbm$hops", k)},
        |fs AS (SELECT f.qid, f.nid,
        |          list_cosine_similarity(q.qe, v.emb) AS cos
        |       FROM found f JOIN qs q ON q.qid = f.qid
@@ -4519,19 +4383,23 @@ object SimilarityOps {
        |       UNION ALL
        |       SELECT nid AS vec_id, qid AS nid, cos FROM fs)
        |       GROUP BY 1, 2),
-       |cut AS (SELECT vec_id, nid, cos FROM (
-       |   SELECT vec_id, nid, cos, row_number() OVER (PARTITION BY vec_id
-       |          ORDER BY cos DESC, nid) AS rn
-       |   FROM merged) WHERE rn <= $k),
-       |allv AS (SELECT * FROM cut UNION ALL
-       |         SELECT qid AS vec_id, nid, cos FROM fs)
-       |SELECT vec_id, nid, round(cos, 4) AS cosine,
-       |       CAST(rnk AS BIGINT) AS rnk FROM (
-       |  SELECT vec_id, nid, cos,
-       |         row_number() OVER (PARTITION BY vec_id
-       |           ORDER BY cos DESC, nid) AS rnk
-       |  FROM allv) WHERE rnk <= $emitK""".stripMargin
-  }
+       |cut AS (${nbrCutSql("vec_id", "merged", s"<= $k")}),
+       |$out AS (SELECT * FROM cut UNION ALL
+       |         SELECT qid AS vec_id, nid, cos FROM fs)""".stripMargin
+
+  /** q131: the graph-ingest end state unrolled — the store's NN-Descent
+    * build chain, the batch insert ([[graphInsertSql]]), NnK-cut
+    * emission. */
+  private def graphIngestOracleSql(storeMax: Long, batchMax: Long,
+      k: Int, iters: Int, beam: Int, hops: Int, seeds: Int,
+      emitK: Int): String =
+    s"""WITH ${nnDescentChainSql(k, iters, s"vec_id < $storeMax")},
+       |qs AS (SELECT vec_id AS qid, embedding::DOUBLE[] AS qe
+       |       FROM embeddings
+       |       WHERE vec_id >= $storeMax AND vec_id < $batchMax),
+       |${graphInsertSql(k, iters, beam, hops, seeds, "allv")}
+       |${rankedSql("allv", "cos", "cosine", emitK, key = "vec_id",
+          payload = "nid", castRnk = true)}""".stripMargin
 
   /** q141: the q131 ingest chain (store build → batch beam-insert →
     * back-link fold) re-used verbatim through `adjg` (the end-state
@@ -4544,36 +4412,14 @@ object SimilarityOps {
     * default (diff oracle_sql.json before/after — the pfx rule). */
   private def graphShardedOracleSql(storeMax: Long, slice: Long,
       k: Int, iters: Int, beam: Int, hops: Int, seeds: Int,
-      probeMax: Long = 10L, entryBeam: Int = 0): String = {
+      probeMax: Long = 10L, entryBeam: Int = 0): String =
     s"""WITH ${nnDescentChainSql(k, iters, s"vec_id < $storeMax")},
        |se AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings
        |       WHERE vec_id < $slice),
        |qs AS (SELECT vec_id AS qid, embedding::DOUBLE[] AS qe
        |       FROM embeddings
        |       WHERE vec_id >= $storeMax AND vec_id < $slice),
-       |gsd AS (SELECT q.qid, s.nid FROM qs q CROSS JOIN
-       |        (SELECT vec_id AS nid FROM e ORDER BY vec_id
-       |         LIMIT $seeds) s),
-       |${beamCtesSql("g", s"b$iters", "e", "gsd", beam, hops)},
-       |found AS (SELECT qid, nid FROM (
-       |   SELECT qid, nid, row_number() OVER (PARTITION BY qid
-       |          ORDER BY cos DESC, nid) AS rn
-       |   FROM gbm$hops WHERE nid <> qid) WHERE rn <= $k),
-       |fs AS (SELECT f.qid, f.nid,
-       |          list_cosine_similarity(q.qe, v.emb) AS cos
-       |       FROM found f JOIN qs q ON q.qid = f.qid
-       |       JOIN e v ON v.vec_id = f.nid),
-       |merged AS (SELECT vec_id, nid, max(cos) AS cos FROM (
-       |       SELECT vec_id, nid, cos FROM b$iters
-       |       UNION ALL
-       |       SELECT nid AS vec_id, qid AS nid, cos FROM fs)
-       |       GROUP BY 1, 2),
-       |cut AS (SELECT vec_id, nid, cos FROM (
-       |   SELECT vec_id, nid, cos, row_number() OVER (PARTITION BY vec_id
-       |          ORDER BY cos DESC, nid) AS rn
-       |   FROM merged) WHERE rn <= $k),
-       |adjg AS (SELECT * FROM cut UNION ALL
-       |         SELECT qid AS vec_id, nid, cos FROM fs),
+       |${graphInsertSql(k, iters, beam, hops, seeds, "adjg")},
        |pqs AS (SELECT vec_id AS qid, embedding::DOUBLE[] AS qe
        |        FROM embeddings WHERE vec_id < $probeMax),
        |zsd AS (SELECT p.qid, s.nid FROM pqs p CROSS JOIN
@@ -4581,13 +4427,8 @@ object SimilarityOps {
        |         LIMIT $seeds) s),
        |${beamCtesSql("z", "adjg", "se", "zsd", beam, hops, qsCte = "pqs",
         entryBeam = entryBeam)}
-       |SELECT qid, nid, round(cos, 4) AS cosine,
-       |       CAST(rnk AS BIGINT) AS rnk FROM (
-       |  SELECT qid, nid, cos,
-       |         row_number() OVER (PARTITION BY qid
-       |           ORDER BY cos DESC, nid) AS rnk
-       |  FROM zbm$hops WHERE nid <> qid) WHERE rnk <= 5""".stripMargin
-  }
+       |${rankedSql(s"zbm$hops WHERE nid <> qid", "cos", "cosine",
+          payload = "nid", castRnk = true)}""".stripMargin
 
   private def ivfAnnOracleSql(k: Int, iters: Int): String =
     s"""${ivfPrefixSql(k, iters)},
@@ -4595,40 +4436,27 @@ object SimilarityOps {
        |s AS (SELECT p.qid, a.vec_id AS cid,
        |             list_cosine_similarity(p.qe, a.v) AS cos
        |      FROM af a JOIN p ON a.cell = p.cell AND a.vec_id != p.qid)
-       |SELECT qid, cid, round(cos, 4) AS cosine, rnk FROM (
-       |  SELECT qid, cid, cos,
-       |         row_number() OVER (PARTITION BY qid
-       |                            ORDER BY cos DESC, cid) AS rnk
-       |  FROM s) WHERE rnk <= 5""".stripMargin
+       |${rankedSql("s", "cos", "cosine")}""".stripMargin
 
   /** q134: the IVF chain + label-predicate retrieval. The nprobe cell
-    * ranking is the q97 `pr` spelling (row_number over squared-L2 to each
-    * trained centroid, cell tiebreak ≡ Spark's array_sort on (d, cell));
-    * the label filter is an equi-join exactly as in the Spark plan. */
+    * ranking is the q97 `pr` spelling ([[nearestCellsSql]], cell
+    * tiebreak ≡ the driver's (d, cell) sort); the label filter is an
+    * equi-join exactly as in the Spark plan. */
   private def filteredAnnOracleSql(k: Int, iters: Int, nprobe: Int): String =
     s"""${ivfPrefixSql(k, iters)},
        |lb AS (SELECT vec_id, label FROM embeddings),
        |pr0 AS (SELECT a.vec_id AS qid, a.v AS qe, lb.label
        |        FROM af a JOIN lb ON lb.vec_id = a.vec_id
        |        WHERE a.vec_id < 10),
-       |pr AS (SELECT qid, qe, label, cell FROM (
-       |  SELECT pr0.qid, pr0.qe, pr0.label, c.cell,
-       |         row_number() OVER (PARTITION BY pr0.qid
-       |           ORDER BY list_sum([(pr0.qe[i]-c.cent[i])*(pr0.qe[i]-c.cent[i])
-       |                              FOR i IN range(1, ${Dim + 1})]),
-       |                    c.cell) AS rn
-       |  FROM pr0, c$iters c) WHERE rn <= $nprobe),
+       |pr AS (${nearestCellsSql(s"c$iters", s"<= $nprobe",
+          Seq("qid", "qe", "label"), vec = "qe")}),
        |s AS (SELECT pr.qid, a.vec_id AS cid,
        |             list_cosine_similarity(pr.qe, a.v) AS cos
        |      FROM af a
        |      JOIN lb ON lb.vec_id = a.vec_id
        |      JOIN pr ON a.cell = pr.cell AND lb.label = pr.label
        |             AND a.vec_id != pr.qid)
-       |SELECT qid, cid, round(cos, 4) AS cosine, rnk FROM (
-       |  SELECT qid, cid, cos,
-       |         row_number() OVER (PARTITION BY qid
-       |                            ORDER BY cos DESC, cid) AS rnk
-       |  FROM s) WHERE rnk <= 5""".stripMargin
+       |${rankedSql("s", "cos", "cosine")}""".stripMargin
 
   /** q135: the IVF chain + near-dup exclusion (raw-cosine < posThr — both
     * kernels are bit-identical, q35 parity, so the cut agrees) + top-negK. */
@@ -4636,21 +4464,12 @@ object SimilarityOps {
       negK: Int, posThr: String): String =
     s"""${ivfPrefixSql(k, iters)},
        |pr0 AS (SELECT vec_id AS qid, v AS qe FROM af WHERE vec_id < 10),
-       |pr AS (SELECT qid, qe, cell FROM (
-       |  SELECT pr0.qid, pr0.qe, c.cell,
-       |         row_number() OVER (PARTITION BY pr0.qid
-       |           ORDER BY list_sum([(pr0.qe[i]-c.cent[i])*(pr0.qe[i]-c.cent[i])
-       |                              FOR i IN range(1, ${Dim + 1})]),
-       |                    c.cell) AS rn
-       |  FROM pr0, c$iters c) WHERE rn <= $nprobe),
+       |pr AS (${nearestCellsSql(s"c$iters", s"<= $nprobe", Seq("qid", "qe"),
+          vec = "qe")}),
        |s AS (SELECT pr.qid, a.vec_id AS cid,
        |             list_cosine_similarity(pr.qe, a.v) AS cos
        |      FROM af a JOIN pr ON a.cell = pr.cell AND a.vec_id != pr.qid)
-       |SELECT qid, cid, round(cos, 4) AS cosine, rnk FROM (
-       |  SELECT qid, cid, cos,
-       |         row_number() OVER (PARTITION BY qid
-       |                            ORDER BY cos DESC, cid) AS rnk
-       |  FROM s WHERE cos < $posThr) WHERE rnk <= $negK""".stripMargin
+       |${rankedSql(s"s WHERE cos < $posThr", "cos", "cosine", negK)}""".stripMargin
 
   /** q79: cosine of every vector to its own cell centroid. Keeper = max
     * 6-decimal-rounded cosine / lowest vec_id per cell; the OUTPUT rounds
@@ -4662,12 +4481,8 @@ object SimilarityOps {
        |sc AS (SELECT a.vec_id, a.cell,
        |              list_cosine_similarity(a.v, c.cent) AS cos
        |       FROM af a JOIN c$iters c USING (cell)),
-       |kp AS (SELECT cell, vec_id AS keep_id FROM (
-       |         SELECT cell, vec_id,
-       |                row_number() OVER (PARTITION BY cell
-       |                                   ORDER BY round(cos, 6) DESC,
-       |                                            vec_id) AS rn
-       |         FROM sc) WHERE rn = 1)
+       |kp AS (${topIdsSql("sc", "round(cos, 6) DESC, vec_id", "= 1",
+          cols = "cell, vec_id AS keep_id", key = "cell", inner = "cell, vec_id")})
        |SELECT sc.vec_id, sc.cell, round(sc.cos, 4) AS cos_centroid,
        |       sc.vec_id = kp.keep_id AS keep
        |FROM sc JOIN kp USING (cell)""".stripMargin
@@ -4699,48 +4514,13 @@ object SimilarityOps {
        |FROM a WHERE rn = 1""".stripMargin
   }
 
-  /** DuckDB mirror of the q133 RP-forest chain: the LCG hyperplane
-    * coefficients, micro-unit LONG projections, floor(sum/cnt) mean
-    * thresholds, the left-iff-proj≤thr build descent AND the probe
-    * spill descent (near child always, far child within the margin)
-    * are unrolled one CTE group per level (the q97/q126 chain recipe);
-    * candidates are the corpus rows of every reached leaf and the
-    * emitted scores the q35-proven kernel pair. All mix operands are
-    * positive, so plain `%` ≡ pmod on both sides. */
-  private def rpForestOracleSql(trees: Int, depth: Int,
-      margin: Long): String = {
+  /** The RP-forest CTEs over `e` (vec_id, embedding), shared by q133 and
+    * q140: `micro` (micro-unit LONG coordinates) and `coefs` (the LCG
+    * hyperplane coefficients per tree, level, node and dim; all mix
+    * operands positive, so plain `%` ≡ pmod). */
+  private def rpCoefsSql(trees: Int, depth: Int): String = {
     val addC = 11 * 12345L // RpForest.HpRound folded into the LCG add
-    val levels = (0 until depth).map { l =>
-      s"""p$l AS (SELECT a.t, a.vec_id, a.node, SUM(m.mv * c.h) AS proj
-         |  FROM a$l a JOIN micro m USING (vec_id)
-         |  JOIN coefs c ON c.t = a.t AND c.l = $l AND c.node = a.node
-         |              AND c.d = m.d
-         |  GROUP BY a.t, a.vec_id, a.node),
-         |t$l AS (SELECT t, node,
-         |          CAST(floor(CAST(SUM(proj) AS DOUBLE) / COUNT(*))
-         |               AS BIGINT) AS thr
-         |        FROM p$l GROUP BY t, node),
-         |a${l + 1} AS (SELECT p.t, p.vec_id,
-         |          p.node * 2 + CASE WHEN p.proj <= x.thr THEN 0 ELSE 1 END
-         |            AS node
-         |        FROM p$l p JOIN t$l x ON x.t = p.t AND x.node = p.node),
-         |fp$l AS (SELECT f.t, f.vec_id, f.node, SUM(m.mv * c.h) AS proj
-         |  FROM f$l f JOIN micro m USING (vec_id)
-         |  JOIN coefs c ON c.t = f.t AND c.l = $l AND c.node = f.node
-         |              AND c.d = m.d
-         |  GROUP BY f.t, f.vec_id, f.node),
-         |fx$l AS (SELECT fp.t, fp.vec_id, fp.node, fp.proj, x.thr
-         |         FROM fp$l fp JOIN t$l x ON x.t = fp.t AND x.node = fp.node),
-         |f${l + 1} AS (SELECT t, vec_id,
-         |          node * 2 + CASE WHEN proj <= thr THEN 0 ELSE 1 END AS node
-         |        FROM fx$l
-         |        UNION ALL SELECT t, vec_id,
-         |          node * 2 + CASE WHEN proj <= thr THEN 1 ELSE 0 END
-         |        FROM fx$l WHERE abs(proj - thr) <= $margin)"""
-        .stripMargin
-    }.mkString(",\n")
-    s"""WITH e AS (SELECT vec_id, embedding FROM embeddings),
-       |micro AS (SELECT vec_id, i AS d,
+    s"""micro AS (SELECT vec_id, i AS d,
        |            CAST(round(CAST(embedding[i + 1] AS DOUBLE) * 1e6)
        |                 AS BIGINT) AS mv
        |          FROM e, range(${Dim}) ds(i)),
@@ -4749,7 +4529,54 @@ object SimilarityOps {
        |             + $addC) % 2147483647 % 2001 - 1000 AS h
        |          FROM range($trees) ts(t), range($depth) ls(l),
        |               range(${1 << (depth - 1)}) ns(node), range(${Dim}) dd(d)
-       |          WHERE node < CAST(power(2, l) AS BIGINT)),
+       |          WHERE node < CAST(power(2, l) AS BIGINT))""".stripMargin
+  }
+
+  /** Level `l`'s projection `out` of the `x$l` (t, vec_id, node) rows
+    * onto their node's hyperplane, in micro units. */
+  private def rpProjSql(x: String, l: Int, out: String): String =
+    s"""$out AS (SELECT $x.t, $x.vec_id, $x.node, SUM(m.mv * c.h) AS proj
+       |  FROM $x$l $x JOIN micro m USING (vec_id)
+       |  JOIN coefs c ON c.t = $x.t AND c.l = $l AND c.node = $x.node
+       |              AND c.d = m.d
+       |  GROUP BY $x.t, $x.vec_id, $x.node)""".stripMargin
+
+  /** Build level `l`: project `a$l`, the per-node floor-mean threshold
+    * `t$l`, and the left-iff-proj≤thr descent into `a{l+1}`. */
+  private def rpBuildLevelSql(l: Int): String =
+    s"""${rpProjSql("a", l, s"p$l")},
+       |t$l AS (SELECT t, node,
+       |          CAST(floor(CAST(SUM(proj) AS DOUBLE) / COUNT(*))
+       |               AS BIGINT) AS thr
+       |        FROM p$l GROUP BY t, node),
+       |a${l + 1} AS (SELECT p.t, p.vec_id,
+       |          p.node * 2 + CASE WHEN p.proj <= x.thr THEN 0 ELSE 1 END
+       |            AS node
+       |        FROM p$l p JOIN t$l x ON x.t = p.t AND x.node = p.node)""".stripMargin
+
+  /** DuckDB mirror of the q133 RP-forest chain: the LCG hyperplane
+    * coefficients, micro-unit LONG projections, floor(sum/cnt) mean
+    * thresholds, the left-iff-proj≤thr build descent AND the probe
+    * spill descent (near child always, far child within the margin)
+    * are unrolled one CTE group per level (the q97/q126 chain recipe);
+    * candidates are the corpus rows of every reached leaf and the
+    * emitted scores the q35-proven kernel pair. */
+  private def rpForestOracleSql(trees: Int, depth: Int,
+      margin: Long): String = {
+    val levels = (0 until depth).map { l =>
+      s"""${rpBuildLevelSql(l)},
+         |${rpProjSql("f", l, s"fp$l")},
+         |fx$l AS (SELECT fp.t, fp.vec_id, fp.node, fp.proj, x.thr
+         |         FROM fp$l fp JOIN t$l x ON x.t = fp.t AND x.node = fp.node),
+         |f${l + 1} AS (SELECT t, vec_id,
+         |          node * 2 + CASE WHEN proj <= thr THEN 0 ELSE 1 END AS node
+         |        FROM fx$l
+         |        UNION ALL SELECT t, vec_id,
+         |          node * 2 + CASE WHEN proj <= thr THEN 1 ELSE 0 END
+         |        FROM fx$l WHERE abs(proj - thr) <= $margin)""".stripMargin
+    }.mkString(",\n")
+    s"""WITH e AS (SELECT vec_id, embedding FROM embeddings),
+       |${rpCoefsSql(trees, depth)},
        |a0 AS (SELECT ts.t, e.vec_id, 0 AS node
        |       FROM e, range($trees) ts(t)),
        |f0 AS (SELECT ts.t, e.vec_id, 0 AS node
@@ -4764,11 +4591,7 @@ object SimilarityOps {
        |                               ce.embedding::DOUBLE[]) AS cos
        |      FROM cand JOIN e qe ON qe.vec_id = cand.qid
        |                JOIN e ce ON ce.vec_id = cand.cid)
-       |SELECT qid, cid, round(cos, 4) AS cosine, rnk FROM (
-       |  SELECT qid, cid, cos,
-       |         row_number() OVER (PARTITION BY qid
-       |                            ORDER BY cos DESC, cid) AS rnk
-       |  FROM s) WHERE rnk <= 5""".stripMargin
+       |${rankedSql("s", "cos", "cosine")}""".stripMargin
   }
 
   /** q140: thresholds from the STORE rows only (a-chain), then the batch
@@ -4777,26 +4600,9 @@ object SimilarityOps {
     * micro-unit/LCG/floor arithmetic as [[rpForestOracleSql]]. */
   private def rpForestIngestOracleSql(trees: Int, depth: Int,
       split: Long, slice: Long): String = {
-    val addC = 11 * 12345L // RpForest.HpRound folded into the LCG add
     val levels = (0 until depth).map { l =>
-      s"""p$l AS (SELECT a.t, a.vec_id, a.node, SUM(m.mv * c.h) AS proj
-         |  FROM a$l a JOIN micro m USING (vec_id)
-         |  JOIN coefs c ON c.t = a.t AND c.l = $l AND c.node = a.node
-         |              AND c.d = m.d
-         |  GROUP BY a.t, a.vec_id, a.node),
-         |t$l AS (SELECT t, node,
-         |          CAST(floor(CAST(SUM(proj) AS DOUBLE) / COUNT(*))
-         |               AS BIGINT) AS thr
-         |        FROM p$l GROUP BY t, node),
-         |a${l + 1} AS (SELECT p.t, p.vec_id,
-         |          p.node * 2 + CASE WHEN p.proj <= x.thr THEN 0 ELSE 1 END
-         |            AS node
-         |        FROM p$l p JOIN t$l x ON x.t = p.t AND x.node = p.node),
-         |bp$l AS (SELECT b.t, b.vec_id, b.node, SUM(m.mv * c.h) AS proj
-         |  FROM b$l b JOIN micro m USING (vec_id)
-         |  JOIN coefs c ON c.t = b.t AND c.l = $l AND c.node = b.node
-         |              AND c.d = m.d
-         |  GROUP BY b.t, b.vec_id, b.node),
+      s"""${rpBuildLevelSql(l)},
+         |${rpProjSql("b", l, s"bp$l")},
          |b${l + 1} AS (SELECT bp.t, bp.vec_id,
          |          bp.node * 2 + CASE WHEN x.thr IS NOT NULL
          |                             AND bp.proj > x.thr THEN 1 ELSE 0 END
@@ -4806,16 +4612,7 @@ object SimilarityOps {
     }.mkString(",\n")
     s"""WITH e AS (SELECT vec_id, embedding FROM embeddings
        |           WHERE vec_id < $slice),
-       |micro AS (SELECT vec_id, i AS d,
-       |            CAST(round(CAST(embedding[i + 1] AS DOUBLE) * 1e6)
-       |                 AS BIGINT) AS mv
-       |          FROM e, range(${Dim}) ds(i)),
-       |coefs AS (SELECT t, l, node, d,
-       |            ((((t * 131 + l) * 257 + node) * 67 + d) * 1103515245
-       |             + $addC) % 2147483647 % 2001 - 1000 AS h
-       |          FROM range($trees) ts(t), range($depth) ls(l),
-       |               range(${1 << (depth - 1)}) ns(node), range(${Dim}) dd(d)
-       |          WHERE node < CAST(power(2, l) AS BIGINT)),
+       |${rpCoefsSql(trees, depth)},
        |a0 AS (SELECT ts.t, e.vec_id, 0 AS node
        |       FROM e, range($trees) ts(t) WHERE e.vec_id < $split),
        |b0 AS (SELECT ts.t, e.vec_id, 0 AS node
@@ -4860,8 +4657,7 @@ object SimilarityOps {
     "q167_hybrid_rrf" -> {
       val topK = IndexOps.rrfTopK
       s"""WITH lex AS (${IndexOps.bm25OracleSql("")}),
-         |e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-         |      WHERE TRUE),
+         |${eSql("TRUE")},
          |${ivfChainSql(8, 3)},
          |hp AS (SELECT DISTINCT probe_doc FROM lex),
          |hpr AS (SELECT a.vec_id AS qid, a.v AS qe, a.cell
@@ -4885,25 +4681,18 @@ object SimilarityOps {
          |                 coalesce(s.sem_rnk, 0) AS sem_rnk
          |          FROM lex l FULL OUTER JOIN sem s
          |            ON s.qid = l.probe_doc AND s.cid = l.doc_id)
-         |SELECT qid, CAST(rnk AS BIGINT) AS rnk, cid,
-         |       round(rrf, 6) AS rrf, CAST(lex_rnk AS BIGINT) AS lex_rnk,
-         |       CAST(sem_rnk AS BIGINT) AS sem_rnk FROM (
-         |  SELECT qid, cid, rrf, lex_rnk, sem_rnk,
-         |         row_number() OVER (PARTITION BY qid
-         |           ORDER BY rrf DESC, cid) AS rnk
-         |  FROM fused) WHERE rnk <= $topK""".stripMargin
+         |${topIdsSql("fused", "rrf DESC, cid", s"<= $topK",
+            cols = "qid, CAST(rnk AS BIGINT) AS rnk, cid, round(rrf, 6) AS rrf, " +
+              "CAST(lex_rnk AS BIGINT) AS lex_rnk, CAST(sem_rnk AS BIGINT) AS sem_rnk",
+            inner = "qid, cid, rrf, lex_rnk, sem_rnk", rn = "rnk")}""".stripMargin
     },
     "q35_ann_brute" ->
-      """WITH q AS (SELECT vec_id AS qid, embedding::DOUBLE[] AS qe
+      s"""WITH q AS (SELECT vec_id AS qid, embedding::DOUBLE[] AS qe
                     FROM embeddings WHERE vec_id < 10),
          c AS (SELECT vec_id AS cid, embedding::DOUBLE[] AS ce FROM embeddings),
          s AS (SELECT qid, cid, list_cosine_similarity(qe, ce) AS cos
                FROM q JOIN c ON cid != qid)
-         SELECT qid, cid, round(cos, 4) AS cosine, rnk FROM (
-           SELECT qid, cid, cos,
-                  row_number() OVER (PARTITION BY qid
-                                     ORDER BY cos DESC, cid) AS rnk
-           FROM s) WHERE rnk <= 5""",
+         ${rankedSql("s", "cos", "cosine")}""",
     // list(v ORDER BY vec_id) pins the same summation order the Spark
     // side gets from array_sort; list_sum folds left like the zip_with
     // chain. Micro-unit spelling mirrors Spark exactly: round 6dp →
@@ -4926,7 +4715,7 @@ object SimilarityOps {
     // q54's quantization CTEs + q35's list_cosine_similarity over the
     // integral arrays — exact-in-double, so ranks can't drift
     "q105_ann_int8" ->
-      """WITH sc AS (SELECT vec_id,
+      s"""WITH sc AS (SELECT vec_id,
                   list_transform(embedding, x -> CAST(x AS DOUBLE)) AS xs,
                   greatest(list_max(list_transform(embedding,
                       x -> abs(CAST(x AS DOUBLE)))) / 127.0, 1e-12) AS scale
@@ -4938,11 +4727,7 @@ object SimilarityOps {
          c AS (SELECT vec_id AS cid, qv AS ce FROM qq),
          s AS (SELECT qid, cid, list_cosine_similarity(qe, ce) AS cosq
                FROM q JOIN c ON cid != qid)
-         SELECT qid, cid, round(cosq, 4) AS cosine_q, rnk FROM (
-           SELECT qid, cid, cosq,
-                  row_number() OVER (PARTITION BY qid
-                                     ORDER BY cosq DESC, cid) AS rnk
-           FROM s) WHERE rnk <= 5""",
+         ${rankedSql("s", "cosq", "cosine_q")}""",
     "q36_embed_neardup" ->
       s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
          sg AS (SELECT vec_id, v,
@@ -5035,19 +4820,11 @@ object SimilarityOps {
          |        list_cosine_similarity(list_slice(qe, 1, $MrlDims),
          |                               list_slice(ce, 1, $MrlDims)) AS cosd
          |      FROM q JOIN c ON cid != qid),
-         |r AS (SELECT qid, cid FROM (
-         |  SELECT qid, cid,
-         |         row_number() OVER (PARTITION BY qid
-         |                            ORDER BY cosd DESC, cid) AS rn
-         |  FROM f) WHERE rn <= $MrlRerankR),
+         |r AS (${topIdsSql("f", "cosd DESC, cid", s"<= $MrlRerankR")}),
          |rex AS (SELECT r.qid, r.cid, list_cosine_similarity(q.qe, c.ce) AS cos
          |        FROM r JOIN q ON q.qid = r.qid
          |        JOIN c ON c.cid = r.cid)
-         |SELECT qid, cid, round(cos, 4) AS cosine, rnk FROM (
-         |  SELECT qid, cid, cos,
-         |         row_number() OVER (PARTITION BY qid
-         |                            ORDER BY cos DESC, cid) AS rnk
-         |  FROM rex) WHERE rnk <= 5""".stripMargin,
+         |${rankedSql("rex", "cos", "cosine")}""".stripMargin,
     // q148: the greedy MMR trajectory, k unrolled argmax steps
     "q148_mmr_select" -> mmrOracleSql(MmrLambda, MmrK),
     // q151: the q148 unrolled greedy over the q147 funnel — same steps,

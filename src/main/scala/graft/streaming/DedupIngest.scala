@@ -63,40 +63,17 @@ object DedupIngest {
   def ingestBatch(batch: DataFrame, batchId: Long, storeDir: String,
       assignDir: String, numHashes: Int, bandRows: Int, maxBucket: Long,
       minJaccard: Double): Unit = {
-    val spark = batch.sparkSession
-    def tableOr(dir: String, empty: => DataFrame): DataFrame =
-      IngestState.tableOr(spark, dir, empty)
     val batchDocs = batch.select(col("doc_id"), col("text"))
     // computed ONCE (eager checkpoint): pairing and the store publish both
     // read the same materialized signatures
     val batchSigs = DedupOps.signaturesOf(batchDocs, numHashes)
       .localCheckpoint(eager = true)
-    // a REPLAYED batch's own rows may already sit in the store — exclude
-    // this batch's subdir from the corpus side so replay pairs against the
-    // same store state as the original run
-    val priorDirs = IngestState.listBatchDirs(spark, storeDir)
-      .filterNot(_.endsWith(s"batch=$batchId"))
-    val store =
-      if (priorDirs.isEmpty) batchSigs.limit(0) // bootstrap: batch vs itself
-      else spark.read.parquet(priorDirs: _*)
-    val pairs = DedupOps.lshPairsFromSigs(store, batchSigs,
-      numHashes, bandRows, maxBucket, minJaccard)
-    val oldAssign = tableOr(assignDir,
-      batchDocs.select(col("doc_id").as("id"),
-        col("doc_id").as("component")).limit(0))
-    val vertices = oldAssign.select(col("id"))
-      .union(batchDocs.select(col("doc_id"))).distinct()
-    // materialize BEFORE touching the table it reads from
-    val newAssign = ConnectedComponents.incremental(
-        oldAssign, pairs.select(col("doc_a"), col("doc_b")), vertices)
-      .localCheckpoint(eager = true)
-    // atomic publish: write beside, rename into place — a crash mid-write
-    // leaves the previous assignment intact
-    graft.export.Exporter.atomically(assignDir, marker = false) { tmp =>
-      newAssign.write.mode("overwrite").parquet(tmp)
+    IngestState.foldAndPublish(batchSigs, batchDocs.select(col("doc_id")),
+        batchId, storeDir, assignDir) { store =>
+      DedupOps.lshPairsFromSigs(store, batchSigs,
+        numHashes, bandRows, maxBucket, minJaccard)
+        .select(col("doc_a"), col("doc_b"))
     }
-    // idempotent store publish: deterministic per-batch subdir + overwrite
-    batchSigs.write.mode("overwrite").parquet(s"$storeDir/batch=$batchId")
   }
 
 }

@@ -64,30 +64,17 @@ object FingerprintIngest {
       storeDir: String, assignDir: String,
       hasher: Dataset[MediaRecord] => DataFrame, totalBits: Int,
       bandBits: Int, maxHamming: Int, maxBucket: Long): Unit = {
-    val spark = batch.sparkSession
     HammingPairs.requireExact(totalBits, bandBits, maxHamming)
     // fingerprint ONCE (eager): pairing and the store publish both read
     // the same materialized hashes; normalized (id, h) store row format
     val batchHashes = hasher(batch).toDF("id", "h")
       .localCheckpoint(eager = true)
-    val priorDirs = IngestState.listBatchDirs(spark, storeDir)
-      .filterNot(_.endsWith(s"batch=$batchId"))
-    val store =
-      if (priorDirs.isEmpty) batchHashes.limit(0)
-      else spark.read.parquet(priorDirs: _*)
-    val pairs = HammingPairs.pairsIncremental(store, batchHashes,
-      "id", "h", totalBits, bandBits, maxHamming, maxBucket)
-    val batchIds = batchHashes.select(col("id"))
-    val oldAssign = IngestState.tableOr(spark, assignDir,
-      batchIds.select(col("id"), col("id").as("component")).limit(0))
-    val vertices = oldAssign.select(col("id")).union(batchIds).distinct()
-    val newAssign = ConnectedComponents.incremental(
-        oldAssign, pairs.select(col("id_a"), col("id_b")), vertices)
-      .localCheckpoint(eager = true)
-    graft.export.Exporter.atomically(assignDir, marker = false) { tmp =>
-      newAssign.write.mode("overwrite").parquet(tmp)
+    IngestState.foldAndPublish(batchHashes, batchHashes.select(col("id")),
+        batchId, storeDir, assignDir) { store =>
+      HammingPairs.pairsIncremental(store, batchHashes,
+        "id", "h", totalBits, bandBits, maxHamming, maxBucket)
+        .select(col("id_a"), col("id_b"))
     }
-    batchHashes.write.mode("overwrite").parquet(s"$storeDir/batch=$batchId")
   }
 
 }

@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * ran corpus scans) flagged by two judges. Now every scalar rides in as
   * a broadcast 1-row cross join; this spec keeps it that way. It also
   * pins the job counts of the ANN serving pipeline's builders and store
-  * serve (see the tests below).
+  * serves (see the tests below).
   *
   * Counting is deterministic: [[graft.core.Meter]] drains the listener
   * bus before and after the builder, so a reintroduced eager job is always
@@ -75,5 +75,22 @@ class JobCountSpec extends AnyFunSuite {
       assert(got.collect().toSeq === want)
       assert(c.jobs === 4, s"adcProbeServe ran ${c.jobs} Spark jobs")
     } finally graft.export.Exporter.deleteRecursively(base)
+  }
+
+  // q152's sq8 store serve with the centroids warm and its Sq8Serve entry
+  // absent: the store write, the probe collect, and the eager checkpoints
+  // of the top-R cut and of the result. The probed cells are driver
+  // arithmetic over the collected probes (nearestCellsLocal); the retired
+  // spelling checkpointed an array_sort probe frame and collected its
+  // distinct cells (13 jobs on this corpus).
+  test("a q152 sq8 store serve runs 11 jobs with warm centroids") {
+    import graft.queries.{ArtifactCache, SimilarityOps}
+    val q = "q152_ann_sq8_store"
+    val want = SparkEntry.queries(q)(spark, sf).collect().toSeq
+    ArtifactCache.remove(spark, sf, SimilarityOps.Sq8Serve)
+    val (got, c) = graft.core.Meter.measure(spark)(
+      SparkEntry.queries(q)(spark, sf))
+    assert(got.collect().toSeq === want)
+    assert(c.jobs === 11, s"q152 serve ran ${c.jobs} Spark jobs")
   }
 }
