@@ -327,8 +327,9 @@ object Lint {
     // Derive every model ONCE, in topological order with temp views
     // registered as we go — exactly the resolution environment a real run
     // gives each model — so SQL models mid-DAG lint against their
-    // upstreams instead of failing on a missing view. Derivation is
-    // planning-only (no jobs for lazy frames). A model that still cannot
+    // upstreams instead of failing on a missing view. Derivation plans
+    // lazy frames; the only jobs are a lake-backed raw view's manifest
+    // pass over files it has not seen. A model that still cannot
     // derive is itself a finding, not a silent skip; only NonFatal is
     // caught — OOM/interrupts must propagate.
     val derived: Seq[(Model, Either[String, DataFrame])] =

@@ -1,8 +1,12 @@
 package graft.models
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, expr}
+import org.apache.spark.unsafe.types.UTF8String
 import graft.core._
-import graft.sources.LakeReader
+import graft.operators.DriverTier
+import graft.queries.ArtifactCache
+import graft.sources.{LakeManifest, SchemaEnforcement}
 
 /** The reference's warehouse catalog — 11 raw views, 11 bronze incremental
   * models, 6 geometadb compatibility views, 1 mart — re-expressed for Spark.
@@ -32,39 +36,102 @@ object OmicidxModels {
     ("samples", "SAMPLE"), ("studies", "STUDY"))
 
   /** Production raw-source bindings: parquet/NDJSON globs under dataRoot
-    * (`src_sra_experiments.sql:36`, `src_geo_samples.sql:36`).
+    * (`src_sra_experiments.sql:36`, `src_geo_samples.sql:36`), each read
+    * through its [[LakeManifest]] under
+    * `<warehouseDir>/meta/lake_manifest/<source>/`.
     *
     * Every entity with a pinned [[DomainSchemas]] schema is read AGAINST
     * it: NDJSON reads parse with the declared StructType (an all-null
     * month can't drift a column to string), parquet reads are conformed
     * post-scan (missing columns become typed nulls, drifted types cast
     * back, null lists normalize to []) — the reference's Arrow-schema
-    * guarantee (`sra/extract.py:584-591`). NCBI biosample/bioproject have
-    * no pinned schema in the reference snapshot and keep by-name union. */
+    * guarantee (`sra/extract.py:584-591`). A parquet scan's own schema is
+    * the manifest's per-file footer schemas merged by Spark's merge rule:
+    * what `mergeSchema` inference finds, with no inference job. NCBI
+    * biosample/bioproject have no pinned schema in the reference snapshot
+    * and keep that by-name union as their view's schema.
+    *
+    * Each view reads only the files that can hold a row of the
+    * `[start_ds, end_ds]` window:
+    *  - a timed source, the files whose `CAST(<col> AS DATE)` range — the
+    *    bronze model's own window expression — meets the window;
+    *  - an SRA detail source, the files whose `accession` range holds an
+    *    accession of the window's spine rows of its `Type`, collected once
+    *    per window and lake ([[windowAccessions]]).
+    * A file with no usable range is always read. */
   def lakeSources: Map[String, (SparkSession, EngineConfig) => DataFrame] = {
-    val parquetOf = (name: String, rel: String) =>
+    def manifest(s: SparkSession, c: EngineConfig, name: String, rel: String,
+        prune: LakeManifest.Prune) = {
+      val pinned = DomainSchemas.byRawSource.get(name)
+      val format =
+        if (rel.endsWith(".ndjson.gz")) LakeManifest.Json(pinned.get)
+        else LakeManifest.Parquet(pinned)
+      LakeManifest(s, s"${c.dataRoot}/$rel",
+        s"${c.warehouseDir}/meta/lake_manifest/$name", format, prune)
+    }
+    def view(m: LakeManifest, chosen: Seq[LakeManifest.Entry]) = {
+      val df = m.read(chosen)
+      m.format match {
+        case LakeManifest.Parquet(Some(pin)) => SchemaEnforcement.normalize(df, pin)
+        case _ => df
+      }
+    }
+    val timed = (name: String, rel: String, column: String) =>
       name -> ((s: SparkSession, c: EngineConfig) => {
-        val df = LakeReader.parquetGlob(s, s"${c.dataRoot}/$rel")
-        DomainSchemas.byRawSource.get(name)
-          .map(graft.sources.SchemaEnforcement.normalize(df, _))
-          .getOrElse(df)
+        val m = manifest(s, c, name, rel, LakeManifest.DateOf(column))
+        view(m, m.meeting(c.startDs, c.endDs))
       })
-    val jsonOf = (name: String, rel: String) =>
-      name -> ((s: SparkSession, c: EngineConfig) =>
-        LakeReader.ndjsonGlob(s, s"${c.dataRoot}/$rel",
-          DomainSchemas.byRawSource.get(name)))
+    val spine = timed("src_sra_accessions", SpineGlob, "Updated")
+    val detail = (name: String, rel: String, typ: String) =>
+      name -> ((s: SparkSession, c: EngineConfig) => {
+        val m = manifest(s, c, name, rel, LakeManifest.ValueOf("accession"))
+        view(m, windowAccessions(s, c, spine._2)
+          .fold(m.entries)(byType => m.holding(byType.getOrElse(typ, Vector.empty))))
+      })
     Map(
-      parquetOf("src_sra_accessions", "sra/sra_accessions.parquet"),
-      parquetOf("src_sra_experiments", "sra/*experiment*.parquet"),
-      parquetOf("src_sra_runs", "sra/*run*.parquet"),
-      parquetOf("src_sra_samples", "sra/*sample*.parquet"),
-      parquetOf("src_sra_studies", "sra/*study*.parquet"),
-      jsonOf("src_geo_samples", "geo/gsm*.ndjson.gz"),
-      jsonOf("src_geo_series", "geo/gse*.ndjson.gz"),
-      jsonOf("src_geo_platforms", "geo/gpl*.ndjson.gz"),
-      parquetOf("src_ncbi_biosample", "biosample/biosample*.parquet"),
-      parquetOf("src_ncbi_bioproject", "biosample/bioproject*.parquet"),
-      parquetOf("src_ebi_biosample", "ebi_biosample/*.parquet"))
+      spine,
+      detail("src_sra_experiments", "sra/*experiment*.parquet", "EXPERIMENT"),
+      detail("src_sra_runs", "sra/*run*.parquet", "RUN"),
+      detail("src_sra_samples", "sra/*sample*.parquet", "SAMPLE"),
+      detail("src_sra_studies", "sra/*study*.parquet", "STUDY"),
+      timed("src_geo_samples", "geo/gsm*.ndjson.gz", "last_update_date"),
+      timed("src_geo_series", "geo/gse*.ndjson.gz", "last_update_date"),
+      timed("src_geo_platforms", "geo/gpl*.ndjson.gz", "last_update_date"),
+      timed("src_ncbi_biosample", "biosample/biosample*.parquet", "last_update"),
+      timed("src_ncbi_bioproject", "biosample/bioproject*.parquet", "release_date"),
+      timed("src_ebi_biosample", "ebi_biosample/*.parquet", "update"))
+  }
+
+  private val SpineGlob = "sra/sra_accessions.parquet"
+
+  private val WindowAccessions =
+    new ArtifactCache.Kind[Option[Map[String, IndexedSeq[UTF8String]]]](
+      "window spine accessions")
+
+  /** The accessions of the spine rows in the window, by `Type`, each list
+    * sorted in Spark's string order: the join keys the SRA staging models
+    * can keep. Built once per (lake listing, window) and shared by the four
+    * detail views; None past [[DriverTier.SpineAccessionsMax]], where every
+    * detail file is read. */
+  private def windowAccessions(s: SparkSession, c: EngineConfig,
+      spine: (SparkSession, EngineConfig) => DataFrame)
+      : Option[Map[String, IndexedSeq[UTF8String]]] = {
+    val files = LakeManifest.listing(s, s"${c.dataRoot}/$SpineGlob").map(f =>
+      (f.getPath.toString, f.getLen, f.getModificationTime))
+    ArtifactCache(s, c.warehouseDir, WindowAccessions, c.dataRoot, c.startDs,
+        c.endDs, files) {
+      val rows = spine(s, c)
+        .where(expr(s"""CAST(Updated AS DATE)
+          BETWEEN DATE '${c.startDs}' AND DATE '${c.endDs}'"""))
+        .where(col("Type").isin(sraEntities.map(_._2): _*) &&
+          col("Accession").isNotNull)
+        .select("Type", "Accession")
+        .limit(DriverTier.probeLimit(DriverTier.SpineAccessionsMax)).collect()
+      if (rows.length > DriverTier.SpineAccessionsMax) None
+      else Some(rows.groupBy(_.getString(0)).map { case (t, rs) =>
+        t -> rs.map(r => UTF8String.fromString(r.getString(1))).sorted.toIndexedSeq
+      })
+    }
   }
 
   /** Full catalog, with raw sources bound to the given builders. */
@@ -76,8 +143,13 @@ object OmicidxModels {
     // schema in the reference snapshot) — waived from the star-expansion
     // lint instead of silently passing it.
     val unpinned = Set("src_ncbi_biosample", "src_ncbi_bioproject")
+    // the SRA detail views are pruned by the window's spine accessions
+    // (lakeSources), so they are derived after the spine view
+    val spine = "src_sra_accessions"
     val raw = sources.map { case (name, fn) =>
       Model(name, layer = "raw", build = Some(fn),
+        dependsOn = if (sources.contains(spine) &&
+          sraEntities.exists(e => name == s"src_sra_${e._1}")) Seq(spine) else Nil,
         description = s"raw view over lake files: $name",
         pinnedSchema = DomainSchemas.byRawSource.get(name),
         lintWaivers =

@@ -22,7 +22,14 @@ object LakeReader {
     * any Hadoop filesystem scheme (`file://`, `hdfs://`, `s3a://`, …) —
     * every reader here resolves through the Hadoop FileSystem API, so
     * remote lakes need only the scheme's connector jar + [[remoteFs]]
-    * configs, not engine changes. */
+    * configs, not engine changes.
+    *
+    * `mergeSchema` inference runs a job that opens every footer on every
+    * call. The warehouse's raw views do not read through here: they read
+    * through a [[LakeManifest]], whose per-file footer schemas are merged
+    * by the same rule, in path order, with no job, and which opens only the
+    * files of the refresh window
+    * ([[graft.models.OmicidxModels.lakeSources]]). */
   def parquetGlob(spark: SparkSession, glob: String): DataFrame =
     spark.read.option("mergeSchema", "true").parquet(glob)
 

@@ -1,22 +1,35 @@
 package graft.sources
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.io.api.Binary
+import org.apache.parquet.schema.LogicalTypeAnnotation
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.ParquetSchemas
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.unsafe.types.UTF8String
+
+import graft.operators.DriverTier
 
 import scala.jdk.CollectionConverters._
+import scala.reflect.ClassTag
 
 /** S3 operator: the reference's `parquet_metadata('<glob>')` — one row per
   * (file, row group) with size/row statistics (`omicidx_etl/catalog.py:43-58`)
   * — implemented over parquet-hadoop footers.
   *
   * Footer reads are metadata-only (a few KB per file, no data pages). The
-  * file list is enumerated on the driver but footers are read IN PARALLEL on
-  * executors via a parallelized file-name RDD, so cataloging a 100k-file lake
-  * distributes instead of looping on the driver.
+  * file list is enumerated on the driver. Two tiers read the footers: up to
+  * `driverMax` files ([[DriverTier.FooterFilesMax]] by default) are read on
+  * the driver, one after another, with no Spark job; more are read IN
+  * PARALLEL on executors via a parallelized file-name RDD, so cataloging a
+  * 100k-file lake distributes instead of looping on the driver.
   */
 object ParquetFooterMeta {
 
@@ -29,24 +42,48 @@ object ParquetFooterMeta {
       num_columns: Int,
       created_by: String)
 
+  /** One file's footer as the lake manifest keeps it: the schema
+    * `mergeSchema` inference reads from it, its row count, and the
+    * [min, max] of each top-level string column whose row groups all carry
+    * statistics. The bounds are parquet's own, ordered as unsigned bytes —
+    * Spark's string order — so a value outside them is in no row of the
+    * file. A column whose statistics are missing, or whose values are all
+    * null, has no entry. */
+  final case class FileMeta(path: String, schema: StructType, rows: Long,
+      stringRanges: Map[String, (String, String)])
+
   /** Row groups of the parquet files `glob` names. `keep` filters the
     * glob's matches before any footer is opened. */
   def apply(spark: SparkSession, glob: String,
-      keep: Path => Boolean = _ => true): DataFrame = {
-    import spark.implicits._
-    footers(spark, files(spark, glob, keep)).toDF()
+      keep: Path => Boolean = _ => true,
+      driverMax: Int = DriverTier.FooterFilesMax): DataFrame = {
+    val matched = files(spark, glob, keep)
+    if (matched.size <= driverMax)
+      spark.createDataFrame(onDriver(spark, matched)(rowGroups))
+    else spark.createDataFrame(inJob(spark, matched)(rowGroups))
   }
 
   /** Total row count of the parquet files `glob` names (filtered by
     * `keep`), from footers alone — the post-write row count a
     * materialization reports without re-scanning the data it just wrote
     * (footers are a few KB per file vs a full second read of the table).
-    * One job, no shuffle; none when nothing matches. */
+    * No job for a handful of files or none; one job, no shuffle, past
+    * that. */
   def rowCount(spark: SparkSession, glob: String,
-      keep: Path => Boolean = _ => true): Long = {
+      keep: Path => Boolean = _ => true,
+      driverMax: Int = DriverTier.FooterFilesMax): Long = {
     val matched = files(spark, glob, keep)
-    if (matched.isEmpty) 0L
-    else footers(spark, matched).map(_.num_rows).fold(0L)(_ + _)
+    if (matched.size <= driverMax)
+      onDriver(spark, matched)(rowGroups).map(_.num_rows).sum
+    else inJob(spark, matched)(rowGroups).map(_.num_rows).fold(0L)(_ + _)
+  }
+
+  /** The [[FileMeta]] of each of `paths`, in their order. */
+  def fileMetas(spark: SparkSession, paths: Seq[String]): Seq[FileMeta] = {
+    val conf = ParquetSchemas.conf(spark)
+    val read = (p: String, m: ParquetMetadata) => Seq(fileMeta(conf, p, m))
+    if (paths.size <= DriverTier.FooterFilesMax) onDriver(spark, paths)(read)
+    else inJob(spark, paths)(read).collect().toSeq
   }
 
   private def files(spark: SparkSession, glob: String,
@@ -67,7 +104,66 @@ object ParquetFooterMeta {
     }
   }
 
-  private def footers(spark: SparkSession, files: Seq[String]): RDD[RowGroupMeta] = {
+  private def rowGroups(f: String, footer: ParquetMetadata): Seq[RowGroupMeta] = {
+    val createdBy = footer.getFileMetaData.getCreatedBy
+    footer.getBlocks.asScala.toSeq.zipWithIndex.map { case (bg, i) =>
+      RowGroupMeta(f, i, bg.getRowCount, bg.getTotalByteSize,
+        bg.getCompressedSize, bg.getColumns.size(), createdBy)
+    }
+  }
+
+  private def fileMeta(conf: SQLConf, f: String,
+      footer: ParquetMetadata): FileMeta = {
+    val blocks = footer.getBlocks.asScala.toSeq.filter(_.getRowCount > 0)
+    val strings = footer.getFileMetaData.getSchema.getFields.asScala.collect {
+      case t if t.isPrimitive &&
+          t.asPrimitiveType.getPrimitiveTypeName == PrimitiveTypeName.BINARY &&
+          t.getLogicalTypeAnnotation == LogicalTypeAnnotation.stringType() =>
+        t.getName
+    }
+    // per row group: Some(None) = every value null, None = no statistics
+    def bounds(name: String): Seq[Option[Option[(Binary, Binary)]]] =
+      blocks.map { b =>
+        b.getColumns.asScala.find(c =>
+            c.getPath.size == 1 && c.getPath.toArray.head == name)
+          .map(_.getStatistics).flatMap {
+            case null => None
+            case st if st.hasNonNullValue => Some(Some(
+              (st.genericGetMin.asInstanceOf[Binary],
+                st.genericGetMax.asInstanceOf[Binary])))
+            case st if st.isNumNullsSet && st.getNumNulls == b.getRowCount =>
+              Some(None)
+            case _ => None
+          }
+      }
+    def utf8(b: Binary) = UTF8String.fromBytes(b.getBytes)
+    val ranges = strings.flatMap { name =>
+      val bs = bounds(name)
+      if (bs.exists(_.isEmpty)) None
+      else bs.flatten.flatten match {
+        case Seq() => None
+        case rs => Some(name -> (rs.map(r => utf8(r._1)).min.toString,
+          rs.map(r => utf8(r._2)).max.toString))
+      }
+    }.toMap
+    FileMeta(f, ParquetSchemas.ofFooter(conf, f, footer),
+      blocks.map(_.getRowCount).sum, ranges)
+  }
+
+  private def readFooter[T](conf: Configuration, f: String)(
+      use: ParquetMetadata => T): T = {
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(f), conf))
+    try use(reader.getFooter) finally reader.close()
+  }
+
+  private def onDriver[T](spark: SparkSession, files: Seq[String])(
+      f: (String, ParquetMetadata) => Seq[T]): Seq[T] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    files.flatMap(p => readFooter(conf, p)(f(p, _)))
+  }
+
+  private def inJob[T: ClassTag](spark: SparkSession, files: Seq[String])(
+      f: (String, ParquetMetadata) => Seq[T]): RDD[T] = {
     val serializableConfItems = spark.sparkContext.hadoopConfiguration
       .iterator().asScala.map(e => e.getKey -> e.getValue).toList
     val n = math.max(1, math.min(files.length, 64))
@@ -76,18 +172,7 @@ object ParquetFooterMeta {
       .mapPartitions { paths =>
         val conf = new Configuration(false)
         serializableConfItems.foreach { case (k, v) => conf.set(k, v) }
-        paths.flatMap { f =>
-          val in = HadoopInputFile.fromPath(new Path(f), conf)
-          val reader = ParquetFileReader.open(in)
-          try {
-            val footer = reader.getFooter
-            val createdBy = footer.getFileMetaData.getCreatedBy
-            footer.getBlocks.asScala.zipWithIndex.map { case (bg, i) =>
-              RowGroupMeta(f, i, bg.getRowCount, bg.getTotalByteSize,
-                bg.getCompressedSize, bg.getColumns.size(), createdBy)
-            }.toList
-          } finally reader.close()
-        }
+        paths.flatMap(p => readFooter(conf, p)(f(p, _)))
       }
   }
 }

@@ -93,4 +93,21 @@ class JobCountSpec extends AnyFunSuite {
     assert(got.collect().toSeq === want)
     assert(c.jobs === 11, s"q152 serve ran ${c.jobs} Spark jobs")
   }
+
+  // A raw parquet view whose files the lake manifest already holds is
+  // planned from the manifest alone: its schema is the merged footer
+  // schemas (no mergeSchema inference job), its files are chosen from the
+  // manifest's ranges, and the manifest is read on the driver.
+  for (src <- Seq("src_sra_accessions", "src_ncbi_biosample"))
+    test(s"$src builds with zero jobs once its files are in the lake manifest") {
+      val lake = java.nio.file.Files.createTempDirectory("jobs_lake").toString
+      graft.tools.MakeDemoLake.write(spark, lake)
+      val cfg = graft.core.EngineConfig(lake,
+        java.nio.file.Files.createTempDirectory("jobs_wh").toString, "/none")
+      val build = graft.models.OmicidxModels.lakeSources(src)
+      build(spark, cfg) // manifests the lake's files
+      val (df, c) = graft.core.Meter.measure(spark)(build(spark, cfg))
+      assert(c.jobs === 0L, s"$src ran ${c.jobs} Spark jobs")
+      assert(df.inputFiles.nonEmpty)
+    }
 }

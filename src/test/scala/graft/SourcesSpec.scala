@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.functions._
 import graft.sources.{LakeReader, ParquetFooterMeta, SchemaEnforcement, Tables}
@@ -209,13 +209,130 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("parquet footer metadata matches actual row counts") {
-    val meta = ParquetFooterMeta(spark, "/root/testdata/sf0.001/*.parquet")
-    val byFile = meta.groupBy("file_name").agg(sum("num_rows").as("n"))
-      .as[(String, Long)].collect().toMap
-    val li = byFile.find(_._1.contains("lineitem")).get._2
-    assert(li === Tables(spark, "/root/testdata/sf0.001", "lineitem").count())
-    assert(byFile.size === 10)
-    assert(meta.columns.contains("total_compressed_size"))
+    val sf = SparkTestBase.testData("0.001")
+    val glob = s"$sf/*.parquet"
+    // driverMax 0 reads every footer in a Spark job; the default reads
+    // these 10 files' footers on the driver
+    val tiers = Seq(0, graft.operators.DriverTier.FooterFilesMax).map { max =>
+      val meta = ParquetFooterMeta(spark, glob, driverMax = max)
+      assert(meta.columns.contains("total_compressed_size"))
+      val byFile = meta.groupBy("file_name").agg(sum("num_rows").as("n"))
+        .as[(String, Long)].collect().toMap
+      val li = byFile.find(_._1.contains("lineitem")).get._2
+      assert(li === Tables(spark, sf, "lineitem").count())
+      assert(byFile.size === 10)
+      assert(ParquetFooterMeta.rowCount(spark, glob, driverMax = max) ===
+        byFile.values.sum)
+      meta.collect().toSet
+    }
+    assert(tiers(0) === tiers(1))
+    val jobs = graft.core.Meter.measure(spark)(
+      ParquetFooterMeta.rowCount(spark, glob))._2.jobs
+    assert(jobs === 0L, "a handful of footers is read on the driver")
+  }
+
+  // ---- lake manifest (OmicidxModels.lakeSources) ----------------------
+
+  private def lakeCfg(lake: String, wh: String, from: Int, to: Int) =
+    EngineConfig(lake, wh, "/none", Map(
+      "start_ds" -> LakeFixture.date(from).toString,
+      "end_ds" -> LakeFixture.date(to).toString))
+
+  private def rawView(name: String, c: EngineConfig) =
+    OmicidxModels.lakeSources(name)(spark, c)
+
+  private def tmp(prefix: String) = Files.createTempDirectory(prefix).toString
+
+  test("lake manifest: a file landed late that holds old Updated values is still read") {
+    val (lake, wh) = (tmp("late_lake"), tmp("late_wh"))
+    (0 to 2).foreach(LakeFixture.landDay(spark, lake, _))
+    val day1 = lakeCfg(lake, wh, 1, 1)
+    def accessions(name: String, col: String) =
+      rawView(name, day1).select(col).as[String].collect().toSet
+    assert(accessions("src_sra_accessions", "Accession").size === 4)
+    assert(rawView("src_sra_accessions", day1).inputFiles.length === 1,
+      "the day-1 window opens the one day-1 spine file")
+    // lands after day 2, named after it, but its rows are of day 1
+    val late = LakeFixture.accession(1, 99)
+    LakeFixture.writeFile(
+      LakeFixture.spine(spark, Seq(late -> s"${LakeFixture.date(1)} 23:00:00")),
+      java.nio.file.Paths.get(lake, "sra", "sra_accessions.parquet", "part-0009.parquet"))
+    LakeFixture.writeFile(Seq(late).toDF("accession"),
+      java.nio.file.Paths.get(lake, "sra", "meta-experiment-0009.parquet"))
+    assert(accessions("src_sra_accessions", "Accession").contains(late))
+    assert(accessions("src_sra_experiments", "accession").contains(late))
+    assert(rawView("src_sra_experiments", day1).inputFiles.length === 2,
+      "day 1's detail file and the late one")
+  }
+
+  test("lake manifest: a file rewritten in place is manifested again") {
+    val (lake, wh) = (tmp("rewrite_lake"), tmp("rewrite_wh"))
+    val file = java.nio.file.Paths.get(lake, "sra", "sra_accessions.parquet", "part-0000.parquet")
+    LakeFixture.writeFile(LakeFixture.spine(spark,
+      Seq("SRX1" -> s"${LakeFixture.date(0)} 10:00:00")), file)
+    assert(rawView("src_sra_accessions", lakeCfg(lake, wh, 0, 0)).count() === 1L)
+    val day2 = lakeCfg(lake, wh, 2, 2)
+    assert(rawView("src_sra_accessions", day2).count() === 0L)
+    val before = Files.getLastModifiedTime(file).toMillis
+    LakeFixture.writeFile(LakeFixture.spine(spark, Seq(
+      "SRX1" -> s"${LakeFixture.date(2)} 10:00:00",
+      "SRX2" -> s"${LakeFixture.date(2)} 11:00:00")), file)
+    // a rewrite in the same clock tick still shows a new modification time
+    Files.setLastModifiedTime(file,
+      java.nio.file.attribute.FileTime.fromMillis(before + 5000))
+    assert(rawView("src_sra_accessions", day2).count() === 2L)
+  }
+
+  test("lake manifest: merged schema equals mergeSchema inference, and normalize output is identical, on a drifted lake") {
+    val (lake, wh) = (tmp("drift_lake"), tmp("drift_wh"))
+    val base = Seq(("SAMEA1", "one", "2024-01-05T10:00:00.000Z", 9606L),
+        ("SAMEA2", "two", "2024-01-06T10:00:00.000Z", 10090L))
+      .toDF("accession", "name", "update", "taxId")
+    def land(df: DataFrame, dir: String, name: String) = LakeFixture.writeFile(
+      df, java.nio.file.Paths.get(lake, dir, name))
+    // a column added later, and a month where `name` is absent
+    land(base.drop("taxId"), "ebi_biosample", "samples-01.parquet")
+    land(base, "ebi_biosample", "samples-02.parquet")
+    land(base.drop("name"), "ebi_biosample", "samples-03.parquet")
+    val prj = Seq(("PRJ1", "2024-01-05 10:00:00")).toDF("accession", "release_date")
+    land(prj, "biosample", "bioproject-01.parquet")
+    land(prj.withColumn("title", lit("t")), "biosample", "bioproject-02.parquet")
+    land(prj.withColumn("data_types", lit("genome")).drop("release_date")
+      .withColumn("release_date", lit("2024-01-07")), "biosample", "bioproject-03.parquet")
+    val all = EngineConfig(lake, wh, "/none")
+    def inferred(rel: String) =
+      spark.read.option("mergeSchema", "true").parquet(s"$lake/$rel")
+    def rows(df: DataFrame) = df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
+
+    val ebi = inferred("ebi_biosample/*.parquet")
+    val manifest = graft.sources.LakeManifest(spark, s"$lake/ebi_biosample/*.parquet",
+      s"$wh/probe", graft.sources.LakeManifest.Parquet(None),
+      graft.sources.LakeManifest.DateOf("update"))
+    assert(manifest.schema === ebi.schema)
+    val pin = graft.models.DomainSchemas.ebiBiosample
+    val view = rawView("src_ebi_biosample", all)
+    assert(view.schema === SchemaEnforcement.normalize(ebi, pin).schema)
+    assert(rows(view) === rows(SchemaEnforcement.normalize(ebi, pin)))
+    // the unpinned bioproject view is the by-name union itself
+    val bioproject = inferred("biosample/bioproject*.parquet")
+    assert(rawView("src_ncbi_bioproject", all).schema === bioproject.schema)
+    assert(rows(rawView("src_ncbi_bioproject", all)) === rows(bioproject))
+  }
+
+  test("lake manifest: a file whose time column is all null or unparseable is always read") {
+    val (lake, wh) = (tmp("null_lake"), tmp("null_wh"))
+    def land(updates: Seq[String], name: String) = LakeFixture.writeFile(
+      updates.zipWithIndex.map { case (u, i) => (s"SAMEA$i", u) }
+        .toDF("accession", "update"),
+      java.nio.file.Paths.get(lake, "ebi_biosample", name))
+    land(Seq("2024-01-01T10:00:00.000Z"), "samples-01.parquet")
+    land(Seq(null, null), "samples-02.parquet")
+    land(Seq("2024-01-01T10:00:00.000Z", "not a timestamp"), "samples-03.parquet")
+    def read(from: Int, to: Int) = rawView("src_ebi_biosample",
+      lakeCfg(lake, wh, from, to)).inputFiles.map(_.split("/").last).sorted.toSeq
+    assert(read(0, 0) === Seq("samples-01.parquet", "samples-02.parquet",
+      "samples-03.parquet"))
+    assert(read(5, 6) === Seq("samples-02.parquet", "samples-03.parquet"))
   }
 
   test("ISO-8601 Z+millis strings cast to UTC timestamp and date (ebi)") {

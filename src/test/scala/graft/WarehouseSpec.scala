@@ -296,6 +296,65 @@ class WarehouseSpec extends AnyFunSuite {
     assert(refresh("2005-05-29", "2005-05-31", Map("refresh_mode" -> "full"))._1 === 4L)
   }
 
+  // ---- window-bounded lake scans (LakeFixture lake, lake manifest) -----
+
+  private val lakeModels = Seq("stg_sra_experiments", "stg_sra_accessions",
+    "stg_geo_samples")
+
+  /** Runs the lake models (and their raw views) over days [from, to]. */
+  private def runLake(lake: String, wh: String, from: Int, to: Int,
+      vars: Map[String, String] = Map.empty): Seq[RunResult] = {
+    val cfg = EngineConfig(lake, wh, s"$wh/exports", Map(
+      "start_ds" -> LakeFixture.date(from).toString,
+      "end_ds" -> LakeFixture.date(to).toString) ++ vars)
+    val res = new DagRunner(spark, cfg,
+      OmicidxModels.catalog(OmicidxModels.lakeSources)).run(Some(lakeModels))
+    assert(res.forall(_.status == "success"), res.mkString("\n"))
+    res
+  }
+
+  private def bronzeRows(wh: String): Map[String, Seq[String]] =
+    lakeModels.map(m => m -> spark.read.parquet(s"$wh/bronze/$m")
+      .drop("_ds").collect().map(_.toSeq.mkString("|")).sorted.toSeq).toMap
+
+  test("a one-day refresh reads the same lake files and records after 5 and after 15 history days") {
+    val landed = 20
+    def refreshCost(history: Int) = {
+      val lake = Files.createTempDirectory("graft_hist_lake").toString
+      val wh = Files.createTempDirectory("graft_hist_wh").toString
+      (landed - history until landed).foreach(LakeFixture.landDay(spark, lake, _))
+      runLake(lake, wh, landed - history, landed - 1)
+      LakeFixture.landDay(spark, lake, landed)
+      val (res, c) = Meter.measure(spark)(runLake(lake, wh, landed, landed))
+      val files = res.filter(_.layer == "raw")
+        .map(r => spark.table(r.model).inputFiles.length).sum
+      (files, c.inputRecords, res.filter(_.layer == "bronze").map(_.rows).sum)
+    }
+    val (files5, records5, rows5) = refreshCost(5)
+    val (files15, records15, rows15) = refreshCost(15)
+    // the landed day's spine, experiment and GEO files
+    assert(files5 === 3)
+    assert((files15, records15) === ((files5, records5)))
+    assert(rows5 === 12L && rows15 === 12L)
+  }
+
+  test("deleting meta/lake_manifest rebuilds it, with identical bronze rows") {
+    val lake = Files.createTempDirectory("graft_rebuild_lake").toString
+    val wh = Files.createTempDirectory("graft_rebuild_wh").toString
+    (0 to 3).foreach(LakeFixture.landDay(spark, lake, _))
+    runLake(lake, wh, 0, 3)
+    val manifests = java.nio.file.Paths.get(wh, "meta", "lake_manifest")
+    def entries() = Seq("src_sra_accessions", "src_sra_experiments",
+      "src_geo_samples").map(s => new String(Files.readAllBytes(
+        manifests.resolve(s).resolve("entries.jsonl")), "UTF-8"))
+    val (before, rows) = (entries(), bronzeRows(wh))
+    assert(rows.values.forall(_.size == 16))
+    graft.export.Exporter.deleteRecursively(manifests)
+    runLake(lake, wh, 0, 3, Map("refresh_mode" -> "full"))
+    assert(entries() === before)
+    assert(bronzeRows(wh) === rows)
+  }
+
   test("failing audit fails the model") {
     val cfg = EngineConfig("/none",
       Files.createTempDirectory("graft_wh4").toString, "/none")
