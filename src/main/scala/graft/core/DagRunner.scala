@@ -307,8 +307,9 @@ object Lint {
     *
     *  - `Model.pinnedSchema` declared — lint then verifies the DERIVED
     *    frame's schema equals the pin (names + types, in order), which also
-    *    covers reader-supplied schemas (`LakeReader.ndjsonGlob(schema=...)`
-    *    plans a bare scan with no Project: the scan itself IS the pin);
+    *    covers reader-supplied schemas (an NDJSON raw view read with its
+    *    pinned schema plans a bare scan with no Project: the scan itself
+    *    IS the pin);
     *  - an explicit Project in the analyzed plan (`.select`/conform) over
     *    any file-backed scan.
     *

@@ -111,15 +111,17 @@ object OmicidxModels {
   /** The accessions of the spine rows in the window, by `Type`, each list
     * sorted in Spark's string order: the join keys the SRA staging models
     * can keep. Built once per (lake listing, window) and shared by the four
-    * detail views; None past [[DriverTier.SpineAccessionsMax]], where every
-    * detail file is read. */
+    * detail views; building a window's entry drops the warehouse's entries
+    * for other windows, which no later view reads. None past
+    * [[DriverTier.SpineAccessionsMax]], where every detail file is read. */
   private def windowAccessions(s: SparkSession, c: EngineConfig,
       spine: (SparkSession, EngineConfig) => DataFrame)
       : Option[Map[String, IndexedSeq[UTF8String]]] = {
     val files = LakeManifest.listing(s, s"${c.dataRoot}/$SpineGlob").map(f =>
       (f.getPath.toString, f.getLen, f.getModificationTime))
-    ArtifactCache(s, c.warehouseDir, WindowAccessions, c.dataRoot, c.startDs,
-        c.endDs, files) {
+    val window = Seq(c.dataRoot, c.startDs, c.endDs, files)
+    ArtifactCache(s, c.warehouseDir, WindowAccessions, window: _*) {
+      ArtifactCache.retainOnly(s, c.warehouseDir, WindowAccessions, window: _*)
       val rows = spine(s, c)
         .where(expr(s"""CAST(Updated AS DATE)
           BETWEEN DATE '${c.startDs}' AND DATE '${c.endDs}'"""))

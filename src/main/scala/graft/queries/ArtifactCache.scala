@@ -29,7 +29,9 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   *    a full Verify pass on sf0.01 (4 threads) creates 36 entries, each
   *    PlanBaselineSpec test 36, and one perfbench `query_suite` run
   *    (warm-up dir plus one pass dir) 12. 128 holds every artifact of
-  *    three table dirs.
+  *    three table dirs. A kind read only under its latest key (the
+  *    warehouse's window spine accessions) drops its older keys with
+  *    [[retainOnly]], so it holds one entry per dir.
   *  - [[clearAll]] (bench passes, tests, probes: callers with no concurrent
   *    holders) unpersists the checkpoint blocks behind every built
   *    `DataFrame` value, then empties the map, so a pass leaks nothing into
@@ -82,6 +84,14 @@ object ArtifactCache {
   def remove(s: SparkSession, dir: String, kind: Kind[_],
       params: Any*): Unit =
     entries.remove(Key(sessionKey(s), dir, kind, params))
+
+  /** Drop every entry of `kind` for (s, dir) except the one for `params`. */
+  def retainOnly(s: SparkSession, dir: String, kind: Kind[_],
+      params: Any*): Unit = {
+    val session = sessionKey(s)
+    entries.keySet.removeIf(k => k.session == session && k.dir == dir &&
+      k.kind == kind && k.params != params)
+  }
 
   def size: Int = entries.size
 

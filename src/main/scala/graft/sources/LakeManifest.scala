@@ -167,13 +167,13 @@ object LakeManifest {
           entry(f, None, rows, range)
         }
       case Parquet(pinned) =>
-        val metas = ParquetFooterMeta.fileMetas(spark, paths)
         val typed = pinned.flatMap(_.find(_.name == prune.column)).map(_.dataType)
-        val fromFooter: Map[String, (String, String)] = prune match {
-          case ValueOf(c) if typed.forall(_ == StringType) =>
-            metas.flatMap(m => m.stringRanges.get(c).map(m.path -> _)).toMap
-          case _ => Map.empty
-        }
+        val metas = ParquetFooterMeta.fileMetas(spark, paths, prune match {
+          case ValueOf(c) if typed.forall(_ == StringType) => Some(c)
+          case _ => None
+        })
+        val fromFooter: Map[String, (String, String)] =
+          metas.flatMap(m => m.range.map(m.path -> _)).toMap
         val rest = metas.filterNot(m => fromFooter.contains(m.path))
         val scanned = ParquetSchemas.merge(spark, rest.map(_.schema)).fold(
           Map.empty[String, (Long, Option[(String, String)])]) { s =>

@@ -4,34 +4,25 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Lake-file readers: the engine's S1/S2/S5/S6 scan operators
-  * (SURVEY.md §2.1).
+/** Lake-file readers: the engine's S2/S5/S6 scan operators
+  * (SURVEY.md §2.1). Parquet and NDJSON(.gz) globs (S1/S2) are read through
+  * a [[LakeManifest]]: parquet globs merge drifted schemas by column name
+  * (`union_by_name=true` → Spark's `mergeSchema` rule over per-file
+  * footer schemas), NDJSON globs parse with a pinned schema (the reference
+  * pins Arrow schemas, `omicidx_etl/sra/extract.py:53-229`).
   *
-  * Semantics carried over from the reference:
-  *  - parquet globs merge drifted schemas by column name
-  *    (`union_by_name=true` → `mergeSchema`),
-  *  - NDJSON(.gz) globs are schema-unioned by the JSON reader natively; an
-  *    explicit schema can be pinned (the reference pins Arrow schemas,
-  *    `omicidx_etl/sra/extract.py:53-229`),
+  * Semantics carried over from the reference here:
+  *  - ORC globs merge drifted schemas by column name,
+  *  - NDJSON quarantine of torn lines,
   *  - CSV with configurable delimiter + inference
   *    (`omicidx_etl/etl/scimago.py:21`).
+  *
+  * Every path may carry any Hadoop filesystem scheme (`file://`, `hdfs://`,
+  * `s3a://`, …): the readers resolve through the Hadoop FileSystem API, so
+  * remote lakes need only the scheme's connector jar + [[remoteFs]]
+  * configs, not engine changes.
   */
 object LakeReader {
-
-  /** S1: parquet glob scan with by-name schema union. The path may carry
-    * any Hadoop filesystem scheme (`file://`, `hdfs://`, `s3a://`, …) —
-    * every reader here resolves through the Hadoop FileSystem API, so
-    * remote lakes need only the scheme's connector jar + [[remoteFs]]
-    * configs, not engine changes.
-    *
-    * `mergeSchema` inference runs a job that opens every footer on every
-    * call. The warehouse's raw views do not read through here: they read
-    * through a [[LakeManifest]], whose per-file footer schemas are merged
-    * by the same rule, in path order, with no job, and which opens only the
-    * files of the refresh window
-    * ([[graft.models.OmicidxModels.lakeSources]]). */
-  def parquetGlob(spark: SparkSession, glob: String): DataFrame =
-    spark.read.option("mergeSchema", "true").parquet(glob)
 
   /** S5: configure an S3-compatible object store (AWS S3, Cloudflare R2,
     * MinIO) for `s3a://` reads — the engine-side surface of the
@@ -91,15 +82,6 @@ object LakeReader {
     * pruning work identically (stripe/row-group statistics). */
   def orcGlob(spark: SparkSession, glob: String): DataFrame =
     spark.read.option("mergeSchema", "true").orc(glob)
-
-  /** S2: NDJSON(.gz) glob scan; gzip decompressed automatically. Pass a
-    * schema to pin types against drift (all-null columns otherwise infer
-    * as string). */
-  def ndjsonGlob(spark: SparkSession, glob: String,
-      schema: Option[StructType] = None): DataFrame = {
-    val r = spark.read
-    schema.fold(r)(r.schema).json(glob)
-  }
 
   /** NDJSON scan with corrupt-record QUARANTINE: rows that fail to parse
     * against the pinned schema surface as a `_corrupt` column carrying the

@@ -26,10 +26,10 @@ import scala.reflect.ClassTag
   *
   * Footer reads are metadata-only (a few KB per file, no data pages). The
   * file list is enumerated on the driver. Two tiers read the footers: up to
-  * `driverMax` files ([[DriverTier.FooterFilesMax]] by default) are read on
-  * the driver, one after another, with no Spark job; more are read IN
-  * PARALLEL on executors via a parallelized file-name RDD, so cataloging a
-  * 100k-file lake distributes instead of looping on the driver.
+  * [[DriverTier.FooterFilesMax]] files are read on the driver, one after
+  * another, with no Spark job; more are read IN PARALLEL on executors via a
+  * parallelized file-name RDD, so cataloging a 100k-file lake distributes
+  * instead of looping on the driver.
   */
 object ParquetFooterMeta {
 
@@ -44,21 +44,21 @@ object ParquetFooterMeta {
 
   /** One file's footer as the lake manifest keeps it: the schema
     * `mergeSchema` inference reads from it, its row count, and the
-    * [min, max] of each top-level string column whose row groups all carry
-    * statistics. The bounds are parquet's own, ordered as unsigned bytes —
-    * Spark's string order — so a value outside them is in no row of the
-    * file. A column whose statistics are missing, or whose values are all
-    * null, has no entry. */
+    * [min, max] of the top-level string column it was asked for, when every
+    * row group carries that column's statistics. The bounds are parquet's
+    * own, ordered as unsigned bytes — Spark's string order — so a value
+    * outside them is in no row of the file. A column that is not a string,
+    * whose statistics are missing, or whose values are all null, has no
+    * range. */
   final case class FileMeta(path: String, schema: StructType, rows: Long,
-      stringRanges: Map[String, (String, String)])
+      range: Option[(String, String)])
 
   /** Row groups of the parquet files `glob` names. `keep` filters the
     * glob's matches before any footer is opened. */
   def apply(spark: SparkSession, glob: String,
-      keep: Path => Boolean = _ => true,
-      driverMax: Int = DriverTier.FooterFilesMax): DataFrame = {
+      keep: Path => Boolean = _ => true): DataFrame = {
     val matched = files(spark, glob, keep)
-    if (matched.size <= driverMax)
+    if (matched.size <= DriverTier.FooterFilesMax)
       spark.createDataFrame(onDriver(spark, matched)(rowGroups))
     else spark.createDataFrame(inJob(spark, matched)(rowGroups))
   }
@@ -70,18 +70,20 @@ object ParquetFooterMeta {
     * No job for a handful of files or none; one job, no shuffle, past
     * that. */
   def rowCount(spark: SparkSession, glob: String,
-      keep: Path => Boolean = _ => true,
-      driverMax: Int = DriverTier.FooterFilesMax): Long = {
+      keep: Path => Boolean = _ => true): Long = {
     val matched = files(spark, glob, keep)
-    if (matched.size <= driverMax)
+    if (matched.size <= DriverTier.FooterFilesMax)
       onDriver(spark, matched)(rowGroups).map(_.num_rows).sum
     else inJob(spark, matched)(rowGroups).map(_.num_rows).fold(0L)(_ + _)
   }
 
-  /** The [[FileMeta]] of each of `paths`, in their order. */
-  def fileMetas(spark: SparkSession, paths: Seq[String]): Seq[FileMeta] = {
+  /** The [[FileMeta]] of each of `paths`, in their order, with the range of
+    * the string column `rangeOf`, if one is named. */
+  def fileMetas(spark: SparkSession, paths: Seq[String],
+      rangeOf: Option[String]): Seq[FileMeta] = {
     val conf = ParquetSchemas.conf(spark)
-    val read = (p: String, m: ParquetMetadata) => Seq(fileMeta(conf, p, m))
+    val read = (p: String, m: ParquetMetadata) =>
+      Seq(fileMeta(conf, p, m, rangeOf))
     if (paths.size <= DriverTier.FooterFilesMax) onDriver(spark, paths)(read)
     else inJob(spark, paths)(read).collect().toSeq
   }
@@ -112,15 +114,14 @@ object ParquetFooterMeta {
     }
   }
 
-  private def fileMeta(conf: SQLConf, f: String,
-      footer: ParquetMetadata): FileMeta = {
+  private def fileMeta(conf: SQLConf, f: String, footer: ParquetMetadata,
+      rangeOf: Option[String]): FileMeta = {
     val blocks = footer.getBlocks.asScala.toSeq.filter(_.getRowCount > 0)
-    val strings = footer.getFileMetaData.getSchema.getFields.asScala.collect {
-      case t if t.isPrimitive &&
-          t.asPrimitiveType.getPrimitiveTypeName == PrimitiveTypeName.BINARY &&
-          t.getLogicalTypeAnnotation == LogicalTypeAnnotation.stringType() =>
-        t.getName
-    }
+    val fields = footer.getFileMetaData.getSchema.getFields.asScala
+    val string = rangeOf.filter(name => fields.exists(t => t.getName == name &&
+      t.isPrimitive &&
+      t.asPrimitiveType.getPrimitiveTypeName == PrimitiveTypeName.BINARY &&
+      t.getLogicalTypeAnnotation == LogicalTypeAnnotation.stringType()))
     // per row group: Some(None) = every value null, None = no statistics
     def bounds(name: String): Seq[Option[Option[(Binary, Binary)]]] =
       blocks.map { b =>
@@ -137,17 +138,17 @@ object ParquetFooterMeta {
           }
       }
     def utf8(b: Binary) = UTF8String.fromBytes(b.getBytes)
-    val ranges = strings.flatMap { name =>
+    val range = string.flatMap { name =>
       val bs = bounds(name)
       if (bs.exists(_.isEmpty)) None
       else bs.flatten.flatten match {
         case Seq() => None
-        case rs => Some(name -> (rs.map(r => utf8(r._1)).min.toString,
+        case rs => Some((rs.map(r => utf8(r._1)).min.toString,
           rs.map(r => utf8(r._2)).max.toString))
       }
-    }.toMap
+    }
     FileMeta(f, ParquetSchemas.ofFooter(conf, f, footer),
-      blocks.map(_.getRowCount).sum, ranges)
+      blocks.map(_.getRowCount).sum, range)
   }
 
   private def readFooter[T](conf: Configuration, f: String)(

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
   * Maps the reference's raw-view pattern — one view per file glob
   * (`/root/reference/sqlmesh/models/raw/src_sra_experiments.sql:36`) — onto
   * `spark.read.parquet`. Schema-drift unioning (`union_by_name=true` in the
-  * reference) is available via [[LakeReader.parquetGlob]].
+  * reference) is available via [[LakeManifest]].
   */
 object Tables {
   val all: Seq[String] = Seq(

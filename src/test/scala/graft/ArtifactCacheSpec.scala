@@ -71,6 +71,23 @@ class ArtifactCacheSpec extends AnyFunSuite {
     assert(builds.get === 2)
   }
 
+  test("retainOnly drops the kind's other keys on that dir, and nothing else") {
+    val builds = new AtomicInteger
+    def get(dir: String, i: Int): Int = ArtifactCache(spark, dir, Num, "w", i) {
+      builds.incrementAndGet(); i
+    }
+    Seq(1, 2, 3).foreach(get("spec://retain", _))
+    get("spec://retain-other", 1)
+    ArtifactCache.retainOnly(spark, "spec://retain", Num, "w", 3)
+    assert(builds.get === 4)
+    get("spec://retain", 3)
+    get("spec://retain-other", 1)
+    assert(builds.get === 4, "the kept key and the other dir's entry stay")
+    get("spec://retain", 1)
+    get("spec://retain", 2)
+    assert(builds.get === 6, "the dropped keys build again")
+  }
+
   test("overflow drops references only: a returned lazy checkpoint still answers") {
     val lazyFrame = ArtifactCache(spark, "spec://overflow", Frame)(
       spark.range(0, 1000).toDF().localCheckpoint(eager = false))

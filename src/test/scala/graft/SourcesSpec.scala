@@ -4,11 +4,11 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.functions._
-import graft.sources.{LakeReader, ParquetFooterMeta, SchemaEnforcement, Tables}
+import graft.sources.{LakeManifest, LakeReader, ParquetFooterMeta, SchemaEnforcement, Tables}
 import graft.core.EngineConfig
 import graft.models.OmicidxModels
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 /** Scan operators + write-side schema enforcement + timestamp-cast
   * semantics (FIXTURES.md §4, §8). */
@@ -41,32 +41,35 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("ndjson gz glob scan unions drifted schemas by name") {
-    val dir = Files.createTempDirectory("graft_json").toString
-    Seq("""{"a": 1, "b": "x"}""").toDF("value").coalesce(1)
-      .write.option("compression", "gzip").mode("overwrite").text(s"$dir/f1")
-    Seq("""{"a": 2, "c": true}""").toDF("value").coalesce(1)
-      .write.option("compression", "gzip").mode("overwrite").text(s"$dir/f2")
-    // .text writes .txt.gz files; json reader handles the gzip + drift
-    val out = LakeReader.ndjsonGlob(spark, s"$dir/f*/*.gz")
-    assert(out.columns.sorted.toSeq === Seq("a", "b", "c"))
-    assert(out.count() === 2L)
+    val dir = tmp("graft_json")
+    LakeFixture.gzLines(Paths.get(dir, "f1.ndjson.gz"), Seq("""{"a": 1, "b": "x"}"""))
+    LakeFixture.gzLines(Paths.get(dir, "f2.ndjson.gz"), Seq("""{"a": 2, "c": true}"""))
+    val m = LakeManifest(spark, s"$dir/f*.ndjson.gz", s"$dir/manifest",
+      LakeManifest.Json(StructType.fromDDL("a LONG, b STRING, c BOOLEAN")),
+      LakeManifest.DateOf("d"))
+    // no file holds the prune column `d`: both are read for any window
+    val out = m.read(m.meeting("2024-01-01", "2024-01-01"))
+    assert(out.columns.toSeq === Seq("a", "b", "c"))
+    assert(out.orderBy("a").collect().map(_.toSeq).toSeq ===
+      Seq(Seq(1L, "x", null), Seq(2L, null, true)))
   }
 
   test("pinned GEO schema defeats NDJSON drift: all-null month keeps types") {
-    val dir = Files.createTempDirectory("graft_drift").toString
+    val (lake, wh) = (tmp("graft_drift"), tmp("graft_drift_wh"))
     // month 1: full record; month 2: drifted — channel_count,
     // last_update_date and supplemental_files entirely absent
-    Seq("""{"accession":"GSM1","title":"t1","last_update_date":"2005-05-28","channel_count":2,"supplemental_files":["http://x/f.gz"],"channels":[{"source_name":"s1","organism":"hs","molecule":"RNA"}],"contact":{"email":"a@x","name":{"first":"Ada","last":"L"}}}""")
-      .toDF("value").coalesce(1)
-      .write.option("compression", "gzip").mode("overwrite").text(s"$dir/m1")
-    Seq("""{"accession":"GSM2","title":"t2"}""").toDF("value").coalesce(1)
-      .write.option("compression", "gzip").mode("overwrite").text(s"$dir/m2")
+    LakeFixture.gzLines(Paths.get(lake, "geo", "gsm-01.ndjson.gz"), Seq(
+      """{"accession":"GSM1","title":"t1","last_update_date":"2005-05-28","channel_count":2,"supplemental_files":["http://x/f.gz"],"channels":[{"source_name":"s1","organism":"hs","molecule":"RNA"}],"contact":{"email":"a@x","name":{"first":"Ada","last":"L"}}}"""))
+    LakeFixture.gzLines(Paths.get(lake, "geo", "gsm-02.ndjson.gz"),
+      Seq("""{"accession":"GSM2","title":"t2"}"""))
 
-    // unpinned: the drifted glob infers whatever the surviving values allow
-    // — an all-null column would come back string. Pinned: every column
-    // keeps its declared type and absent ones are typed nulls.
-    val pinned = LakeReader.ndjsonGlob(spark, s"$dir/m*/*.gz",
-      Some(graft.models.DomainSchemas.geoSample))
+    // inferred, the drifted glob would type whatever the surviving values
+    // allow — an all-null column would come back string. The raw view
+    // parses with the pinned schema: every column keeps its declared type
+    // and absent ones are typed nulls. Month 2 has no update date, so the
+    // month-1 window reads it too.
+    val pinned = rawView("src_geo_samples", EngineConfig(lake, wh, "/none",
+      Map("start_ds" -> "2005-05-28", "end_ds" -> "2005-05-28")))
     assert(pinned.schema("last_update_date").dataType === DateType)
     assert(pinned.schema("channel_count").dataType === IntegerType)
     assert(pinned.schema("supplemental_files").dataType
@@ -120,8 +123,21 @@ class SourcesSpec extends AnyFunSuite {
   test("scheme-qualified URIs flow through every reader (file://)") {
     // the remote-lake path: same readers, scheme resolved by Hadoop FS.
     // s3a:// needs only the connector jar + LakeReader.remoteFs configs
-    val uri = "file:///root/testdata/sf0.001/region.parquet"
-    assert(graft.sources.LakeReader.parquetGlob(spark, uri).count() === 5L)
+    // a space in the path: `_metadata.file_path` spells it %20
+    val lake = tmp("uri lake")
+    (0 to 2).foreach(LakeFixture.landDay(spark, lake, _))
+    val day1 = lakeCfg(s"file://$lake", tmp("uri_wh"), 1, 1)
+    // one file of each source is read: the spine's and GEO's content-pass
+    // ranges (keyed by `_metadata.file_path`) and the detail file's footer
+    // range were all matched to the file:// listing
+    Seq("src_sra_accessions", "src_sra_experiments", "src_geo_samples")
+      .foreach { name =>
+        val view = rawView(name, day1)
+        assert(view.inputFiles.length === 1, name)
+        assert(view.count() === 4L, name)
+      }
+    assert(ParquetFooterMeta.rowCount(spark,
+      "file:///root/testdata/sf0.001/region.parquet") === 5L)
     graft.sources.LakeReader.remoteFs(spark,
       endpoint = Some("https://example.invalid"), pathStyle = true)
     val h = spark.sparkContext.hadoopConfiguration
@@ -211,24 +227,39 @@ class SourcesSpec extends AnyFunSuite {
   test("parquet footer metadata matches actual row counts") {
     val sf = SparkTestBase.testData("0.001")
     val glob = s"$sf/*.parquet"
-    // driverMax 0 reads every footer in a Spark job; the default reads
-    // these 10 files' footers on the driver
-    val tiers = Seq(0, graft.operators.DriverTier.FooterFilesMax).map { max =>
-      val meta = ParquetFooterMeta(spark, glob, driverMax = max)
-      assert(meta.columns.contains("total_compressed_size"))
-      val byFile = meta.groupBy("file_name").agg(sum("num_rows").as("n"))
-        .as[(String, Long)].collect().toMap
-      val li = byFile.find(_._1.contains("lineitem")).get._2
-      assert(li === Tables(spark, sf, "lineitem").count())
-      assert(byFile.size === 10)
-      assert(ParquetFooterMeta.rowCount(spark, glob, driverMax = max) ===
-        byFile.values.sum)
-      meta.collect().toSet
-    }
-    assert(tiers(0) === tiers(1))
-    val jobs = graft.core.Meter.measure(spark)(
-      ParquetFooterMeta.rowCount(spark, glob))._2.jobs
-    assert(jobs === 0L, "a handful of footers is read on the driver")
+    val meta = ParquetFooterMeta(spark, glob)
+    assert(meta.columns.contains("total_compressed_size"))
+    val byFile = meta.groupBy("file_name").agg(sum("num_rows").as("n"))
+      .as[(String, Long)].collect().toMap
+    val li = byFile.find(_._1.contains("lineitem")).get._2
+    assert(li === Tables(spark, sf, "lineitem").count())
+    assert(byFile.size === 10)
+    val (rows, driver) = graft.core.Meter.measure(spark)(
+      ParquetFooterMeta.rowCount(spark, glob))
+    assert(rows === byFile.values.sum)
+    assert(driver.jobs === 0L, "a handful of footers is read on the driver")
+
+    // past DriverTier.FooterFilesMax files the footers are read in a job
+    val dir = tmp("footer_tiers")
+    val n = graft.operators.DriverTier.FooterFilesMax + 4
+    spark.range(0, n * 10L).repartition(n).write.parquet(s"$dir/t")
+    val many = s"$dir/t/*.parquet"
+    def name(p: String) = p.split("/").last
+    val truth = spark.read.parquet(s"$dir/t").groupBy(input_file_name().as("f"))
+      .count().as[(String, Long)].collect().map(r => name(r._1) -> r._2).toMap
+    assert(truth.size > graft.operators.DriverTier.FooterFilesMax)
+    val (jobRows, job) = graft.core.Meter.measure(spark)(
+      ParquetFooterMeta(spark, many).collect().toSeq)
+    assert(job.jobs >= 1L, "many footers are read in a Spark job")
+    assert(jobRows.groupBy(r => name(r.getAs[String]("file_name")))
+      .map { case (f, rs) => f -> rs.map(_.getAs[Long]("num_rows")).sum } === truth)
+    assert(ParquetFooterMeta.rowCount(spark, many) === n * 10L)
+    // both tiers give the same rows: a few of the same files, on the driver
+    val few = truth.keySet.toSeq.sorted.take(3).toSet
+    val (fewRows, fewRun) = graft.core.Meter.measure(spark)(
+      ParquetFooterMeta(spark, many, p => few(p.getName)).collect().toSet)
+    assert(fewRun.jobs === 0L)
+    assert(fewRows === jobRows.filter(r => few(name(r.getAs[String]("file_name")))).toSet)
   }
 
   // ---- lake manifest (OmicidxModels.lakeSources) ----------------------
