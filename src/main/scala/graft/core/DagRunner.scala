@@ -1,8 +1,11 @@
 package graft.core
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
+import java.nio.charset.StandardCharsets.UTF_8
+import java.security.MessageDigest
 import java.util.concurrent.LinkedBlockingQueue
 import java.util.concurrent.atomic.AtomicBoolean
 import scala.collection.mutable
@@ -53,6 +56,12 @@ final case class StreamStateMetric(
   *   must touch only its own table dir, export path and temp view, and
   *   read other models only through their views.
   * - Audits run post-materialization; a violation fails the model.
+  * - A Table model with an [[ExportSpec]] writes its table once, with the
+  *   export's codec, partitioning and file and row-group sizing. After its
+  *   audits pass, the export is a copy of the table's files, published
+  *   through [[graft.export.Exporter.atomically]]: readers of the export
+  *   dir see the previous export until the swap, and a failed audit or
+  *   copy leaves it in place.
   * - Results come back in `plan` order, and one [[MetaStore.record]]
   *   appends them. With `failFast`, the first model that does not succeed
   *   stops the run: models already running finish, models not yet started
@@ -161,12 +170,20 @@ final class DagRunner(spark: SparkSession, cfg: EngineConfig,
           -1L // views are logical; no rows materialized
         case Materialization.Table =>
           val df = m.derive(spark, cfg)
-          df.write.mode("overwrite").parquet(tablePath(m))
+          val parts = m.export.fold(Seq.empty[String])(_.partitionBy)
+          m.export match {
+            case Some(e) => graft.export.Exporter.parquet(df, tablePath(m),
+              e.compression, e.partitionBy, e.maxRecordsPerFile, e.rowGroupRows)
+            case None => df.write.mode("overwrite").parquet(tablePath(m))
+          }
+          // partition columns read back last: select restores the order
           spark.read.schema(df.schema).parquet(tablePath(m))
+            .select(df.columns.toSeq.map(c => col(s"`$c`")): _*)
             .createOrReplaceTempView(m.name)
           // rows_affected from the written footers — NOT a count() of the
           // view, which would re-scan the table it just materialized
-          graft.sources.ParquetFooterMeta.rowCount(spark, s"${tablePath(m)}/*.parquet")
+          graft.sources.ParquetFooterMeta.rowCount(spark,
+            tablePath(m) + "/*" * parts.size + "/*.parquet")
         case inc: Materialization.IncrementalByTimeRange =>
           val (n, out) = graft.incremental.IntervalRunner
             .refresh(spark, cfg, m, inc)
@@ -179,12 +196,10 @@ final class DagRunner(spark: SparkSession, cfg: EngineConfig,
         if (bad > 0) throw new IllegalStateException(
           s"audit ${a.name} failed: $bad violating rows")
       }
-      // export if requested
-      m.export.foreach { e =>
-        graft.export.Exporter.parquet(spark.table(m.name),
-          s"${cfg.exportDir}/${e.relPath}", e.compression, e.partitionBy,
-          e.maxRecordsPerFile, e.rowGroupRows)
-      }
+      // the table, written once with the export's layout, is published as
+      // a copy of its files
+      m.export.foreach(e => graft.export.Exporter.publishCopy(spark,
+        tablePath(m), s"${cfg.exportDir}/${e.relPath}"))
       RunResult(m.name, m.layer, "success", t0,
         (System.currentTimeMillis() - t0) / 1000.0, rows, None)
     } catch {
@@ -206,27 +221,60 @@ final class DagRunner(spark: SparkSession, cfg: EngineConfig,
 final class MetaStore(spark: SparkSession, dir: String) {
   import spark.implicits._
 
-  /** Appends `results` to `model_runs` and rewrites `model_lineage` and
-    * `model_docs`: three independent writes, run concurrently. */
+  /** Appends `results` to `model_runs`. `model_lineage` and `model_docs`
+    * describe the catalog, which rarely changes between runs: each is
+    * rewritten only when its content differs from the last write, told by
+    * a SHA-256 of that content kept beside the table
+    * (`meta/<table>.sha256`, written through the Hadoop FileSystem API).
+    * A missing table or hash means a rewrite. The writes run
+    * concurrently. */
   def record(results: Seq[RunResult], models: Seq[Model]): Unit = {
-    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val lineage = models.flatMap(m => m.dependsOn.map(d => (m.name, d)))
+    // model_docs: descriptions + grain + kind alongside runs/lineage
+    // (WAREHOUSE.md:268-274 "descriptions, column documentation, tags")
+    val docs = models.map(m => (m.name, m.layer, m.description,
+      m.grain.mkString(","), m.materialization.toString,
+      m.export.map(_.relPath).getOrElse("")))
     val writes = Seq[() => Unit](
-      () => results.toDF().write.mode("append").parquet(s"$dir/meta/model_runs"),
-      () => models.flatMap(m => m.dependsOn.map(d => (m.name, d)))
-        .toDF("model", "depends_on")
-        .write.mode("overwrite").parquet(s"$dir/meta/model_lineage"),
-      // model_docs: descriptions + grain + kind alongside runs/lineage
-      // (WAREHOUSE.md:268-274 "descriptions, column documentation, tags")
-      () => models.map(m => (m.name, m.layer, m.description,
-          m.grain.mkString(","), m.materialization.toString,
-          m.export.map(_.relPath).getOrElse("")))
-        .toDF("model", "layer", "description", "grain", "kind", "export_path")
-        .write.mode("overwrite").parquet(s"$dir/meta/model_docs"))
+      () => results.toDF().write.mode("append").parquet(s"$dir/meta/model_runs")) ++
+      changed("model_lineage", lineage.toDF("model", "depends_on"), lineage) ++
+      changed("model_docs", docs.toDF("model", "layer", "description", "grain",
+        "kind", "export_path"), docs)
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
     val threads = writes.map(w => new Thread(() =>
       try w() catch { case e: Throwable => errors.add(e) }))
     threads.foreach(_.start())
     threads.foreach(_.join())
     Option(errors.peek).foreach(e => throw e)
+  }
+
+  /** The rewrite of `meta/<table>` with `df`, unless the table exists and
+    * its hash file holds the hash of `df`'s schema and `rows`. The hash is
+    * removed before the write and put back after it, so a write that dies
+    * part-way is redone. */
+  private def changed(table: String, df: DataFrame,
+      rows: Seq[Product]): Option[() => Unit] = {
+    val path = new Path(s"$dir/meta/$table")
+    val hashFile = path.suffix(".sha256")
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // every value length-prefixed, so no two contents encode alike
+    val content = (df.schema.json +: rows.flatMap(_.productIterator.map(String.valueOf)))
+      .map(v => s"${v.length}:$v").mkString
+    val hash = MessageDigest.getInstance("SHA-256").digest(content.getBytes(UTF_8))
+      .map("%02x".format(_)).mkString
+    val kept = fs.exists(path) && fs.exists(hashFile) && {
+      val in = fs.open(hashFile)
+      try new String(in.readAllBytes(), UTF_8) == hash
+      finally in.close()
+    }
+    if (kept) None
+    else Some { () =>
+      fs.delete(hashFile, false)
+      df.write.mode("overwrite").parquet(path.toString)
+      val out = fs.create(hashFile, true)
+      try out.write(hash.getBytes(UTF_8))
+      finally out.close()
+    }
   }
 
   def runs: DataFrame = spark.read.parquet(s"$dir/meta/model_runs")

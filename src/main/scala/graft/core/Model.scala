@@ -22,7 +22,9 @@ sealed trait Materialization
 object Materialization {
   /** Logical only: registered as a temp view, inlined into consumers. */
   case object View extends Materialization
-  /** Physical parquet table under `warehouseDir`, re-registered as a view. */
+  /** Physical parquet table under `warehouseDir`, re-registered as a view.
+    * With an [[ExportSpec]] the table is written once, in the export's
+    * layout, and the export is a file copy of it. */
   case object Table extends Materialization
   /** Physical, partitioned by a date column, refreshed per interval with
     * dynamic partition overwrite (INCREMENTAL_BY_TIME_RANGE,
@@ -31,9 +33,12 @@ object Materialization {
       start: String = "2001-01-01") extends Materialization
 }
 
-/** Parquet export request attached to a model
-  * (`EXPORT_DEPLOYMENT.md:224-236`), written by [[graft.export.Exporter.parquet]]:
-  * codec + optional hive partitioning + file/row-group sizing. */
+/** Parquet export request attached to a [[Materialization.Table]] model
+  * (`EXPORT_DEPLOYMENT.md:224-236`): codec + optional hive partitioning +
+  * file/row-group sizing. The model's table is written once, with these
+  * settings, by [[graft.export.Exporter.parquet]]; once its audits pass, the
+  * export at `relPath` under the export dir is a copy of the table's files
+  * ([[graft.export.Exporter.publishCopy]]), never a second write. */
 final case class ExportSpec(
     relPath: String,
     compression: String = "zstd",
@@ -71,6 +76,8 @@ final case class Model(
     lintWaivers: Set[String] = Set.empty) {
   require(sql.isDefined != build.isDefined,
     s"model $name: exactly one of sql/build must be set")
+  require(export.isEmpty || materialization == Materialization.Table,
+    s"model $name: only a Table model exports (the export copies its table)")
   def qualified: String = s"${layer}_$name"
 
   def derive(spark: SparkSession, cfg: EngineConfig): DataFrame =

@@ -1,10 +1,12 @@
 package graft.export
 
+import org.apache.hadoop.fs.{FileUtil, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import graft.sources.ParquetFooterMeta
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.io.IOException
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Paths}
 
 /** Export + catalog layer (SURVEY.md §2.2 K1/K2/K6 and the deployment
   * cataloging flow, `/root/reference/omicidx_etl/catalog.py:16-89`,
@@ -74,16 +76,39 @@ object Exporter {
 
   /** K6: atomic publish — write to `<path>._tmp`, then rename into place,
     * then drop a `.done` JSON marker (the reference's tmp+rename + semaphore
-    * files, `ebi_biosample/extract.py:232-260`). */
-  def atomically(path: String, marker: Boolean = true)(
+    * files, `ebi_biosample/extract.py:232-260`). Runs through the Hadoop
+    * FileSystem of `path`, so a file://, hdfs:// or s3a:// dir publishes
+    * the same way. Readers of `path` see the previous contents until the
+    * swap: the old dir is deleted, then the new one renamed into place. */
+  def atomically(spark: SparkSession, path: String, marker: Boolean = true)(
       write: String => Unit): Unit = {
-    val tmp = path + "._tmp"
-    deleteRecursively(Paths.get(tmp))
-    write(tmp)
-    deleteRecursively(Paths.get(path))
-    Files.move(Paths.get(tmp), Paths.get(path), StandardCopyOption.ATOMIC_MOVE)
-    if (marker) Files.writeString(Paths.get(path + ".done"),
-      s"""{"path": "$path", "completed_at_ms": ${System.currentTimeMillis()}}""")
+    val (dst, tmp) = (new Path(path), new Path(path + "._tmp"))
+    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(tmp, true)
+    write(path + "._tmp")
+    fs.delete(dst, true)
+    if (!fs.rename(tmp, dst))
+      throw new IOException(s"atomic publish: cannot rename $tmp to $dst")
+    if (marker) {
+      val out = fs.create(new Path(path + ".done"), true)
+      try out.write(s"""{"path": "$path", "completed_at_ms": ${System.currentTimeMillis()}}"""
+        .getBytes(StandardCharsets.UTF_8))
+      finally out.close()
+    }
+  }
+
+  /** Publishes a file copy of the dir `from` (a model's table) at `path`
+    * through [[atomically]], with no marker: the files are copied as they
+    * are, so no Spark job runs and the data is not read back through
+    * Spark. */
+  def publishCopy(spark: SparkSession, from: String, path: String): Unit = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    atomically(spark, path, marker = false) { tmp =>
+      val (src, dst) = (new Path(from), new Path(tmp))
+      if (!FileUtil.copy(src.getFileSystem(conf), src, dst.getFileSystem(conf),
+          dst, false, conf))
+        throw new IOException(s"export: cannot copy $src to $dst")
+    }
   }
 
   /** Completion-marker check (I3 idempotency): skip work already published. */
@@ -120,7 +145,7 @@ object Exporter {
     val targetFiles = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
     if (files.length < minFilesToBother || files.length <= targetFiles) return -1L
     val df = spark.read.parquet(dir)
-    atomically(dir, marker) { tmp =>
+    atomically(spark, dir, marker) { tmp =>
       df.coalesce(targetFiles).write
         .mode("overwrite").option("compression", "zstd").parquet(tmp)
     }
@@ -140,56 +165,51 @@ object Exporter {
     val parts = (if (fs.exists(p)) fs.listStatus(p) else Array.empty[org.apache.hadoop.fs.FileStatus])
       .filter(s => s.isDirectory && s.getPath.getName.contains("="))
     // no per-partition .done markers: a stray `col=value.done` FILE at the
-    // table root breaks Spark's partition-structure inference.
-    // `toUri.getPath` strips the `file:` scheme — `atomically`'s java.nio
-    // rename needs a plain path (rename-capable local/NFS mounts; see
-    // `compact`'s object-store note)
+    // table root breaks Spark's partition-structure inference
     val results = parts.map(part =>
-      compact(spark, part.getPath.toUri.getPath, targetBytes, minFilesToBother,
+      compact(spark, part.getPath.toString, targetBytes, minFilesToBother,
         marker = false))
     (results.count(_ >= 0), results.count(_ < 0))
   }
 
-  /** Catalog of an export dir: per-file row/byte stats from parquet footers
-    * + a summary row — `catalog.parquet` + `catalog.json`
-    * (`catalog.py:43-89,109-116`). */
-  def catalog(spark: SparkSession, exportDir: String): DataFrame = {
-    // catalog.parquet is the catalog's own output, not an export: its
-    // footers are never opened (a rewrite deletes the files they'd name)
-    val meta = ParquetFooterMeta(spark, s"$exportDir/*/*.parquet",
-      _.getParent.getName != "catalog.parquet")
-      // group part files under their dataset dir (catalog.py:132 pattern)
-      .withColumn("file_name",
-        when(col("file_name").rlike(".*/part-[^/]+$"),
-          regexp_extract(col("file_name"), ".*/([^/]+)/[^/]+$", 1))
-          .otherwise(regexp_extract(col("file_name"), "([^/]+)$", 1)))
-    meta.groupBy("file_name").agg(
-      sum("num_rows").as("num_rows"),
-      sum("total_compressed_size").as("compressed_bytes"),
-      sum("total_byte_size").as("uncompressed_bytes"),
-      count(lit(1)).as("n_row_groups"))
-  }
+  /** One `catalog.parquet` row: a dataset of the export dir (its part
+    * files summed) or a single parquet file. */
+  final case class CatalogEntry(file_name: String, num_rows: Long,
+      compressed_bytes: Long, uncompressed_bytes: Long, n_row_groups: Long)
 
   /** catalog.json + catalog.parquet: version + per-file listing + totals
     * (`DEPLOYMENT.md:449-470`; the parquet twin is `catalog.py:78-81`'s
-    * `COPY file_catalog TO ... (FORMAT PARQUET, COMPRESSION ZSTD)`). The
-    * footers are scanned once, before anything is overwritten; both files
-    * are written from the collected rows. */
+    * `COPY file_catalog TO ... (FORMAT PARQUET, COMPRESSION ZSTD)`), from
+    * per-file row/byte stats of the export dir's parquet footers
+    * (`catalog.py:43-89,109-116`). The footers are read once, before
+    * anything is overwritten, and grouped on the driver; both files are
+    * written from those rows, sorted by file name. */
   def writeCatalogJson(spark: SparkSession, exportDir: String,
       version: String): Unit = {
-    val cat = catalog(spark, exportDir)
-    val rows = cat.collect()
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), cat.schema)
-      .coalesce(1).write.mode("overwrite")
+    import spark.implicits._
+    // catalog.parquet is the catalog's own output, not an export: its
+    // footers are never opened (a rewrite deletes the files they'd name)
+    val groups = ParquetFooterMeta.rowGroups(spark, s"$exportDir/*/*.parquet",
+      _.getParent.getName != "catalog.parquet")
+    // part files are listed under their dataset dir (catalog.py:132 pattern)
+    val rows = groups.groupBy { g =>
+      val p = new Path(g.file_name)
+      if (p.getName.startsWith("part-")) p.getParent.getName else p.getName
+    }.toSeq.sortBy(_._1).map { case (name, gs) =>
+      CatalogEntry(name, gs.map(_.num_rows).sum,
+        gs.map(_.total_compressed_size).sum, gs.map(_.total_byte_size).sum,
+        gs.size.toLong)
+    }
+    rows.toDF().coalesce(1).write.mode("overwrite")
       .option("compression", "zstd")
       .parquet(s"$exportDir/catalog.parquet")
     val files = rows.map { r =>
-      s"""{"file_name": "${r.getString(0)}", "num_rows": ${r.getLong(1)},
-         | "compressed_bytes": ${r.getLong(2)},
-         | "uncompressed_bytes": ${r.getLong(3)},
-         | "n_row_groups": ${r.getLong(4)}}""".stripMargin.replace("\n", "")
+      s"""{"file_name": "${r.file_name}", "num_rows": ${r.num_rows},
+         | "compressed_bytes": ${r.compressed_bytes},
+         | "uncompressed_bytes": ${r.uncompressed_bytes},
+         | "n_row_groups": ${r.n_row_groups}}""".stripMargin.replace("\n", "")
     }.mkString("[", ",", "]")
-    val total = rows.map(_.getLong(1)).sum
+    val total = rows.map(_.num_rows).sum
     Files.writeString(Paths.get(s"$exportDir/catalog.json"),
       s"""{"version": "$version", "total_rows": $total, "files": $files}""")
   }

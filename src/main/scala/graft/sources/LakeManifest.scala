@@ -8,6 +8,9 @@ import java.util.UUID
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.DateFormatter
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ParquetSchemas
 import org.apache.spark.sql.types._
@@ -187,9 +190,11 @@ object LakeManifest {
     }
   }
 
-  /** Rows and prune range per file of `df`, in one pass over it. `typed`
-    * is the type the view conforms the column to before its bronze model
-    * casts it. */
+  /** Rows and prune range per file of `df`, in one pass over it: each
+    * partition folds its rows into (rows, min, max, bad) per file, and the
+    * driver merges the folds, so the pass is one job with no shuffle.
+    * `typed` is the type the view conforms the column to before its bronze
+    * model casts it. */
   private def contentPass(df: DataFrame, prune: Prune,
       typed: Option[DataType]): Map[String, (Long, Option[(String, String)])] = {
     val (raw, value) =
@@ -202,16 +207,46 @@ object LakeManifest {
           case ValueOf(_) => conformed.try_cast(StringType)
         })
       }
-    df.select(col("_metadata.file_path").as("path"), value.as("v"),
-        (raw.isNotNull && value.isNull).as("bad"))
-      .groupBy("path")
-      .agg(count(lit(1)), min("v").cast("string"), max("v").cast("string"),
-        max("bad"))
-      .collect().map { r =>
-        val usable = !r.isNullAt(2) && !r.getBoolean(4)
-        new Path(new URI(r.getString(0))).toString ->
-          (r.getLong(1), if (usable) Some((r.getString(2), r.getString(3))) else None)
-      }.toMap
+    val scan = df.select(col("_metadata.file_path").as("path"), value.as("v"),
+      (raw.isNotNull && value.isNull).as("bad"))
+    // min and max in Spark's order of the value: dates as days, strings as
+    // UTF8String (unsigned bytes), each bound shown as a string cast shows it
+    scan.schema("v").dataType match {
+      case DateType =>
+        val date = DateFormatter()
+        fold(scan, (r, i) => r.getInt(i), date.format(_: Int))
+      case _ =>
+        fold(scan, (r, i) => r.getUTF8String(i).clone(), (_: UTF8String).toString)(
+          Ordering.fromLessThan(_.compareTo(_) < 0))
+    }
+  }
+
+  /** Per file of `scan` (path, v, bad): its rows, and the [min, max] under
+    * `ord` of its non-null `v`, unless it has none or a row is bad. */
+  private def fold[T](scan: DataFrame, get: (InternalRow, Int) => T,
+      show: T => String)(
+      implicit ord: Ordering[T]): Map[String, (Long, Option[(String, String)])] = {
+    type Tally = (Long, Option[(T, T)], Boolean)
+    def merge(a: Tally, b: Tally): Tally = (a._1 + b._1, (a._2 ++ b._2)
+      .reduceOption((x, y) => (ord.min(x._1, y._1), ord.max(x._2, y._2))), a._3 || b._3)
+    // one SQL execution, as a Dataset action is, so listeners see its scan
+    val qe = scan.queryExecution
+    val tallies = SQLExecution.withNewExecutionId(qe, Some("lake manifest content pass")) {
+      qe.toRdd.mapPartitions { rows =>
+        val byFile = scala.collection.mutable.Map[String, Tally]()
+        rows.foreach { r =>
+          val v = if (r.isNullAt(1)) None else { val x = get(r, 1); Some((x, x)) }
+          val p = r.getUTF8String(0).toString
+          val t: Tally = (1L, v, !r.isNullAt(2) && r.getBoolean(2))
+          byFile(p) = byFile.get(p).fold(t)(merge(_, t))
+        }
+        byFile.iterator
+      }.collect()
+    }
+    tallies.groupMapReduce(_._1)(_._2)(merge).map { case (p, (n, bounds, bad)) =>
+      new Path(new URI(p)).toString ->
+        (n, if (bad) None else bounds.map { case (lo, hi) => (show(lo), show(hi)) })
+    }
   }
 
   private val FileName = "entries.jsonl"

@@ -59,23 +59,27 @@ object ParquetFooterMeta {
       keep: Path => Boolean = _ => true): DataFrame = {
     val matched = files(spark, glob, keep)
     if (matched.size <= DriverTier.FooterFilesMax)
-      spark.createDataFrame(onDriver(spark, matched)(rowGroups))
-    else spark.createDataFrame(inJob(spark, matched)(rowGroups))
+      spark.createDataFrame(onDriver(spark, matched)(groupsOf))
+    else spark.createDataFrame(inJob(spark, matched)(groupsOf))
+  }
+
+  /** The rows of [[apply]] on the driver: read there for a handful of files
+    * or none (no job), collected from one job, with no shuffle, past
+    * that. */
+  def rowGroups(spark: SparkSession, glob: String,
+      keep: Path => Boolean = _ => true): Seq[RowGroupMeta] = {
+    val matched = files(spark, glob, keep)
+    if (matched.size <= DriverTier.FooterFilesMax) onDriver(spark, matched)(groupsOf)
+    else inJob(spark, matched)(groupsOf).collect().toSeq
   }
 
   /** Total row count of the parquet files `glob` names (filtered by
     * `keep`), from footers alone — the post-write row count a
     * materialization reports without re-scanning the data it just wrote
-    * (footers are a few KB per file vs a full second read of the table).
-    * No job for a handful of files or none; one job, no shuffle, past
-    * that. */
+    * (footers are a few KB per file vs a full second read of the table). */
   def rowCount(spark: SparkSession, glob: String,
-      keep: Path => Boolean = _ => true): Long = {
-    val matched = files(spark, glob, keep)
-    if (matched.size <= DriverTier.FooterFilesMax)
-      onDriver(spark, matched)(rowGroups).map(_.num_rows).sum
-    else inJob(spark, matched)(rowGroups).map(_.num_rows).fold(0L)(_ + _)
-  }
+      keep: Path => Boolean = _ => true): Long =
+    rowGroups(spark, glob, keep).map(_.num_rows).sum
 
   /** The [[FileMeta]] of each of `paths`, in their order, with the range of
     * the string column `rangeOf`, if one is named. */
@@ -106,7 +110,7 @@ object ParquetFooterMeta {
     }
   }
 
-  private def rowGroups(f: String, footer: ParquetMetadata): Seq[RowGroupMeta] = {
+  private def groupsOf(f: String, footer: ParquetMetadata): Seq[RowGroupMeta] = {
     val createdBy = footer.getFileMetaData.getCreatedBy
     footer.getBlocks.asScala.toSeq.zipWithIndex.map { case (bg, i) =>
       RowGroupMeta(f, i, bg.getRowCount, bg.getTotalByteSize,

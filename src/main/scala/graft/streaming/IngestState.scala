@@ -40,7 +40,7 @@ private[streaming] object IngestState {
       .localCheckpoint(eager = true)
     // atomic publish: write beside, rename into place — a crash mid-write
     // leaves the previous assignment intact
-    graft.export.Exporter.atomically(assignDir, marker = false) { tmp =>
+    graft.export.Exporter.atomically(spark, assignDir, marker = false) { tmp =>
       newAssign.write.mode("overwrite").parquet(tmp)
     }
     // idempotent store publish: deterministic per-batch subdir + overwrite

@@ -19,7 +19,7 @@ class EngineSpec extends AnyFunSuite {
   test("atomic export + done marker + catalog.json") {
     val dir = Files.createTempDirectory("graft_exp").toString
     val df = Tables(spark, "/root/testdata/sf0.001", "region")
-    Exporter.atomically(s"$dir/marts") { tmp =>
+    Exporter.atomically(spark, s"$dir/marts") { tmp =>
       Exporter.parquet(df, s"$tmp/region.parquet")
     }
     assert(Exporter.isDone(s"$dir/marts"))

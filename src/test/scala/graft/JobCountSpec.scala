@@ -97,7 +97,8 @@ class JobCountSpec extends AnyFunSuite {
   // A raw parquet view whose files the lake manifest already holds is
   // planned from the manifest alone: its schema is the merged footer
   // schemas (no mergeSchema inference job), its files are chosen from the
-  // manifest's ranges, and the manifest is read on the driver.
+  // manifest's ranges, and the manifest is read on the driver. Over unseen
+  // files it runs the one content pass: a per-partition fold, no shuffle.
   for (src <- Seq("src_sra_accessions", "src_ncbi_biosample"))
     test(s"$src builds with zero jobs once its files are in the lake manifest") {
       val lake = java.nio.file.Files.createTempDirectory("jobs_lake").toString
@@ -105,9 +106,52 @@ class JobCountSpec extends AnyFunSuite {
       val cfg = graft.core.EngineConfig(lake,
         java.nio.file.Files.createTempDirectory("jobs_wh").toString, "/none")
       val build = graft.models.OmicidxModels.lakeSources(src)
-      build(spark, cfg) // manifests the lake's files
+      val (_, first) = graft.core.Meter.measure(spark)(build(spark, cfg))
+      assert(first.jobs === 1L, s"$src ran ${first.jobs} Spark jobs over unseen files")
       val (df, c) = graft.core.Meter.measure(spark)(build(spark, cfg))
       assert(c.jobs === 0L, s"$src ran ${c.jobs} Spark jobs")
       assert(df.inputFiles.nonEmpty)
     }
+
+  // A Table model with an export writes its table once, in the export's
+  // layout; the export is a copy of the table's files, so it adds no job
+  // to the run (the retired spelling wrote the export a second time).
+  test("a Table model with an export and one audit runs no export job") {
+    import graft.core._
+    val base = java.nio.file.Files.createTempDirectory("jobs_export").toString
+    def run(export: Option[ExportSpec]) = {
+      val m = Model("jobs_items", "mart", materialization = Materialization.Table,
+        sql = Some("SELECT id FROM range(1000)"), export = export,
+        audits = Seq(Audit("non_negative", "SELECT * FROM jobs_items WHERE id < 0")))
+      Meter.measure(spark)(new DagRunner(spark,
+        EngineConfig("/none", s"$base/wh", s"$base/ex"), Seq(m)).run().head)
+    }
+    val spec = Some(ExportSpec("marts/jobs_items.parquet"))
+    run(None); run(spec) // warm
+    val (plain, c0) = run(None)
+    val (exported, c1) = run(spec)
+    assert(plain.status === "success" && exported.status === "success")
+    assert(c1.jobs === c0.jobs,
+      s"with its export the model ran ${c1.jobs} jobs, without ${c0.jobs}")
+    assert(spark.read.parquet(s"$base/ex/marts/jobs_items.parquet").count() === 1000L)
+  }
+
+  // catalog.json groups footer rows that the driver tier already holds;
+  // the only job is the write of catalog.parquet
+  test("writeCatalogJson over at most FooterFilesMax files runs 1 job") {
+    import graft.export.Exporter
+    val dir = java.nio.file.Files.createTempDirectory("jobs_catalog").toString
+    Exporter.parquet(spark.range(10).toDF().coalesce(1), s"$dir/marts/b.parquet")
+    Exporter.parquet(spark.range(20).toDF().repartition(3), s"$dir/marts/a.parquet")
+    Exporter.writeCatalogJson(spark, dir, "v1")
+    val (_, c) = graft.core.Meter.measure(spark)(
+      Exporter.writeCatalogJson(spark, dir, "v2"))
+    assert(c.jobs === 1L, s"writeCatalogJson ran ${c.jobs} jobs")
+    val json = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(dir, "catalog.json")), "UTF-8")
+    assert(json.contains("\"total_rows\": 30"))
+    assert(spark.read.parquet(s"$dir/catalog.parquet").collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toSeq ===
+      Seq("a.parquet" -> 20L, "b.parquet" -> 10L))
+  }
 }

@@ -586,7 +586,7 @@ class SourcesSpec extends AnyFunSuite {
       val localDir = s"$exportBase/mart.parquet"
       val df = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
         .limit(2000)
-      Exporter.atomically(localDir) { tmp =>
+      Exporter.atomically(spark, localDir) { tmp =>
         df.coalesce(2).write.mode("overwrite").parquet(tmp)
       }
       assert(Exporter.isDone(localDir))
@@ -644,7 +644,7 @@ class SourcesSpec extends AnyFunSuite {
     val exportBase = java.nio.file.Files.createTempDirectory("pubexp2")
     val localDir = s"$exportBase/mart.parquet"
     val df = spark.read.parquet("/root/testdata/sf0.001/nation.parquet")
-    Exporter.atomically(localDir) { tmp =>
+    Exporter.atomically(spark, localDir) { tmp =>
       df.coalesce(1).write.mode("overwrite").parquet(tmp)
     }
     val remoteBase = java.nio.file.Files.createTempDirectory("pubdst")

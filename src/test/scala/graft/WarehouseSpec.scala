@@ -182,6 +182,152 @@ class WarehouseSpec extends AnyFunSuite {
     assert(meta.history(3).count() === 3L)
   }
 
+  test("the sra_metadata export is a copy of its table: same files, rows and schema") {
+    import org.apache.spark.sql.functions.{col, xxhash64}
+    val wh = Files.createTempDirectory("graft_wh_copy").toString
+    val cfg = EngineConfig("/none", wh, s"$wh/exports",
+      Map("start_ds" -> "2005-01-01", "end_ds" -> "2005-12-31"))
+    assert(mkRunner(cfg).run().forall(_.status == "success"))
+    val table = spark.read.parquet(s"$wh/mart/sra_metadata")
+    val export = spark.read.parquet(s"$wh/exports/marts/sra_metadata.parquet")
+    def hashes(df: DataFrame) =
+      df.select(xxhash64(df.columns.toSeq.map(c => col(s"`$c`")): _*)).collect()
+        .map(_.getLong(0)).sorted.toSeq
+    assert(export.schema === table.schema)
+    assert(hashes(export) === hashes(table) && hashes(export).size === 3)
+    def names(d: String) = Files.list(java.nio.file.Paths.get(d)).toArray
+      .map(_.toString.split('/').last).sorted.toSeq
+    assert(names(s"$wh/exports/marts/sra_metadata.parquet") ===
+      names(s"$wh/mart/sra_metadata"))
+  }
+
+  test("a partitioned-export Table model keeps its derived columns and counts its rows") {
+    val wh = Files.createTempDirectory("graft_wh_split").toString
+    // shaped like corpus_splits, with the partition column mid-schema
+    val m = Model("split_items", "mart",
+      materialization = Materialization.Table,
+      sql = Some("""SELECT id AS doc_id,
+          CASE WHEN id % 10 < 8 THEN 'train' WHEN id % 10 < 9 THEN 'val'
+               ELSE 'test' END AS split,
+          id % 7 AS bucket FROM range(100)"""),
+      export = Some(ExportSpec("marts/split_items.parquet",
+        partitionBy = Seq("split"))),
+      audits = Seq(Audit("every_doc_split_once",
+        "SELECT doc_id FROM split_items GROUP BY doc_id HAVING count(*) > 1")))
+    val res = new DagRunner(spark, EngineConfig("/none", wh, s"$wh/exports"),
+      Seq(m)).run().head
+    assert(res.status === "success", res.error)
+    assert(res.rows === 100L)
+    val derived = spark.sql(m.sql.get).schema
+    assert(spark.table("split_items").schema.map(f => (f.name, f.dataType)) ===
+      derived.map(f => (f.name, f.dataType)))
+    val export = spark.read.parquet(s"$wh/exports/marts/split_items.parquet")
+    assert(export.count() === 100L)
+    assert(export.groupBy("split").count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap ===
+      Map("train" -> 80L, "val" -> 10L, "test" -> 10L))
+  }
+
+  test("MetaStore: lineage and docs hold the catalog and are rewritten only when it changes") {
+    import org.apache.spark.sql.functions.col
+    val wh = Files.createTempDirectory("graft_wh_meta").toString
+    val cfg = EngineConfig("/none", wh, s"$wh/exports",
+      Map("start_ds" -> "2005-01-01", "end_ds" -> "2005-12-31"))
+    val runner = mkRunner(cfg)
+    val models = runner.plan()
+    val results = runner.run()
+    val meta = new MetaStore(spark, wh)
+    val lineage = spark.read.parquet(s"$wh/meta/model_lineage")
+      .collect().map(r => r.getString(0) -> r.getString(1)).toSet
+    assert(lineage === models.flatMap(m => m.dependsOn.map(m.name -> _)).toSet)
+    assert(lineage.size === models.map(_.dependsOn.size).sum)
+    assert(meta.docs.select("model").collect().map(_.getString(0)).sorted.toSeq ===
+      models.map(_.name).sorted)
+    def files(table: String) = {
+      val dir = java.nio.file.Paths.get(wh, "meta", table)
+      if (!Files.exists(dir)) Map.empty[String, Long]
+      else Files.list(dir).toArray.map(_.asInstanceOf[java.nio.file.Path])
+        .map(p => p.toString -> Files.getLastModifiedTime(p).toMillis).toMap
+    }
+    val before = Seq("model_lineage", "model_docs").map(files)
+    val runsBefore = meta.runs.count()
+    // the same catalog: only the model_runs append
+    val (_, c) = Meter.measure(spark)(meta.record(results, models))
+    assert(c.jobs === 1L, s"record ran ${c.jobs} jobs")
+    assert(Seq("model_lineage", "model_docs").map(files) === before)
+    assert(meta.runs.count() === runsBefore + results.size)
+    // one model added, with an upstream edge: both tables are rewritten
+    val added = models :+ Model("mart_extra", "mart",
+      dependsOn = Seq("sra_metadata"), sql = Some("SELECT 1 AS x"))
+    meta.record(results, added)
+    assert(Seq("model_lineage", "model_docs").map(files).zip(before)
+      .forall { case (now, was) => now.keySet != was.keySet })
+    assert(spark.read.parquet(s"$wh/meta/model_lineage")
+      .filter(col("model") === "mart_extra").count() === 1L)
+    assert(meta.docs.count() === added.size.toLong)
+    // a deleted model_docs is written again; model_lineage is left alone
+    val lineageFiles = files("model_lineage")
+    graft.export.Exporter.deleteRecursively(java.nio.file.Paths.get(wh, "meta", "model_docs"))
+    meta.record(results, added)
+    assert(meta.docs.count() === added.size.toLong)
+    assert(files("model_lineage") === lineageFiles)
+  }
+
+  // ---- the export publish ------------------------------------------------
+
+  /** Runs a Table model over `ids` (3 part files) whose export is
+    * `marts/pub_items.parquet` under `exportDir` and whose audit rejects
+    * negative ids. */
+  private def publishRun(wh: String, exportDir: String, ids: Seq[Long]): RunResult = {
+    ids.toDF("id").repartition(3).createOrReplaceTempView("pub_src")
+    val m = Model("pub_items", "mart", materialization = Materialization.Table,
+      sql = Some("SELECT id FROM pub_src"),
+      export = Some(ExportSpec("marts/pub_items.parquet")),
+      audits = Seq(Audit("non_negative", "SELECT * FROM pub_items WHERE id < 0")))
+    new DagRunner(spark, EngineConfig("/none", wh, exportDir), Seq(m)).run().head
+  }
+
+  private def exportedIds(exportDir: String): Set[Long] =
+    spark.read.parquet(s"$exportDir/marts/pub_items.parquet").collect()
+      .map(_.getLong(0)).toSet
+
+  test("a failing audit leaves the previous export readable") {
+    val wh = Files.createTempDirectory("graft_pub_audit").toString
+    val ex = s"$wh/exports"
+    assert(publishRun(wh, ex, 0L until 10L).status === "success")
+    assert(publishRun(wh, ex, -5L until 10L).status === "audit_failed")
+    assert(exportedIds(ex) === (0L until 10L).toSet)
+  }
+
+  test("a publish that fails part-way through its copy leaves the previous export readable") {
+    val base = Files.createTempDirectory("graft_pub_fail").toString
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.failcopy.impl", classOf[FailingCreateFs].getName)
+    val ex = s"failcopy://$base/exports"
+    assert(publishRun(base, ex, 0L until 10L).status === "success")
+    FailingCreateFs.createsLeft.set(1) // the copy creates one file, then fails
+    val res = try publishRun(base, ex, 10L until 30L)
+      finally FailingCreateFs.createsLeft.set(Int.MaxValue)
+    assert(res.status === "failed")
+    assert(res.error.exists(_.contains("injected")), res.error)
+    assert(exportedIds(s"$base/exports") === (0L until 10L).toSet)
+    // the next publish replaces the partial copy
+    assert(publishRun(base, ex, 10L until 30L).status === "success")
+    assert(exportedIds(s"$base/exports") === (10L until 30L).toSet)
+  }
+
+  test("a successful publish leaves no ._tmp, and a file:// export dir may hold a space") {
+    val base = Files.createTempDirectory("graft_pub_ok").toString
+    val wh = s"$base/wh"
+    val ex = s"file://$base/ex port"
+    assert(publishRun(wh, ex, 0L until 10L).status === "success")
+    assert(publishRun(wh, ex, 5L until 25L).status === "success")
+    assert(exportedIds(s"$base/ex port") === (5L until 25L).toSet)
+    val left = Files.walk(java.nio.file.Paths.get(base)).toArray
+      .map(_.toString).filter(_.contains("._tmp"))
+    assert(left.isEmpty, left.mkString(", "))
+  }
+
   test("lint flags raw-layer SELECT *; production catalog is clean") {
     val bad = Model("src_bad", "raw", sql = Some("SELECT * FROM x"))
     val ok = Model("stg_ok", "bronze", sql = Some("SELECT * FROM y")) // bronze passthrough allowed
@@ -423,4 +569,24 @@ class WarehouseSpec extends AnyFunSuite {
     assert(meta.streamStateAlarms(Long.MaxValue).count() === 0L)
     graft.export.Exporter.deleteRecursively(java.nio.file.Paths.get(base))
   }
+}
+
+/** Local files under the `failcopy` scheme whose `create` fails once
+  * [[FailingCreateFs.createsLeft]] creates have been made: a copy into it
+  * dies part-way. */
+final class FailingCreateFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  import org.apache.hadoop.fs.{FSDataOutputStream, Path}
+  override def getUri: java.net.URI = java.net.URI.create("failcopy:///")
+  override def getScheme: String = "failcopy"
+  override def create(f: Path, overwrite: Boolean, bufferSize: Int,
+      replication: Short, blockSize: Long,
+      progress: org.apache.hadoop.util.Progressable): FSDataOutputStream = {
+    if (FailingCreateFs.createsLeft.getAndDecrement() <= 0)
+      throw new java.io.IOException(s"injected failure creating $f")
+    super.create(f, overwrite, bufferSize, replication, blockSize, progress)
+  }
+}
+
+object FailingCreateFs {
+  val createsLeft = new java.util.concurrent.atomic.AtomicInteger(Int.MaxValue)
 }
