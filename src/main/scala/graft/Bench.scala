@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import scala.collection.mutable
 
 /** Benchmark main — runs every SparkEntry query on SPARK_GRAFT_SF_DIR and
@@ -19,14 +18,7 @@ import scala.collection.mutable
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString).toInt
-    val spark = graft.core.GraftSession.tune(
-        SparkSession.builder().master(s"local[$cpus]").appName("graft-bench"),
-        math.max(cpus, 4))
-      .config("spark.locality.wait", "0")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.local()
 
     val errors = mutable.LinkedHashMap[String, String]()
 

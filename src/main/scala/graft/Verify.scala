@@ -6,9 +6,8 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     // the conf Bench times: GraftSession's factory, shuffle partitions
-    // max(cpus, 4)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    val spark = graft.core.GraftSession.local(cpus)
+    // max(cpus, 4); 4 cores unless SPARK_GRAFT_CPUS says otherwise
+    val spark = graft.core.GraftSession.local(graft.core.GraftSession.envCores(4))
     new java.io.File(outDir).mkdirs()
     // run queries on a small thread pool: each query's jobs parallelize
     // across cores, but scheduling gaps + driver-side planning serialize

@@ -36,9 +36,16 @@ object GraftSession {
       // the non-spilling-map OOM risk an AQE-forced SHJ carries at scale.
       .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
       .config("spark.ui.enabled", "false")
+      // every task's data is local: waiting for a "better" slot only idles
+      // a free core
+      .config("spark.locality.wait", "0")
+
+  /** Cores for a main's session: `SPARK_GRAFT_CPUS`, else `default`. */
+  def envCores(default: Int = Runtime.getRuntime.availableProcessors()): Int =
+    sys.env.get("SPARK_GRAFT_CPUS").fold(default)(_.toInt)
 
   /** Local session for tests / CLI mains. */
-  def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
+  def local(cores: Int = envCores()): SparkSession = {
     val s = tune(
       SparkSession.builder().master(s"local[$cores]").appName("graft"),
       math.max(cores, 4)

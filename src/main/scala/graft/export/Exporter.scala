@@ -6,7 +6,7 @@ import graft.sources.ParquetFooterMeta
 
 import java.io.IOException
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 
 /** Export + catalog layer (SURVEY.md §2.2 K1/K2/K6 and the deployment
   * cataloging flow, `/root/reference/omicidx_etl/catalog.py:16-89`,
@@ -111,8 +111,15 @@ object Exporter {
     }
   }
 
-  /** Completion-marker check (I3 idempotency): skip work already published. */
-  def isDone(path: String): Boolean = Files.exists(Paths.get(path + ".done"))
+  /** Completion-marker check (I3 idempotency): skip work already published.
+    * Reads the `.done` marker [[atomically]] writes (or that
+    * [[S3Publisher.publishDir]] uploads last) through the Hadoop
+    * FileSystem of `path`, so a local, file://, hdfs:// or s3a:// path
+    * answers the same way. */
+  def isDone(spark: SparkSession, path: String): Boolean = {
+    val p = new Path(path.stripSuffix("/") + ".done")
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+  }
 
   /** Compaction: rewrite a parquet directory into ~`targetBytes` files when
     * it has degraded into small files — the lake disease every incremental
@@ -181,21 +188,42 @@ object Exporter {
     * (`DEPLOYMENT.md:449-470`; the parquet twin is `catalog.py:78-81`'s
     * `COPY file_catalog TO ... (FORMAT PARQUET, COMPRESSION ZSTD)`), from
     * per-file row/byte stats of the export dir's parquet footers
-    * (`catalog.py:43-89,109-116`). The footers are read once, before
-    * anything is overwritten, and grouped on the driver; both files are
-    * written from those rows, sorted by file name. */
+    * (`catalog.py:43-89,109-116`). A dataset is an `<area>/<name>.parquet`
+    * file or dir; a dir's part files count at any depth, so a
+    * `partitionBy` export (`k=<v>/part-*`) is listed whole. The footers are
+    * read once, before anything is overwritten, and grouped on the driver;
+    * both files are written from those rows, sorted by file name, through
+    * the Hadoop FileSystem of `exportDir`. */
   def writeCatalogJson(spark: SparkSession, exportDir: String,
       version: String): Unit = {
     import spark.implicits._
+    val root = new Path(exportDir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // catalog.parquet is the catalog's own output, not an export: its
     // footers are never opened (a rewrite deletes the files they'd name)
-    val groups = ParquetFooterMeta.rowGroups(spark, s"$exportDir/*/*.parquet",
-      _.getParent.getName != "catalog.parquet")
-    // part files are listed under their dataset dir (catalog.py:132 pattern)
-    val rows = groups.groupBy { g =>
-      val p = new Path(g.file_name)
-      if (p.getName.startsWith("part-")) p.getParent.getName else p.getName
-    }.toSeq.sortBy(_._1).map { case (name, gs) =>
+    val matched = Option(fs.globStatus(new Path(root, "*/*.parquet"),
+      (p: Path) => p.getParent.getName != "catalog.parquet")).toSeq.flatten
+    // (dataset, part file); part files are listed under their dataset dir
+    // (catalog.py:132 pattern)
+    val parts = matched.flatMap { st =>
+      val p = st.getPath
+      if (st.isFile)
+        Seq((if (p.getName.startsWith("part-")) p.getParent.getName
+          else p.getName) -> p.toString)
+      else {
+        val files = fs.listFiles(p, true)
+        val base = p.toUri.getPath
+        Iterator.continually(files).takeWhile(_.hasNext).map(_.next().getPath)
+          .filter(f => f.getName.endsWith(".parquet") &&
+            !f.toUri.getPath.stripPrefix(base).split('/')
+              .exists(c => c.startsWith("_") || c.startsWith(".")))
+          .map(f => p.getName -> f.toString).toSeq
+      }
+    }
+    val datasetOf = parts.map(_.swap).toMap
+    val groups = ParquetFooterMeta.rowGroupsOf(spark, parts.map(_._2))
+    val rows = groups.groupBy(g => datasetOf(g.file_name))
+      .toSeq.sortBy(_._1).map { case (name, gs) =>
       CatalogEntry(name, gs.map(_.num_rows).sum,
         gs.map(_.total_compressed_size).sum, gs.map(_.total_byte_size).sum,
         gs.size.toLong)
@@ -210,8 +238,10 @@ object Exporter {
          | "n_row_groups": ${r.n_row_groups}}""".stripMargin.replace("\n", "")
     }.mkString("[", ",", "]")
     val total = rows.map(_.num_rows).sum
-    Files.writeString(Paths.get(s"$exportDir/catalog.json"),
-      s"""{"version": "$version", "total_rows": $total, "files": $files}""")
+    val out = fs.create(new Path(root, "catalog.json"), true)
+    try out.write(s"""{"version": "$version", "total_rows": $total, "files": $files}"""
+      .getBytes(StandardCharsets.UTF_8))
+    finally out.close()
   }
 
   /** "Remote views" bootstrap: SQL script re-creating one view per exported

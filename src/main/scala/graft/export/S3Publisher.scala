@@ -11,8 +11,8 @@ import graft.sources.S3MinimalFileSystem
   * R2 lake; `warehouse_cli.py:345-595` upload flow). Ships a local export
   * directory to a remote prefix, KEEPING the atomic-publish contract:
   * data objects land first, the `.done` marker object LAST — a reader
-  * gating on the marker ([[Exporter.isDone]] locally, [[isDone]]
-  * remotely) never sees a half-published export.
+  * gating on the marker ([[Exporter.isDone]], local or remote) never
+  * sees a half-published export.
   *
   * The publish loop needs nothing but whole-object PUT semantics, so it
   * runs on ANY Hadoop filesystem (VERDICT r7 item 5):
@@ -82,13 +82,6 @@ object S3Publisher {
           try Files.copy(marker, out) finally out.close()
       }
     }
-  }
-
-  /** Remote completion check — I3 idempotency against the remote lake
-    * (the published `.done` marker object exists). Any Hadoop FS. */
-  def isDone(spark: SparkSession, remoteDir: String): Boolean = {
-    val p = new Path(markerOf(remoteDir))
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
   private def markerOf(remoteDir: String): String =

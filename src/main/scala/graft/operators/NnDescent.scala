@@ -728,8 +728,9 @@ object NnDescent {
     * `r` edges are chosen or candidates run out. α > 1 keeps the
     * longer-range "diverse" edges a plain k-cut throws away; those
     * shortcut edges are what hold beam-search recall at FIXED degree as
-    * n grows (the paper's §4 argument, measured here by
-    * GraphBuildProbe's alpha column). α defaults to 1.25 — the paper's
+    * n grows (the paper's §4 argument, measured here by ScaleStress
+    * `graph-build`'s alpha column: 0.400 vs 0.345 beam recall at
+    * degree 8 and 100×, SCALE.md). α defaults to 1.25 — the paper's
     * ~1.2 regime, spelled as an exact binary quarter so both engines
     * compare identical doubles (the MmrLambda rule).
     *

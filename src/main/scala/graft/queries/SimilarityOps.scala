@@ -75,9 +75,10 @@ object SimilarityOps {
   private[graft] val GraphGateSlice = 600L
   /** q127 beam-search geometry: beam width, expansion hops, entry seeds.
     * Per-query cost Θ(hops·beam·degree) — corpus-size-independent.
-    * GraphSearchProbe sweep (sf0.001/sf0.01): 16/3/4 reads 0.94/1.00
-    * recall@5, 16/4/4 reads 1.000 at BOTH — one extra hop buys the
-    * margin off the knife edge (the q123 nprobe lesson). */
+    * Measured by a beam/hops sweep (sf0.001/sf0.01, SCALE.md "Round 11 —
+    * NN-Descent k-NN graph"): 16/3/4 reads 0.94/1.00 recall@5, 16/4/4
+    * reads 1.000 at BOTH — one extra hop buys the margin off the knife
+    * edge (the q123 nprobe lesson). */
   private val NnBeam = 16
   private val NnHops = 4
   private val NnSeeds = 4
@@ -213,7 +214,7 @@ object SimilarityOps {
 
   /** The q130 HNSW-style descent, full path (gate slices to 600; probes
     * run it unsliced — the q97/q123 `maxVec` pattern). `layer0` lets a
-    * caller that already built a base graph (NnProbe) reuse it instead
+    * caller that already built a base graph (ScaleStress `nn`) reuse it instead
     * of paying a second full NN-Descent build. */
   private[graft] def hnswLayeredSearch(s: SparkSession, dir: String,
       maxVec: Long = Long.MaxValue,
@@ -452,14 +453,14 @@ object SimilarityOps {
     * multiplier follows from a relative score threshold t via the
     * paper's closed form eta = (d−1)·t²/(1−t²)
     * ([[anisoEtaForThreshold]]; the paper's theory also derives
-    * PER-DATAPOINT-NORM weights — tools/AnisoProbe implements and
-    * measures that flavor at equal mean parallel budget: bit-identical
-    * to constant eta on the uniform fixture (norms concentrate) and
-    * within one probe-hit on the clustered one (0.460 ≡ 0.460 at mean
-    * eta 4), so the constant flavor stays the gate — the win the
-    * per-norm form is about needs a norm-spread corpus neither fixture
-    * has). 4 is the measured clustered-fixture winner (tools/
-    * AnisoProbe) and corresponds to t ≈ 0.244 at d = 64 — "preserve
+    * PER-DATAPOINT-NORM weights — measured at equal mean parallel
+    * budget, that flavor is bit-identical to constant eta on the uniform
+    * fixture (norms concentrate) and within one probe-hit on the
+    * clustered one (0.460 ≡ 0.460 at mean eta 4), so the constant flavor
+    * stays the gate — the win the per-norm form is about needs a
+    * norm-spread corpus neither fixture has). 4 is the measured
+    * clustered-fixture winner (recall@5 0.32 plain → 0.46, AnnRecallSpec)
+    * and corresponds to t ≈ 0.244 at d = 64 — "preserve
     * scores above relative cosine ~0.24", a sensible MIPS relevance
     * bar. */
   private[graft] val AnisoEta = 4.0
@@ -1314,7 +1315,8 @@ object SimilarityOps {
     // s when α·(1−cos(s,c)) ≤ (1−cos(u,c)), α = 1.25 exact-binary). At
     // EQUAL degree the α-diverse edges hold beam recall where the plain
     // k-cut's redundant short edges decay it as n grows —
-    // GraphBuildProbe measures exactly that (0.400 vs 0.345 at 100×).
+    // ScaleStress `graph-build` measures exactly that (0.400 vs 0.345 at
+    // 100×, SCALE.md).
     // The gate corpus PLANTS exact twins (ids < TwinCount re-keyed past
     // GraphGateSlice, identical float vectors — the q103
     // make-it-load-bearing rule): the lake's near-uniform 64-dim salad
@@ -1359,7 +1361,7 @@ object SimilarityOps {
     // Θ(probes·hops·beam·degree) kernel work on executors, every hop's
     // reads partition-pruned to the frontier's shards (self-verified).
     // At the gate SF the wave is corpus-bounded (500 probes — 50× the
-    // q141 wave); GraphServeProbe runs the full 10³+ waves at scale and
+    // q141 wave); ScaleStress `graph-serve` runs the full 10³+ waves at scale and
     // pins wall ∝ probes, flat in corpus size.
     "q158_graph_batch_serve" -> ((s, dir) => graphBatchServe(s, dir)),
 
@@ -1367,7 +1369,7 @@ object SimilarityOps {
     // with measurements): q158's store and per-hop navigation, but
     // each probe's descent starts from its SINGLE best entry seed
     // (DiskANN's shape, bm0 cut = 1) and the wave serves as
-    // cell-grouped concurrent sub-waves. GraphServeProbe measures the
+    // cell-grouped concurrent sub-waves. ScaleStress `graph-serve` measures the
     // trade: per-group touched-shard fraction STAYS ~100% even
     // entry-disciplined (degree-8 × NnHops fan-out covers every cell
     // of these stores within two hops — locality needs graph-aware
@@ -1403,7 +1405,7 @@ object SimilarityOps {
     // then a second heap takes the exact-cosine top-5. Recall vs brute
     // force is the measured property (AnnRecallSpec: ≥ 0.9 floor;
     // measured 0.96 at sf0.001 AND sf0.01 at nprobe=6, vs 0.34–0.42 for
-    // raw ADC@5 — tools/RecallProbe). The OUTPUT is nonetheless fully
+    // raw ADC@5, COVERAGE.md). The OUTPUT is nonetheless fully
     // deterministic given the chain, so it IS oracle-gated (r10 verdict
     // item 1): the DuckDB side replays the whole chain — q97's
     // codebook/ADC CTEs at nprobe=6, the adc-asc/cid top-64 cut, then
@@ -3006,7 +3008,7 @@ object SimilarityOps {
     * broadcast, each hop's kernel work is Θ(|probes|·beam·degree) on
     * executors, and each hop's reads are partition-pruned to the
     * frontier's shards (self-verified). Serve-bytes fraction lands in
-    * [[lastGraphServeBytes]]; GraphServeProbe pins wall ∝ probes and
+    * [[lastGraphServeBytes]]; ScaleStress `graph-serve` pins wall ∝ probes and
     * flat in corpus size. */
   private[graft] def graphBatchServe(s: SparkSession, dir: String,
       probeMax: Long = BatchProbeMax): DataFrame =
@@ -3028,7 +3030,7 @@ object SimilarityOps {
     * entry discipline; SCALE.md records both negatives). What the
     * entry cut DOES measurably change is the navigation itself: top-5
     * agreement with the all-seed walk is 0.88/0.70/0.61 at 1×/10×/30×
-    * (GraphServeProbe's `overlap_vs_flat`) — the recall a production
+    * (ScaleStress `graph-serve`'s `overlap_vs_flat`) — the recall a production
     * single-entry stack pays for its cheaper hop-1 — which is why this
     * ships as its OWN gate beside q158 rather than replacing it. */
   private[graft] def graphEntryServe(s: SparkSession, dir: String,
@@ -3108,7 +3110,7 @@ object SimilarityOps {
       // FLAT wave, deliberately: r16 verdict item 3 proposed grouping
       // the wave by seed shard to restore locality; the grouped serve
       // was BUILT ([[distributedStoreServeGrouped]] — row-identical by
-      // construction) and MEASURED (GraphServeProbe): per-group
+      // construction) and MEASURED (ScaleStress `graph-serve`): per-group
       // touched-shard fraction stays 100% at every scale, because hop 1
       // expands the GLOBAL entry seeds' neighborhoods (which span every
       // cell) for every probe, and hash sub-sharding sprays each cell's
@@ -3172,7 +3174,7 @@ object SimilarityOps {
     * every hop reads ONLY the shards the frontier names (partition
     * filters self-verified on both tiers), probes ride ONE broadcast,
     * and per-hop cost is Θ(|probes|·beam·degree) kernel evaluations on
-    * executors — ∝ probes, flat in corpus size (GraphServeProbe
+    * executors — ∝ probes, flat in corpus size (ScaleStress `graph-serve`
     * measures exactly that). Visited-shard routing state is bounded by
     * the walk (seeds ∪ carried nid_shard), never corpus-sized. */
   /** `entryCut` — how many seed-scored entries the descent STARTS from
@@ -3252,7 +3254,8 @@ object SimilarityOps {
   }
 
   /** Per-group stats of the last [[distributedStoreServeGrouped]] call —
-    * GraphServeProbe reads these for its touched-shard-fraction column. */
+    * ScaleStress `graph-serve` reads these for its touched-shard-fraction
+    * column. */
   private[graft] val lastGroupedServeStats =
     new java.util.concurrent.atomic.AtomicReference[Seq[GroupedServeStat]](
       Seq.empty)
@@ -3263,9 +3266,9 @@ object SimilarityOps {
     * wave touches ~100% of the store per hop only because its hops name
     * every probe's frontier at once, so grouping the wave by each
     * probe's NEAREST COARSE CELL (the store's own clustering key) should
-    * restore per-group shard locality. The measurement (GraphServeProbe,
-    * 1×/10×/30×): per-group touched fraction stays 100.0% at every
-    * scale — because (i) hop 1 expands the GLOBAL entry seeds'
+    * restore per-group shard locality. The measurement (ScaleStress
+    * `graph-serve`, 1×/10×/30×): per-group touched fraction stays
+    * 100.0% at every scale — because (i) hop 1 expands the GLOBAL entry seeds'
     * neighborhoods, which span every cell, for every probe in every
     * group, and (ii) the hash sub-shard component sprays a single
     * cell's nodes across its ~n/(8·W) sub-shards, so even a perfectly
@@ -3280,7 +3283,7 @@ object SimilarityOps {
     * wave by construction — every join in [[distributedStoreServe]]
     * keys on (qid, nid) and the per-hop shard filter only widens the
     * candidate side, so a probe's walk is a pure function of the probe
-    * alone (GraphServeProbe asserts flat ≡ grouped row-for-row;
+    * alone (ScaleStress `graph-serve` asserts flat ≡ grouped row-for-row;
     * GraphServeSpec extends the driver-tier equality to this path).
     * Groups run as CONCURRENT driver threads (bounded pool) — each an
     * independent job DAG, as a cluster would overlap them. Per-group

@@ -177,7 +177,7 @@ object TextOps {
         // y is computed in its own projection BELOW the explode: the
         // Gopher label runs its regexps once per DOC. Fused into the
         // explode's projection it would re-evaluate per TOKEN — measured
-        // 3× the whole query's wall at sf0.1 (PerceptronProbe).
+        // 3× the whole query's wall at sf0.1 (stage timings, r13).
         .select(col("doc_id"),
           when(gopherKeep, 1L).otherwise(-1L).as("y"), col("toks"))
         .select(col("doc_id"), col("y"), explode(col("toks")).as("feat"))

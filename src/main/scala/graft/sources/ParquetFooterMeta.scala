@@ -67,11 +67,13 @@ object ParquetFooterMeta {
     * or none (no job), collected from one job, with no shuffle, past
     * that. */
   def rowGroups(spark: SparkSession, glob: String,
-      keep: Path => Boolean = _ => true): Seq[RowGroupMeta] = {
-    val matched = files(spark, glob, keep)
-    if (matched.size <= DriverTier.FooterFilesMax) onDriver(spark, matched)(groupsOf)
-    else inJob(spark, matched)(groupsOf).collect().toSeq
-  }
+      keep: Path => Boolean = _ => true): Seq[RowGroupMeta] =
+    rowGroupsOf(spark, files(spark, glob, keep))
+
+  /** The rows of [[rowGroups]] for a listed set of parquet files. */
+  def rowGroupsOf(spark: SparkSession, paths: Seq[String]): Seq[RowGroupMeta] =
+    if (paths.size <= DriverTier.FooterFilesMax) onDriver(spark, paths)(groupsOf)
+    else inJob(spark, paths)(groupsOf).collect().toSeq
 
   /** Total row count of the parquet files `glob` names (filtered by
     * `keep`), from footers alone — the post-write row count a

@@ -17,8 +17,8 @@ final case class DriftIngestReport(batchId: Long, driftRatio: Double,
   * is fully on disk — the `.done`-marker semantics. A concurrent
   * frontend reading through `serveSnapshot` therefore always sees a
   * complete epoch with matching artifacts: the old epoch keeps answering
-  * until the swap (SwapServeProbe drives exactly that and asserts zero
-  * failed serves). */
+  * until the swap (VectorStoreLifecycleSpec serves through a retrain and
+  * asserts zero failed serves). */
 final case class VectorStorePublished(epoch: Int, coarse: Seq[Seq[Double]],
     pq: Seq[Seq[Seq[Double]]], baseline: Double) extends EpochPublished
 
@@ -147,7 +147,7 @@ final class DriftingVectorStore(storeDir0: String, k: Int, iters: Int,
       // provenance preserved — then the triggering batch lands in the
       // new epoch too, and only THEN does the volatile publish swap the
       // serving state. The old epoch answers every serve until that
-      // point (SwapServeProbe's zero-failed-serves claim). The
+      // point (VectorStoreLifecycleSpec's zero-failed-serves test). The
       // mode(overwrite) on the whole epoch directory is ALSO the orphan
       // repair: a crash after this write but before publish leaves an
       // unreachable epoch dir that the next drifted ingest replaces

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Prints a learned BPE merge table as Scala source — the one-time
   * offline step that produced [[graft.operators.BpeTrainer.LearnedMerges]]
   * (the fixed merge list the q85 oracle gate applies on both engines).
@@ -12,13 +10,7 @@ object BpeLearn {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val k = args.lift(1).map(_.toInt).getOrElse(24)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString).toInt
-    val spark = graft.core.GraftSession.tune(
-        SparkSession.builder().master(s"local[$cpus]").appName("graft-bpe-learn"),
-        math.max(cpus, 4))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.local()
     val merges = graft.operators.BpeTrainer.train(
       graft.sources.Tables(spark, dir, "documents"), "text", k)
     merges.foreach(m =>

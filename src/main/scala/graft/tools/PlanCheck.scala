@@ -111,7 +111,7 @@ object PlanCheck {
     val writeBaseline = args.contains("--write-baseline")
     val dir = args.filterNot(_.startsWith("--")).headOption
       .getOrElse("/root/testdata/sf0.01")
-    val spark = graft.core.GraftSession.local(8)
+    val spark = graft.core.GraftSession.local()
     val names = graft.SparkEntry.queries.keys.toSeq.sorted
     val out = new StringBuilder
     graft.queries.ArtifactCache.clearAll() // signatures assume a cold cache

@@ -86,9 +86,7 @@ object Probe {
       if (picks.isEmpty) !graft.SparkEntry.untimed(n)
       else picks.exists(n.startsWith))
     require(names.nonEmpty, s"no query matches ${picks.mkString(" ")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString).toInt
-    val spark = graft.core.GraftSession.local(cpus)
+    val spark = graft.core.GraftSession.local()
     graft.queries.ArtifactCache.clearAll()
     (1 to passes).foreach { pass =>
       val profiles = names.map { n =>

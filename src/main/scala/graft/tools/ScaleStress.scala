@@ -1,22 +1,28 @@
 package graft.tools
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.core.Meter
+import graft.operators.NnDescent
+import graft.streaming.{DriftingTokenizerStore, DriftingVectorStore}
 
 /** Scale-stress harness: synthesizes an N× replica of the sf0.1
   * documents/embeddings corpus (same schema, same duplicate structure,
   * deterministic — every cell is a pure murmur3 function of the row id) and
-  * runs the dedup / ANN / curation pipelines end-to-end at 1× and N×,
-  * recording wall seconds AND shuffle bytes per query. This is the proof the
-  * sf0.1 bench cannot give: that the pipelines' cost curves stay ~linear in
-  * corpus size and that nothing falls over when the driver fast paths are
-  * out-gated.
+  * runs named scenarios over it at each multiplier, recording wall seconds
+  * and shuffle bytes ([[Meter]]) next to the deterministic rows, pairs,
+  * recall and bytes. This is the proof the sf0.1 bench cannot give: that
+  * the pipelines' cost curves stay ~linear in corpus size and that nothing
+  * falls over when the driver fast paths are out-gated. [[Scenarios]] is
+  * the table of runs; SCALE.md records their curves.
   *
-  * Also times the q47 clustering pipeline with `driverMax = 0` — forcing the
-  * DISTRIBUTED hash-min label-propagation loop — and asserts its assignment
-  * is identical to the driver union-find fast path at every scale.
+  * The `cc` stage times the q47 clustering pipeline with `driverMax = 0` —
+  * forcing the DISTRIBUTED hash-min label-propagation loop — and asserts
+  * its assignment is identical to the driver union-find fast path.
   *
   * Duplicate structure (mirrors what the real corpus gives the pipelines):
   *  - doc id ≡ 7 (mod 17): EXACT duplicate of doc id-3 (same content key);
@@ -33,10 +39,7 @@ import graft.core.Meter
   * plane/band count (log₂ n planes keeps collisions linear) — reported, not
   * hidden, by this harness.
   *
-  * Usage: runMain graft.tools.ScaleStress [mults] [outRoot]
-  *   mults   comma list of corpus multipliers (default "1,10")
-  *   outRoot parent dir for synthesized corpora (default /tmp/graft_scale)
-  * Prints one JSON line per scale on stdout; human-readable table on stderr.
+  * Usage: see [[main]].
   */
 object ScaleStress {
 
@@ -178,21 +181,15 @@ object ScaleStress {
     // variable-length ExactSubstr both flavors (one content shuffle on
     // gram digests — wall must track the sliding-gram count, ~linear),
     // RP-forest ingest end state (frozen-route batch cost). q141 is
-    // measured separately in --flat mode (its NN-Descent build
+    // measured separately in the `flat` scenario (its NN-Descent build
     // dominates and would mask the rest of the table).
     "q138_perceptron_hashed", "q139_exact_substr",
     "q140_rpforest_ingest_endstate", "q142_exact_substr_canonical",
     "q143_exact_substr_ingest_endstate")
 
-  final case class QStat(name: String, sec: Double, shufReadB: Long,
+  private final case class QStat(name: String, sec: Double, shufReadB: Long,
       shufWriteB: Long, outRows: Long)
 
-  /** One measured pass over the suite at `dir` (caches cleared first, so the
-    * shared-artifact payers are billed exactly once, like a real pipeline
-    * run). Timing uses the noop sink — the Bench methodology: count() would
-    * let Catalyst prune output expressions and time bare row counts.
-    * Returns per-query wall seconds + shuffle bytes; output rows (from
-    * `rows`, counted untimed once per scale) ride along for reporting. */
   /** The gated q97/q123 are slice-bounded (gate cost must stay flat at
     * any SF); HERE the point is the opposite — measure the UNSLICED
     * path, so the scale curve reflects real full-corpus train/encode/
@@ -216,23 +213,28 @@ object ScaleStress {
   private def queryFn(name: String) =
     FullPathOverrides.getOrElse(name, graft.SparkEntry.queries(name))
 
-  def runSuite(spark: SparkSession, dir: String,
-      rows: Map[String, Long] = Map.empty,
-      qs: Seq[String] = SuiteQueries): Seq[QStat] = {
+  /** One measured pass over the suite at `dir` (caches cleared first, so the
+    * shared-artifact payers are billed exactly once, like a real pipeline
+    * run). Timing uses the noop sink — the Bench methodology: count() would
+    * let Catalyst prune output expressions and time bare row counts.
+    * Returns per-query wall seconds + shuffle bytes; output rows (from
+    * `rows`, counted untimed once per scale) ride along for reporting. */
+  private def runSuite(spark: SparkSession, dir: String,
+      rows: Map[String, Long], qs: Seq[String]): Seq[QStat] = {
     graft.queries.ArtifactCache.clearAll()
     qs.map { name =>
       val (_, c) = Meter.measure(spark)(queryFn(name)(spark, dir)
         .write.format("noop").mode("overwrite").save())
       QStat(name, c.wallSec, c.shuffleReadBytes, c.shuffleWriteBytes,
-        rows.getOrElse(name, -1L))
+        rows(name))
     }
   }
 
   /** Untimed output-row counts (deterministic per scale). */
-  def countRows(spark: SparkSession, dir: String): Map[String, Long] = {
+  private def countRows(spark: SparkSession, dir: String,
+      qs: Seq[String]): Map[String, Long] = {
     graft.queries.ArtifactCache.clearAll()
-    SuiteQueries.map(n =>
-      n -> queryFn(n)(spark, dir).count()).toMap
+    qs.map(n => n -> queryFn(n)(spark, dir).count()).toMap
   }
 
   /** The tuned scale-path LSH (64 hashes, 8-row bands, bucket cap) vs the
@@ -241,16 +243,14 @@ object ScaleStress {
     * corpus knows by construction). The fixed geometry's candidate set
     * grows ~quadratically on a small-vocab corpus; the tuned one must stay
     * ~linear with recall ≈ 1 on true dups. */
-  def lshTunedStage(spark: SparkSession, dir: String): (Double, Long, Double) = {
+  private def lshTunedStage(spark: SparkSession, dir: String): (Double, Long, Double) = {
     // the 64-hash artifact build is billed to this stage
     graft.queries.ArtifactCache.clearAll()
-    val t0 = System.nanoTime()
-    val pairs = graft.queries.DedupOps
+    val (pairs, c) = Meter.measure(spark)(graft.queries.DedupOps
       .lshPairsTuned(spark, dir, numHashes = 64, bandRows = 8,
         maxBucket = 64L, minJaccard = 0.2)
       .select(col("doc_a"), col("doc_b"))
-      .localCheckpoint(eager = true)
-    val sec = (System.nanoTime() - t0) / 1e9
+      .localCheckpoint(eager = true))
     val n = pairs.count()
     val ids = graft.sources.Tables(spark, dir, "documents").select("doc_id")
     val planted = ids
@@ -261,7 +261,7 @@ object ScaleStress {
       .select(col("partner").as("doc_a"), col("doc_id").as("doc_b"))
     val nPlanted = planted.count()
     val found = planted.join(pairs, Seq("doc_a", "doc_b"), "left_semi").count()
-    (sec, n, found.toDouble / nPlanted)
+    (c.wallSec, n, found.toDouble / nPlanted)
   }
 
   /** The tuned ENUMERATION-family geometry (q36/q38's knob): wall + output
@@ -272,7 +272,7 @@ object ScaleStress {
     * geometries (q36/q38 in the suite table) output Θ(n²/2^width) by
     * design; these rows show the parameterized geometry holding the
     * output ~linear at preserved true-dup recall. */
-  def enumTunedStage(spark: SparkSession, dir: String)
+  private def enumTunedStage(spark: SparkSession, dir: String)
       : (Double, Long, Double, Double, Long) = {
     graft.queries.ArtifactCache.clearAll()
     // planes ∝ log n — THE enumeration-family scale lever (fixed width ⇒
@@ -283,15 +283,11 @@ object ScaleStress {
     val nVecs = graft.sources.Tables(spark, dir, "embeddings").count()
     val bandBits = math.min(14, math.max(8,
       math.ceil(math.log(nVecs / 8.0) / math.log(2)).toInt))
-    System.err.println(s"[scale] enumTuned geometry: 4 bands × $bandBits bits" +
-      s" for $nVecs vectors")
-    val t0 = System.nanoTime()
-    val hp = graft.queries.SimilarityOps.hyperplanePairsTuned(spark, dir,
-        nPlanes = 4 * bandBits, bandBits = bandBits, maxBucket = 64L,
-        minCosine = 0.3)
+    val (hp, hpC) = Meter.measure(spark)(graft.queries.SimilarityOps
+      .hyperplanePairsTuned(spark, dir, nPlanes = 4 * bandBits,
+        bandBits = bandBits, maxBucket = 64L, minCosine = 0.3)
       .select(col("vec_a"), col("vec_b"))
-      .localCheckpoint(eager = true)
-    val hpSec = (System.nanoTime() - t0) / 1e9
+      .localCheckpoint(eager = true))
     val hpPairs = hp.count()
     val planted = graft.sources.Tables(spark, dir, "embeddings")
       .select(col("vec_id"))
@@ -299,22 +295,19 @@ object ScaleStress {
       .select((col("vec_id") - 4).as("vec_a"), col("vec_id").as("vec_b"))
     val nPlanted = planted.count()
     val found = planted.join(hp, Seq("vec_a", "vec_b"), "left_semi").count()
-    val t1 = System.nanoTime()
-    val sp = graft.queries.DedupOps.simhashPairsTuned(spark, dir,
-        bandBits = 20, maxHamming = 2, maxBucket = 64L)
+    val (sp, spC) = Meter.measure(spark)(graft.queries.DedupOps
+      .simhashPairsTuned(spark, dir, bandBits = 20, maxHamming = 2,
+        maxBucket = 64L)
       .select(col("doc_a"), col("doc_b"))
-      .localCheckpoint(eager = true)
-    val spSec = (System.nanoTime() - t1) / 1e9
-    val spPairs = sp.count()
-    (hpSec, hpPairs, found.toDouble / math.max(nPlanted, 1L), spSec, spPairs)
+      .localCheckpoint(eager = true))
+    (hpC.wallSec, hpPairs, found.toDouble / math.max(nPlanted, 1L),
+      spC.wallSec, sp.count())
   }
 
-  final case class StreamStat(name: String, batchSec: Seq[Double],
+  private final case class StreamStat(name: String, batchSec: Seq[Double],
       stateBytes: Seq[Long], recoverySec: Double, outRows: Long) {
-    def json: String =
-      s""""$name":{"batch_sec":[${batchSec.map(s => f"$s%.3f").mkString(",")}],""" +
-        s""""state_bytes":[${stateBytes.mkString(",")}],""" +
-        f""""recovery_sec":$recoverySec%.3f,"rows":$outRows}"""
+    def obj: Obj = Obj("batch_sec" -> batchSec, "state_bytes" -> stateBytes,
+      "recovery_sec" -> recoverySec, "rows" -> outRows)
   }
 
   private def dirBytes(p: java.nio.file.Path): Long =
@@ -336,7 +329,7 @@ object ScaleStress {
     * cost curves those gates fix at one size: dedup keys / session state /
     * join buffers grow ∝ users·m, the windowed aggregate's state stays
     * bounded by (windows × types) at any m. */
-  def streamingStage(spark: SparkSession, dir: String): Seq[StreamStat] = {
+  private def streamingStage(spark: SparkSession, dir: String): Seq[StreamStat] = {
     import graft.streaming.EventStream
     val ev = spark.read.parquet(s"$dir/events.parquet")
       .withColumn("ts_us", unix_micros(col("ts")))
@@ -351,9 +344,7 @@ object ScaleStress {
       .toString
     val evSchema =
       "event_id LONG, ts TIMESTAMP, user_id LONG, event_type STRING, value DOUBLE"
-    def timed(thunk: => Unit): Double = {
-      val t0 = System.nanoTime(); thunk; (System.nanoTime() - t0) / 1e9
-    }
+    def timed(thunk: => Unit): Double = Meter.measure(spark)(thunk)._2.wallSec
     // r10 verdict item 7: every catch-up run's per-operator state metrics
     // flow into the MetaStore run-metrics path (meta.stream_state), so
     // the growth curve below is what a deployment's dashboard reads — not
@@ -462,8 +453,12 @@ object ScaleStress {
     Seq(win, ded, joi, ses)
   }
 
-  final case class IndexStoreStat(buildSec: Double, serveSec: Double,
-      storeBytes: Long, servedBytes: Long, outRows: Long)
+  private final case class IndexStoreStat(buildSec: Double, serveSec: Double,
+      storeBytes: Long, servedBytes: Long, outRows: Long) {
+    def obj: Obj = Obj("build_sec" -> buildSec, "serve_sec" -> serveSec,
+      "store_bytes" -> storeBytes, "served_bytes" -> servedBytes,
+      "rows" -> outRows)
+  }
 
   /** The sharded postings store at FULL corpus scale (the q125 recipe,
     * un-sliced — r10 verdict item 3's deployment evidence): build the
@@ -476,16 +471,17 @@ object ScaleStress {
     * plan as local relations, so the measured scan is ONLY the pruned
     * store read: per-query bytes ≪ store is the property that makes a
     * 100 TB index answerable without touching the corpus. */
-  def indexStoreStage(spark: SparkSession, dir: String): IndexStoreStat = {
+  private def indexStoreStage(spark: SparkSession, dir: String): IndexStoreStat = {
     import graft.queries.IndexOps
     graft.queries.ArtifactCache.clearAll()
     val base = java.nio.file.Files.createTempDirectory("graft_idx_store")
     val d = graft.sources.Tables(spark, dir, "documents")
       .select(col("doc_id"), col("text"))
-    val t0 = System.nanoTime()
-    val post = IndexOps.postingsOf(d).localCheckpoint(eager = true)
-    IndexOps.writePostingsStore(post, s"$base/p")
-    val buildSec = (System.nanoTime() - t0) / 1e9
+    val (post, build) = Meter.measure(spark) {
+      val post = IndexOps.postingsOf(d).localCheckpoint(eager = true)
+      IndexOps.writePostingsStore(post, s"$base/p")
+      post
+    }
     val storeBytes = dirBytes(java.nio.file.Paths.get(s"$base/p"))
     // ingest-side formulation, collected small: vocab-bounded term stats
     // (the q118 index rows' df), 1-row corpus scalars, ≤ 20 query terms
@@ -515,292 +511,559 @@ object ScaleStress {
         .localCheckpoint(eager = true))
     val rows = served.count()
     graft.export.Exporter.deleteRecursively(base)
-    IndexStoreStat(buildSec, serve.wallSec, storeBytes, serve.inputBytes, rows)
+    IndexStoreStat(build.wallSec, serve.wallSec, storeBytes, serve.inputBytes,
+      rows)
   }
 
   /** Forced-distributed CC over the real q33 pair pipeline (driverMax = 0 ⇒
     * the label-propagation loop runs even though the edge set fits on the
     * driver), checked for exact agreement with the driver union-find path. */
-  def ccForcedDistributed(spark: SparkSession, dir: String): (Double, Long) = {
+  private def ccForcedDistributed(spark: SparkSession, dir: String): (Double, Long) = {
     import graft.operators.ConnectedComponents
     graft.queries.ArtifactCache.clearAll()
     val pairs = graft.queries.DedupOps.queries("q33_minhash_lsh_pairs")(spark, dir)
       .filter(col("est_jaccard") >= 0.5)
       .select(col("doc_a"), col("doc_b"))
     val docs = graft.sources.Tables(spark, dir, "documents").select(col("doc_id"))
-    val t0 = System.nanoTime()
-    val dist = ConnectedComponents.hashMin(pairs, docs, driverMax = 0L)
-      .localCheckpoint(eager = true)
-    val sec = (System.nanoTime() - t0) / 1e9
+    val (dist, c) = Meter.measure(spark)(
+      ConnectedComponents.hashMin(pairs, docs, driverMax = 0L)
+        .localCheckpoint(eager = true))
     val driver = ConnectedComponents.hashMin(pairs, docs)
     val mismatches = dist.toDF("id", "c1")
       .join(driver.toDF("id", "c2"), Seq("id"), "full")
       .filter(not(col("c1") <=> col("c2"))).count()
     require(mismatches == 0L,
       s"distributed CC diverged from driver union-find: $mismatches ids")
-    (sec, mismatches)
+    (c.wallSec, mismatches)
   }
 
-  /** `--flat m1,m2,…` (r13 verdict item 4): ONLY the flat-claim families,
-    * at multipliers the full suite can't afford (the enumeration-contract
-    * trio is Θ(m²) by design and q36/q37/q38 are excluded here): q97
-    * IVF-PQ full path, q119 BM25, q137 sharded ANN store full path, the
-    * q125 postings store build+serve with serve-bytes fraction, tuned
-    * LSH pairs with planted recall, forced-distributed CC — min-of-2
-    * walls, shuffle bytes from Meter. Plus the q141 sharded GRAPH
-    * store at full corpus (store = 3/4 of the vectors, batch = the
-    * rest): build + ingest + serve-through-files wall and the serve-
-    * bytes fraction from [[graft.queries.SimilarityOps
-    * .lastGraphServeBytes]] — capped at mult ≤ 30 (the NN-Descent build
-    * is Θ(n·k²·d): 60k vectors ≈ 4·60k·256 kernel evaluations per
-    * round is the measured envelope; past that the build — never the
-    * serve — is the knee, documented rather than hidden). */
-  private def flatMain(args: Array[String]): Unit = {
-    val mults = args.headOption.getOrElse("1,10,30,100")
-      .split(",").map(_.trim.toInt).toSeq
-    val outRoot = args.lift(1).getOrElse("/tmp/graft_scale")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString).toInt
-    val spark = graft.core.GraftSession.tune(
-        SparkSession.builder().master(s"local[$cpus]")
-          .appName("graft-scale-flat"),
-        math.max(cpus, 4))
-      .config("spark.locality.wait", "0")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val Flat = Seq("q97_ann_ivfpq", "q119_bm25_topk", "q137_ann_sharded_store")
-    // warm-up at the smallest scale (JIT/codegen unbilled)
-    val warmDir = s"$outRoot/x${mults.min}"
-    synthesize(spark, warmDir, mults.min)
-    runSuite(spark, warmDir, qs = Flat)
-    mults.foreach { m =>
-      val dir = s"$outRoot/x$m"
-      if (m != mults.min) synthesize(spark, dir, m)
-      val passes = Seq(runSuite(spark, dir, qs = Flat),
-        runSuite(spark, dir, qs = Flat))
-      val stats = passes.last.zip(passes.head).map { case (a, b) =>
-        a.copy(sec = math.min(a.sec, b.sec)) }
-      stats.foreach { st =>
-        System.err.println(f"[flat x$m] ${st.name}%-24s ${st.sec}%7.2f s  " +
-          f"shufW=${st.shufWriteB / 1024.0 / 1024.0}%9.2f MB")
-      }
-      val idx = Seq(indexStoreStage(spark, dir),
-        indexStoreStage(spark, dir)).minBy(_.serveSec)
-      System.err.println(f"[flat x$m] idxStore build=${idx.buildSec}%.2f s  " +
-        f"store=${idx.storeBytes / 1024.0 / 1024.0}%.2f MB  " +
-        f"serve=${idx.serveSec}%.3f s reading " +
-        f"${idx.servedBytes / 1024.0 / 1024.0}%.2f MB " +
-        f"(${100.0 * idx.servedBytes / math.max(idx.storeBytes, 1L)}%.2f%%)")
-      val lshRuns = Seq(lshTunedStage(spark, dir), lshTunedStage(spark, dir))
-      val (lshSec, lshPairs, lshRecall) = lshRuns.minBy(_._1)
-      System.err.println(f"[flat x$m] lshTuned=$lshSec%.2f s " +
-        f"($lshPairs pairs, planted recall=$lshRecall%.4f)")
-      val (ccSec, ccRows) = Seq(ccForcedDistributed(spark, dir),
-        ccForcedDistributed(spark, dir)).minBy(_._1)
-      System.err.println(f"[flat x$m] ccDistributed=$ccSec%.2f s ($ccRows rows)")
-      if (m <= 30) {
-        import graft.queries.SimilarityOps
+  /** A JSON object, its fields in order: numbers, booleans, strings,
+    * sequences and nested objects render as JSON. */
+  final case class Obj(fields: (String, Any)*) {
+    override def toString: String = fields.map { case (k, v) =>
+      s""""$k":${Obj.render(v)}""" }.mkString("{", ",", "}")
+    def ++(o: Obj): Obj = Obj(fields ++ o.fields: _*)
+  }
+  object Obj {
+    private def render(v: Any): String = v match {
+      case s: String => s""""$s""""
+      case xs: Seq[_] => xs.map(render).mkString("[", ",", "]")
+      case o => o.toString
+    }
+  }
+
+  /** A named scale run: the corpus it synthesizes at a multiplier, its
+    * default multipliers, and its body — `(spark, corpus dir, mult)` to
+    * the JSON fields of that multiplier's line. */
+  final case class Scenario(mults: String,
+      body: (SparkSession, String, Int) => Obj,
+      corpus: (SparkSession, String, Int) => Unit = synthesize)
+
+  /** The better of two runs (the host shows ±30% windows on the minutes
+    * timescale, PERF.md; a single run can bill a stall to a stage). */
+  private def minOf2[A](run: => A)(sec: A => Double): A =
+    Seq(run, run).minBy(sec)
+
+  private def queriesObj(spark: SparkSession, dir: String,
+      qs: Seq[String]): Obj = {
+    // rows are deterministic (counted once); walls are the per-query
+    // min of two passes, bytes from the last
+    val rows = countRows(spark, dir, qs)
+    val Seq(a, b) = Seq.fill(2)(runSuite(spark, dir, rows, qs))
+    Obj(b.zip(a).map { case (s, t) => s.name -> Obj(
+      "sec" -> math.min(s.sec, t.sec), "shuf_read_b" -> s.shufReadB,
+      "shuf_write_b" -> s.shufWriteB, "rows" -> s.outRows) }: _*)
+  }
+
+  private def lshObj(spark: SparkSession, dir: String): Obj = {
+    val (sec, pairs, recall) = minOf2(lshTunedStage(spark, dir))(_._1)
+    Obj("lsh_tuned_sec" -> sec, "lsh_tuned_pairs" -> pairs,
+      "lsh_tuned_recall" -> recall)
+  }
+
+  private def ccObj(spark: SparkSession, dir: String): Obj = {
+    val (sec, mismatches) = minOf2(ccForcedDistributed(spark, dir))(_._1)
+    Obj("cc_distributed_sec" -> sec, "cc_mismatches" -> mismatches)
+  }
+
+  private def indexObj(spark: SparkSession, dir: String): Obj =
+    Obj("index_store" -> minOf2(indexStoreStage(spark, dir))(_.serveSec).obj)
+
+  /** The whole documents/embeddings/events run: the suite, the tuned
+    * geometries, forced-distributed CC, the streaming lifecycles and the
+    * postings store. */
+  private def full(spark: SparkSession, dir: String, m: Int): Obj = {
+    val head = Obj("queries" -> queriesObj(spark, dir, SuiteQueries)) ++
+      ccObj(spark, dir) ++ lshObj(spark, dir)
+    val (hpSec, hpPairs, hpRecall, spSec, spPairs) =
+      minOf2(enumTunedStage(spark, dir))(r => r._1 + r._4)
+    head ++ Obj("hp_tuned_sec" -> hpSec, "hp_tuned_pairs" -> hpPairs,
+      "hp_tuned_recall" -> hpRecall, "simhash_tuned_sec" -> spSec,
+      "simhash_tuned_pairs" -> spPairs, "streaming" -> Obj(
+        streamingStage(spark, dir).map(s => s.name -> s.obj): _*)) ++
+      indexObj(spark, dir)
+  }
+
+  /** The flat-claim families only (r13 verdict item 4), at multipliers
+    * the full suite can't afford (the enumeration-contract trio is Θ(m²)
+    * by design and left out): q97 IVF-PQ and q137 sharded ANN store full
+    * paths, q119 BM25, the postings store, tuned LSH, forced-distributed
+    * CC, and the q141 sharded GRAPH store at full corpus (store = 3/4 of
+    * the vectors, batch = the rest) with its serve-bytes fraction —
+    * capped at mult ≤ 30: the NN-Descent build is Θ(n·k²·d), and past
+    * that the build, never the serve, is the knee. */
+  private def flat(spark: SparkSession, dir: String, m: Int): Obj = {
+    import graft.queries.SimilarityOps
+    val qs = Seq("q97_ann_ivfpq", "q119_bm25_topk", "q137_ann_sharded_store")
+    val graph =
+      if (m > 30) Obj()
+      else {
         val nVecs = graft.sources.Tables(spark, dir, "embeddings").count()
-        val split = nVecs * 3 / 4
-        val t0 = System.nanoTime()
-        val served = SimilarityOps.graphShardedStoreServe(spark, dir,
-          slice = Long.MaxValue, split = split)
-        val n141 = served.count()
-        val g141 = (System.nanoTime() - t0) / 1e9
+        val (rows, c) = Meter.measure(spark)(SimilarityOps
+          .graphShardedStoreServe(spark, dir, slice = Long.MaxValue,
+            split = nVecs * 3 / 4).count())
         val (touched, total) = SimilarityOps.lastGraphServeBytes.get()
-        System.err.println(f"[flat x$m] q141 graphStore build+ingest+serve=" +
-          f"$g141%.2f s ($n141 rows); serve read " +
-          f"${touched / 1024.0 / 1024.0}%.2f of " +
-          f"${total / 1024.0 / 1024.0}%.2f MB " +
-          f"(${100.0 * touched / math.max(total, 1L)}%.2f%%)")
+        Obj("graph_store" -> Obj("sec" -> c.wallSec, "rows" -> rows,
+          "touched_bytes" -> touched, "total_bytes" -> total))
       }
-      val qj = stats.map(st => f""""${st.name}":${st.sec}%.3f""").mkString(",")
-      println(f"""{"metric":"flat_scale","mult":$m,"queries":{$qj},""" +
-        f""""idx_build_sec":${idx.buildSec}%.3f,"idx_serve_sec":${idx.serveSec}%.3f,""" +
-        f""""idx_store_bytes":${idx.storeBytes},"idx_served_bytes":${idx.servedBytes},""" +
-        f""""lsh_sec":$lshSec%.3f,"lsh_pairs":$lshPairs,"lsh_recall":$lshRecall%.4f,""" +
-        f""""cc_sec":$ccSec%.3f}""")
-    }
-    spark.stop()
+    Obj("queries" -> queriesObj(spark, dir, qs)) ++ indexObj(spark, dir) ++
+      lshObj(spark, dir) ++ ccObj(spark, dir) ++ graph
   }
 
-  /** `--suite q1,q2,… m1,m2,… [outRoot]`: min-of-2 walls + shuffle bytes
-    * for an arbitrary query subset on existing/synthesized corpora —
-    * the per-operator curve probe for newly added queries. */
-  private def suiteMain(args: Array[String]): Unit = {
-    val qs = args.headOption.getOrElse(sys.error("--suite q1,q2,… mults"))
-      .split(",").map(_.trim).toSeq
-    val mults = args.lift(1).getOrElse("1,10,30")
-      .split(",").map(_.trim.toInt).toSeq
-    val outRoot = args.lift(2).getOrElse("/tmp/graft_scale")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString).toInt
-    val spark = graft.core.GraftSession.tune(
-        SparkSession.builder().master(s"local[$cpus]")
-          .appName("graft-scale-suite"),
-        math.max(cpus, 4))
-      .config("spark.locality.wait", "0")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val warmDir = s"$outRoot/x${mults.min}"
-    synthesize(spark, warmDir, mults.min)
-    runSuite(spark, warmDir, qs = qs)
-    mults.foreach { m =>
-      val dir = s"$outRoot/x$m"
-      if (m != mults.min) synthesize(spark, dir, m)
-      val passes = Seq(runSuite(spark, dir, qs = qs),
-        runSuite(spark, dir, qs = qs))
-      val stats = passes.last.zip(passes.head).map { case (a, b) =>
-        a.copy(sec = math.min(a.sec, b.sec)) }
-      stats.foreach { st =>
-        System.err.println(f"[suite x$m] ${st.name}%-28s ${st.sec}%7.2f s  " +
-          f"shufW=${st.shufWriteB / 1024.0 / 1024.0}%9.2f MB")
+  /** q160's BFD packing (r16 verdict item 6) with the shard count raised
+    * with scale (8·m — the parallelism knob a production loader turns as
+    * the corpus grows) next to the fixed-8 gate geometry. The greedy is
+    * per-shard sequential by contract, so fixed shards ⇒ per-shard work
+    * grows with m; scaled shards hold it ~constant. */
+  private def pack(spark: SparkSession, dir: String, m: Int): Obj =
+    Obj(Seq("fixed8" -> 8L, "scaled" -> 8L * m).map { case (label, sh) =>
+      val c = minOf2 {
+        graft.queries.ArtifactCache.clearAll()
+        Meter.measure(spark)(graft.queries.TextOps.bfdPack(spark, dir,
+          shards = sh).write.format("noop").mode("overwrite").save())._2
+      }(_.wallSec)
+      label -> Obj("shards" -> sh, "sec" -> c.wallSec,
+        "shuffle_write" -> c.shuffleWriteBytes)
+    }: _*)
+
+  private def embeddings(spark: SparkSession, dir: String) =
+    spark.read.parquet(s"$dir/embeddings.parquet")
+      .select(col("vec_id"), col("embedding"))
+
+  /** Fraction of the planted near-duplicates (vec_id ≡ 13 mod 19, twin
+    * vec_id − 4 — an unambiguous true nearest neighbor at d = 64) whose
+    * adjacency holds the twin. */
+  private def plantedRecall(g: DataFrame, n: Long): Double = {
+    val hits = g.filter(pmod(col("vec_id"), lit(19)) === 13 &&
+        col("nid") === col("vec_id") - 4)
+      .select("vec_id").distinct().count()
+    hits.toDouble / (13L until n by 19L).count(_ >= 4)
+  }
+
+  /** Beam-search recall at fixed degree (the r15 verdict's α-prune
+    * metric): 200 planted queries navigate the graph from the fixed
+    * seeds; a hit is the twin in the top-5. Adjacency recall can't tell
+    * edge-selection policies apart (every policy keeps the closest
+    * candidate); navigability can. */
+  private def searchRecall(g: DataFrame, e: DataFrame): Double = {
+    val qs = e.filter(pmod(col("vec_id"), lit(19)) === 13 && col("vec_id") >= 4)
+      .orderBy("vec_id").limit(200)
+      .select(col("vec_id").as("qid"), col("embedding").as("qe"))
+    val res = NnDescent.graphSearch(g.select("vec_id", "nid"), e, qs,
+      beam = 16, hops = 6, seeds = 4, topk = 5)
+    res.filter(col("nid") === col("qid") - 4).select("qid").distinct()
+      .count().toDouble / qs.count()
+  }
+
+  /** Coarse cells for a sharded build: n/4000 (min 8), trained by
+    * bounded-sample Lloyd on ~20k vectors at any corpus size. */
+  private def shardCells(e: DataFrame, n: Long, cells: Int, iters: Int) =
+    graft.queries.SimilarityOps.lloydFromSeeds(
+      e.filter(pmod(col("vec_id"), lit(math.max(1L, n / 20000L))) === 0),
+      cells, iters)
+
+  /** The global NN-Descent loop vs the DiskANN-recipe per-cell build
+    * ([[NnDescent.knnGraphSharded]], r14 verdict item 2), planted-twin
+    * recall for both, then equal-degree-8 edge selection over the same
+    * sharded candidates: plain k-cut vs α-robust-prune (α = 1.25), by
+    * beam-search recall. The global build is skipped past 30× (the
+    * measured knee of the corpus-wide loop). */
+  private def graphBuild(spark: SparkSession, dir: String, m: Int): Obj = {
+    val (k, iters) = (16, 4) // the q126 gate build geometry
+    val n = 2000L * m
+    val e = embeddings(spark, dir)
+    val cells = math.max(8, (n / 4000).toInt)
+    val (cents, quant) = Meter.measure(spark)(shardCells(e, n, cells, iters))
+    val (gS, shard) = Meter.measure(spark)(NnDescent.knnGraphSharded(e, k,
+      iters, cents, spill = 2, stitch = 2).localCheckpoint(eager = true))
+    val dedup = gS.groupBy("vec_id", "nid").agg(max("cos").as("cos"))
+    val w = Window.partitionBy("vec_id").orderBy(desc("cos"), asc("nid"))
+    val cut8 = dedup.withColumn("rn", row_number().over(w))
+      .filter(col("rn") <= k / 2).drop("rn").localCheckpoint(eager = true)
+    val (alpha8, prune) = Meter.measure(spark)(NnDescent.robustPrune(dedup,
+      e, k / 2, alpha = 1.25).localCheckpoint(eager = true))
+    val global =
+      if (m > 30) Obj()
+      else {
+        val (gG, c) = Meter.measure(spark)(NnDescent.knnGraph(e, k, iters,
+          driverMax = 0).localCheckpoint(eager = true))
+        Obj("global_sec" -> c.wallSec, "global_recall" -> plantedRecall(gG, n),
+          "global_rows" -> gG.count())
       }
-    }
-    spark.stop()
+    Obj("n" -> n, "cells" -> cells, "quantizer_sec" -> quant.wallSec,
+      "sharded_sec" -> shard.wallSec, "sharded_recall" -> plantedRecall(gS, n),
+      "sharded_rows" -> gS.count(), "prune_sec" -> prune.wallSec,
+      "search_recall_cut8" -> searchRecall(cut8, e),
+      "search_recall_alpha8" -> searchRecall(alpha8, e)) ++ global
   }
 
-  /** `--pack m1,m2,…` (r16 verdict item 6): q160's BFD packing with the
-    * shard count RAISED with scale (shards = 8·m — the parallelism knob a
-    * production loader turns as the corpus grows) next to the fixed-8
-    * gate geometry. The greedy is per-shard sequential by contract, so
-    * fixed shards ⇒ per-shard work grows with m (the O(bins) scan is the
-    * growth term); scaling shards with the corpus holds per-shard work
-    * ~constant — wall should go ~flat where fixed-8 climbs. */
-  private def packMain(args: Array[String]): Unit = {
-    val mults = args.headOption.getOrElse("1,10,30,100")
-      .split(",").map(_.trim.toInt).toSeq
-    val outRoot = args.lift(1).getOrElse("/tmp/graft_scale")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString).toInt
-    val spark = graft.core.GraftSession.tune(
-        SparkSession.builder().master(s"local[$cpus]")
-          .appName("graft-scale-pack"),
-        math.max(cpus, 4))
-      .config("spark.locality.wait", "0")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val warmDir = s"$outRoot/x${mults.min}"
-    synthesize(spark, warmDir, mults.min)
-    graft.queries.TextOps.bfdPack(spark, warmDir)
-      .write.format("noop").mode("overwrite").save()
-    mults.foreach { m =>
-      val dir = s"$outRoot/x$m"
-      if (m != mults.min) synthesize(spark, dir, m)
-      val shapes = Seq(("fixed8", 8L), ("scaled", 8L * m))
-      val line = shapes.map { case (label, sh) =>
-        val runs = (1 to 2).map { _ =>
-          graft.queries.ArtifactCache.clearAll()
-          val (_, c) = Meter.measure(spark)(
-            graft.queries.TextOps.bfdPack(spark, dir, shards = sh)
-              .write.format("noop").mode("overwrite").save())
-          (c.wallSec, c.shuffleWriteBytes)
-        }
-        val (sec, shufW) = runs.minBy(_._1)
-        System.err.println(f"[pack x$m] $label%-7s shards=$sh%4d " +
-          f"wall=$sec%6.2f s  shufW=${shufW / 1024.0 / 1024.0}%7.2f MB")
-        f""""$label":{"shards":$sh,"sec":$sec%.3f,"shuffle_write":$shufW}"""
-      }.mkString(",")
-      println(s"""{"metric":"pack_scale","mult":$m,$line}""")
-    }
-    spark.stop()
+  /** The q158 distributed batch serve (r15 verdict item 3): serve wall
+    * ∝ the probe count and flat in corpus size. The store is built once
+    * per multiplier, unmetered; waves of 128 / 512 / 1024 probes run
+    * min-of-2 with their touched-shard bytes. Then the same 1024 probes
+    * served as cell-grouped waves (r16 verdict item 3, a measured
+    * negative: per-group touched fraction stays ~100%; rows identical to
+    * the flat wave, asserted) and entry-disciplined (q165: its top-5
+    * overlap with the all-seed walk). */
+  private def graphServe(spark: SparkSession, dir: String, m: Int): Obj = {
+    import graft.queries.SimilarityOps
+    import scala.collection.mutable
+    val n = 2000L * m
+    val e = embeddings(spark, dir)
+    def probes(np: Long) = e.filter(col("vec_id") < np)
+      .select(col("vec_id").as("qid"), col("embedding").as("qe"))
+    val base = java.nio.file.Files.createTempDirectory("gserve")
+    try {
+      val cells = math.max(8, (n / 4000).toInt)
+      val g = NnDescent.knnGraphSharded(e, 16, 4, shardCells(e, n, cells, 4),
+        spill = 2, stitch = 2)
+      val coarse8 = shardCells(e, n, 8, 3)
+      SimilarityOps.writeGraphStore(spark, e, g, coarse8, base.toString)
+      val storeBytes = dirBytes(base)
+      // warm-up wave (unmetered): parquet footers of this store
+      SimilarityOps.distributedStoreServe(spark, base.toString, probes(16),
+        mutable.Set[Int]()).count()
+      val waves = Seq(128L, 512L, 1024L).map { np =>
+        val touched = mutable.Set[Int]()
+        val (rows, c) = minOf2 {
+          touched.clear()
+          Meter.measure(spark)(SimilarityOps.distributedStoreServe(spark,
+            base.toString, probes(np), touched).count())
+        }(_._2.wallSec)
+        val touchedBytes = touched.toSeq.flatMap(sh => Seq("adj", "vec")
+          .map(sub => dirBytes(base.resolve(sub).resolve(s"shard=$sh")))).sum
+        s"p$np" -> Obj("sec" -> c.wallSec, "rows" -> rows,
+          "touched_bytes" -> touchedBytes)
+      }
+      def grouped(entryCut: Int) = {
+        val (rows, c) = Meter.measure(spark)(SimilarityOps
+          .distributedStoreServeGrouped(spark, base.toString, probes(1024L),
+            coarse8, mutable.Set[Int](), entryCut).collect()
+          .map(r => (r.getLong(0), r.getLong(1))).toSeq)
+        val fracs = SimilarityOps.lastGroupedServeStats.get().map(_.frac)
+        (rows, Obj("sec" -> c.wallSec, "groups" -> fracs.size,
+          "mean_group_frac" -> fracs.sum / math.max(fracs.size, 1),
+          "max_group_frac" -> fracs.max))
+      }
+      val flatRows = SimilarityOps.distributedStoreServe(spark, base.toString,
+        probes(1024L), mutable.Set[Int]()).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSeq
+      val (groupedRows, groupedObj) = grouped(0)
+      require(groupedRows.toSet == flatRows.toSet,
+        "grouped serve diverged from the flat wave")
+      val (entryRows, entryObj) = grouped(1)
+      def top5(rs: Seq[(Long, Long)]) =
+        rs.groupBy(_._1).map { case (q, r) => q -> r.map(_._2).toSet }
+      val (flatTop, entryTop) = (top5(flatRows), top5(entryRows))
+      val overlap = flatTop.map { case (q, t) =>
+        entryTop.getOrElse(q, Set.empty).intersect(t).size.toDouble /
+          math.max(t.size, 1) }
+      Obj("n" -> n, "store_bytes" -> storeBytes) ++ Obj(waves: _*) ++
+        Obj("grouped_p1024" -> (groupedObj ++ Obj("identical_to_flat" -> true)),
+          "entry1_p1024" -> (entryObj ++ Obj("overlap_vs_flat" ->
+            overlap.sum / math.max(overlap.size, 1))))
+    } finally graft.export.Exporter.deleteRecursively(base)
   }
 
+  /** A planted-cluster corpus of 2000·m vectors (the AnnRecallSpec
+    * clustered-fixture recipe: 8 centers hash-derived in [-20, 20],
+    * cluster = vec_id mod 8, hash noise in [-0.5, 0.5]: inter-center
+    * distance ≈ 160 ≫ intra ≈ 4.6) — the regime real embedding corpora
+    * live in, where the cell-clustered q141 store layout buys a small
+    * serve-bytes fraction; the near-uniform corpus keeps it ~100%. */
+  private def clustered(spark: SparkSession, dir: String, m: Int): Unit =
+    spark.range(2000L * m).toDF("vec_id")
+      .withColumn("c", pmod(col("vec_id"), lit(8)).cast("int"))
+      .withColumn("embedding", transform(sequence(lit(0), lit(63)), j =>
+        ((pmod(hash(col("c"), j), lit(2001)) - 1000).cast("double") / 50.0 +
+          (pmod(hash(col("vec_id"), j + 7000), lit(1001)) - 500)
+            .cast("double") / 1000.0).cast("float")))
+      .withColumn("label", col("c"))
+      .select("vec_id", "embedding", "label")
+      .repartition(8)
+      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+
+  /** q141's build + ingest + serve over the clustered corpus, with the
+    * bytes its serve touched. */
+  private def graphStore(spark: SparkSession, dir: String, m: Int): Obj = {
+    import graft.queries.SimilarityOps
+    val n = 2000L * m
+    val (rows, c) = Meter.measure(spark)(SimilarityOps.graphShardedStoreServe(
+      spark, dir, slice = Long.MaxValue, split = n * 3 / 4).count())
+    val (touched, total) = SimilarityOps.lastGraphServeBytes.get()
+    Obj("n" -> n, "sec" -> c.wallSec, "rows" -> rows,
+      "touched_bytes" -> touched, "total_bytes" -> total)
+  }
+
+  /** The q150 drift-retrain lifecycle ([[DriftingVectorStore]]): with a
+    * fixed 2k-vector batch, in-distribution ingest stays flat as the
+    * standing corpus grows while the retrain + re-encode on the drift
+    * event grows ~linearly — the cost that buys back the recall a frozen
+    * quantizer would silently lose. */
+  private def drift(spark: SparkSession, dir: String, m: Int): Obj = {
+    import graft.queries.SimilarityOps
+    val n = 2000L * m
+    val e = embeddings(spark, dir)
+    val base = java.nio.file.Files.createTempDirectory("driftprobe")
+    try {
+      val dvs = new DriftingVectorStore(s"$base/store", 8, 3,
+        SimilarityOps.PqM, SimilarityOps.PqK, SimilarityOps.PqIters)
+      val init = Meter.measure(spark)(dvs.init(spark, e))._2
+      val (ra, ingest) = Meter.measure(spark)(dvs.ingest(e.filter(
+        col("vec_id") < 2000).select((col("vec_id") + 10000000L).as("vec_id"),
+        col("embedding")), 1L))
+      require(!ra.retrained, s"in-distribution batch retrained at ${ra.driftRatio}")
+      val (rb, retrain) = Meter.measure(spark)(dvs.ingest(e.filter(
+        col("vec_id") < 2000).select((col("vec_id") + 20000000L).as("vec_id"),
+        transform(col("embedding"), x => x + lit(25.0f)).as("embedding")), 2L))
+      require(rb.retrained, s"drift batch did not retrain at ${rb.driftRatio}")
+      Obj("n" -> n, "init_sec" -> init.wallSec, "ingest_sec" -> ingest.wallSec,
+        "ingest_ratio" -> ra.driftRatio, "retrain_sec" -> retrain.wallSec,
+        "retrain_ratio" -> rb.driftRatio, "epoch" -> dvs.epoch,
+        "stored" -> dvs.store.count())
+    } finally graft.export.Exporter.deleteRecursively(base)
+  }
+
+  /** The q156 tokenizer twin of [[drift]] ([[DriftingTokenizerStore]]):
+    * a fixed 1k-doc in-distribution batch is scored against the
+    * persisted reference counts (flat), a reversed-token batch drifts
+    * and pays the corpus-sized re-learn + re-encode. */
+  private def tokDrift(spark: SparkSession, dir: String, m: Int): Obj = {
+    val n = 5000L * m
+    val d = spark.read.parquet(s"$dir/documents.parquet")
+      .select(col("doc_id"), split(col("text"), " ").as("toks"))
+    val base = java.nio.file.Files.createTempDirectory("tokdrift")
+    try {
+      val dts = new DriftingTokenizerStore(s"$base/store", 16)
+      val init = Meter.measure(spark)(dts.init(spark, d))._2
+      val (ra, ingest) = Meter.measure(spark)(dts.ingest(d.filter(
+        col("doc_id") < 1000).select((col("doc_id") + 10000000L).as("doc_id"),
+        col("toks")), 1L))
+      require(!ra.retrained, s"in-distribution batch retrained at KL ${ra.kl}")
+      val (rb, retrain) = Meter.measure(spark)(dts.ingest(d.filter(
+        col("doc_id") < 1000).select((col("doc_id") + 20000000L).as("doc_id"),
+        transform(col("toks"), t => reverse(t)).as("toks")), 2L))
+      require(rb.retrained, s"drift batch did not retrain at KL ${rb.kl}")
+      Obj("n" -> n, "init_sec" -> init.wallSec, "ingest_sec" -> ingest.wallSec,
+        "ingest_kl" -> ra.kl, "retrain_sec" -> retrain.wallSec,
+        "retrain_kl" -> rb.kl, "epoch" -> dts.epoch,
+        "stored" -> dts.store.count())
+    } finally graft.export.Exporter.deleteRecursively(base)
+  }
+
+  /** A uniform hash-derived corpus: 20000·m standing vectors and three
+    * 2000-vector ingest batches after them. */
+  private def uniform(spark: SparkSession, dir: String, m: Int): Unit = {
+    val n = 20000L * m
+    spark.range(n + 3 * 2000L).toDF("vec_id")
+      .withColumn("embedding", transform(sequence(lit(0), lit(63)), j =>
+        ((pmod(hash(col("vec_id"), j), lit(2001)) - 1000)
+          .cast("double") / 1000.0).cast("float")))
+      .repartition(math.max(2, (n / 100000L).toInt))
+      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+  }
+
+  /** q144's streaming store: frozen artifacts trained on the standing
+    * slice (bounded sample), the standing corpus as batch 0, then three
+    * FIXED 2000-vector batches — per-batch ingest must not grow with the
+    * store — and the serve's probed-cell bytes; then q145's anisotropic
+    * PQ training and full encode + IP-ADC serve. */
+  private def vectorStore(spark: SparkSession, dir: String, m: Int): Obj = {
+    import graft.queries.SimilarityOps
+    import graft.streaming.VectorStoreIngest
+    val n = 20000L * m
+    val e = embeddings(spark, dir)
+    val (coarse, tCoarse) = Meter.measure(spark)(
+      SimilarityOps.lloydCentroids(spark, dir, 8, 3, maxVec = n))
+    val (pq, tPq) = Meter.measure(spark)(SimilarityOps.pqCodebooks(spark,
+      dir, SimilarityOps.PqM, SimilarityOps.PqK, SimilarityOps.PqIters,
+      maxVec = n))
+    val store = java.nio.file.Files.createTempDirectory("vstore").resolve("s")
+    try {
+      val boot = Meter.measure(spark)(VectorStoreIngest.ingestBatch(
+        e.filter(col("vec_id") < n), 0L, store.toString, coarse, pq))._2
+      val batches = (0 until 3).map { i =>
+        val lo = n + i * 2000L
+        Meter.measure(spark)(VectorStoreIngest.ingestBatch(e.filter(
+          col("vec_id") >= lo && col("vec_id") < lo + 2000L), i + 1L,
+          store.toString, coarse, pq))._2.wallSec
+      }
+      val cells = e.filter(col("vec_id") < 10)
+        .select(graft.plans.NearestCentroid.cell(col("embedding"), coarse))
+        .distinct().collect().map(_.getInt(0)).toSeq
+      // aggregate over the codes: a bare count() is answered from parquet
+      // footers without decoding them
+      val (served, serve) = Meter.measure(spark)(spark.read
+        .parquet(store.toString).filter(col("cell").isin(cells: _*))
+        .agg(count(lit(1)), sum(element_at(col("codes"), 1)))
+        .head().getLong(0))
+      val files = {
+        val s = java.nio.file.Files.walk(store)
+        try s.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+          .toSeq finally s.close()
+      }
+      val touched = files.filter(p =>
+        cells.exists(c => p.toString.contains(s"cell=$c/")))
+      val aniso = Meter.measure(spark)(SimilarityOps.anisoCodebooks(spark,
+        dir, SimilarityOps.PqM, SimilarityOps.PqK, SimilarityOps.PqIters,
+        eta = SimilarityOps.AnisoEta, maxVec = n))._2
+      val (rows145, serve145) = Meter.measure(spark)(SimilarityOps
+        .anisoPqTop5(spark, dir, SimilarityOps.AnisoEta, maxVec = n).count())
+      Obj("n" -> n, "coarse_sec" -> tCoarse.wallSec, "pq_sec" -> tPq.wallSec,
+        "bootstrap_sec" -> boot.wallSec, "batch_sec" -> batches,
+        "serve_sec" -> serve.wallSec, "served_rows" -> served,
+        "store_bytes" -> files.map(java.nio.file.Files.size(_)).sum,
+        "touched_bytes" -> touched.map(java.nio.file.Files.size(_)).sum,
+        "aniso_train_sec" -> aniso.wallSec, "aniso_serve_sec" -> serve145.wallSec,
+        "aniso_rows" -> rows145)
+    } finally graft.export.Exporter.deleteRecursively(store.getParent)
+  }
+
+  /** Full-corpus NN-Descent (q126's gate is slice-bounded): build cost
+    * should track Θ(iters·n·k²); then 10 probes through the graph (q127,
+    * Θ(hops·beam·degree) per probe) and the q130 layered descent reusing
+    * that graph as layer 0. */
+  private def nn(spark: SparkSession, dir: String, m: Int): Obj = {
+    val e = embeddings(spark, dir)
+    val (graph, build) = Meter.measure(spark)(NnDescent.knnGraph(e, 16, 4,
+      driverMax = 0L).localCheckpoint(eager = true))
+    val qs = e.filter(col("vec_id") < 10)
+      .select(col("vec_id").as("qid"), col("embedding").as("qe"))
+    val (found, search) = Meter.measure(spark)(NnDescent.graphSearch(graph, e,
+      qs, beam = 16, hops = 4, seeds = 4, topk = 5, driverMax = 0L).count())
+    val (layered, lc) = Meter.measure(spark)(graft.queries.SimilarityOps
+      .hnswLayeredSearch(spark, dir, layer0 = Some(graph)).count())
+    Obj("n" -> e.count(), "build_sec" -> build.wallSec,
+      "graph_rows" -> graph.count(), "search_sec" -> search.wallSec,
+      "search_rows" -> found, "layered_sec" -> lc.wallSec,
+      "layered_rows" -> layered)
+  }
+
+  /** The RP-tree forest's DISTRIBUTED level loop (q133's gate takes the
+    * driver tier): build should track Θ(depth·n·T·dim), one
+    * shuffle-bounded pass per level; the probe route touches only
+    * broadcast metadata, so it should not grow with the corpus. */
+  private def rp(spark: SparkSession, dir: String, m: Int): Obj = {
+    import graft.operators.RpForest
+    val (trees, depth) = (3, 3)
+    val e = embeddings(spark, dir)
+    val n = e.count()
+    val ((leaves, thrs), build) = Meter.measure(spark) {
+      val (l, t) = RpForest.build(spark, e, trees, depth, 64, driverMax = 0L)
+      (l.localCheckpoint(eager = true), t)
+    }
+    val (cand, route) = Meter.measure(spark)(RpForest.forestCandidates(leaves,
+      RpForest.probeRoute(spark, e.filter(col("vec_id") < 10), thrs, trees,
+        depth, 64, 400000000L, driverMax = 0L)).count())
+    Obj("n" -> n, "build_sec" -> build.wallSec, "leaf_rows" -> leaves.count(),
+      "route_sec" -> route.wallSec, "cand_rows" -> cand,
+      "cand_frac" -> cand.toDouble / math.max(n - 1, 1) / 10)
+  }
+
+  /** 30000·m documents whose RAW vocabulary grows with the corpus
+    * (unique tokens ∝ rows — the regime the 25-word corpus can't
+    * produce). */
+  private def growingVocab(spark: SparkSession, dir: String, m: Int): Unit = {
+    val n = 30000L * m
+    val toks = transform(sequence(lit(1), lit(60)),
+      j => concat(lit("w"), pmod(col("doc_id") * 60 + j, lit(n))))
+    spark.range(n).toDF("doc_id")
+      .select(col("doc_id"), array_join(toks, " ").as("text"),
+        lit("en").as("lang"), lit("synth").as("source"))
+      .withColumn("n_chars", length(col("text")))
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+  }
+
+  /** The q129 perceptron's vocabulary gate (r13 verdict item 1): past
+    * PerceptronVocabMax the trainer switches to hashed features, so the
+    * driver-held feature count stays O(B) while the vocabulary grows. */
+  private def vocabGate(spark: SparkSession, dir: String, m: Int): Obj = {
+    import graft.queries.TextOps
+    val rawVocab = spark.read.parquet(s"$dir/documents.parquet")
+      .select(explode(split(col("text"), " ")).as("t"))
+      .agg(countDistinct("t")).head().getLong(0)
+    val (traj, c) = Meter.measure(spark)(
+      TextOps.perceptronTrajectory(spark, dir, hashBuckets = None).collect())
+    val feats = traj.count(_.getLong(0) == 1L)
+    Obj("docs" -> 30000L * m, "raw_vocab" -> rawVocab,
+      "tier" -> (if (feats <= TextOps.PerceptronHashBuckets + 2) "hashed" else "exact"),
+      "driver_feats" -> feats, "sec" -> c.wallSec)
+  }
+
+  private def suite(qs: Seq[String]) = Scenario("1,10,30",
+    (s, d, _) => Obj("queries" -> queriesObj(s, d, qs)))
+
+  /** Every scale run, by name (`runMain graft.tools.ScaleStress <name>`). */
+  val Scenarios: Map[String, Scenario] = Map(
+    "full" -> Scenario("1,10", full,
+      (s, d, m) => { synthesize(s, d, m); synthesizeEvents(s, d, m) }),
+    "suite" -> suite(SuiteQueries),
+    "flat" -> Scenario("1,10,30,100", flat),
+    "pack" -> Scenario("1,10,30,100", pack),
+    "cc" -> Scenario("1,10,30", (s, d, _) => ccObj(s, d)),
+    "graph-build" -> Scenario("1,10,30", graphBuild),
+    "graph-serve" -> Scenario("1,10,30", graphServe),
+    "graph-store" -> Scenario("30", graphStore, clustered),
+    "drift" -> Scenario("1,10,30", drift),
+    "tok-drift" -> Scenario("1,10,30", tokDrift),
+    "vector-store" -> Scenario("1,10,30", vectorStore, uniform),
+    "nn" -> Scenario("1,10,30", nn),
+    "rp" -> Scenario("1,10,30", rp),
+    "vocab-gate" -> Scenario("1,10,30", vocabGate, growingVocab))
+
+  /** One multiplier's JSON line. */
+  def line(name: String, mult: Int, fields: Obj): String =
+    (Obj("scenario" -> name, "mult" -> mult) ++ fields).toString
+
+  /** Usage: runMain graft.tools.ScaleStress [scenario] [mults] [outRoot]
+    *   [queries]
+    *   scenario one of [[Scenarios]] (default `full`)
+    *   mults    comma list of corpus multipliers (default: the scenario's)
+    *   outRoot  parent dir of the synthesized corpora (default
+    *            /tmp/graft_scale); scenario s at mult m lives in
+    *            outRoot/s/x<m>
+    *   queries  `suite` only: comma list of queries (default SuiteQueries)
+    * One session; the scenario runs once unbilled at the smallest
+    * multiplier (JIT, codegen), then once per multiplier from cold
+    * artifacts, each run printing one JSON line on stdout. */
   def main(args: Array[String]): Unit = {
-    if (args.headOption.contains("--flat")) { flatMain(args.drop(1)); return }
-    if (args.headOption.contains("--suite")) { suiteMain(args.drop(1)); return }
-    if (args.headOption.contains("--pack")) { packMain(args.drop(1)); return }
-    val mults = args.headOption.getOrElse("1,10")
-      .split(",").map(_.trim.toInt).toSeq
-    val outRoot = args.lift(1).getOrElse("/tmp/graft_scale")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString).toInt
-    val spark = graft.core.GraftSession.tune(
-        SparkSession.builder().master(s"local[$cpus]")
-          .appName("graft-scale-stress"),
-        math.max(cpus, 4))
-      .config("spark.locality.wait", "0")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    // warm-up at the smallest scale: JIT + codegen compile once, unbilled
-    val warmDir = s"$outRoot/x${mults.min}"
-    synthesize(spark, warmDir, mults.min)
-    synthesizeEvents(spark, warmDir, mults.min)
-    runSuite(spark, warmDir)
-
-    val perScale = mults.map { m =>
-      val dir = s"$outRoot/x$m"
-      if (m != mults.min) { synthesize(spark, dir, m); synthesizeEvents(spark, dir, m) }
-      // min-of-2 passes: this host shows ±30% noise windows on the minutes
-      // timescale (PERF.md protocol); a single pass can misattribute a
-      // stall to a query. Shuffle bytes / rows are deterministic — taken
-      // from the last pass; seconds are the per-query min.
-      val rows = countRows(spark, dir)
-      val passes = Seq(runSuite(spark, dir, rows),
-        runSuite(spark, dir, rows))
-      val stats = passes.last.zip(passes.head).map { case (a, b) =>
-        a.copy(sec = math.min(a.sec, b.sec)) }
-      val (ccSec, _) = Seq(ccForcedDistributed(spark, dir),
-        ccForcedDistributed(spark, dir)).minBy(_._1)
-      val lshRuns = Seq(lshTunedStage(spark, dir), lshTunedStage(spark, dir))
-      val (lshSec, lshPairs, lshRecall) = lshRuns.minBy(_._1)
-      val enumRuns = Seq(enumTunedStage(spark, dir), enumTunedStage(spark, dir))
-      val (hpSec, hpPairs, hpRecall, spSec, spPairs) =
-        enumRuns.minBy(r => r._1 + r._4)
-      val streamStats = streamingStage(spark, dir)
-      streamStats.foreach { st =>
-        System.err.println(f"[scale x$m] stream ${st.name}%-15s " +
-          f"batches=${st.batchSec.map(s => f"$s%.2f").mkString("/")} s  " +
-          f"state=${st.stateBytes.last / 1024.0}%.0f KB  " +
-          f"recovery=${st.recoverySec}%.2f s  rows=${st.outRows}%d")
-      }
-      val idx = Seq(indexStoreStage(spark, dir),
-        indexStoreStage(spark, dir)).minBy(_.serveSec)
-      System.err.println(f"[scale x$m] idxStore build=${idx.buildSec}%.2f s  " +
-        f"store=${idx.storeBytes / 1024.0 / 1024.0}%.2f MB  " +
-        f"serve=${idx.serveSec}%.3f s reading " +
-        f"${idx.servedBytes / 1024.0 / 1024.0}%.2f MB " +
-        f"(${100.0 * idx.servedBytes / math.max(idx.storeBytes, 1L)}%.1f%%)" +
-        f"  rows=${idx.outRows}%d")
-      val total = stats.map(_.sec).sum
-      System.err.println(f"[scale x$m] total=$total%.2f s  ccDistributed=$ccSec%.2f s" +
-        f"  lshTuned=$lshSec%.2f s ($lshPairs pairs, recall=$lshRecall%.4f)")
-      System.err.println(f"[scale x$m] enumTuned: hyperplane=$hpSec%.2f s " +
-        f"($hpPairs pairs, planted recall=$hpRecall%.4f)  " +
-        f"simhash=$spSec%.2f s ($spPairs pairs)")
-      stats.foreach { s =>
-        System.err.println(f"[scale x$m]   ${s.name}%-26s ${s.sec}%7.2f s  " +
-          f"shufW=${s.shufWriteB / 1024.0 / 1024.0}%9.2f MB  rows=${s.outRows}%d")
-      }
-      val qJson = stats.map { s =>
-        s""""${s.name}":{"sec":${s.sec},"shuf_read_b":${s.shufReadB},""" +
-          s""""shuf_write_b":${s.shufWriteB},"rows":${s.outRows}}"""
-      }.mkString("{", ",", "}")
-      println(s"""{"scale":$m,"total_sec":$total,"cc_distributed_sec":$ccSec,""" +
-        s""""lsh_tuned_sec":$lshSec,"lsh_tuned_pairs":$lshPairs,""" +
-        s""""lsh_tuned_recall":$lshRecall,""" +
-        s""""hp_tuned_sec":$hpSec,"hp_tuned_pairs":$hpPairs,""" +
-        s""""hp_tuned_recall":$hpRecall,""" +
-        s""""simhash_tuned_sec":$spSec,"simhash_tuned_pairs":$spPairs,""" +
-        s""""streaming":${streamStats.map(_.json).mkString("{", ",", "}")},""" +
-        s""""index_store":{"build_sec":${idx.buildSec},""" +
-        s""""serve_sec":${idx.serveSec},"store_bytes":${idx.storeBytes},""" +
-        s""""served_bytes":${idx.servedBytes},"rows":${idx.outRows}},""" +
-        s""""queries":$qJson}""")
-      m -> (total, stats)
-    }
-
-    // headline: wall-time growth factor between the extreme scales
-    if (mults.size > 1) {
-      val (m0, (t0, s0)) = perScale.head
-      val (m1, (t1, s1)) = perScale.last
-      val linear = Seq(s0, s1).map(_.filterNot(s =>
-        Set("q36_embed_neardup", "q37_ann_lsh_buckets", "q38_simhash_pairs")
-          .contains(s.name)).map(_.sec).sum)
-      System.err.println(
-        f"[scale] total x$m0→x$m1: ${t1 / t0}%.2f× wall for ${m1.toDouble / m0}%.0f× data" +
-          f" (pair-enumeration excluded: ${linear(1) / linear(0)}%.2f×)")
+    val name = args.headOption.getOrElse("full")
+    val sc = args.lift(3).filter(_ => name == "suite")
+      .map(qs => suite(qs.split(",").map(_.trim).toSeq))
+      .orElse(Scenarios.get(name)).getOrElse(sys.error(s"unknown scenario " +
+        s"'$name'; one of ${Scenarios.keys.toSeq.sorted.mkString(", ")}"))
+    val mults = args.lift(1).getOrElse(sc.mults).split(",").map(_.trim.toInt).toSeq
+    val outRoot = args.lift(2).getOrElse("/tmp/graft_scale")
+    val spark = graft.core.GraftSession.local()
+    def dir(m: Int) = s"$outRoot/$name/x$m"
+    // every run starts from cold artifacts: the warm-up must not leave
+    // the smallest multiplier's results cached for its measured run
+    def run(m: Int) = { graft.queries.ArtifactCache.clearAll(); sc.body(spark, dir(m), m) }
+    sc.corpus(spark, dir(mults.min), mults.min)
+    run(mults.min)
+    mults.foreach { m =>
+      if (m != mults.min) sc.corpus(spark, dir(m), m)
+      println(line(name, m, run(m)))
     }
     spark.stop()
   }

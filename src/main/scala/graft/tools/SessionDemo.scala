@@ -10,7 +10,7 @@ object SessionDemo {
   def main(args: Array[String]): Unit = {
     val base = args.headOption.getOrElse("/tmp/graft_sess_demo")
     val in = s"$base/in"; val out = s"$base/out"; val ck = s"$base/ck"
-    val spark = graft.core.GraftSession.local(4)
+    val spark = graft.core.GraftSession.local()
     import spark.implicits._
 
     Seq(UserEvent(1, 1, 1000), UserEvent(1, 2, 2000), UserEvent(1, 3, 99000),

@@ -31,7 +31,7 @@ class AnnRecallSpec extends AnyFunSuite {
 
   test("IVF-PQ + exact re-rank: top-5 recall vs brute force >= 90% on the probe set") {
     // the production-shape gate (r9 verdict item 8): ADC alone measures
-    // 0.34–0.42 recall@5 (RecallProbe, sf0.001/sf0.01); nprobe=6 + exact
+    // 0.34–0.42 recall@5 (sf0.001/sf0.01, COVERAGE.md); nprobe=6 + exact
     // re-rank of the ADC top-64 must lift the floor to >= 0.9 (measured
     // 0.96 at both SFs — nprobe=4 sat knife-edge at exactly 0.900)
     val brute = top5("q35_ann_brute")

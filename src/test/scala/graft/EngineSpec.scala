@@ -22,7 +22,7 @@ class EngineSpec extends AnyFunSuite {
     Exporter.atomically(spark, s"$dir/marts") { tmp =>
       Exporter.parquet(df, s"$tmp/region.parquet")
     }
-    assert(Exporter.isDone(s"$dir/marts"))
+    assert(Exporter.isDone(spark, s"$dir/marts"))
     assert(spark.read.parquet(s"$dir/marts/region.parquet").count() === 5L)
     Exporter.writeCatalogJson(spark, dir, "v1")
     val json = Files.readString(java.nio.file.Paths.get(s"$dir/catalog.json"))
@@ -47,6 +47,32 @@ class EngineSpec extends AnyFunSuite {
     val cat = spark.read.parquet(s"$dir/catalog.parquet")
       .select("file_name", "num_rows").collect().map(r => r.getString(0) -> r.getLong(1))
     assert(cat.toSeq === Seq("items.parquet" -> 8L))
+  }
+
+  test("catalog lists a partitioned export under its dataset dir") {
+    val dir = Files.createTempDirectory("graft_cat_part").toString
+    Exporter.parquet(spark.range(10).toDF(), s"$dir/marts/flat.parquet")
+    Exporter.parquet(spark.range(20).selectExpr("id", "id % 3 AS k"),
+      s"$dir/marts/split.parquet", partitionBy = Seq("k"))
+    Exporter.writeCatalogJson(spark, dir, "v1")
+    val json = Files.readString(java.nio.file.Paths.get(s"$dir/catalog.json"))
+    assert(json.contains("\"total_rows\": 30"), json)
+    val cat = spark.read.parquet(s"$dir/catalog.parquet")
+      .select("file_name", "num_rows").collect().map(r => r.getString(0) -> r.getLong(1))
+    assert(cat.toSeq === Seq("flat.parquet" -> 10L, "split.parquet" -> 20L))
+  }
+
+  test("a file:// export dir with a space publishes, is done and gets both catalog files") {
+    val local = Files.createTempDirectory("graft exp").toString
+    val dir = s"file://$local"
+    val mart = s"$dir/marts/items.parquet"
+    assert(!Exporter.isDone(spark, mart))
+    Exporter.atomically(spark, mart)(tmp => Exporter.parquet(spark.range(7).toDF(), tmp))
+    assert(Exporter.isDone(spark, mart))
+    Exporter.writeCatalogJson(spark, dir, "v1")
+    val json = Files.readString(java.nio.file.Paths.get(local, "catalog.json"))
+    assert(json.contains("\"total_rows\": 7"), json)
+    assert(spark.read.parquet(s"$dir/catalog.parquet").count() === 1L)
   }
 
   test("parquet export honors row-group row-count limit (footer-verified)") {

@@ -102,7 +102,7 @@ class JobCountSpec extends AnyFunSuite {
   for (src <- Seq("src_sra_accessions", "src_ncbi_biosample"))
     test(s"$src builds with zero jobs once its files are in the lake manifest") {
       val lake = java.nio.file.Files.createTempDirectory("jobs_lake").toString
-      graft.tools.MakeDemoLake.write(spark, lake)
+      graft.tools.WarehouseDemo.write(spark, lake)
       val cfg = graft.core.EngineConfig(lake,
         java.nio.file.Files.createTempDirectory("jobs_wh").toString, "/none")
       val build = graft.models.OmicidxModels.lakeSources(src)

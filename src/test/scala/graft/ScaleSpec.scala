@@ -318,4 +318,28 @@ class ScaleSpec extends AnyFunSuite {
       .groupBy("name").agg(count(lit(1)).as("n"), sum("x").as("sx"))
     assert(got.collect().map(_.toSeq).toSet === want.collect().map(_.toSeq).toSet)
   }
+
+  // The scale harness's scenario table, run the way its main runs an
+  // entry: the scenario's corpus at mult 1, then its body, rendered as the
+  // main's JSON line. `rp` is the cheapest entry; its fields are the ones
+  // SCALE.md quotes for the RP forest's distributed tier.
+  test("ScaleStress rp scenario at 1x prints the fields SCALE.md quotes") {
+    import graft.tools.ScaleStress
+    val dir = java.nio.file.Files.createTempDirectory("scale_rp").toString
+    try {
+      val sc = ScaleStress.Scenarios("rp")
+      sc.corpus(spark, dir, 1)
+      val line = ScaleStress.line("rp", 1, sc.body(spark, dir, 1))
+      def field(k: String) = ("\"" + k + "\":([^,}]+)").r.findFirstMatchIn(line)
+        .map(_.group(1)).getOrElse(fail(s"no $k in $line"))
+      assert(field("scenario") === "\"rp\"" && field("mult") === "1")
+      assert(field("n").toLong === 2000L)
+      // every vector sits in one leaf per tree (3 trees)
+      assert(field("leaf_rows").toLong === 6000L, line)
+      val frac = field("cand_frac").toDouble
+      assert(frac > 0 && frac <= 1, line)
+      assert(field("cand_rows").toLong > 0L)
+      assert(field("build_sec").toDouble > 0 && field("route_sec").toDouble > 0)
+    } finally graft.export.Exporter.deleteRecursively(java.nio.file.Paths.get(dir))
+  }
 }

@@ -158,7 +158,7 @@ class SourcesSpec extends AnyFunSuite {
       targetBytes = 64L * 1024 * 1024)
     assert(after >= 1 && after < before, s"want fewer files, got $after")
     assert(spark.read.parquet(dir).count() === rows, "no rows lost")
-    assert(graft.export.Exporter.isDone(dir), "atomic publish marker")
+    assert(graft.export.Exporter.isDone(spark, dir), "atomic publish marker")
     assert(graft.export.Exporter.compact(spark, dir) === -1L,
       "second compact must skip an already-compact dir")
   }
@@ -589,10 +589,10 @@ class SourcesSpec extends AnyFunSuite {
       Exporter.atomically(spark, localDir) { tmp =>
         df.coalesce(2).write.mode("overwrite").parquet(tmp)
       }
-      assert(Exporter.isDone(localDir))
+      assert(Exporter.isDone(spark, localDir))
       // publish to the credentialed bucket; tiny threshold forces at least
       // one multipart upload (parquet parts here are > 16 KB)
-      assert(!S3Publisher.isDone(spark, "s3a://lake/mart.parquet"))
+      assert(!Exporter.isDone(spark, "s3a://lake/mart.parquet"))
       S3Publisher.publishDir(spark, localDir, "s3a://lake/mart.parquet",
         multipartThreshold = 16 * 1024)
       // marker object is the LAST put — the atomic-publish contract on an
@@ -601,7 +601,7 @@ class SourcesSpec extends AnyFunSuite {
         .ListHasAsScala(server.putLog).asScala.toSeq
       assert(puts.nonEmpty && puts.last === "mart.parquet.done",
         s"marker was not published last: $puts")
-      assert(S3Publisher.isDone(spark, "s3a://lake/mart.parquet"))
+      assert(Exporter.isDone(spark, "s3a://lake/mart.parquet"))
       // read-back through the signed s3a scan == the local export
       val remote = spark.read.parquet("s3a://lake/mart.parquet")
         .collect().map(_.toSeq).toSet
@@ -621,7 +621,7 @@ class SourcesSpec extends AnyFunSuite {
         .ListHasAsScala(server.putLog).asScala.toSeq.drop(before)
       assert(!newPuts.exists(_.endsWith(".done")),
         s"marker published after a failed multipart complete: $newPuts")
-      assert(!S3Publisher.isDone(spark, "s3a://lake/mart2.parquet"))
+      assert(!Exporter.isDone(spark, "s3a://lake/mart2.parquet"))
       // the failed upload must be ABORTED, not orphaned (real S3 charges
       // for lingering multipart parts until a lifecycle rule collects them)
       val aborted = scala.jdk.CollectionConverters
@@ -649,9 +649,9 @@ class SourcesSpec extends AnyFunSuite {
     }
     val remoteBase = java.nio.file.Files.createTempDirectory("pubdst")
     val remoteDir = s"file://$remoteBase/lake/mart.parquet"
-    assert(!S3Publisher.isDone(spark, remoteDir))
+    assert(!Exporter.isDone(spark, remoteDir))
     S3Publisher.publishDir(spark, localDir, remoteDir)
-    assert(S3Publisher.isDone(spark, remoteDir))
+    assert(Exporter.isDone(spark, remoteDir))
     // same layout, same bytes: read back through the published prefix
     val remote = spark.read.parquet(remoteDir).collect().map(_.toSeq).toSet
     val local = spark.read.parquet(localDir).collect().map(_.toSeq).toSet

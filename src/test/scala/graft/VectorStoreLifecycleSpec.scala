@@ -228,4 +228,60 @@ class VectorStoreLifecycleSpec extends AnyFunSuite {
       graft.export.Exporter.deleteRecursively(java.nio.file.Paths.get(base))
     }
   }
+
+  // Non-blocking reindex: a frontend thread keeps serving ADC probes
+  // through `serveSnapshot` while the main thread ingests an
+  // in-distribution batch and then a drift batch (retrain + full
+  // re-encode + publish) on the 1× ScaleStress corpus. Every serve must
+  // succeed and return the full probe wave, and both epochs must be seen:
+  // the volatile publish happens only once the new epoch is on disk.
+  test("serving through a drift retrain: no failed or inconsistent serve, both epochs seen") {
+    import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
+    val base = java.nio.file.Files.createTempDirectory("dvs_swap").toString
+    try {
+      graft.tools.ScaleStress.synthesize(spark, s"$base/corpus", 1)
+      val e = spark.read.parquet(s"$base/corpus/embeddings.parquet")
+        .select(col("vec_id"), col("embedding"))
+      val dvs = new DriftingVectorStore(s"$base/store", k, iters,
+        SimilarityOps.PqM, SimilarityOps.PqK, SimilarityOps.PqIters)
+      dvs.init(spark, e)
+      val expectRows = SimilarityOps.adcProbeServe(
+        e, dvs.store, dvs.coarse, dvs.pq, 2, "swap-warm").count()
+      val (stop, failed, inconsistent) =
+        (new AtomicBoolean(false), new AtomicInteger(0), new AtomicInteger(0))
+      val epochs = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+      val server = new Thread(() => {
+        while (!stop.get()) {
+          try {
+            val (ep, st, c, p) = dvs.serveSnapshot()
+            val rows = SimilarityOps.adcProbeServe(e, st, c, p, 2, s"swap-e$ep")
+              .count()
+            epochs.add(ep)
+            if (rows != expectRows) inconsistent.incrementAndGet()
+          } catch { case _: Throwable => failed.incrementAndGet() }
+        }
+      }, "swap-serve-frontend")
+      server.start()
+      try {
+        val ra = dvs.ingest(e.filter(col("vec_id") < 2000)
+          .select((col("vec_id") + 10000000L).as("vec_id"), col("embedding")), 1L)
+        assert(!ra.retrained, f"in-distribution batch retrained (${ra.driftRatio}%.2f)")
+        val rb = dvs.ingest(e.filter(col("vec_id") < 2000)
+          .select((col("vec_id") + 20000000L).as("vec_id"),
+            transform(col("embedding"), x => x + lit(25.0f)).as("embedding")), 2L)
+        assert(rb.retrained, f"drift batch did not retrain (${rb.driftRatio}%.2f)")
+        val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+        while (!epochs.contains(1) && System.nanoTime() < deadline)
+          Thread.sleep(100)
+      } finally {
+        stop.set(true)
+        server.join(60000)
+      }
+      assert(failed.get() === 0, "failed serves")
+      assert(inconsistent.get() === 0, "serves that lost rows")
+      assert(epochs.contains(0) && epochs.contains(1), s"epochs seen: $epochs")
+    } finally {
+      graft.export.Exporter.deleteRecursively(java.nio.file.Paths.get(base))
+    }
+  }
 }

@@ -339,7 +339,7 @@ class WarehouseSpec extends AnyFunSuite {
 
   test("Lint.violations is empty for the production catalog on a fixture lake") {
     val lake = Files.createTempDirectory("graft_lint_lake").toString
-    graft.tools.MakeDemoLake.write(spark, lake)
+    graft.tools.WarehouseDemo.write(spark, lake)
     val cfg = EngineConfig(lake,
       Files.createTempDirectory("graft_lint_wh").toString, "/none")
     val models = OmicidxModels.catalog(OmicidxModels.lakeSources)
